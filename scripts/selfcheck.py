@@ -5,7 +5,12 @@ Mimics the driver's correctness gate: for each query in oracle_sql.json,
 run the SQL in DuckDB over the sf parquet tables, sort columns by name,
 sort rows, and compare against the Spark-written parquet.
 
-Usage: selfcheck.py <sfDir> <verifyOutDir>
+Usage: selfcheck.py <sfDir> <verifyOutDir> [nameRegex]
+
+The optional nameRegex mirrors graft.Verify's third argument: only the
+gates whose names it matches (re.search, like Scala's findFirstIn) are
+compared, so a filtered Verify run is not reported as "no spark output"
+for every gate it skipped.
 """
 import sys, os, json, glob
 
@@ -22,7 +27,7 @@ def canon(con, rel_sql):
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, name_re=None):
     import duckdb  # oracle-compare only; the scan modes run without it
     con = duckdb.connect()
     for t in TABLES:
@@ -30,6 +35,9 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    import re
+    wanted = (lambda n: re.search(name_re, n) is not None) if name_re else (lambda n: True)
+    oracle = {n: sql for n, sql in oracle.items() if wanted(n)}
     n_pass = n_fail = 0
     for name in sorted(oracle):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -70,7 +78,8 @@ def main(sf_dir, out_dir):
             n_fail += 1
         else:
             print(f"PASS {name} ({len(got)} rows)"); n_pass += 1
-    queries_no_oracle = set(os.path.basename(d) for d in glob.glob(f"{out_dir}/*") if os.path.isdir(d)) - set(oracle)
+    queries_no_oracle = set(os.path.basename(d) for d in glob.glob(f"{out_dir}/*")
+                            if os.path.isdir(d) and wanted(os.path.basename(d))) - set(oracle)
     for name in sorted(queries_no_oracle):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         n = con.execute(f"SELECT count(*) FROM read_parquet({files!r})").fetchone()[0] if files else 0
@@ -348,4 +357,5 @@ if __name__ == "__main__":
     if sys.argv[1] == "--api-index":
         sys.exit(api_index_check(_repo_root()))
     rc = operator_scan(_repo_root()) | api_index_check(_repo_root())
-    sys.exit(main(sys.argv[1], sys.argv[2]) or rc)
+    sys.exit(main(sys.argv[1], sys.argv[2],
+                  sys.argv[3] if len(sys.argv) > 3 else None) or rc)

@@ -84,10 +84,13 @@ object Spatial {
    *
    * Scale posture: ONE corpus pass buckets and checkpoints; density
    * collapse is map-side; adjacency + components run on the DENSE
-   * CELL grid (bounded by area/cellSize², not by points); the label
-   * join back is (cell_x, cell_y)-keyed. Isolated dense cells label
-   * themselves. Choose cellSize ≈ the neighborhood radius: this
-   * clusters at grid resolution, merging anything 8-adjacent.
+   * CELL grid (bounded by area/cellSize², not by points) — a cell
+   * graph whose edge list fits the broadcast threshold finishes on the
+   * driver in one fetch, whatever its corridor length, and only larger
+   * grids pay the distributed rounds; the label join back is
+   * (cell_x, cell_y)-keyed. Isolated dense cells label themselves.
+   * Choose cellSize ≈ the neighborhood radius: this clusters at grid
+   * resolution, merging anything 8-adjacent.
    */
   def gridClusters(df: DataFrame, idCol: String, xCol: String,
                    yCol: String, cellSize: Long, minPts: Long)
@@ -123,8 +126,9 @@ object Spatial {
         Seq("__nx", "__ny"))
       .filter(col("__c1") < col("__c2"))
       .select(col("__c1").as("id1"), col("__c2").as("id2"))
-    // grid adjacency can snake: the label-propagation diameter is the
-    // longest dense-cell corridor, far past the dedup-cluster default
+    // grid adjacency can snake: if the graph is too big for the
+    // driver finish, the label-propagation diameter is the longest
+    // dense-cell corridor, far past the dedup-cluster default
     val comp = graft.llm.Dedup.components(edges, maxIter = 100)
     val labeled = dense.select(col("__cell"), col("__cx"), col("__cy"))
       .join(comp.select(col("node").as("__cell"), col("component")),

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -524,39 +524,139 @@ object Dedup {
    * decision is per CLUSTER, not per pair. Returns (`node`,
    * `component`) for every id appearing in `pairs`, where `component`
    * is the smallest id in the node's component (deterministic
-   * canonical representative).
+   * canonical representative; "smallest" in Spark's ordering of the id
+   * type, so strings compare as UTF-8 bytes).
    *
-   * Algorithm: iterative min-label propagation — each round every node
-   * takes the min of its own label and its neighbors' labels; stop
-   * when a round changes nothing. Rounds = graph diameter, and near-dup
-   * clusters are near-cliques (diameter ~2), so this converges in 2-3
-   * rounds; `maxIter` bounds adversarial chains. Each round is one
-   * join + one aggregation, all distributed; the convergence check is
-   * a count of changed labels (one tiny action per round).
+   * Algorithm: a hybrid — distributed rounds only while the graph is
+   * too big for one machine (Kiveris et al., SoCC 2014). The
+   * symmetric, de-duplicated edge list is built once; then one limited
+   * collect fetches at most cap + 1 of its rows, where cap is
+   * `spark.sql.autoBroadcastJoinThreshold` (the session's own "small
+   * enough to ship whole" line) over a per-edge size estimate from the
+   * id type's `defaultSize`.
+   *  - At most cap rows: union-find on the driver, the smaller id
+   *    always becoming the root, so every root is its component's
+   *    minimum. Always converges, whatever the diameter; `maxIter`
+   *    does not apply.
+   *  - Otherwise (or a threshold ≤ 0, a null id among the fetched
+   *    rows, or an id type whose driver-side equality is not Spark's):
+   *    iterative min-label propagation with pointer jumping — each
+   *    round every node takes the min of its own label and its
+   *    neighbors' labels, then follows its label's label; stop when a
+   *    round changes nothing. Rounds are O(log diameter); `maxIter`
+   *    bounds them, and only this loop warns when it stops with labels
+   *    still changing. Each round is joins + one aggregation,
+   *    all distributed; the convergence check is a count of changed
+   *    labels (one action per round).
+   * Both paths give the same rows and schema (pinned by PropertySpec).
    *
-   * Lifecycle: every per-round label table is freed inside the loop —
-   * round 1's cache entry via unpersist(), every later round's
-   * localCheckpoint BLOCKS via a direct drop of the checkpointed RDD
-   * (a checkpoint is not a CacheManager entry, so unpersist() alone
-   * would leave one label-table copy per round in executor storage
-   * until the ContextCleaner GC'd it). The final labels are handed
-   * back as an eager localCheckpoint — already materialized (the loop
-   * counted it), lineage-free (no recompute through dropped rounds),
-   * and ContextCleaner-managed, so those blocks free themselves when
-   * the caller drops the frame. After this returns, the CacheManager
-   * holds nothing and no loop-round blocks remain.
+   * Lifecycle: the edge list is a CacheManager entry released on both
+   * paths before returning. The driver finish hands back a local
+   * relation — lineage-free, no blocks at all. The loop frees every
+   * per-round label table inside the loop — round 1's cache entry via
+   * unpersist(), every later round's localCheckpoint BLOCKS via a
+   * direct drop of the checkpointed RDD (a checkpoint is not a
+   * CacheManager entry, so unpersist() alone would leave one
+   * label-table copy per round in executor storage until the
+   * ContextCleaner GC'd it) — and hands the final labels back as an
+   * eager localCheckpoint: already materialized (the loop counted it),
+   * lineage-free (no recompute through dropped rounds), and
+   * ContextCleaner-managed, so those blocks free themselves when the
+   * caller drops the frame. After this returns, the CacheManager holds
+   * nothing and no loop-round blocks remain.
    */
   def components(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
                  maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col(id1).as("a"), col(id2).as("b"))
-      .unionByName(pairs.select(col(id2).as("a"), col(id1).as("b")))
-      .distinct()
+    val threshold = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val idType = symmetricEdges(pairs, id1, id2).schema("a").dataType
+    // per-edge size: two ids plus the row overhead Spark's own
+    // size estimate charges (EstimationUtils.getSizePerRow)
+    val cap = if (threshold <= 0) 0L else threshold / (8L + 2L * idType.defaultSize)
+    components(pairs, id1, id2, maxIter, cap)
+  }
+
+  /** [[components]] with an explicit driver-finish edge cap; `cap` ≤ 0
+   *  always runs the distributed loop. */
+  private[graft] def components(pairs: DataFrame, id1: String, id2: String,
+                                maxIter: Int, cap: Long): DataFrame = {
+    val edges = symmetricEdges(pairs, id1, id2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // initial label = min(self, direct neighbors): the first
     // propagation round fused into initialization — one aggregation
-    // instead of a distinct + join + convergence check.
-    var labels = edges.groupBy(col("a").as("node"))
+    // instead of a distinct + join + convergence check. Its schema is
+    // the result schema on both paths.
+    val init = edges.groupBy(col("a").as("node"))
       .agg(least(col("a"), min(col("b"))).as("component"))
+    val small =
+      if (cap <= 0 || !driverKeyed(init.schema("node").dataType)) None
+      else {
+        val rows = edges.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+        // a null id stays on the loop, whose null handling is the contract
+        if (rows.length <= cap && !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+          Some(rows)
+        else None
+      }
+    val out = small match {
+      case Some(rows) => unionFind(pairs.sparkSession, rows, init.schema)
+      case None => propagate(edges, init, maxIter)
+    }
+    edges.unpersist()
+    out
+  }
+
+  private def symmetricEdges(pairs: DataFrame, id1: String, id2: String): DataFrame =
+    pairs.select(col(id1).as("a"), col(id2).as("b"))
+      .unionByName(pairs.select(col(id2).as("a"), col(id1).as("b")))
+      .distinct()
+
+  /** Id types whose collected values are equal exactly when Spark's
+   *  grouping keys are — the driver finish hashes them. Floats (NaN
+   *  and -0.0 normalization), binary (array identity), collated
+   *  strings and the rest stay on the loop. */
+  private def driverKeyed(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case s: StringType => s.collationId == StringType.collationId
+      case _ => false
+    }
+  }
+
+  /** Driver-side finish over the complete symmetric edge list: every
+   *  node appears as `a`. A merge keeps the smaller root in Spark's
+   *  ordering for the id type (catalyst values: UTF8String byte order
+   *  for strings, not String.compareTo's UTF-16 order). */
+  private def unionFind(spark: SparkSession, edges: Array[Row],
+                        schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val idType = schema("node").dataType
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
+    val toKey = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(idType)
+    val slots = collection.mutable.HashMap.empty[Any, Int]
+    val ids = collection.mutable.ArrayBuffer.empty[Any]
+    val keys = collection.mutable.ArrayBuffer.empty[Any]
+    val parent = collection.mutable.ArrayBuffer.empty[Int]
+    def slot(v: Any): Int = slots.getOrElseUpdate(v, {
+      ids += v; keys += toKey(v); parent += parent.length; parent.length - 1
+    })
+    def find(i: Int): Int = { // path halving
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    edges.foreach { r =>
+      val (x, y) = (find(slot(r.get(0))), find(slot(r.get(1))))
+      if (x != y) { if (ord.lt(keys(x), keys(y))) parent(y) = x else parent(x) = y }
+    }
+    val rows = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The distributed finish: min-label propagation + pointer jumping
+   *  from `init`, at most `maxIter` rounds (see [[components]]). */
+  private def propagate(edges: DataFrame, init: DataFrame, maxIter: Int): DataFrame = {
+    var labels = init
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var i = 0
     var done = false
@@ -629,7 +729,6 @@ object Dedup {
     val out = labels.localCheckpoint(true)
     labels.unpersist() // cache entry when the loop ran 0 rounds
     org.apache.spark.sql.GraftShims.unpersistCheckpoint(labels)
-    edges.unpersist()
     out
   }
 

@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -198,23 +199,33 @@ class LlmSpec extends AnyFunSuite {
     assert(naive.nonEmpty)
   }
 
+  // Each components pin runs on both finishes: the default (these
+  // graphs are small enough for the driver finish) and cap = 0, which
+  // forces the distributed label-propagation loop.
+  private val finishes: Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
+    "driver" -> ((p, n) => Dedup.components(p, maxIter = n)),
+    "loop" -> ((p, n) => Dedup.components(p, "id1", "id2", n, 0L)))
+
   test("connected components: chains collapse to min-id clusters") {
     // two clusters — a 5-node PATH (worst case for label propagation:
     // needs diameter rounds) and a 2-node pair — plus untouched ids
     val pairs = Seq((5L, 4L), (4L, 3L), (3L, 2L), (2L, 1L), (10L, 11L))
       .toDF("id1", "id2")
-    val comp = Dedup.components(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to 5L).forall(comp(_) == 1L))
-    assert(comp(10L) == 10L && comp(11L) == 10L)
-    assert(comp.size == 7) // only ids appearing in pairs
-    // maxIter bounds the rounds (partial labels are safe); with
-    // pointer jumping one round covers 4 hops (init fuses hop 1,
-    // the neighbor-min adds one, the label-of-label shortcut
-    // doubles), so the 5-path fully collapses in ONE round
-    val bounded = Dedup.components(pairs, maxIter = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(bounded(5L) == 1L)
+    for ((finish, components) <- finishes) {
+      val comp = components(pairs, 20)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert((1L to 5L).forall(comp(_) == 1L), finish)
+      assert(comp(10L) == 10L && comp(11L) == 10L, finish)
+      assert(comp.size == 7, finish) // only ids appearing in pairs
+      // maxIter bounds the loop's rounds (partial labels are safe);
+      // with pointer jumping one round covers 4 hops (init fuses hop
+      // 1, the neighbor-min adds one, the label-of-label shortcut
+      // doubles), so the 5-path fully collapses in ONE round. The
+      // driver finish ignores maxIter: it always converges.
+      val bounded = components(pairs, 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(bounded(5L) == 1L, finish)
+    }
   }
 
   test("connected components: a LONG path (diameter past the default " +
@@ -227,9 +238,44 @@ class LlmSpec extends AnyFunSuite {
     // checkpointed plan resolved 0 while labels were still changing.
     val pairs = (1 until 35)
       .map(i => (i.toLong, (i + 1).toLong)).toDF("id1", "id2")
-    val comp = Dedup.components(pairs, maxIter = 64)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to 35L).forall(comp(_) == 1L), comp.toSeq.sorted.take(8))
+    for ((finish, components) <- finishes) {
+      val comp = components(pairs, 64)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert((1L to 35L).forall(comp(_) == 1L), s"$finish: ${comp.toSeq.sorted.take(8)}")
+    }
+  }
+
+  test("connected components: the driver finish runs the 35-node path " +
+    "in at most 3 jobs; the loop runs one or more per round") {
+    // ids no other test uses: a leaked edge cache from an earlier
+    // test's identical plan would be reused and hide a leak here
+    val pairs = (1 until 35)
+      .map(i => (i + 9000L, i + 9001L)).toDF("id1", "id2")
+    val sc = spark.sparkContext
+    // (jobs run, RDDs still persisted afterwards)
+    def jobs(run: => DataFrame): (Int, Set[Int]) = {
+      val tag = s"graft-components-${System.nanoTime}"
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+              .exists(_.split(",").contains(tag))) n.incrementAndGet()
+      }
+      val before = sc.getPersistentRDDs.keySet
+      sc.addSparkListener(listener)
+      sc.addJobTag(tag)
+      try { run; org.apache.spark.graft.BenchInternals.drainListenerBus(sc) }
+      finally { sc.removeJobTag(tag); sc.removeSparkListener(listener) }
+      (n.get, (sc.getPersistentRDDs.keySet -- before).toSet)
+    }
+    val (driver, driverLeft) = jobs(Dedup.components(pairs, maxIter = 64))
+    val (loop, loopLeft) = jobs(Dedup.components(pairs, "id1", "id2", 64, 0L))
+    assert(driver >= 1 && driver <= 3, s"driver finish ran $driver jobs")
+    assert(loop > 3, s"loop ran $loop jobs")
+    // lifecycle: the edge list is released on both paths; only the
+    // loop's returned checkpoint stays persisted
+    assert(driverLeft.isEmpty, driverLeft)
+    assert(loopLeft.size == 1, loopLeft)
   }
 
   test("connected components: a lazily-checkpointed UPSTREAM edge " +
@@ -243,15 +289,17 @@ class LlmSpec extends AnyFunSuite {
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. The path needs >2 rounds so
     // the upstream frame is re-read after the first drop, and the
     // downstream join re-reads it after components returns.
-    val upstream = (1 until 12)
-      .map(i => (i.toLong, (i + 1).toLong)).toDF("id1", "id2")
-      .localCheckpoint(false)
-    val comp = Dedup.components(upstream, maxIter = 64)
-    val joined = comp.join(upstream, comp("node") === upstream("id1"))
-      .count() // upstream blocks must still exist here
-    assert(joined == 11L)
-    val labels = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to 12L).forall(labels(_) == 1L))
+    for ((finish, components) <- finishes) {
+      val upstream = (1 until 12)
+        .map(i => (i.toLong, (i + 1).toLong)).toDF("id1", "id2")
+        .localCheckpoint(false)
+      val comp = components(upstream, 64)
+      val joined = comp.join(upstream, comp("node") === upstream("id1"))
+        .count() // upstream blocks must still exist here
+      assert(joined == 11L, finish)
+      val labels = comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert((1L to 12L).forall(labels(_) == 1L), finish)
+    }
   }
 
   test("dropNearDuplicates keeps the min-id doc per cluster plus unpaired docs") {

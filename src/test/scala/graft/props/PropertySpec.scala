@@ -1,5 +1,6 @@
 package graft.props
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -120,6 +121,39 @@ class PropertySpec extends AnyFunSuite {
         .map(n => n -> find(n)).toMap
       assert(got == want, s"edges=$edges")
     }
+  }
+
+  test("components: the driver finish equals the distributed loop row " +
+    "for row, schema included (long, string, null and empty pair lists)") {
+    def check(pairs: DataFrame, driverFinish: Boolean): Unit = {
+      val driver = Dedup.components(pairs)
+      val loop = Dedup.components(pairs, "id1", "id2", 20, 0L)
+      val local = driver.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      assert(local == driverFinish, driver.queryExecution.analyzed.treeString)
+      assert(driver.schema == loop.schema)
+      def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(driver) == rows(loop), pairs.collect().toSeq)
+    }
+    val longGen = Gen.choose(1, 30).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.choose(0L, 20L), Gen.choose(0L, 20L))))
+    samples(longGen, 4).foreach(ps => check(ps.toDF("id1", "id2"), true))
+    // "｡" (U+FF61) sorts before "😀" (U+1F600) as UTF-8 bytes — Spark's
+    // string order — but after it as UTF-16 code units (String.compareTo)
+    val words = Seq("a", "b", "é", "｡", "😀", "😀a", "z")
+    val strGen = Gen.choose(1, 12).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.oneOf(words), Gen.oneOf(words))))
+    samples(strGen, 4).foreach(ps => check(ps.toDF("id1", "id2"), true))
+    check(Seq(("😀", "｡")).toDF("id1", "id2"), true)
+    assert(Dedup.components(Seq(("😀", "｡")).toDF("id1", "id2"))
+      .collect().map(_.getString(1)).toSet == Set("｡"))
+    val nullGen = Gen.choose(1, 10).flatMap(n => Gen.listOfN(n,
+      Gen.zip(Gen.option(Gen.choose(0L, 6L)), Gen.option(Gen.choose(0L, 6L)))))
+    samples(nullGen.suchThat(_.exists(p => p._1.isEmpty || p._2.isEmpty)), 4)
+      .foreach(ps => check(ps.toDF("id1", "id2"), false))
+    check(Seq((Some(2L), None), (Some(2L), Some(1L)), (None, Some(3L)))
+      .toDF("id1", "id2"), false)
+    check(Seq.empty[(Long, Long)].toDF("id1", "id2"), true)
   }
 
   private val vocabGen: Gen[String] = Gen.oneOf(
