@@ -184,7 +184,10 @@ object Stats {
    * sort — exact, simple, ~10^8-row ceiling); this one is the grouped
    * scale path — it never ranks rows, only the (keys, value) GRID, so
    * it holds at any row count and any key fan-out. Same statistic,
-   * same tie correction; identical z on identical data.
+   * same tie correction; identical z on identical data. Within this
+   * object, [[cliffsDelta]] and [[rankPanel]] build on the same grid
+   * kernel and the same closing, so their U (and this z) cannot
+   * drift from this operator's.
    *
    * Reproducibility discipline: every rank quantity lives on the
    * integer grid — ranks are computed in DOUBLED units (the average
@@ -198,7 +201,9 @@ object Stats {
    * Values are compared on the `valueScale` decimal grid (ties must
    * mean EQUAL, not close — floats that differ in the 15th digit are
    * distinct ranks in any engine). Null values and foreign labels are
-   * excluded. Arms with n = 0, or all-tied data (σ² ≤ 0), yield null z.
+   * excluded; null keys group as one key, and `keys = Nil` is one
+   * global group. `aLabel` must differ from `bLabel`. Arms with
+   * n = 0, or all-tied data (σ² ≤ 0), yield null z.
    *
    * Output: (keys…, n_a, n_b, u_a, u_b, z).
    *
@@ -210,44 +215,9 @@ object Stats {
    */
   def mannWhitneyU(df: DataFrame, keys: Seq[String], groupCol: String,
                    aLabel: String, bLabel: String, valueCol: String,
-                   valueScale: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = col(valueCol).cast(s"decimal(18,$valueScale)")
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel))
-      .groupBy((keys.map(col) :+ v.as("__v")): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"),
-        count(lit(1)).as("__c"))
-    val wk = Window.partitionBy(keys.map(col): _*).orderBy(col("__v"))
-    // doubled average rank of this value's tie run: lo+hi = 2·cum−c+1
-    val ranked = grid
-      .withColumn("__cum", sum(col("__c")).over(wk))
-      .withColumn("__r2", lit(2L) * col("__cum") - col("__c") + 1L)
-    // decimal BEFORE multiplying: long intermediates would overflow
-    // past n ~ 2e9 rows (ca·r2 ≤ 2n²) / 2e6-row tie runs (c³)
-    val cd = col("__c").cast("decimal(12,0)")
-    val m = ranked.groupBy(keys.map(col): _*)
-      .agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"),
-        sum((col("__ca").cast("decimal(19,0)") *
-          col("__r2").cast("decimal(19,0)")).cast("decimal(38,0)"))
-          .as("__ra2"),
-        sum((cd * cd * cd - cd).cast("decimal(38,0)")).as("__t"))
-    val na = d(col("n_a")); val nb = d(col("n_b"))
-    val nn = na + nb
-    val ra = d(col("__ra2")) / lit(2.0)
-    val ua = ra - na * (na + lit(1.0)) / lit(2.0)
-    val mu = na * nb / lit(2.0)
-    val sig2 = na * nb / lit(12.0) *
-      ((nn + lit(1.0)) - d(col("__t")) / (nn * (nn - lit(1.0))))
-    val ok = col("n_a") >= 1 && col("n_b") >= 1 && sig2 > 0.0
-    m.select(keys.map(col) ++ Seq(
-      col("n_a"), col("n_b"),
-      when(col("n_a") >= 1 && col("n_b") >= 1, ua).as("u_a"),
-      when(col("n_a") >= 1 && col("n_b") >= 1, na * nb - ua).as("u_b"),
-      when(ok, (ua - mu) / sqrt(sig2)).as("z")): _*)
-  }
+                   valueScale: Int = 2): DataFrame =
+    twoSample("mannWhitneyU", mwuClosing, keepNullKeys = true, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Spearman rank correlation per group: Pearson over AVERAGE ranks —
@@ -666,33 +636,9 @@ object Stats {
    */
   def ksTest(df: DataFrame, keys: Seq[String], groupCol: String,
              aLabel: String, bLabel: String, valueCol: String,
-             valueScale: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = col(valueCol).cast(s"decimal(18,$valueScale)")
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel))
-      .groupBy((keys.map(col) :+ v.as("__v")): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val wo = wk.orderBy(col("__v"))
-    val stepped = grid
-      .withColumn("__cuma", sum(col("__ca")).over(wo))
-      .withColumn("__cumb", sum(col("__cb")).over(wo))
-      .withColumn("__na", sum(col("__ca")).over(wk))
-      .withColumn("__nb", sum(col("__cb")).over(wk))
-      .withColumn("__gap",
-        abs(col("__cuma") * col("__nb") - col("__cumb") * col("__na")))
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-        max(col("__gap")).as("d_num"))
-    m.select(keys.map(col) ++ Seq(
-      col("n_a"), col("n_b"), col("d_num"),
-      (col("n_a") * col("n_b")).as("d_den"),
-      when(col("n_a") >= 1 && col("n_b") >= 1,
-        d(col("d_num")) / d(col("n_a") * col("n_b"))).as("d")): _*)
-  }
+             valueScale: Int = 2): DataFrame =
+    twoSample("ksTest", ksClosing, keepNullKeys = true, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Kendall rank correlation (tau-b) per group — concordant-vs-
@@ -4805,16 +4751,9 @@ object Stats {
    */
   def cliffsDelta(df: DataFrame, keys: Seq[String], groupCol: String,
                   aLabel: String, bLabel: String, valueCol: String,
-                  valueScale: Int = 2): DataFrame = {
-    val u = mannWhitneyU(df, keys, groupCol, aLabel, bLabel, valueCol,
-      valueScale)
-    val prod = col("n_a").cast("double") * col("n_b").cast("double")
-    val delta = lit(2.0) * col("u_a") / when(prod > 0.0, prod) -
-      lit(1.0)
-    u.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"), col("u_a"),
-      when(col("n_a") >= 1L && col("n_b") >= 1L, delta)
-        .as("delta")): _*)
-  }
+                  valueScale: Int = 2): DataFrame =
+    twoSample("cliffsDelta", cliffsClosing, keepNullKeys = true, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * 1-Wasserstein (earth mover) distance per key between two arms'
@@ -4847,40 +4786,9 @@ object Stats {
    */
   def wasserstein1(df: DataFrame, keys: Seq[String], groupCol: String,
                    aLabel: String, bLabel: String, valueCol: String,
-                   valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "wasserstein1 needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val wo = wk.orderBy(col("__v"))
-    val stepped = grid
-      .withColumn("__cuma", sum(col("__ca")).over(wo))
-      .withColumn("__cumb", sum(col("__cb")).over(wo))
-      .withColumn("__na", sum(col("__ca")).over(wk))
-      .withColumn("__nb", sum(col("__cb")).over(wk))
-      .withColumn("__dv",
-        coalesce(lead(col("__v"), 1).over(wo) - col("__v"), lit(0L)))
-      .withColumn("__gap",
-        abs(col("__cuma") * col("__nb") - col("__cumb") * col("__na")))
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-        sum((col("__gap").cast("decimal(20,0)") *
-          col("__dv").cast("decimal(18,0)")).cast("decimal(38,0)"))
-          .as("__s"))
-    val scaleF = math.pow(10, valueScale)
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      when(col("n_a") >= 1L && col("n_b") >= 1L,
-        col("__s").cast("double") /
-          (d(col("n_a")) * d(col("n_b"))) / lit(scaleF)).as("w1")): _*)
-  }
+                   valueScale: Int = 2): DataFrame =
+    twoSample("wasserstein1", w1Closing(valueScale), keepNullKeys = false, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Kendall's coefficient of concordance (W) per key — HOW MUCH do
@@ -5197,54 +5105,9 @@ object Stats {
    */
   def cramerVonMises(df: DataFrame, keys: Seq[String],
                      groupCol: String, aLabel: String, bLabel: String,
-                     valueCol: String, valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "cramerVonMises needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val wo = wk.orderBy(col("__v"))
-    // 3x the row's contribution to 4*Sum (r-i)^2 — tripled so the
-    // polynomial stays pure integer (Spark's `/` is double division)
-    def contrib3(c: Column, prevC: Column, r2: Column): Column = {
-      val k = r2 - lit(2L) * prevC
-      lit(3L) * c * k * k - lit(6L) * k * c * (c + lit(1L)) +
-        lit(2L) * c * (c + lit(1L)) * (lit(2L) * c + lit(1L))
-    }
-    val stepped = grid
-      .withColumn("__t", col("__ca") + col("__cb"))
-      .withColumn("__pn",
-        coalesce(sum(col("__t")).over(wo.rowsBetween(
-          Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__pa",
-        coalesce(sum(col("__ca")).over(wo.rowsBetween(
-          Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__pb",
-        coalesce(sum(col("__cb")).over(wo.rowsBetween(
-          Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__pn") + col("__t") + lit(1L))
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"),
-        sum(contrib3(col("__ca"), col("__pa"), col("__r2"))
-          .cast("decimal(38,0)")).as("__s12a"),
-        sum(contrib3(col("__cb"), col("__pb"), col("__r2"))
-          .cast("decimal(38,0)")).as("__s12b"))
-    val nD = d(col("n_a")); val mD = d(col("n_b"))
-    val nm = nD + mD
-    val u12 = nD * col("__s12a").cast("double") +
-      mD * col("__s12b").cast("double")
-    val tStat = u12 / (lit(12.0) * nD * mD * nm) -
-      (lit(4.0) * nD * mD - lit(1.0)) / (lit(6.0) * nm)
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      when(col("n_a") >= 1L && col("n_b") >= 1L, tStat).as("t")): _*)
-  }
+                     valueCol: String, valueScale: Int = 2): DataFrame =
+    twoSample("cramerVonMises", cvmClosing, keepNullKeys = false, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Two-sample Anderson-Darling statistic per key (the
@@ -5281,70 +5144,9 @@ object Stats {
    */
   def andersonDarling(df: DataFrame, keys: Seq[String],
                       groupCol: String, aLabel: String, bLabel: String,
-                      valueCol: String, valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "andersonDarling needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val wo = wk.orderBy(col("__v"))
-    def dec(c: Column) = c.cast("decimal(19,0)")
-    def dec38(c: Column) = c.cast("decimal(38,0)")
-    val stepped = grid
-      .withColumn("__l", col("__ca") + col("__cb"))
-      .withColumn("__pn", coalesce(sum(col("__l")).over(wo.rowsBetween(
-        Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__pa", coalesce(sum(col("__ca")).over(wo.rowsBetween(
-        Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__pb", coalesce(sum(col("__cb")).over(wo.rowsBetween(
-        Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__na", sum(col("__ca")).over(wk))
-      .withColumn("__nb", sum(col("__cb")).over(wk))
-      .withColumn("__N", col("__na") + col("__nb"))
-      .withColumn("__b2", lit(2L) * col("__pn") + col("__l"))
-    // inner term per (grid row, arm), all-integer until ONE division:
-    // l·(N·M₂ − B₂·n)² / (N·(B₂(2N−B₂) − N·l))
-    def inner(m2: Column, n: Column): Column = {
-      val d1 = dec38(dec(col("__N")) * dec(m2)) -
-        dec38(dec(col("__b2")) * dec(n))
-      val q = dec38(d1 * d1)
-      val den = dec38(dec(col("__b2")) *
-        dec(lit(2L) * col("__N") - col("__b2"))) -
-        dec38(dec(col("__N")) * dec(col("__l")))
-      when(den > lit(0L).cast("decimal(38,0)"),
-        (d(col("__l")) * q.cast("double")) /
-          (d(col("__N")) * den.cast("double"))).otherwise(lit(0.0))
-    }
-    val terms = stepped
-      .withColumn("__ta",
-        inner(lit(2L) * col("__pa") + col("__ca"), col("__na")))
-      .withColumn("__tb",
-        inner(lit(2L) * col("__pb") + col("__cb"), col("__nb")))
-    val fold = aggregate(
-      sort_array(collect_list(struct(col("__v").as("v"),
-        col("__ta").as("ta"), col("__tb").as("tb")))),
-      struct(lit(0.0).as("sa"), lit(0.0).as("sb")),
-      (acc, x) => struct(
-        (acc.getField("sa") + x.getField("ta")).as("sa"),
-        (acc.getField("sb") + x.getField("tb")).as("sb")))
-    val m = terms.groupBy(keys.map(col): _*)
-      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-        count(lit(1)).as("__grid"), fold.as("__s"))
-    val nD = d(col("n_a")); val mD = d(col("n_b"))
-    val bigN = nD + mD
-    val a2 = (col("__s").getField("sa") / nD +
-      col("__s").getField("sb") / mD) * (bigN - lit(1.0)) / bigN
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      when(col("n_a") >= 1L && col("n_b") >= 1L &&
-        col("__grid") >= 2L, a2).as("a2")): _*)
-  }
+                      valueCol: String, valueScale: Int = 2): DataFrame =
+    twoSample("andersonDarling", adClosing, keepNullKeys = false, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Kuiper two-sample statistic per key — [[ksTest]]'s
@@ -5368,37 +5170,9 @@ object Stats {
    */
   def kuiper(df: DataFrame, keys: Seq[String], groupCol: String,
              aLabel: String, bLabel: String, valueCol: String,
-             valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "kuiper needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val wo = wk.orderBy(col("__v"))
-    val stepped = grid
-      .withColumn("__cuma", sum(col("__ca")).over(wo))
-      .withColumn("__cumb", sum(col("__cb")).over(wo))
-      .withColumn("__na", sum(col("__ca")).over(wk))
-      .withColumn("__nb", sum(col("__cb")).over(wk))
-      .withColumn("__gp",
-        col("__cuma") * col("__nb") - col("__cumb") * col("__na"))
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-        greatest(max(col("__gp")), lit(0L)).as("v_plus_num"),
-        greatest(-min(col("__gp")), lit(0L)).as("v_minus_num"))
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      col("v_plus_num"), col("v_minus_num"),
-      when(col("n_a") >= 1L && col("n_b") >= 1L,
-        d(col("v_plus_num") + col("v_minus_num")) /
-          (d(col("n_a")) * d(col("n_b")))).as("v")): _*)
-  }
+             valueScale: Int = 2): DataFrame =
+    twoSample("kuiper", kuiperClosing, keepNullKeys = false, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * The whole two-sample drift panel in ONE pass: [[ksTest]] (max
@@ -5412,15 +5186,18 @@ object Stats {
    * they cost five corpus scans and five grid exchanges of
    * identical bytes. This panel builds the grid ONCE (one map-side
    * collapse), exchanges it ONCE (one key partitioning carries
-   * every cumulative window), and closes each statistic with its
-   * own EXACT formulation — the per-statistic columns here are
-   * expression-for-expression the single operators' closings, so
-   * `driftPanel` is bit-identical to running the five operators
-   * individually (pinned in StatsSpec) at one fifth the I/O.
+   * every cumulative window), and aggregates the five members'
+   * closings in one pass. The single operators are built from the
+   * same private grid kernel and the same closings, so each panel
+   * column is bit-identical to its operator's by construction
+   * (pinned in StatsSpec), at one fifth the I/O.
    *
    * Output: (keys…, n_a, n_b, ks_d, cvm_t, ad_a2, kuiper_v, w1) —
    * null statistic columns under each member's own degenerate-input
-   * contract (empty arm; single-point grid for ad_a2).
+   * contract (empty arm; single-point grid for ad_a2). Keys are
+   * required and rows with a null key are dropped (where the
+   * standalone [[ksTest]] groups them as one key); `aLabel` must
+   * differ from `bLabel`.
    *
    * Scale posture: one map-side grid collapse, ONE key exchange
    * carrying all cumulative windows, per-key closing aggregates;
@@ -5431,105 +5208,14 @@ object Stats {
   def driftPanel(df: DataFrame, keys: Seq[String], groupCol: String,
                  aLabel: String, bLabel: String, valueCol: String,
                  valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "driftPanel needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val wo = wk.orderBy(col("__v"))
-    def dec(c: Column) = c.cast("decimal(19,0)")
-    def dec38(c: Column) = c.cast("decimal(38,0)")
-    // [[cramerVonMises]]'s tripled pure-integer contribution
-    def contrib3(c: Column, prevC: Column, r2: Column): Column = {
-      val k = r2 - lit(2L) * prevC
-      lit(3L) * c * k * k - lit(6L) * k * c * (c + lit(1L)) +
-        lit(2L) * c * (c + lit(1L)) * (lit(2L) * c + lit(1L))
-    }
-    // [[andersonDarling]]'s one-division inner term
-    def inner(m2: Column, n: Column): Column = {
-      val d1 = dec38(dec(col("__N")) * dec(m2)) -
-        dec38(dec(col("__b2")) * dec(n))
-      val q = dec38(d1 * d1)
-      val den = dec38(dec(col("__b2")) *
-        dec(lit(2L) * col("__N") - col("__b2"))) -
-        dec38(dec(col("__N")) * dec(col("__l")))
-      when(den > lit(0L).cast("decimal(38,0)"),
-        (d(col("__l")) * q.cast("double")) /
-          (d(col("__N")) * den.cast("double"))).otherwise(lit(0.0))
-    }
-    val stepped = grid
-      .withColumn("__l", col("__ca") + col("__cb"))
-      .withColumn("__pn", coalesce(sum(col("__l")).over(wo.rowsBetween(
-        Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__pa", coalesce(sum(col("__ca")).over(wo.rowsBetween(
-        Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__pb", coalesce(sum(col("__cb")).over(wo.rowsBetween(
-        Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__cuma", col("__pa") + col("__ca"))
-      .withColumn("__cumb", col("__pb") + col("__cb"))
-      .withColumn("__na", sum(col("__ca")).over(wk))
-      .withColumn("__nb", sum(col("__cb")).over(wk))
-      .withColumn("__N", col("__na") + col("__nb"))
-      .withColumn("__b2", lit(2L) * col("__pn") + col("__l"))
-      .withColumn("__dv",
-        coalesce(lead(col("__v"), 1).over(wo) - col("__v"), lit(0L)))
-      .withColumn("__gp",
-        col("__cuma") * col("__nb") - col("__cumb") * col("__na"))
-      .withColumn("__gap", abs(col("__gp")))
-      .withColumn("__r2", lit(2L) * col("__pn") + col("__l") + lit(1L))
-      .withColumn("__ta",
-        inner(lit(2L) * col("__pa") + col("__ca"), col("__na")))
-      .withColumn("__tb",
-        inner(lit(2L) * col("__pb") + col("__cb"), col("__nb")))
-    val adFold = aggregate(
-      sort_array(collect_list(struct(col("__v").as("v"),
-        col("__ta").as("ta"), col("__tb").as("tb")))),
-      struct(lit(0.0).as("sa"), lit(0.0).as("sb")),
-      (acc, x) => struct(
-        (acc.getField("sa") + x.getField("ta")).as("sa"),
-        (acc.getField("sb") + x.getField("tb")).as("sb")))
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-        count(lit(1)).as("__grid"),
-        max(col("__gap")).as("__dnum"),
-        greatest(max(col("__gp")), lit(0L)).as("__vp"),
-        greatest(-min(col("__gp")), lit(0L)).as("__vm"),
-        sum(contrib3(col("__ca"), col("__pa"), col("__r2"))
-          .cast("decimal(38,0)")).as("__s12a"),
-        sum(contrib3(col("__cb"), col("__pb"), col("__r2"))
-          .cast("decimal(38,0)")).as("__s12b"),
-        adFold.as("__s"),
-        sum((col("__gap").cast("decimal(20,0)") *
-          col("__dv").cast("decimal(18,0)")).cast("decimal(38,0)"))
-          .as("__w1s"))
-    val nD = d(col("n_a")); val mD = d(col("n_b"))
-    val nm = nD + mD
-    val bothArms = col("n_a") >= 1L && col("n_b") >= 1L
-    val u12 = nD * col("__s12a").cast("double") +
-      mD * col("__s12b").cast("double")
-    val tStat = u12 / (lit(12.0) * nD * mD * nm) -
-      (lit(4.0) * nD * mD - lit(1.0)) / (lit(6.0) * nm)
-    val a2 = (col("__s").getField("sa") / nD +
-      col("__s").getField("sb") / mD) * (nm - lit(1.0)) / nm
-    val scaleF = math.pow(10, valueScale)
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      // ksTest's exact closing shape: long product THEN one cast
-      when(bothArms, d(col("__dnum")) / d(col("n_a") * col("n_b")))
-        .as("ks_d"),
-      when(bothArms, tStat).as("cvm_t"),
-      when(bothArms && col("__grid") >= 2L, a2).as("ad_a2"),
-      when(bothArms,
-        d(col("__vp") + col("__vm")) / (nD * mD)).as("kuiper_v"),
-      when(bothArms,
-        col("__w1s").cast("double") / (nD * mD) / lit(scaleF))
-        .as("w1")): _*)
+    val grid = twoSampleGrid("driftPanel", df, keys, groupCol, aLabel,
+      bLabel, valueCol, valueScale, keepNullKeys = false)
+    val (ks, cvm, ad, ku, w1) = (ksClosing, cvmClosing, adClosing,
+      kuiperClosing, w1Closing(valueScale))
+    closeGrid(grid, keys, Seq(ks, cvm, ad, ku, w1), Seq(
+      ks.out("d").as("ks_d"), cvm.out("t").as("cvm_t"),
+      ad.out("a2").as("ad_a2"), ku.out("v").as("kuiper_v"),
+      w1.out("w1").as("w1")))
   }
 
   /**
@@ -5545,21 +5231,22 @@ object Stats {
    * Brunner-Munzel's `R₂ = 2·prevN + t + 1`, and Cliff's
    * `δ = 2U/(n_a·n_b) − 1` closes over MWU's U — so the panel
    * builds the (keys, value) grid ONCE, exchanges it ONCE (one key
-   * partitioning carries every cumulative window), and closes each
-   * statistic with the single operator's exact expression. Every
-   * rank quantity is an exact integer (DOUBLED midranks, placements
-   * `L₂ = R₂ − Ra₂` as longs, DECIMAL(38,0) order-free sums), so
-   * the panel is bit-identical to running the three operators
-   * separately (pinned in StatsSpec) at one third the I/O.
+   * partitioning carries every cumulative window), and aggregates
+   * the three members' closings in one pass; the doubled rank sum
+   * they share is computed once. The single operators are built
+   * from the same private grid kernel and the same closings, so
+   * each panel column is bit-identical to its operator's by
+   * construction (pinned in StatsSpec), at one third the I/O.
    *
    * Output: (keys…, n_a, n_b, u_a, u_b, z, delta, p_hat, w, df) —
    * each member's own degenerate-input contract carried: an empty
    * arm nulls everything; all-tied data nulls z (σ² = 0) and w/df
    * (zero placement variance) but keeps δ = 0 and p̂ = ½; arms
    * under 2 null w/df only. One contract difference from the
-   * standalone [[mannWhitneyU]]: rows with null KEYS are excluded
-   * here (the [[brunnerMunzel]]/[[driftPanel]] convention) rather
-   * than grouped under a null key.
+   * standalone [[mannWhitneyU]] and [[cliffsDelta]]: keys are
+   * required and rows with null KEYS are excluded here (the
+   * [[brunnerMunzel]]/[[driftPanel]] convention) rather than
+   * grouped under a null key. `aLabel` must differ from `bLabel`.
    *
    * Scale posture: one map-side grid collapse, ONE key exchange
    * carrying all cumulative windows, one closing aggregate — the
@@ -5568,100 +5255,10 @@ object Stats {
   def rankPanel(df: DataFrame, keys: Seq[String], groupCol: String,
                 aLabel: String, bLabel: String, valueCol: String,
                 valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "rankPanel needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wo = Window.partitionBy(keys.map(col): _*).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val stepped = grid
-      .withColumn("__t", col("__ca") + col("__cb"))
-      .withColumn("__pn", coalesce(sum(col("__t")).over(wo), lit(0L)))
-      .withColumn("__pa", coalesce(sum(col("__ca")).over(wo), lit(0L)))
-      .withColumn("__pb", coalesce(sum(col("__cb")).over(wo), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__pn") + col("__t") + lit(1L))
-      .withColumn("__la",
-        col("__r2") - (lit(2L) * col("__pa") + col("__ca") + lit(1L)))
-      .withColumn("__lb",
-        col("__r2") - (lit(2L) * col("__pb") + col("__cb") + lit(1L)))
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    // [[mannWhitneyU]]'s tie term rides the grid-row TOTAL count
-    val cd = col("__t").cast("decimal(12,0)")
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"),
-        // Σ c_g·R₂ per arm: MWU's doubled rank sum for arm a IS
-        // Brunner-Munzel's __sra — ONE exact integer serves both
-        // closings (decimal-product route, the wider of the two)
-        sum((col("__ca").cast("decimal(19,0)") *
-          col("__r2").cast("decimal(19,0)")).cast("decimal(38,0)"))
-          .as("__sra"),
-        sum((col("__cb").cast("decimal(19,0)") *
-          col("__r2").cast("decimal(19,0)")).cast("decimal(38,0)"))
-          .as("__srb"),
-        sum((cd * cd * cd - cd).cast("decimal(38,0)")).as("__tt"),
-        sum(dec(col("__ca") * col("__la"))).as("__sla"),
-        sum((col("__la").cast("decimal(19,0)") *
-          col("__la").cast("decimal(19,0)") *
-          col("__ca").cast("decimal(19,0)")).cast("decimal(38,0)"))
-          .as("__sla2"),
-        sum(dec(col("__cb") * col("__lb"))).as("__slb"),
-        sum((col("__lb").cast("decimal(19,0)") *
-          col("__lb").cast("decimal(19,0)") *
-          col("__cb").cast("decimal(19,0)")).cast("decimal(38,0)"))
-          .as("__slb2"))
-    // Null-on-zero divisors (the [[brunnerMunzel]] ANSI discipline,
-    // pinned in DegenerateArmSpec): a null divisor yields null, a
-    // nonzero one the bit-identical value — output guards alone do
-    // not protect a division codegen's subexpression elimination
-    // hoists above them
-    def nz(c: Column): Column = when(c =!= lit(0.0), c)
-    // --- [[mannWhitneyU]]'s closing, expression for expression ---
-    val na = d(col("n_a")); val nb = d(col("n_b"))
-    val nn = na + nb
-    val ra = d(col("__sra")) / lit(2.0)
-    val ua = ra - na * (na + lit(1.0)) / lit(2.0)
-    val mu = na * nb / lit(2.0)
-    val sig2 = na * nb / lit(12.0) *
-      ((nn + lit(1.0)) - d(col("__tt")) / nz(nn * (nn - lit(1.0))))
-    val okU = col("n_a") >= 1 && col("n_b") >= 1
-    // --- [[cliffsDelta]]'s closing over the same U ---
-    val prod = col("n_a").cast("double") * col("n_b").cast("double")
-    val delta = lit(2.0) * ua / when(prod > 0.0, prod) - lit(1.0)
-    // --- [[brunnerMunzel]]'s closing, expression for expression ---
-    val rbarA = col("__sra").cast("double") / nz(na) / lit(2.0)
-    val rbarB = col("__srb").cast("double") / nz(nb) / lit(2.0)
-    val sA = (col("__sla2").cast("double") -
-      col("__sla").cast("double") * col("__sla").cast("double") /
-        nz(na)) /
-      nz(lit(4.0) * (na - lit(1.0)))
-    val sB = (col("__slb2").cast("double") -
-      col("__slb").cast("double") * col("__slb").cast("double") /
-        nz(nb)) /
-      nz(lit(4.0) * (nb - lit(1.0)))
-    val varSum = na * sA + nb * sB
-    val w = na * nb * (rbarB - rbarA) / nz(nn * sqrt(varSum))
-    val dfNum = varSum * varSum
-    val dfDen = (na * sA) * (na * sA) / nz(na - lit(1.0)) +
-      (nb * sB) * (nb * sB) / nz(nb - lit(1.0))
-    val pHat = (rbarB - (nb + lit(1.0)) / lit(2.0)) / nz(na)
-    val okW = col("n_a") >= 2L && col("n_b") >= 2L
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      when(okU, ua).as("u_a"),
-      when(okU, na * nb - ua).as("u_b"),
-      when(okU && sig2 > 0.0,
-        (ua - mu) / nz(sqrt(sig2))).as("z"),
-      when(okU, delta).as("delta"),
-      when(okU, pHat).as("p_hat"),
-      when(okW && varSum > 0.0, w).as("w"),
-      when(okW && varSum > 0.0 && dfDen > 0.0,
-        dfNum / when(dfDen > 0.0, dfDen)).as("df")): _*)
+    val grid = twoSampleGrid("rankPanel", df, keys, groupCol, aLabel,
+      bLabel, valueCol, valueScale, keepNullKeys = false)
+    val members = Seq(mwuClosing, cliffsClosing, bmClosing)
+    closeGrid(grid, keys, members, outColumns(members: _*))
   }
 
   /**
@@ -5692,47 +5289,9 @@ object Stats {
    */
   def energyDistance(df: DataFrame, keys: Seq[String],
                      groupCol: String, aLabel: String, bLabel: String,
-                     valueCol: String, valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "energyDistance needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val wo = wk.orderBy(col("__v"))
-    val stepped = grid
-      .withColumn("__cuma", sum(col("__ca")).over(wo))
-      .withColumn("__cumb", sum(col("__cb")).over(wo))
-      .withColumn("__na", sum(col("__ca")).over(wk))
-      .withColumn("__nb", sum(col("__cb")).over(wk))
-      .withColumn("__dv",
-        coalesce(lead(col("__v"), 1).over(wo) - col("__v"), lit(0L)))
-    def seg(term: Column): Column =
-      (term.cast("decimal(20,0)") * col("__dv").cast("decimal(18,0)"))
-        .cast("decimal(38,0)")
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-        sum(seg(col("__cuma") * (col("__nb") - col("__cumb")) +
-          col("__cumb") * (col("__na") - col("__cuma")))).as("__sxy"),
-        sum(seg(col("__cuma") * (col("__na") - col("__cuma"))))
-          .as("__sxx"),
-        sum(seg(col("__cumb") * (col("__nb") - col("__cumb"))))
-          .as("__syy"))
-    val nD = d(col("n_a")); val mD = d(col("n_b"))
-    val scaleF = math.pow(10, valueScale)
-    val e = lit(2.0) * col("__sxy").cast("double") / (nD * mD) -
-      lit(2.0) * col("__sxx").cast("double") / (nD * nD) -
-      lit(2.0) * col("__syy").cast("double") / (mD * mD)
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      when(col("n_a") >= 1L && col("n_b") >= 1L, e / lit(scaleF))
-        .as("energy")): _*)
-  }
+                     valueCol: String, valueScale: Int = 2): DataFrame =
+    twoSample("energyDistance", energyClosing(valueScale), keepNullKeys = false, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Lorenz curve per key — the table behind [[gini]]'s single
@@ -5903,44 +5462,9 @@ object Stats {
   def distributionDistance(df: DataFrame, keys: Seq[String],
                            groupCol: String, aLabel: String,
                            bLabel: String, valueCol: String,
-                           valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "distributionDistance needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wk = Window.partitionBy(keys.map(col): _*)
-    val stepped = grid
-      .withColumn("__na", sum(col("__ca")).over(wk))
-      .withColumn("__nb", sum(col("__cb")).over(wk))
-    val fold = aggregate(
-      sort_array(collect_list(struct(col("__v").as("__t"),
-        (col("__ca") * col("__cb")).cast("double").as("__p")))),
-      lit(0.0),
-      (acc, p) => acc + sqrt(p.getField("__p")))
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-        sum(abs(col("__ca") * col("__nb") - col("__cb") * col("__na")))
-          .as("__tvn"),
-        sum(least(col("__ca") * col("__nb"), col("__cb") * col("__na")))
-          .as("__ovn"),
-        fold.as("__bcn"))
-    val nD = d(col("n_a")); val mD = d(col("n_b"))
-    val ok = col("n_a") >= 1L && col("n_b") >= 1L
-    val bc = col("__bcn") / sqrt(nD * mD)
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      when(ok, d(col("__tvn")) / (lit(2.0) * nD * mD)).as("tv"),
-      when(ok, d(col("__ovn")) / (nD * mD)).as("overlap"),
-      when(ok, bc).as("bc"),
-      when(ok, sqrt(greatest(lit(0.0), lit(1.0) - bc)))
-        .as("hellinger")): _*)
-  }
+                           valueScale: Int = 2): DataFrame =
+    twoSample("distributionDistance", distanceClosing, keepNullKeys = false, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Hodges-Lehmann shift estimator per key — the VALUE-UNIT effect
@@ -6421,81 +5945,9 @@ object Stats {
    */
   def brunnerMunzel(df: DataFrame, keys: Seq[String], groupCol: String,
                     aLabel: String, bLabel: String, valueCol: String,
-                    valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "brunnerMunzel needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val grid = df
-      .filter(col(valueCol).isNotNull &&
-        (col(groupCol) === aLabel || col(groupCol) === bLabel) &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+
-        unscaled(col(valueCol), valueScale).as("__v"): _*)
-      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
-        .as("__ca"),
-        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
-    val wo = Window.partitionBy(keys.map(col): _*).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val stepped = grid
-      .withColumn("__t", col("__ca") + col("__cb"))
-      .withColumn("__pn", coalesce(sum(col("__t")).over(wo), lit(0L)))
-      .withColumn("__pa", coalesce(sum(col("__ca")).over(wo), lit(0L)))
-      .withColumn("__pb", coalesce(sum(col("__cb")).over(wo), lit(0L)))
-      .withColumn("__r2", lit(2L) * col("__pn") + col("__t") + lit(1L))
-      .withColumn("__la",
-        col("__r2") - (lit(2L) * col("__pa") + col("__ca") + lit(1L)))
-      .withColumn("__lb",
-        col("__r2") - (lit(2L) * col("__pb") + col("__cb") + lit(1L)))
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    val m = stepped.groupBy(keys.map(col): _*)
-      .agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"),
-        sum(dec(col("__ca") * col("__r2"))).as("__sra"),
-        sum(dec(col("__cb") * col("__r2"))).as("__srb"),
-        sum(dec(col("__ca") * col("__la"))).as("__sla"),
-        sum((col("__la").cast("decimal(19,0)") *
-          col("__la").cast("decimal(19,0)") *
-          col("__ca").cast("decimal(19,0)")).cast("decimal(38,0)"))
-          .as("__sla2"),
-        sum(dec(col("__cb") * col("__lb"))).as("__slb"),
-        sum((col("__lb").cast("decimal(19,0)") *
-          col("__lb").cast("decimal(19,0)") *
-          col("__cb").cast("decimal(19,0)")).cast("decimal(38,0)"))
-          .as("__slb2"))
-    val nD = d(col("n_a")); val mD = d(col("n_b"))
-    val bigN = nD + mD
-    // Null-on-zero divisors: under ANSI mode (Spark 4's default)
-    // EVERY division by zero throws — doubles included — and
-    // codegen's subexpression elimination can hoist a division
-    // shared between a `when` guard and its branch ABOVE the guard,
-    // so output-level null guards do NOT protect these closings. A
-    // null divisor yields a null (never a throw) and the guarded
-    // outputs are null anyway; where the divisor is nonzero the
-    // value is bit-identical. Pinned in DegenerateArmSpec (an empty
-    // arm crashed the whole job before this).
-    def nz(c: Column): Column = when(c =!= lit(0.0), c)
-    val rbarA = col("__sra").cast("double") / nz(nD) / lit(2.0)
-    val rbarB = col("__srb").cast("double") / nz(mD) / lit(2.0)
-    val sA = (col("__sla2").cast("double") -
-      col("__sla").cast("double") * col("__sla").cast("double") /
-        nz(nD)) /
-      nz(lit(4.0) * (nD - lit(1.0)))
-    val sB = (col("__slb2").cast("double") -
-      col("__slb").cast("double") * col("__slb").cast("double") /
-        nz(mD)) /
-      nz(lit(4.0) * (mD - lit(1.0)))
-    val varSum = nD * sA + mD * sB
-    val w = nD * mD * (rbarB - rbarA) / nz(bigN * sqrt(varSum))
-    val dfNum = varSum * varSum
-    val dfDen = (nD * sA) * (nD * sA) / nz(nD - lit(1.0)) +
-      (mD * sB) * (mD * sB) / nz(mD - lit(1.0))
-    val pHat = (rbarB - (mD + lit(1.0)) / lit(2.0)) / nz(nD)
-    val okP = col("n_a") >= 1L && col("n_b") >= 1L
-    val okW = col("n_a") >= 2L && col("n_b") >= 2L
-    m.select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
-      when(okP, pHat).as("p_hat"),
-      when(okW && varSum > 0.0, w).as("w"),
-      when(okW && varSum > 0.0 && dfDen > 0.0,
-        dfNum / when(dfDen > 0.0, dfDen)).as("df")): _*)
-  }
+                    valueScale: Int = 2): DataFrame =
+    twoSample("brunnerMunzel", bmClosing, keepNullKeys = false, df,
+      keys, groupCol, aLabel, bLabel, valueCol, valueScale)
 
   /**
    * Two-proportion sample-size calculator per key — "how many users
@@ -6678,6 +6130,310 @@ object Stats {
           lit(0.0), (acc, x) => acc + x.getField("t")).as("__g"))
     folded.select(keys.map(col) ++ Seq(col("n"), col("r"), col("c"),
       when(col("r") > 1L && col("c") > 1L, col("__g")).as("g2")): _*)
+  }
+
+  // ---- the two-sample grid kernel and its closings ----
+
+  /**
+   * The pooled (keys, value) grid behind every two-sample CDF and
+   * rank statistic. Rows of the two arms collapse map-side to one row
+   * per (keys, `__v`), `__v` the exact [[unscaled]] long, with arm
+   * counts `__ca`/`__cb`. ONE key-partitioned window ordered by `__v`
+   * adds the exclusive prefix sums `__pa`/`__pb`/`__pn` (members of
+   * arm a, arm b and both strictly below `__v`) and the segment width
+   * `__dv` to the next grid value (0 on the last); the arm totals
+   * `__na`/`__nb` ride the same partitioning. Columns a closing does
+   * not read are pruned from the plan.
+   *
+   * `keepNullKeys` is the [[mannWhitneyU]]/[[ksTest]]/[[cliffsDelta]]
+   * convention: null keys group as one key and `keys = Nil` is one
+   * global group. Otherwise rows with a null key are dropped and keys
+   * are required.
+   */
+  private def twoSampleGrid(op: String, df: DataFrame, keys: Seq[String],
+                            groupCol: String, aLabel: String,
+                            bLabel: String, valueCol: String,
+                            valueScale: Int,
+                            keepNullKeys: Boolean): DataFrame = {
+    require(aLabel != bLabel,
+      s"$op needs two distinct arm labels, got '$aLabel' for both")
+    require(keepNullKeys || keys.nonEmpty, s"$op needs key columns")
+    import org.apache.spark.sql.expressions.Window
+    val arms = col(valueCol).isNotNull &&
+      (col(groupCol) === aLabel || col(groupCol) === bLabel)
+    val grid = df
+      .filter(if (keepNullKeys) arms
+        else arms && keys.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col) :+
+        unscaled(col(valueCol), valueScale).as("__v"): _*)
+      .agg(sum(when(col(groupCol) === aLabel, 1L).otherwise(0L))
+        .as("__ca"),
+        sum(when(col(groupCol) === bLabel, 1L).otherwise(0L)).as("__cb"))
+    val wk = Window.partitionBy(keys.map(col): _*)
+    val wo = wk.orderBy(col("__v"))
+    val below = wo.rowsBetween(Window.unboundedPreceding, -1)
+    grid
+      .withColumn("__pa", coalesce(sum(col("__ca")).over(below), lit(0L)))
+      .withColumn("__pb", coalesce(sum(col("__cb")).over(below), lit(0L)))
+      .withColumn("__dv",
+        coalesce(lead(col("__v"), 1).over(wo) - col("__v"), lit(0L)))
+      .withColumn("__na", sum(col("__ca")).over(wk))
+      .withColumn("__nb", sum(col("__cb")).over(wk))
+      .withColumn("__pn", col("__pa") + col("__pb"))
+  }
+
+  /** One statistic's closing over [[twoSampleGrid]]: its per-key
+   *  aggregates over the grid rows and its output columns over those
+   *  aggregates and `n_a`/`n_b`. Aggregates are named; two closings
+   *  that share a name share the expression, and a panel computes it
+   *  once. */
+  private final case class Closing(aggs: Seq[(String, Column)],
+                                   outs: Seq[(String, Column)]) {
+    def out(name: String): Column = outs.find(_._1 == name).get._2
+  }
+
+  /** The per-key aggregate of `closings` over `grid`, projected to
+   *  (keys…, n_a, n_b, outs…). */
+  private def closeGrid(grid: DataFrame, keys: Seq[String],
+                        closings: Seq[Closing],
+                        outs: Seq[Column]): DataFrame = {
+    val aggs = closings.flatMap(_.aggs).distinctBy(_._1)
+      .map { case (name, c) => c.as(name) }
+    grid.groupBy(keys.map(col): _*)
+      .agg(sum(col("__ca")).as("n_a"),
+        sum(col("__cb")).as("n_b") +: aggs: _*)
+      .select(keys.map(col) ++ Seq(col("n_a"), col("n_b")) ++ outs: _*)
+  }
+
+  /** The output columns of `closings`, in order, each name once. */
+  private def outColumns(closings: Closing*): Seq[Column] =
+    closings.flatMap(_.outs).distinctBy(_._1)
+      .map { case (name, c) => c.as(name) }
+
+  /** A single two-sample operator: the grid closed by one closing. */
+  private def twoSample(op: String, closing: Closing,
+                        keepNullKeys: Boolean, df: DataFrame,
+                        keys: Seq[String], groupCol: String,
+                        aLabel: String, bLabel: String, valueCol: String,
+                        valueScale: Int): DataFrame =
+    closeGrid(twoSampleGrid(op, df, keys, groupCol, aLabel, bLabel,
+      valueCol, valueScale, keepNullKeys), keys, Seq(closing),
+      outColumns(closing))
+
+  private def nA: Column = d(col("n_a"))
+  private def nB: Column = d(col("n_b"))
+  private def bothArms: Column = col("n_a") >= 1L && col("n_b") >= 1L
+
+  /** Null-on-zero divisor. Under ANSI mode (Spark 4's default) EVERY
+   *  division by zero throws, doubles included, and codegen's
+   *  subexpression elimination can hoist a division shared between a
+   *  `when` guard and its branch ABOVE the guard, so output-level
+   *  null guards do not protect a closing. A null divisor yields a
+   *  null, never a throw; a nonzero one the bit-identical value.
+   *  Pinned in DegenerateArmSpec. */
+  private def nz(c: Column): Column = when(c =!= lit(0.0), c)
+
+  /** Grid-row members of both arms (the tie-run length). */
+  private def gridT: Column = col("__ca") + col("__cb")
+
+  /** Doubled pooled midrank of the grid row's tie run:
+   *  `R₂ = 2·prevN + t + 1`. */
+  private def midRank2: Column = lit(2L) * col("__pn") + gridT + lit(1L)
+
+  /** The ksTest lattice gap `cumA·n_b − cumB·n_a` (exact long). */
+  private def cdfGap: Column =
+    (col("__pa") + col("__ca")) * col("__nb") -
+      (col("__pb") + col("__cb")) * col("__na")
+
+  /** A per-row term times the segment width, exact in DECIMAL(38,0). */
+  private def segment(term: Column): Column =
+    (term.cast("decimal(20,0)") * col("__dv").cast("decimal(18,0)"))
+      .cast("decimal(38,0)")
+
+  /** Σ c·R₂ for one arm's grid counts `c`: the doubled rank sum,
+   *  through the decimal product (long intermediates would overflow
+   *  past n ~ 2e9 rows). */
+  private def rankSum2(c: Column): Column =
+    sum((c.cast("decimal(19,0)") * midRank2.cast("decimal(19,0)"))
+      .cast("decimal(38,0)"))
+
+  /** Mann-Whitney `U_a = R_a − n_a(n_a+1)/2` over the `__sra` sum. */
+  private def uA: Column =
+    d(col("__sra")) / lit(2.0) - nA * (nA + lit(1.0)) / lit(2.0)
+
+  private def ksClosing: Closing = Closing(
+    Seq("d_num" -> max(abs(cdfGap))),
+    Seq("d_num" -> col("d_num"),
+      "d_den" -> col("n_a") * col("n_b"),
+      // long product THEN one cast
+      "d" -> when(bothArms,
+        d(col("d_num")) / d(col("n_a") * col("n_b")))))
+
+  private def kuiperClosing: Closing = Closing(
+    Seq("v_plus_num" -> greatest(max(cdfGap), lit(0L)),
+      "v_minus_num" -> greatest(-min(cdfGap), lit(0L))),
+    Seq("v_plus_num" -> col("v_plus_num"),
+      "v_minus_num" -> col("v_minus_num"),
+      "v" -> when(bothArms,
+        d(col("v_plus_num") + col("v_minus_num")) / (nA * nB))))
+
+  private def w1Closing(valueScale: Int): Closing = Closing(
+    Seq("__w1s" -> sum(segment(abs(cdfGap)))),
+    Seq("w1" -> when(bothArms, col("__w1s").cast("double") /
+      (nA * nB) / lit(math.pow(10, valueScale)))))
+
+  private def cvmClosing: Closing = {
+    // 3x the row's contribution to 4*Sum (r-i)^2 — tripled so the
+    // polynomial stays pure integer (Spark's `/` is double division)
+    def contrib3(c: Column, prevC: Column): Column = {
+      val k = midRank2 - lit(2L) * prevC
+      lit(3L) * c * k * k - lit(6L) * k * c * (c + lit(1L)) +
+        lit(2L) * c * (c + lit(1L)) * (lit(2L) * c + lit(1L))
+    }
+    val nm = nA + nB
+    val u12 = nA * col("__s12a").cast("double") +
+      nB * col("__s12b").cast("double")
+    val tStat = u12 / (lit(12.0) * nA * nB * nm) -
+      (lit(4.0) * nA * nB - lit(1.0)) / (lit(6.0) * nm)
+    Closing(
+      Seq("__s12a" -> sum(contrib3(col("__ca"), col("__pa"))
+        .cast("decimal(38,0)")),
+        "__s12b" -> sum(contrib3(col("__cb"), col("__pb"))
+          .cast("decimal(38,0)"))),
+      Seq("t" -> when(bothArms, tStat)))
+  }
+
+  private def adClosing: Closing = {
+    def dec(c: Column) = c.cast("decimal(19,0)")
+    def dec38(c: Column) = c.cast("decimal(38,0)")
+    val bigN = col("__na") + col("__nb")
+    val b2 = lit(2L) * col("__pn") + gridT
+    // inner term per (grid row, arm), all-integer until ONE division:
+    // l·(N·M₂ − B₂·n)² / (N·(B₂(2N−B₂) − N·l))
+    def inner(m2: Column, n: Column): Column = {
+      val d1 = dec38(dec(bigN) * dec(m2)) - dec38(dec(b2) * dec(n))
+      val q = dec38(d1 * d1)
+      val den = dec38(dec(b2) * dec(lit(2L) * bigN - b2)) -
+        dec38(dec(bigN) * dec(gridT))
+      when(den > lit(0L).cast("decimal(38,0)"),
+        (d(gridT) * q.cast("double")) /
+          (d(bigN) * den.cast("double"))).otherwise(lit(0.0))
+    }
+    // folded in ASCENDING grid order (an ordered-list reduce)
+    val fold = aggregate(
+      sort_array(collect_list(struct(col("__v").as("v"),
+        inner(lit(2L) * col("__pa") + col("__ca"), col("__na")).as("ta"),
+        inner(lit(2L) * col("__pb") + col("__cb"), col("__nb"))
+          .as("tb")))),
+      struct(lit(0.0).as("sa"), lit(0.0).as("sb")),
+      (acc, x) => struct(
+        (acc.getField("sa") + x.getField("ta")).as("sa"),
+        (acc.getField("sb") + x.getField("tb")).as("sb")))
+    val nm = nA + nB
+    val a2 = (col("__ad").getField("sa") / nA +
+      col("__ad").getField("sb") / nB) * (nm - lit(1.0)) / nm
+    Closing(Seq("__grid" -> count(lit(1)), "__ad" -> fold),
+      Seq("a2" -> when(bothArms && col("__grid") >= 2L, a2)))
+  }
+
+  private def energyClosing(valueScale: Int): Closing = {
+    val cumA = col("__pa") + col("__ca")
+    val cumB = col("__pb") + col("__cb")
+    val e = lit(2.0) * col("__sxy").cast("double") / (nA * nB) -
+      lit(2.0) * col("__sxx").cast("double") / (nA * nA) -
+      lit(2.0) * col("__syy").cast("double") / (nB * nB)
+    Closing(
+      Seq("__sxy" -> sum(segment(cumA * (col("__nb") - cumB) +
+        cumB * (col("__na") - cumA))),
+        "__sxx" -> sum(segment(cumA * (col("__na") - cumA))),
+        "__syy" -> sum(segment(cumB * (col("__nb") - cumB)))),
+      Seq("energy" -> when(bothArms,
+        e / lit(math.pow(10, valueScale)))))
+  }
+
+  private def distanceClosing: Closing = {
+    val ca = col("__ca"); val cb = col("__cb")
+    // BC folds SEQUENTIALLY in value order (≡ list_reduce)
+    val bcFold = aggregate(
+      sort_array(collect_list(struct(col("__v").as("__t"),
+        (ca * cb).cast("double").as("__p")))),
+      lit(0.0),
+      (acc, p) => acc + sqrt(p.getField("__p")))
+    val bc = col("__bcn") / sqrt(nA * nB)
+    Closing(
+      Seq("__tvn" -> sum(abs(ca * col("__nb") - cb * col("__na"))),
+        "__ovn" -> sum(least(ca * col("__nb"), cb * col("__na"))),
+        "__bcn" -> bcFold),
+      Seq("tv" -> when(bothArms, d(col("__tvn")) / (lit(2.0) * nA * nB)),
+        "overlap" -> when(bothArms, d(col("__ovn")) / (nA * nB)),
+        "bc" -> when(bothArms, bc),
+        "hellinger" -> when(bothArms,
+          sqrt(greatest(lit(0.0), lit(1.0) - bc)))))
+  }
+
+  private def mwuClosing: Closing = {
+    // decimal BEFORE multiplying: long intermediates would overflow
+    // past 2e6-row tie runs (t³)
+    val cd = gridT.cast("decimal(12,0)")
+    val nn = nA + nB
+    val mu = nA * nB / lit(2.0)
+    val sig2 = nA * nB / lit(12.0) *
+      ((nn + lit(1.0)) - d(col("__tt")) / nz(nn * (nn - lit(1.0))))
+    Closing(
+      Seq("__sra" -> rankSum2(col("__ca")),
+        "__tt" -> sum((cd * cd * cd - cd).cast("decimal(38,0)"))),
+      Seq("u_a" -> when(bothArms, uA),
+        "u_b" -> when(bothArms, nA * nB - uA),
+        "z" -> when(bothArms && sig2 > 0.0, (uA - mu) / nz(sqrt(sig2)))))
+  }
+
+  private def cliffsClosing: Closing = {
+    val prod = nA * nB
+    Closing(Seq("__sra" -> rankSum2(col("__ca"))),
+      Seq("u_a" -> when(bothArms, uA),
+        "delta" -> when(bothArms,
+          lit(2.0) * uA / when(prod > 0.0, prod) - lit(1.0))))
+  }
+
+  private def bmClosing: Closing = {
+    // placements L₂ = R₂ − Ra₂, Ra₂ = 2·prevArm + c + 1 (exact longs)
+    def place(c: Column, prev: Column): Column =
+      midRank2 - (lit(2L) * prev + c + lit(1L))
+    def placeSum(c: Column, prev: Column): Column =
+      sum((c * place(c, prev)).cast("decimal(38,0)"))
+    def placeSq(c: Column, prev: Column): Column = {
+      val l = place(c, prev).cast("decimal(19,0)")
+      sum((l * l * c.cast("decimal(19,0)")).cast("decimal(38,0)"))
+    }
+    val ca = col("__ca"); val cb = col("__cb")
+    val nn = nA + nB
+    val rbarA = col("__sra").cast("double") / nz(nA) / lit(2.0)
+    val rbarB = col("__srb").cast("double") / nz(nB) / lit(2.0)
+    val sA = (col("__sla2").cast("double") -
+      col("__sla").cast("double") * col("__sla").cast("double") /
+        nz(nA)) /
+      nz(lit(4.0) * (nA - lit(1.0)))
+    val sB = (col("__slb2").cast("double") -
+      col("__slb").cast("double") * col("__slb").cast("double") /
+        nz(nB)) /
+      nz(lit(4.0) * (nB - lit(1.0)))
+    val varSum = nA * sA + nB * sB
+    val w = nA * nB * (rbarB - rbarA) / nz(nn * sqrt(varSum))
+    val dfNum = varSum * varSum
+    val dfDen = (nA * sA) * (nA * sA) / nz(nA - lit(1.0)) +
+      (nB * sB) * (nB * sB) / nz(nB - lit(1.0))
+    val pHat = (rbarB - (nB + lit(1.0)) / lit(2.0)) / nz(nA)
+    val okW = col("n_a") >= 2L && col("n_b") >= 2L
+    Closing(
+      Seq("__sra" -> rankSum2(ca), "__srb" -> rankSum2(cb),
+        "__sla" -> placeSum(ca, col("__pa")),
+        "__sla2" -> placeSq(ca, col("__pa")),
+        "__slb" -> placeSum(cb, col("__pb")),
+        "__slb2" -> placeSq(cb, col("__pb"))),
+      Seq("p_hat" -> when(bothArms, pHat),
+        "w" -> when(okW && varSum > 0.0, w),
+        "df" -> when(okW && varSum > 0.0 && dfDen > 0.0,
+          dfNum / when(dfDen > 0.0, dfDen))))
   }
 
   /** Exact long on the value's `scale` grid: `round(v·10^scale)` via

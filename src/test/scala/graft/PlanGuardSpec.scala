@@ -758,7 +758,7 @@ class PlanGuardSpec extends AnyFunSuite {
     val fin = whole.split("== Initial Plan ==")(0)
     assert(!fin.contains("Join"), fin.take(1200))
     assert(fin.contains("partial_sum"), fin.take(1200)) // grid map-combined
-    assert("Exchange hashpartitioning".r.findAllIn(fin).size <= 3,
+    assert("Exchange hashpartitioning".r.findAllIn(fin).size <= 2,
       fin.take(1500))
   }
 

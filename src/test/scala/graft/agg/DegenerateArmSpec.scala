@@ -14,9 +14,10 @@ import graft.TestSpark
  *  its documented null row, never crash the whole job.
  *
  *  This sweep runs every two-sample and every k-group Stats operator
- *  over the four degenerate fixtures (empty arm each way, singleton
- *  arms, all-tied) and asserts each COLLECTS — the contract that an
- *  engine-wide drift report cannot be killed by one degenerate key.
+ *  over the five degenerate fixtures (empty arm each way, singleton
+ *  arms, all-tied, a single-row key) and asserts each COLLECTS — the
+ *  contract that an engine-wide drift report cannot be killed by one
+ *  degenerate key.
  *  (Found via rankPanel: brunnerMunzel's placement-variance divisor
  *  was hoisted past its okW guard and threw on an empty arm.) */
 class DegenerateArmSpec extends AnyFunSuite {
@@ -34,7 +35,9 @@ class DegenerateArmSpec extends AnyFunSuite {
     "empty-a arm" -> Seq(("k", "b", 1.0), ("k", "b", 2.0)),
     "singleton arms" -> Seq(("k", "a", 1.0), ("k", "b", 2.0)),
     "all-tied" -> Seq(("k", "a", 5.0), ("k", "a", 5.0),
-      ("k", "b", 5.0), ("k", "b", 5.0)))
+      ("k", "b", 5.0), ("k", "b", 5.0)),
+    // N = 1: mannWhitneyU's tie term divides by n(n−1) = 0
+    "single-row key" -> Seq(("k", "a", 1.0)))
 
   private val twoSample: Seq[(String, DataFrame => DataFrame)] = Seq(
     ("welchT", d => Stats.welchT(d, Seq("key"), "arm", "a", "b", "v")),
@@ -104,6 +107,30 @@ class DegenerateArmSpec extends AnyFunSuite {
           Some(s"$op on $fname: ${e.getMessage.take(100)}") })
     } yield err
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("every two-sample grid operator rejects equal arm labels " +
+    "with a clear IllegalArgumentException") {
+    type Op = (DataFrame, Seq[String], String, String, String, String,
+      Int) => DataFrame
+    val ops: Seq[(String, Op)] = Seq(
+      "mannWhitneyU" -> Stats.mannWhitneyU _, "ksTest" -> Stats.ksTest _,
+      "cliffsDelta" -> Stats.cliffsDelta _,
+      "wasserstein1" -> Stats.wasserstein1 _,
+      "cramerVonMises" -> Stats.cramerVonMises _,
+      "andersonDarling" -> Stats.andersonDarling _,
+      "kuiper" -> Stats.kuiper _,
+      "energyDistance" -> Stats.energyDistance _,
+      "distributionDistance" -> Stats.distributionDistance _,
+      "brunnerMunzel" -> Stats.brunnerMunzel _,
+      "driftPanel" -> Stats.driftPanel _, "rankPanel" -> Stats.rankPanel _)
+    val df = dfOf(Seq(("k", "a", 1.0), ("k", "a", 2.0), ("k", "b", 3.0)))
+    for ((op, f) <- ops) {
+      val e = intercept[IllegalArgumentException](
+        f(df, Seq("key"), "arm", "a", "a", "v", 2))
+      assert(e.getMessage.contains(op) &&
+        e.getMessage.contains("distinct arm labels"), s"$op: ${e.getMessage}")
+    }
   }
 
   test("every k-group operator survives single/singleton/tied " +

@@ -2112,7 +2112,8 @@ class StatsSpec extends AnyFunSuite {
       a.map(v => ("k2", "a", v * 2.0)) ++
       b.map(v => ("k2", "b", v - 0.5)) ++
       Seq(("s", "a", 5.0), ("s", "b", 5.0), // single-point grid
-        ("e", "a", 1.0), ("e", "a", 2.0))   // empty b arm
+        ("e", "a", 1.0), ("e", "a", 2.0),   // empty b arm
+        (null, "a", 1.0), (null, "b", 2.0), (null, "a", 3.0)) // null key
     val df = rows.toDF("key", "arm", "v")
     val panel = Stats.driftPanel(df, Seq("key"), "arm", "a", "b", "v")
       .collect().map(r => r.getString(0) -> r).toMap
@@ -2146,6 +2147,12 @@ class StatsSpec extends AnyFunSuite {
     // single-point grid nulls ONLY ad (its 0/0 case); others defined
     assert(panel("s").isNullAt(panel("s").fieldIndex("ad_a2")))
     assert(!panel("s").isNullAt(panel("s").fieldIndex("ks_d")))
+    // null keys: ksTest groups them as one key; the panel and the
+    // other four members drop them
+    assert(ks.contains(null) && ks(null).isDefined)
+    assert(!panel.contains(null))
+    for ((op, m) <- Seq("cvm" -> cvm, "ad" -> ad, "kuiper" -> ku,
+      "w1" -> w1)) assert(!m.contains(null), op)
   }
 
   test("rankPanel: bit-identical to mannWhitneyU + cliffsDelta + " +
@@ -2160,7 +2167,8 @@ class StatsSpec extends AnyFunSuite {
       Seq(("t", "a", 5.0), ("t", "a", 5.0), // all-tied: z/w/df null,
         ("t", "b", 5.0), ("t", "b", 5.0),   //   delta 0, p_hat 1/2
         ("s", "a", 1.0), ("s", "b", 9.0),   // arms of 1: w/df null
-        ("e", "a", 1.0), ("e", "a", 2.0))   // empty b arm: all null
+        ("e", "a", 1.0), ("e", "a", 2.0),   // empty b arm: all null
+        (null, "a", 1.0), (null, "b", 2.0), (null, "a", 3.0)) // null key
     val df = rows.toDF("key", "arm", "v")
     val panel = Stats.rankPanel(df, Seq("key"), "arm", "a", "b", "v")
       .collect().map(r => r.getString(0) -> r).toMap
@@ -2195,6 +2203,51 @@ class StatsSpec extends AnyFunSuite {
     // singleton arms keep U/delta/p_hat, null w/df
     assert(!panel("s").isNullAt(panel("s").fieldIndex("u_a")))
     assert(panel("s").isNullAt(panel("s").fieldIndex("w")))
+    // null keys: mannWhitneyU and cliffsDelta group them as one key;
+    // the panel and brunnerMunzel drop them
+    assert(single(mwu, "u_a").get(null).exists(_.isDefined))
+    assert(cliff.get(null).exists(_.isDefined))
+    assert(!panel.contains(null))
+    assert(!single(bm, "p_hat").contains(null))
+  }
+
+  test("two-sample grid operators: keys = Nil is one global group " +
+    "for mannWhitneyU/ksTest/cliffsDelta; the other nine need keys " +
+    "and drop null keys") {
+    val df = Seq(("k", "a", 1.0), ("k", "a", 4.0), ("k", "b", 2.0),
+      (null, "b", 3.0), (null, "a", 5.0)).toDF("key", "arm", "v")
+    val global = Seq(
+      Stats.mannWhitneyU(df, Nil, "arm", "a", "b", "v"),
+      Stats.ksTest(df, Nil, "arm", "a", "b", "v"),
+      Stats.cliffsDelta(df, Nil, "arm", "a", "b", "v"))
+    for (out <- global) {
+      val r = out.collect()
+      assert(r.length == 1 && r(0).getAs[Long]("n_a") == 3L &&
+        r(0).getAs[Long]("n_b") == 2L, out.columns.mkString(","))
+    }
+    // U_a on the pooled 1,2,3,4,5: a = {1,4,5}, ranks 1+4+5 − 6 = 4
+    assert(global(0).collect()(0).getAs[Double]("u_a") == 4.0)
+    // the two operators outside both panels drop null keys too
+    for (out <- Seq(
+      Stats.energyDistance(df, Seq("key"), "arm", "a", "b", "v"),
+      Stats.distributionDistance(df, Seq("key"), "arm", "a", "b", "v")))
+      assert(out.collect().map(_.getString(0)).toSeq == Seq("k"))
+    type Op = (org.apache.spark.sql.DataFrame, Seq[String], String,
+      String, String, String, Int) => org.apache.spark.sql.DataFrame
+    val keyed: Seq[(String, Op)] = Seq(
+      "wasserstein1" -> Stats.wasserstein1 _,
+      "cramerVonMises" -> Stats.cramerVonMises _,
+      "andersonDarling" -> Stats.andersonDarling _,
+      "kuiper" -> Stats.kuiper _,
+      "energyDistance" -> Stats.energyDistance _,
+      "distributionDistance" -> Stats.distributionDistance _,
+      "brunnerMunzel" -> Stats.brunnerMunzel _,
+      "driftPanel" -> Stats.driftPanel _, "rankPanel" -> Stats.rankPanel _)
+    for ((op, f) <- keyed) {
+      val e = intercept[IllegalArgumentException](
+        f(df, Nil, "arm", "a", "b", "v", 2))
+      assert(e.getMessage.contains(s"$op needs key columns"), op)
+    }
   }
 
   test("poissonRateTest: hand rate z and snapped log-ratio CI; " +
