@@ -23,7 +23,38 @@ object Engine {
     Iterator.from(0).map(i => if (i == 0) base else s"$base$i")
       .find(nm => !df.columns.contains(nm)).get
 
-  /** Apply graft's defaults to an arbitrary builder (cluster or local). */
+  /** Apply graft's defaults to an arbitrary builder (cluster or local).
+   *
+   *  Two of them keep whole-stage codegen warm across queries, above all
+   *  across micro-batch queries (`Streaming.runBatchAsStream*`,
+   *  `runUpdateStreamFiles`, `ChangeFeed`):
+   *
+   *   - `spark.sql.artifact.isolation.enabled=false`. Spark keys its
+   *     codegen cache on (classloader, generated code). With artifact
+   *     isolation on, Spark's default, every job carries the artifact
+   *     state of its session's UUID, and the executor builds one
+   *     isolated classloader per UUID. Each streaming query runs in a
+   *     cloned session with a new UUID. So every class the query
+   *     generates misses the cache: it is compiled again and starts cold
+   *     in the interpreter, although its source is byte-identical to the
+   *     previous run's. Measured on the `analytics` benchmark workload:
+   *     the q90 stream gate compiled 14–18 classes on every warm pass
+   *     with isolation on and none with it off. graft adds no session
+   *     artifacts (no `addArtifact`), so isolation buys it nothing.
+   *   - `spark.sql.codegen.cache.maxEntries=512` (Spark: 100). The cache
+   *     is a segmented LRU that starts evicting before it holds 100
+   *     classes, and one gate generates 15–40. With isolation off alone,
+   *     5 of 12 runs of the `analytics` benchmark workload (q319, q239,
+   *     q90) still recompiled 25 classes per warm pass; at 512 none did.
+   *     It is a static conf: it sizes the JVM-wide cache when codegen
+   *     first runs, so it must be set before the first query.
+   *
+   *  Both together took the `analytics` warm pass from 2.32 to 2.00 s
+   *  (medians of 18 alternating runs each, 4-core VM). Opt-out: a
+   *  deployment whose sessions add their own jars or classes (Spark
+   *  Connect clients) needs the isolation and passes
+   *  `--conf spark.sql.artifact.isolation.enabled=true`; it then pays
+   *  the per-query recompiles. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
@@ -67,6 +98,9 @@ object Engine {
     // checkpoint dirs; delete them on stop so repeated gate/bench
     // invocations don't accumulate /tmp litter.
     .config("spark.sql.streaming.forceDeleteTempCheckpointLocation", "true")
+    // Codegen stays warm across micro-batch queries: see the scaladoc.
+    .config("spark.sql.artifact.isolation.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", "512")
 
   /** Local session for tests / bench (single JVM, `cores` threads).
    *  `maxPartitionBytes` is sized down for the small local test files

@@ -62,7 +62,10 @@ private[graft] object Par {
    *     single-partition — spread.
    *   - File-scan leaves carry real file statistics: spread only when
    *     the summed bytes prove the scan cannot yield target splits;
-   *     the corpus path skips the shuffle entirely. */
+   *     the corpus path skips the shuffle entirely.
+   *  A plan that mixes well-partitioned RDD leaves with file scans
+   *  takes the file-scan test: a well-partitioned checkpoint does not
+   *  make a tiny single-split scan beside it split. */
   private[graft] def spread[T](ds: Dataset[T]): Dataset[T] = {
     if (ds.isStreaming) return ds
     val spark = ds.sparkSession
@@ -79,7 +82,7 @@ private[graft] object Par {
     val unknown = others.exists(_.stats.sizeInBytes >= sentinel)
     val needSpread =
       if (unknown || rddUnder) true
-      else if (rddLeaves.nonEmpty) false // well-partitioned RDD leaves
+      else if (others.isEmpty) false // only well-partitioned RDD leaves
       else others.map(_.stats.sizeInBytes).sum < BigInt(maxPart) * target
     if (needSpread) ds.repartition(target) else ds
   }

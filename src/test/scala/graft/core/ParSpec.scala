@@ -63,4 +63,23 @@ class ParSpec extends AnyFunSuite {
       "a tiny single-file scan cannot split to target — must spread")
     assert(out.collect().map(_.getInt(0)).sorted.toSeq == (1 to 1000))
   }
+
+  test("well-partitioned checkpoint joined with a tiny single-split scan " +
+    "IS spread (mixed leaves take the file-scan byte test)") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_parspec_mixed")
+      .toString
+    (1 to 1000).map(x => (x, x % 7)).toDF("x", "g").coalesce(1)
+      .write.parquet(s"$tmp/t")
+    val ck = (1 to 1000).toDF("x").repartition(target).localCheckpoint(false)
+    assert(ck.rdd.getNumPartitions >= target)
+    val joined = ck.join(spark.read.parquet(s"$tmp/t"), "x")
+    val out = Par.spread(joined)
+    assert(out.queryExecution.optimizedPlan
+      .collect { case r: org.apache.spark.sql.catalyst.plans.logical
+        .Repartition => r.numPartitions }.contains(target),
+      "a tiny single-split scan beside a well-partitioned checkpoint " +
+        "must spread")
+    assert(out.collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq ==
+      (1 to 1000).map(x => (x, x % 7)))
+  }
 }

@@ -687,50 +687,39 @@ class StreamingSpec extends AnyFunSuite {
     batch2.toDF("user_id", "ts", "value", "event_id")
       .coalesce(1).write.mode("append").parquet(s"$dir/in")
     val schema = spark.read.parquet(s"$dir/in").schema
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val updates = Streaming.runUpdateStreamFiles(spark, s"$dir/in",
-        schema,
+    val updates = Streaming.withRocksDbStateStore(spark) {
+      Streaming.runUpdateStreamFiles(spark, s"$dir/in", schema,
         df => Streaming.twapStream(df, "user_id", "ts", "event_id",
           "value", unitMicros = 3600000000L),
         dir = s"$dir/run", statePartitions = Some(2),
         sourceOptions = Map("maxFilesPerTrigger" -> "1"))
-      val out = Streaming.foldTwapUpdates(updates)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) ->
-          ((r.getLong(2), r.getDouble(3)))).toMap
-      val h10 = Timestamp.valueOf("2024-01-01 10:00:00").getTime * 1000L
-      assert(out == Map((1L, h10) -> ((2L, 18.9)))) // ≡ HDFS-provider run
-      // parity with the batch operator on the closed bucket
-      val batchOut = graft.ops.TimeSeries.twap(
-        (batch1 ++ batch2).toDF("user_id", "ts", "value", "event_id"),
-        Seq("user_id"), "ts", "event_id", "value", unit = "hour")
-        .filter(org.apache.spark.sql.functions.unix_micros(
-          org.apache.spark.sql.functions.col("bucket")) === h10 &&
-          org.apache.spark.sql.functions.col("user_id") === 1L)
-        .collect().map(r => (r.getAs[Long]("n_ticks"),
-          r.getAs[Double]("twap"))).toSeq
-      assert(batchOut == Seq((2L, 18.9)))
-      // the provider ENGAGED (a typo'd class would throw at start,
-      // but guard against a silently-ignored conf too): RocksDB
-      // checkpoints ship .zip/.changelog files, never the HDFS
-      // provider's .delta
-      import scala.jdk.CollectionConverters._
-      val names = java.nio.file.Files
-        .walk(java.nio.file.Paths.get(s"$dir/run/chk/state"))
-        .iterator().asScala.map(_.getFileName.toString).toList
-      assert(names.exists(n => n.endsWith(".zip") ||
-        n.endsWith(".changelog")), s"no RocksDB state files in $names")
-      assert(!names.exists(_.endsWith(".delta")),
-        s"HDFS-provider .delta files present: $names")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
+    val out = Streaming.foldTwapUpdates(updates)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        ((r.getLong(2), r.getDouble(3)))).toMap
+    val h10 = Timestamp.valueOf("2024-01-01 10:00:00").getTime * 1000L
+    assert(out == Map((1L, h10) -> ((2L, 18.9)))) // ≡ HDFS-provider run
+    // parity with the batch operator on the closed bucket
+    val batchOut = graft.ops.TimeSeries.twap(
+      (batch1 ++ batch2).toDF("user_id", "ts", "value", "event_id"),
+      Seq("user_id"), "ts", "event_id", "value", unit = "hour")
+      .filter(org.apache.spark.sql.functions.unix_micros(
+        org.apache.spark.sql.functions.col("bucket")) === h10 &&
+        org.apache.spark.sql.functions.col("user_id") === 1L)
+      .collect().map(r => (r.getAs[Long]("n_ticks"),
+        r.getAs[Double]("twap"))).toSeq
+    assert(batchOut == Seq((2L, 18.9)))
+    // the provider ENGAGED (a typo'd class would throw at start, but
+    // guard against a silently-ignored conf too): RocksDB checkpoints
+    // ship .zip/.changelog files, never the HDFS provider's .delta
+    import scala.jdk.CollectionConverters._
+    val names = java.nio.file.Files
+      .walk(java.nio.file.Paths.get(s"$dir/run/chk/state"))
+      .iterator().asScala.map(_.getFileName.toString).toList
+    assert(names.exists(n => n.endsWith(".zip") ||
+      n.endsWith(".changelog")), s"no RocksDB state files in $names")
+    assert(!names.exists(_.endsWith(".delta")),
+      s"HDFS-provider .delta files present: $names")
   }
 
   test("twapStream carryIn: spanned buckets emit the held price, the " +
