@@ -54,7 +54,33 @@ object Engine {
    *  deployment whose sessions add their own jars or classes (Spark
    *  Connect clients) needs the isolation and passes
    *  `--conf spark.sql.artifact.isolation.enabled=true`; it then pays
-   *  the per-query recompiles. */
+   *  the per-query recompiles.
+   *
+   *  Two more replace Hadoop's `file:` filesystem with a shell-free one:
+   *  `spark.hadoop.fs.file.impl` = [[NioLocalFileSystem]] and
+   *  `spark.hadoop.fs.AbstractFileSystem.file.impl` = [[NioLocalFs]].
+   *  Without them, `file:` resolves to `org.apache.hadoop.fs.local.LocalFs`
+   *  and, through Hadoop's service loader over Spark's jars, to Hive's
+   *  `ProxyLocalFileSystem`; both sit on stock `RawLocalFileSystem`.
+   *  Spark ships without `libhadoop.so`, so that class forks `chmod` on
+   *  every `create` (file and `.crc`) and `mkdirs`, and `readlink` on
+   *  every `FileContext` rename. Every local write pays it: the parquet,
+   *  CSV and JSONL sinks and `FileOutputCommitter`, the streaming
+   *  checkpoint logs (offsets, commits, metadata) and the RocksDB state
+   *  snapshot upload. `EngineSpec`'s no-fork test (a two-trigger RocksDB
+   *  stream plus a few file operations) counts 41 forks through Hadoop's
+   *  `Shell` with only the first setting removed, 194 with only the
+   *  second removed, and 0 with both. Measured per
+   *  operation, stock -> shell-free (4-core VM, 800 MB heap, 100 ops
+   *  after 100 warm-up): `LocalFileSystem.create` 7.4 -> 0.25 ms,
+   *  `mkdirs` 4.6 -> 0.04 ms, `FileContext.create` 6.5 -> 0.29 ms,
+   *  `FileContext` create + `rename(OVERWRITE)` 37.9 -> 0.77 ms; a plain
+   *  NIO create takes 0.05-0.07 ms. [[NioRawLocalFileSystem]] makes the
+   *  same system calls in process, with the same resulting modes and
+   *  link answers. Only the `file:` scheme changes: HDFS, S3 and other
+   *  checkpoint locations keep their own filesystems. Opt-out: `--conf
+   *  spark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem
+   *  --conf spark.hadoop.fs.AbstractFileSystem.file.impl=org.apache.hadoop.fs.local.LocalFs`. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
@@ -101,6 +127,9 @@ object Engine {
     // Codegen stays warm across micro-batch queries: see the scaladoc.
     .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", "512")
+    // Local file operations without a forked shell: see the scaladoc.
+    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   /** Local session for tests / bench (single JVM, `cores` threads).
    *  `maxPartitionBytes` is sized down for the small local test files

@@ -240,6 +240,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.conf.getOption(key) == prev)
   }
 
+  test("runUpdateStreamFiles under RocksDB restarts from its checkpoint: " +
+    "a second run on the same dir continues the recovered counts") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_restart").toString
+    Seq(("a", 1L), ("b", 2L), ("a", 3L)).toDF("k", "v")
+      .coalesce(1).write.mode("append").parquet(s"$dir/in")
+    val schema = spark.read.parquet(s"$dir/in").schema
+    def run(): Set[(String, Long)] = Streaming.withRocksDbStateStore(spark) {
+      Streaming.runUpdateStreamFiles(spark, s"$dir/in", schema,
+        df => Streaming.runningCount(df.as[(String, Long)]).toDF(),
+        dir = s"$dir/run", statePartitions = Some(2))
+        .as[(String, Long)].collect().toSet
+    }
+    val first = run()
+    assert(first == Set("a" -> 4L, "b" -> 2L))
+    // the state snapshot of the first run is what the second one loads
+    import scala.jdk.CollectionConverters._
+    val state = java.nio.file.Paths.get(s"$dir/run/chk/state/0")
+    assert(java.nio.file.Files.walk(state).iterator().asScala
+      .exists(_.getFileName.toString.endsWith(".zip")))
+    Seq(("a", 10L), ("c", 5L)).toDF("k", "v")
+      .coalesce(1).write.mode("append").parquet(s"$dir/in")
+    val second = run()
+    // the log gains only the new batch's updates, counted on from run 1
+    // (a fresh state would have emitted a -> 10)
+    assert(second -- first == Set("a" -> 14L, "c" -> 5L))
+    assert(second.size == first.size + 2)
+  }
+
   test("dedupStreamTtl: first occurrence passes, repeats drop, TTL expiry readmits") {
     implicit val sqlCtx = spark.sqlContext
     // A processing-time transformWithState query never self-terminates
