@@ -80,6 +80,43 @@ object SparkEntry {
     dir
   }
 
+  /** The ordered feed of the micro-batch gates: `ev` (with an `hr`
+   *  column) written as 6 hour-ranged parquet files, then `transform`
+   *  run over them as a real stream, one file per trigger, in Update
+   *  mode through [[graft.streaming.Streaming.runUpdateStreamFiles]]
+   *  (`append`: Append mode through `runBatchAsStreamFiles`). Returns
+   *  the sink's frame.
+   *
+   *  File part-0000N holds range partition N (ascending hr), and the
+   *  files get strictly increasing mtimes, so listing order is
+   *  chronological order: every key's rows arrive in time order, the
+   *  contract the keyed-state operators' exactness needs, and a
+   *  watermark only ever trails the incoming data. That REQUIRES one
+   *  file per range partition — a partition split across files would
+   *  put one hr-range into two micro-batches — so the invariant is
+   *  guarded against writer changes like a session-level
+   *  maxRecordsPerFile. */
+  private def orderedFeed(s: SparkSession, gate: String, ev: DataFrame,
+                          append: Boolean = false)(
+      transform: DataFrame => DataFrame): DataFrame = {
+    val tmp = gateTempDir(s, s"graft_$gate")
+    ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
+    val files = new java.io.File(s"$tmp/in").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
+    require(partIdx.distinct.length == partIdx.length,
+      s"$gate: range partition split across files (${files.length} files)")
+    val t0 = System.currentTimeMillis() - 3600000L
+    files.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(t0 + i * 10000L) }
+    val schema = s.read.parquet(s"$tmp/in").schema
+    val run =
+      if (append) graft.streaming.Streaming.runBatchAsStreamFiles _
+      else graft.streaming.Streaming.runUpdateStreamFiles _
+    run(s, s"$tmp/in", schema, transform, s"$tmp/run", gateStateParts,
+      Map("maxFilesPerTrigger" -> "1"))
+  }
+
   /** Loopback HTTP fixture for the q115 DSv2 gate: serves `rows` as
    *  offset-paginated JSONL (`?offset=N&limit=pageSize` slices, empty
    *  body past the end — the contract `graft-http` offset pagination
@@ -720,32 +757,9 @@ object SparkEntry {
     "q110_stream_dedup" -> ((s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_type"),
         date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q110")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      // part-0000N corresponds to range-partition N (ascending hr);
-      // stamp strictly increasing mtimes so listing order ==
-      // chronological order and the watermark only ever trails the
-      // incoming data (no nondeterministic late-drop)
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      // the exactness argument REQUIRES one file per range partition
-      // (a partition split across files would put one hr-range into
-      // two micro-batches: late-drop or re-admission, nondeterministic
-      // vs the DISTINCT oracle) — guard the invariant against writer
-      // changes like a session-level maxRecordsPerFile
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q110: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      graft.streaming.Streaming.runBatchAsStreamFiles(
-        s, s"$tmp/in", schema,
+      orderedFeed(s, "q110", ev, append = true)(
         df => graft.streaming.Streaming.dedupStream(df,
-          Seq("user_id", "event_type", "hr"), "hr", "1 hour"),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          Seq("user_id", "event_type", "hr"), "hr", "1 hour"))
     }),
 
     // ---- §2.1/§2.11 CHANGE STREAM → materialized table: the generic
@@ -1964,26 +1978,9 @@ object SparkEntry {
           col("event_type").isin(steps.map(lit): _*))
         .select(col("user_id"), col("ts"), col("event_type"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q138")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      // one file per hr-range partition, mtime-stamped chronological —
-      // the ordered-feed contract funnelStream's exactness needs
-      // (same invariant + guard as q110)
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q138: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q138", ev)(
         df => graft.streaming.Streaming.funnelStream(
-          df, "user_id", "ts", "event_type", steps),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "user_id", "ts", "event_type", steps))
       graft.streaming.Streaming.foldFunnelUpdates(updates, "user_id", 3)
     }),
 
@@ -2026,24 +2023,13 @@ object SparkEntry {
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
         .select(col("user_id"), col("ts"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q143")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q143", ev)(
         df => {
           import df.sparkSession.implicits._
           graft.streaming.Streaming.runningCount(
             df.select(col("user_id").cast("string"), lit(1L))
               .as[(String, Long)]).toDF()
-        },
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+        })
       updates.groupBy(col("key"))
         .agg(max(col("count")).as("n_events"))
     }),
@@ -2228,23 +2214,9 @@ object SparkEntry {
           col("event_type").isNotNull)
         .select(col("user_id"), col("ts"), col("event_type"),
           col("event_id"), date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q161")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q161: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q161", ev)(
         df => graft.streaming.Streaming.transitionsStream(
-          df, "user_id", "ts", "event_type", "event_id"),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "user_id", "ts", "event_type", "event_id"))
       graft.streaming.Streaming.foldTransitionUpdates(updates)
     }),
 
@@ -2356,23 +2328,9 @@ object SparkEntry {
           col("value").isNotNull)
         .select(col("user_id"), col("ts"), col("value"), col("event_id"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q168")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q168: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q168", ev)(
         df => graft.streaming.Streaming.ewmaStream(
-          df, "user_id", "ts", "event_id", "value", alpha = 0.3),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "user_id", "ts", "event_id", "value", alpha = 0.3))
       graft.streaming.Streaming.foldEwmaUpdates(updates)
         .select(col("actor").as("user_id"), col("tie").as("event_id"),
           timestamp_micros(col("ts_micros")).as("ts"), col("value"),
@@ -2506,23 +2464,9 @@ object SparkEntry {
         .filter(col("user_id").isNotNull && col("ts").isNotNull)
         .select(col("user_id"), col("ts"), col("event_type"),
           col("event_id"), date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q180")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q180: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q180", ev)(
         df => graft.streaming.Streaming.compactStream(
-          df, "user_id", "ts", "event_id", "event_type"),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "user_id", "ts", "event_id", "event_type"))
       graft.streaming.Streaming.foldCompactUpdates(updates)
         .select(col("actor").as("user_id"), col("tie").as("event_id"),
           timestamp_micros(col("ts_micros")).as("ts"),
@@ -2602,20 +2546,9 @@ object SparkEntry {
           col("ts").isNotNull)
         .select(col("event_type"), col("user_id"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q184")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q184", ev)(
         df => graft.streaming.Streaming.distinctCountStream(
-          df, "event_type", "user_id"),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "event_type", "user_id"))
       val folded = graft.streaming.Streaming.foldDistinctCountUpdates(updates)
       val exact = ev.groupBy(col("event_type").cast("string").as("key"))
         .agg(count(lit(1)).as("n_rows"),
@@ -3116,20 +3049,9 @@ object SparkEntry {
           col("ts").isNotNull)
         .select(col("event_type"), col("value"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q229")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q229", ev)(
         df => graft.streaming.Streaming.quantileStream(
-          df, "event_type", "value"),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "event_type", "value"))
       val folded = graft.streaming.Streaming.foldQuantileUpdates(updates)
       val ev2 = ev.select(col("event_type").cast("string").as("key"),
         col("value"))
@@ -3260,20 +3182,9 @@ object SparkEntry {
         .filter(col("event_type").isNotNull && col("ts").isNotNull)
         .select(lit("all").as("k"), col("event_type"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q237")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q237", ev)(
         df => graft.streaming.Streaming.heavyHitterStream(
-          df, "k", "event_type", k = 8),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "k", "event_type", k = 8))
       val folded = graft.streaming.Streaming.foldHeavyHitterUpdates(updates)
       val exact = ev.groupBy(col("event_type").as("item"))
         .agg(count(lit(1)).as("__c"))
@@ -3437,21 +3348,10 @@ object SparkEntry {
           col("ts").isNotNull)
         .select(col("event_type"), col("value"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q250")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q250", ev)(
         df => graft.streaming.Streaming.driftStream(df, "event_type",
           "value", Array(20.0, 40.0, 60.0, 80.0),
-          Array(0.2, 0.2, 0.2, 0.2, 0.2)),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          Array(0.2, 0.2, 0.2, 0.2, 0.2)))
       graft.streaming.Streaming.foldDriftUpdates(updates)
         .select(col("key"), col("n_seen"),
           posexplode(col("counts")).as(Seq("bin", "cnt")))
@@ -3948,24 +3848,10 @@ object SparkEntry {
           col("value").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("value"), date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q288")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q288: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q288", ev)(
         df => graft.streaming.Streaming.cusumStream(
           df, "user_id", "ts", "event_id", "value",
-          target = 50.0, slack = 0.0, threshold = 100.0),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          target = 50.0, slack = 0.0, threshold = 100.0))
       graft.streaming.Streaming.foldCusumUpdates(updates)
         .select(col("actor").as("user_id"), col("tie").as("event_id"),
           col("value"), col("cusum"), col("alarm"))
@@ -4114,24 +4000,10 @@ object SparkEntry {
           col("value").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("value"), date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q309")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q309: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q309", ev)(
         df => graft.streaming.Streaming.twapStream(
           df, "user_id", "ts", "event_id", "value",
-          unitMicros = 3600000000L),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          unitMicros = 3600000000L))
       graft.streaming.Streaming.foldTwapUpdates(updates)
         .select(col("actor").as("user_id"), col("bucket_us"),
           col("n_ticks"), col("twap"))
@@ -4264,24 +4136,10 @@ object SparkEntry {
           col("value").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("value"), date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q376")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q376: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q376", ev)(
         df => graft.streaming.Streaming.holtStream(
           df, "user_id", "ts", "event_id", "value",
-          alpha = 0.3, beta = 0.1),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          alpha = 0.3, beta = 0.1))
       graft.streaming.Streaming.foldHoltUpdates(updates)
         .select(col("actor").as("user_id"), col("n"), col("level"),
           col("trend"), col("forecast"))
@@ -4590,23 +4448,9 @@ object SparkEntry {
           col("event_id").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q402")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q402: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q402", ev)(
         df => graft.streaming.Streaming.bottomKStream(
-          df, "user_id", "event_id", k = 5),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "user_id", "event_id", k = 5))
       graft.streaming.Streaming.foldBottomKUpdates(updates)
         .select(col("actor").as("user_id"), col("n_seen"),
           posexplode(col("ids")).as(Seq("pos", "event_id")))
@@ -4623,23 +4467,9 @@ object SparkEntry {
           (col("value") + (pmod(col("event_id"), lit(5L)) - lit(2L))
             .cast("double")).as("fc"),
           date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q394")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q394: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q394", ev)(
         df => graft.streaming.Streaming.trackingSignalStream(
-          df, "user_id", "ts", "event_id", "value", "fc"),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "user_id", "ts", "event_id", "value", "fc"))
       graft.streaming.Streaming.foldTrackingUpdates(updates)
         .select(col("actor").as("user_id"), col("n"), col("cum_error"),
           col("mad"), col("tracking_signal"))
@@ -4779,23 +4609,9 @@ object SparkEntry {
           col("value").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("value"), date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q360")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q360: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q360", ev)(
         df => graft.streaming.Streaming.macdStream(
-          df, "user_id", "ts", "event_id", "value"),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          df, "user_id", "ts", "event_id", "value"))
       graft.streaming.Streaming.foldMacdUpdates(updates)
         .select(col("actor").as("user_id"), col("n"), col("macd"),
           col("signal"), col("histogram"))
@@ -4965,24 +4781,10 @@ object SparkEntry {
           col("value").isNotNull)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("value"), date_trunc("hour", col("ts")).as("hr"))
-      val tmp = gateTempDir(s, "graft_q343")
-      ev.repartitionByRange(6, col("hr")).write.parquet(s"$tmp/in")
-      val files = new java.io.File(s"$tmp/in").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      val partIdx = files.map(_.getName.stripPrefix("part-").take(5))
-      require(partIdx.distinct.length == partIdx.length,
-        s"q343: range partition split across files (${files.length} files)")
-      val t0 = System.currentTimeMillis() - 3600000L
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(t0 + i * 10000L) }
-      val schema = s.read.parquet(s"$tmp/in").schema
-      val updates = graft.streaming.Streaming.runUpdateStreamFiles(
-        s, s"$tmp/in", schema,
+      val updates = orderedFeed(s, "q343", ev)(
         df => graft.streaming.Streaming.pageHinkleyStream(
           df, "user_id", "ts", "event_id", "value",
-          delta = 0.5, lambda = 200.0),
-        dir = s"$tmp/run", statePartitions = gateStateParts,
-        sourceOptions = Map("maxFilesPerTrigger" -> "1"))
+          delta = 0.5, lambda = 200.0))
       graft.streaming.Streaming.foldPageHinkleyUpdates(updates)
         .select(col("actor").as("user_id"), col("n"), col("mean"),
           col("ph"), col("alarm_at"))

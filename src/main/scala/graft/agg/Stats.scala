@@ -3,6 +3,8 @@ package graft.agg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Snap.unscaled
+
 /**
  * Second-moment statistics (correlation, least squares) computed the
  * only way they can be both DISTRIBUTED and REPRODUCIBLE: every sum
@@ -6435,11 +6437,4 @@ object Stats {
         "df" -> when(okW && varSum > 0.0 && dfDen > 0.0,
           dfNum / when(dfDen > 0.0, dfDen))))
   }
-
-  /** Exact long on the value's `scale` grid: `round(v·10^scale)` via
-   *  a decimal cast (half-up, engine-identical) then an exact decimal
-   *  shift — the shared grid trick behind every rank statistic here. */
-  private def unscaled(c: Column, scale: Int): Column =
-    (c.cast(s"decimal(18,$scale)") *
-      lit(math.pow(10, scale).toLong).cast("decimal(18,0)")).cast("long")
 }

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.Snap.unscaled
 
 /**
  * Sequential ledger matching, set-based. The classic "match consumption
@@ -17,12 +19,6 @@ import org.apache.spark.sql.functions._
  * interval-overlap join — distributed, deterministic, and exact.
  */
 object Ledger {
-
-  /** Exact long on the quantity's `scale` grid (half-up decimal cast
-   *  then an exact shift) — matching runs all-integer. */
-  private def unscaled(c: Column, scale: Int): Column =
-    (c.cast(s"decimal(18,$scale)") *
-      lit(math.pow(10, scale).toLong).cast("decimal(18,0)")).cast("long")
 
   /**
    * FIFO lot matching per key: every unit of demand consumes the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Snap.{r9, unscaled}
+
 /**
  * Time-series reshaping over event streams — the batch-side
  * completion of the reference's time handling (goetl parses and
@@ -494,8 +496,7 @@ object TimeSeries {
                   valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "maxDrawdown needs key columns")
     val scaleF = math.pow(10, valueScale)
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -568,9 +569,6 @@ object TimeSeries {
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
     require(beta > 0 && beta <= 1, s"beta in (0,1], got $beta")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    def r9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-        .bigDecimal.doubleValue
     val a = lit(r9(alpha)); val b = lit(r9(beta))
     val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
       col(tieCol).as("i"), col(valueCol).cast("double").as("v"))))
@@ -635,9 +633,6 @@ object TimeSeries {
     require(beta > 0 && beta <= 1, s"beta in (0,1], got $beta")
     require(gamma > 0 && gamma <= 1, s"gamma in (0,1], got $gamma")
     require(period >= 2, s"period must be >= 2, got $period")
-    def r9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-        .bigDecimal.doubleValue
     val a = lit(r9(alpha)); val bt = lit(r9(beta)); val g = lit(r9(gamma))
     val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
       col(tieCol).as("i"), col(valueCol).cast("double").as("v"))))
@@ -705,13 +700,9 @@ object TimeSeries {
               valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "croston needs key columns")
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
-    def r9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-        .bigDecimal.doubleValue
     val a = lit(r9(alpha))
     val scaleF = math.pow(10, valueScale)
-    val vc = (col(demandCol).cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
+    val vc = unscaled(col(demandCol), valueScale)
     val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
       col(tieCol).as("i"), vc.cast("double").as("x"))))
     // state [z, p, q, seen, nDemands]
@@ -777,8 +768,7 @@ object TimeSeries {
     require(keys.nonEmpty, "rsi needs key columns")
     require(period >= 1, s"period must be >= 1, got $period")
     val scaleF = math.pow(10, valueScale)
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val nD = lit(period.toDouble)
@@ -912,8 +902,7 @@ object TimeSeries {
     require(keys.nonEmpty, "stlDecompose needs key columns")
     require(period >= 2, s"period must be >= 2, got $period")
     val scaleF = math.pow(10, valueScale).toLong
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(scaleF).cast("decimal(18,0)")).cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val even = period % 2 == 0
     val h = if (even) period / 2 else (period - 1) / 2
     val full = if (even) period + 1 else period
@@ -1851,8 +1840,7 @@ object TimeSeries {
         s"twap needs a fixed-width unit (minute/hour/day/week), got $other")
     }
     val scaleF = math.pow(10, valueScale)
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     // tieCol non-null: a null tie orders NULLS FIRST in Spark ASC
     // windows but NULLS LAST in ANSI engines — excluding it keeps
     // the total order engine-independent (round-15 advisory)
@@ -1935,8 +1923,7 @@ object TimeSeries {
         s"twapCarry needs a fixed-width unit (minute/hour/day/week), got $other")
     }
     val scaleF = math.pow(10, valueScale)
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__t"), col(tieCol))
     val holds = df.filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
@@ -2063,14 +2050,10 @@ object TimeSeries {
                   lambda: Double, valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "pageHinkley needs key columns")
     require(lambda > 0, s"lambda must be > 0, got $lambda")
-    def r9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-        .bigDecimal.doubleValue
     val scaleF = math.pow(10, valueScale)
     // δ and λ in GRID units, pinned on the 1e-9 grid after scaling
     val d = lit(r9(delta * scaleF)); val lam = lit(r9(lambda * scaleF))
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
       col(tieCol).as("i"), vc.cast("double").as("x"))))
     // state [n, sum, m, minM, alarmAt]
@@ -2294,16 +2277,14 @@ object TimeSeries {
                        valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "forecastAccuracy needs key columns")
     val scaleF = math.pow(10, valueScale)
-    def cents(c: Column) = (c.cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
     val ord = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val rows = df
       .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
         col(actualCol).isNotNull && col(forecastCol).isNotNull &&
         keys.map(col(_).isNotNull).reduce(_ && _))
-      .withColumn("__ac", cents(col(actualCol)))
-      .withColumn("__fc", cents(col(forecastCol)))
+      .withColumn("__ac", unscaled(col(actualCol), valueScale))
+      .withColumn("__fc", unscaled(col(forecastCol), valueScale))
       .withColumn("__ae", abs(col("__ac") - col("__fc")))
       .withColumn("__nd", abs(col("__ac") - lag(col("__ac"), 1).over(ord)))
       .withColumn("__mq", when(col("__ac") =!= 0L,
@@ -2370,17 +2351,14 @@ object TimeSeries {
              tieCol: String, actualCol: String, forecastCol: String,
              valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "theilU needs key columns")
-    def cents(c: Column) = (c.cast(s"decimal(18,$valueScale)") *
-      lit(math.pow(10, valueScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
     val ord = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val rows = df
       .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
         col(actualCol).isNotNull && col(forecastCol).isNotNull &&
         keys.map(col(_).isNotNull).reduce(_ && _))
-      .withColumn("__ac", cents(col(actualCol)))
-      .withColumn("__fc", cents(col(forecastCol)))
+      .withColumn("__ac", unscaled(col(actualCol), valueScale))
+      .withColumn("__fc", unscaled(col(forecastCol), valueScale))
       .withColumn("__e", col("__fc") - col("__ac"))
       .withColumn("__nd", col("__ac") - lag(col("__ac"), 1).over(ord))
     def sq(c: Column) =
@@ -2433,12 +2411,11 @@ object TimeSeries {
                      valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "trackingSignal needs key columns")
     val scaleF = math.pow(10, valueScale)
-    def cents(c: Column) = (c.cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
     val rows = df
       .filter(col(actualCol).isNotNull && col(forecastCol).isNotNull &&
         keys.map(col(_).isNotNull).reduce(_ && _))
-      .withColumn("__e", cents(col(actualCol)) - cents(col(forecastCol)))
+      .withColumn("__e", unscaled(col(actualCol), valueScale) -
+        unscaled(col(forecastCol), valueScale))
     val agg = rows.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"),
         sum(col("__e").cast("decimal(38,0)")).as("__se"),

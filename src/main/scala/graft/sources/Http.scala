@@ -14,8 +14,8 @@ import scala.annotation.tailrec
  * sequential — each page may determine the next), but page BODIES land
  * in a Dataset and all parsing/flattening runs distributed via
  * `spark.read.json`. For APIs with precomputable page addresses use
- * [[Http.parallelPages]], which fans page fetches out across the
- * cluster — one task per page.
+ * the DSv2 `graft-http` source ([[HttpTableProvider]]), which plans
+ * page fetches as input partitions across the cluster.
  *
  * The transport is pluggable ([[Http.Fetcher]]) so pagination/retry
  * logic is unit-testable without a network (this environment has no
@@ -36,8 +36,7 @@ object Http {
    *  is thread-safe and pools connections, so a thousand-page walk
    *  reuses keep-alive sockets instead of a TCP+TLS handshake per
    *  page. Lazy + transient: the client is rebuilt after
-   *  deserialization on an executor ([[parallelPages]] ships the
-   *  fetcher into tasks), never serialized. */
+   *  deserialization on an executor, never serialized. */
   def javaNetFetcher(timeoutMs: Long = 30000): Fetcher = new Fetcher {
     @transient private lazy val client = java.net.http.HttpClient.newHttpClient()
     def fetch(url: String, headers: Map[String, String]): Response = {
@@ -107,8 +106,8 @@ object Http {
    * `readers/http.go` RateLimit option): at most `permitsPerSecond`
    * acquisitions per second, blocking callers until their slot.
    * Injectable clock/sleeper for deterministic tests. On executors
-   * (via [[parallelPages]]) each task gets its own deserialized copy,
-   * so the limit is per-task there — size it as aggregate/parallelism.
+   * each task gets its own deserialized copy, so the limit is per-task
+   * there — size it as aggregate/parallelism.
    */
   final class RateLimiter(permitsPerSecond: Double,
                           nowNs: () => Long = () => System.nanoTime(),
@@ -287,26 +286,5 @@ object Http {
             .csv(spark.createDataset(pages.flatten))
         }
     }
-  }
-
-  /**
-   * Parallel variant for precomputable page addresses (offset/page
-   * pagination with a known total): page fetches fan out across the
-   * cluster, one task per page — the scale path for bulk API pulls.
-   */
-  def parallelPages(spark: SparkSession, urls: Seq[String],
-                    auth: Auth = NoAuth,
-                    fetcher: Fetcher,
-                    retry: RetryConfig = RetryConfig(),
-                    format: BodyFormat = JsonLines,
-                    limiter: Option[RateLimiter] = None): DataFrame = {
-    require(!format.isInstanceOf[CsvPages],
-      "parallelPages supports JSON formats; use read() for CSV pages")
-    import spark.implicits._
-    val headers = auth.headers
-    val bodies = spark.createDataset(urls)
-      .mapPartitions(_.flatMap(u => extractRecords(
-        fetchWithRetry(fetcher, u, headers, retry, limiter = limiter).body, format)))
-    spark.read.json(bodies)
   }
 }

@@ -16,13 +16,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /**
  * DSv2 form of the HTTP source (`spark.read.format("graft-http")`) for
  * the PRECOMPUTABLE-address case — offset/page pagination with a known
- * page count, the same contract as [[Http.parallelPages]] (reference:
- * goetl `readers/http.go:256-303`). Where `parallelPages` is a
- * driver-built Dataset of URLs, this is a planned table: page fetches
- * become InputPartitions (so the scheduler owns locality, retry and
- * task parallelism), LIMIT prunes whole pages at PLANNING time, and
- * column pruning reaches the Jackson parse (unmatched fields are
- * skipped, not parsed-then-dropped). Sequential cursor/link walks
+ * page count (reference: goetl `readers/http.go:256-303`). It is a
+ * planned table: page fetches become InputPartitions (so the
+ * scheduler owns locality, retry and task parallelism), LIMIT prunes
+ * whole pages at PLANNING time, and column pruning reaches the
+ * Jackson parse (unmatched fields are skipped, not
+ * parsed-then-dropped). Sequential cursor/link walks
  * stay on [[Http.read]] — a planner cannot parallelize a chain where
  * each page addresses the next.
  *
@@ -34,7 +33,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *     optional — when present it lets LIMIT prune trailing pages).
  *   - `offsetParam`/`limitParam`/`pageParam`: parameter names.
  *   - `urls`: explicit newline-separated page URLs (overrides all of
- *     the above — the exact `parallelPages` input).
+ *     the above).
  *   - `partitionPages`: pages per input partition (default 1).
  *   - `format`: `jsonl` (default) | `json` envelope with `dataPath`.
  *   - `mode`: PERMISSIVE (default) | DROPMALFORMED | FAILFAST.

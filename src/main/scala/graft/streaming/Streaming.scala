@@ -1,9 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.core.Snap.{cents, r9, unscaled}
 
 /**
  * Streaming parity — the reference's only unbounded source is the
@@ -473,18 +477,99 @@ object Streaming {
   }
 
   /**
+   * One keyed recurrence of [[sortedRecurrence]]. `init` is a new
+   * key's state; `step(key, ts, tie, value, state, emit)` folds one
+   * event and returns the state after it, emitting zero or more rows;
+   * `flush(key, state, emit)` runs once per key at the end of each
+   * batch, after the last step.
+   */
+  private[streaming] final class Recurrence[V, S, O](
+      val init: S,
+      val step: (Long, Long, Long, V, S, O => Unit) => S,
+      val flush: (Long, S, O => Unit) => Unit = (_: Long, _: S, _: O => Unit) => ())
+    extends Serializable
+
+  /** One batch of one key: `rows` (actor, ts, tie, value) sorted by
+   *  (ts, tie) and folded from `state`. Returns the state after the
+   *  batch and the rows it emitted, in emission order. Pure Scala —
+   *  [[sortedRecurrence]] runs it once per key per micro-batch. */
+  private[streaming] def foldBatch[V, S, O](rec: Recurrence[V, S, O], key: Long,
+                                           rows: Iterator[(Long, Long, Long, V)],
+                                           state: S): (S, Iterator[O]) = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[O]
+    val emit: O => Unit = out += _
+    val end = rows.toSeq.sortBy(r => (r._2, r._3)).foldLeft(state) {
+      case (s, (_, ts, tie, v)) => rec.step(key, ts, tie, v, s, emit)
+    }
+    rec.flush(key, end, emit)
+    (end, out.iterator)
+  }
+
+  /**
+   * The pipeline behind the nine ordered keyed-state operators
+   * ([[transitionsStream]], [[ewmaStream]], [[compactStream]],
+   * [[cusumStream]], [[pageHinkleyStream]], [[macdStream]],
+   * [[holtStream]], [[trackingSignalStream]], [[twapStream]]): drop
+   * rows with a null actor, ts or tie or a null in `notNull`, key by
+   * the actor as a long, and fold each key's rows of a micro-batch
+   * through `rec` ([[foldBatch]]) under `flatMapGroupsWithState`
+   * (Update mode, no timeout). The state round-trips through the store
+   * between batches; the output columns are `names`.
+   *
+   * Order contract: inside one batch the rows of a key are folded in
+   * (ts, tie) order — the batch twins' window order — whatever order
+   * they arrived in. Across batches the fold continues from the stored
+   * state, so batch ≡ stream holds exactly when the feed preserves
+   * per-key (ts, tie) order across micro-batches: time-ordered chunks,
+   * as the gates feed them (hour-ranged files, one per trigger). A row
+   * that arrives in a later batch but sorts before the key's last
+   * folded (ts, tie) is folded as if it came last: the state holds no
+   * raw events, so it cannot undo the rows already folded, and the
+   * stream's answer then differs from the batch operator's. Rows tied
+   * on (ts, tie) fold in arrival order, so a tie column should be
+   * unique per key.
+   *
+   * Replays: the store commits atomically with the batch, so a
+   * replayed batch re-reads the pre-batch state and emits identical
+   * rows; each operator's fold turns the at-least-once update log
+   * into its final answer.
+   */
+  private def sortedRecurrence[V: TypeTag, S <: Product : TypeTag, O <: Product : TypeTag](
+      df: DataFrame, actorCol: String, tsCol: String, tieCol: String,
+      value: Column, notNull: Seq[String], rec: Recurrence[V, S, O],
+      names: String*): DataFrame =
+    df.filter((Seq(actorCol, tsCol, tieCol) ++ notNull)
+        .map(col(_).isNotNull).reduce(_ && _))
+      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
+        col(tieCol).cast("long"), value)
+      .as(Encoders.product[(Long, Long, Long, V)])
+      .groupByKey(_._1)(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
+        (key: Long, in: Iterator[(Long, Long, Long, V)], state: GroupState[S]) =>
+          val (end, out) = foldBatch(rec, key, in, state.getOption.getOrElse(rec.init))
+          state.update(end)
+          out
+      }(Encoders.product[S], Encoders.product[O])
+      .toDF(names: _*)
+
+  /** The final row per key of an update log whose `n` grows strictly
+   *  per key: `max(n)` and, for each of `cols`, its value on that row
+   *  (`max_by`). Replayed rows are byte-identical, so a duplicated
+   *  final row folds to the same values. */
+  private def finalRows(updates: DataFrame, key: String, n: String,
+                        cols: String*): DataFrame =
+    updates.groupBy(col(key))
+      .agg(max(col(n)).as(n), cols.map(c => max_by(col(c), col(n)).as(c)): _*)
+
+  /**
    * The q151 Markov transition matrix as INCREMENTAL keyed state: per
    * actor, the last-seen state plus cumulative (from → to) pair
    * counts, updated batch over batch — adjacency crosses micro-batch
    * boundaries through the retained last state, so a feed split at
-   * any point yields the same pairs as the batch operator.
-   *
-   * Within a batch, events process sorted by (`tsCol`, `tieCol`) —
-   * the batch operator's window order. Batch-exact ONLY on an
-   * event-time-ordered feed (the [[funnelStream]] contract:
-   * adjacency is retroactive under disorder; exactness under
-   * arbitrary lateness would need raw-event buffering, not one state
-   * string and a count map).
+   * any point yields the same pairs as the batch operator. Rows with a
+   * null state are dropped. Order contract: [[sortedRecurrence]]
+   * (exactness under arbitrary lateness would need raw-event
+   * buffering, not one state string and a count map).
    *
    * State per actor: one string + a counts map bounded by the state
    * vocabulary squared — RocksDB-compatible, no event buffering.
@@ -493,54 +578,35 @@ object Streaming {
    * order- and duplicate-free with `max` ([[foldTransitionUpdates]]).
    */
   def transitionsStream(df: DataFrame, actorCol: String, tsCol: String,
-                        stateCol: String, tieCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(stateCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(stateCol).cast("string"))
-      .as[(Long, Long, Long, String)]
+                        stateCol: String, tieCol: String): DataFrame =
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(stateCol).cast("string"),
+      Seq(stateCol), transitions, "actor", "from_state", "to_state", "n")
+
+  private[streaming] val transitions = {
     val sep = "\u0001" // never appears in event-type vocabularies
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(String, Map[String, Long]),
-        (Long, String, String, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[(String, Map[String, Long])]) =>
-          val (last0, counts0) = state.getOption.getOrElse((null: String, Map.empty[String, Long]))
-          var last = last0
-          var counts = counts0
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, _, _, st) =>
-            if (last != null) {
-              val k = last + sep + st
-              counts = counts.updated(k, counts.getOrElse(k, 0L) + 1L)
-            }
-            last = st
-          }
-          state.update((last, counts))
-          counts.iterator.map { case (k, n) =>
-            val Array(from, to) = k.split(sep, 2)
-            (key, from, to, n)
-          }
-      }
-      .toDF("actor", "from_state", "to_state", "n")
+    new Recurrence[String, (String, Map[String, Long]), (Long, String, String, Long)](
+      (null, Map.empty),
+      (_, _, _, st, s, _) => {
+        val (last, counts) = s
+        if (last == null) (st, counts)
+        else {
+          val k = last + sep + st
+          (st, counts.updated(k, counts.getOrElse(k, 0L) + 1L))
+        }
+      },
+      (key, s, emit) => s._2.foreach { case (k, n) =>
+        val Array(from, to) = k.split(sep, 2)
+        emit((key, from, to, n))
+      })
   }
 
   /**
    * The q167 EWMA smoother as INCREMENTAL keyed state: one double per
    * actor (the last smoothed value) carries the recurrence
    * `e' = e + α·(x − e)` across micro-batches — the unbounded-series
-   * form the batch operator's per-key array fold cannot take. Within
-   * a batch, events process sorted by (`tsCol`, `tieCol`); the
-   * ordered-feed contract is [[funnelStream]]'s.
-   *
-   * Replay safety: the state store commits atomically with the batch,
-   * so a replayed batch re-reads the PRE-batch state and emits
-   * IDENTICAL rows — the at-least-once duplicates in an append log
-   * carry the same values and fold away with a distinct / any-value
-   * per (actor, `tieCol`) ([[foldEwmaUpdates]]).
+   * form the batch operator's per-key array fold cannot take. Order
+   * contract and replay safety: [[sortedRecurrence]]; duplicates fold
+   * away per (actor, `tieCol`) ([[foldEwmaUpdates]]).
    *
    * Output per batch: (actor, tie, ts_micros, value, ewma) for every
    * event in the batch.
@@ -549,32 +615,19 @@ object Streaming {
                  tieCol: String, valueCol: String,
                  alpha: Double): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(valueCol).cast("double"))
-      .as[(Long, Long, Long, Double)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Boolean, Double),
-        (Long, Long, Long, Double, Double)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: GroupState[(Boolean, Double)]) =>
-          var (seen, e) = state.getOption.getOrElse((false, 0.0))
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, ts, tie, v) =>
-              e = if (!seen) v else e + alpha * (v - e)
-              seen = true
-              (key, tie, ts, v, e)
-          }
-          state.update((seen, e))
-          out.iterator
-      }
-      .toDF("actor", "tie", "ts_micros", "value", "ewma")
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(valueCol).cast("double"),
+      Seq(valueCol), ewma(alpha), "actor", "tie", "ts_micros", "value", "ewma")
   }
+
+  private[streaming] def ewma(alpha: Double) =
+    new Recurrence[Double, (Boolean, Double), (Long, Long, Long, Double, Double)](
+      (false, 0.0),
+      (key, ts, tie, v, s, emit) => {
+        val (seen, e0) = s
+        val e = if (!seen) v else e0 + alpha * (v - e0)
+        emit((key, tie, ts, v, e))
+        (true, e)
+      })
 
   /**
    * Streaming distinct counts with MERGEABLE sketch state: one
@@ -720,34 +773,19 @@ object Streaming {
 
   /** Collapse a [[heavyHitterStream]] update log: the final
    *  cumulative row per key (largest `n_seen`). */
-  def foldHeavyHitterUpdates(updates: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("n_seen").desc)
-    updates.withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
-      .select(col("key"), col("n_seen"), col("candidates"))
-  }
+  def foldHeavyHitterUpdates(updates: DataFrame): DataFrame =
+    finalRows(updates, "key", "n_seen", "candidates")
 
   /** Collapse a [[quantileStream]] update log: the final cumulative
    *  row per key (largest `n_seen`; ties are byte-identical rows —
    *  same sketch state, same quantiles). */
-  def foldQuantileUpdates(updates: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("n_seen").desc)
-    updates.withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
-      .select(col("key"), col("n_seen"), col("p25"), col("p50"), col("p75"))
-  }
+  def foldQuantileUpdates(updates: DataFrame): DataFrame =
+    finalRows(updates, "key", "n_seen", "p25", "p50", "p75")
 
   /** Collapse a [[distinctCountStream]] update log: the final
    *  cumulative row per key is the one with the largest `n_seen`. */
-  def foldDistinctCountUpdates(updates: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("n_seen").desc)
-    updates.withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
-      .select(col("key"), col("n_seen"), col("estimate"))
-  }
+  def foldDistinctCountUpdates(updates: DataFrame): DataFrame =
+    finalRows(updates, "key", "n_seen", "estimate")
 
   /**
    * Streaming distribution-drift monitor: per key, an EXACT fixed-bin
@@ -806,55 +844,35 @@ object Streaming {
   }
 
   /** Last update per key of a [[driftStream]] run (n_seen is monotone). */
-  def foldDriftUpdates(updates: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("key")).orderBy(col("n_seen").desc)
-    updates.withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
-      .select(col("key"), col("n_seen"), col("counts"), col("psi"))
-  }
+  def foldDriftUpdates(updates: DataFrame): DataFrame =
+    finalRows(updates, "key", "n_seen", "counts", "psi")
 
   /**
    * Log compaction as incremental keyed state: emit an event iff its
    * `stateCol` differs (null-safe) from the actor's PREVIOUS event —
    * the streaming form of
    * [[graft.ops.TimeSeries.compressConsecutive]], with the last value
-   * carried across micro-batches in one string of state. Ordered-feed
-   * contract and replay-safety as [[ewmaStream]] (pre-batch state
-   * replays ⇒ identical emissions ⇒ duplicates dedup by (actor, tie)).
+   * carried across micro-batches in one string of state. A null state
+   * is a value like any other: it is kept, and it is a change point
+   * when the previous state was not null. Order contract and replay
+   * safety: [[sortedRecurrence]] (duplicates dedup by (actor, tie)).
    *
    * Output per batch: (actor, tie, ts_micros, state) for every
    * change point in the batch.
    */
   def compactStream(df: DataFrame, actorCol: String, tsCol: String,
-                    tieCol: String, stateCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(stateCol).cast("string"))
-      .as[(Long, Long, Long, String)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Boolean, String),
-        (Long, Long, Long, String)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[(Boolean, String)]) =>
-          var (seen, last) = state.getOption.getOrElse((false, null: String))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, String)]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ts, tie, v) =>
-            if (!seen || last != v) out += ((key, tie, ts, v))
-            seen = true
-            last = v
-          }
-          state.update((seen, last))
-          out.iterator
-      }
-      .toDF("actor", "tie", "ts_micros", "state")
-  }
+                    tieCol: String, stateCol: String): DataFrame =
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(stateCol).cast("string"),
+      Nil, compact, "actor", "tie", "ts_micros", "state")
+
+  private[streaming] val compact =
+    new Recurrence[String, (Boolean, String), (Long, Long, Long, String)](
+      (false, null),
+      (key, ts, tie, v, s, emit) => {
+        val (seen, last) = s
+        if (!seen || last != v) emit((key, tie, ts, v))
+        (true, v)
+      })
 
   /** Collapse a [[compactStream]] update log (same dedup rationale as
    *  [[foldEwmaUpdates]]: duplicates carry identical values). */
@@ -877,60 +895,39 @@ object Streaming {
    * running min of prefix sums) carried in integer CENTS — two longs
    * per key, constant state (~312 bytes/key all-in, flat 16k → 1M
    * keys by the round-15 probe; 1M keys ≈ 320 MB of store), and
-   * bit-identical to the batch
-   * prefix-sum identity on any feed chunking THAT PRESERVES PER-KEY
-   * (ts, tie) ORDER across micro-batches (rows inside one batch are
-   * sorted here, but the recurrence folds a row arriving in a LATER
-   * batch as if it were last — a late-data divergence the state pair
-   * cannot undo; feed time-ordered chunks, as the q288 harness does
-   * with hour-ranged single-file triggers). Values, target, slack and
-   * threshold all snap via `BigDecimal.valueOf(v).setScale(2, HALF_UP)`
-   * — bit-identical to the batch path's double→decimal(18,2) cast
-   * (both round HALF_UP on the shortest decimal string), the one snap
-   * convention documented on [[graft.ops.TimeSeries.cusum]]. The
-   * [[ewmaStream]] shape but with NO float in the state at all.
+   * bit-identical to the batch prefix-sum identity under the
+   * [[sortedRecurrence]] order contract. Values, target, slack and
+   * threshold all snap via [[graft.core.Snap.cents]] — bit-identical
+   * to the batch path's double→decimal(18,2) cast (both round HALF_UP
+   * on the shortest decimal string), the one snap convention
+   * documented on [[graft.ops.TimeSeries.cusum]]. The [[ewmaStream]]
+   * shape but with NO float in the state at all.
    *
    * Emits one row per processed event (Update mode); the log folds
-   * exactly per (actor, tie) — replays re-read pre-batch state and
-   * emit identical rows ([[foldCusumUpdates]]).
+   * exactly per (actor, tie) ([[foldCusumUpdates]]).
    */
   def cusumStream(df: DataFrame, actorCol: String, tsCol: String,
                   tieCol: String, valueCol: String, target: Double,
-                  slack: Double, threshold: Double): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
+                  slack: Double, threshold: Double): DataFrame =
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(valueCol).cast("double"),
+      Seq(valueCol), cusum(target, slack, threshold),
+      "actor", "tie", "ts_micros", "value", "cusum", "alarm")
+
+  private[streaming] def cusum(target: Double, slack: Double, threshold: Double) = {
     val muC = cents(target)
     val kC = cents(slack)
     val hC = cents(threshold)
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(valueCol).cast("double"))
-      .as[(Long, Long, Long, Double)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long),
-        (Long, Long, Long, Double, Double, Boolean)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: GroupState[(Long, Long)]) =>
-          // (prefix sum, min prefix) in cents; min starts at P₀ = 0
-          var (p, m) = state.getOption.getOrElse((0L, 0L))
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, ts, tie, v) =>
-              val xc = cents(v)
-              p += xc - muC - kC
-              m = math.min(m, p)
-              val s = p - m
-              (key, tie, ts, xc / 100.0, s / 100.0, s > hC)
-          }
-          state.update((p, m))
-          out.iterator
-      }
-      .toDF("actor", "tie", "ts_micros", "value", "cusum", "alarm")
+    // (prefix sum, min prefix) in cents; min starts at P₀ = 0
+    new Recurrence[Double, (Long, Long), (Long, Long, Long, Double, Double, Boolean)](
+      (0L, 0L),
+      (key, ts, tie, v, s, emit) => {
+        val xc = cents(v)
+        val p = s._1 + (xc - muC - kC)
+        val m = math.min(s._2, p)
+        val sv = p - m
+        emit((key, tie, ts, xc / 100.0, sv / 100.0, sv > hC))
+        (p, m)
+      })
   }
 
   /**
@@ -939,75 +936,50 @@ object Streaming {
    * latched alarm index) — two exact longs, two doubles produced by
    * the SAME pinned sequential chain as the batch fold (the Σcents
    * long converts exactly to the batch's double sum below 2⁵³), and
-   * one latch long. Batch ≡ stream on any feed chunking that
-   * preserves per-key (ts, tie) order across micro-batches (the
-   * [[cusumStream]] order contract; rows inside one batch are sorted
-   * here). Values snap via the ONE cents convention; δ and λ are
-   * 10⁻⁹-grid literals in grid units.
+   * one latch long. Batch ≡ stream under the [[sortedRecurrence]]
+   * order contract. Values snap via the ONE cents convention; δ and λ
+   * are 10⁻⁹-grid literals in grid units.
    *
    * Emits one row per processed event (Update mode) carrying the
-   * state AFTER that event; replays re-read pre-batch state and emit
-   * identical rows, so the log folds exactly per key
+   * state AFTER that event; the log folds exactly per key
    * ([[foldPageHinkleyUpdates]] — the max-n row IS the final state).
    */
   def pageHinkleyStream(df: DataFrame, actorCol: String, tsCol: String,
                         tieCol: String, valueCol: String, delta: Double,
                         lambda: Double): DataFrame = {
     require(lambda > 0, s"lambda must be > 0, got $lambda")
-    val spark = df.sparkSession
-    import spark.implicits._
-    def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
-    def r9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-        .bigDecimal.doubleValue
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(valueCol).cast("double"),
+      Seq(valueCol), pageHinkley(delta, lambda),
+      "actor", "tie", "ts_micros", "n", "mean", "ph", "alarm_at")
+  }
+
+  private[streaming] def pageHinkley(delta: Double, lambda: Double) = {
     val dC = r9(delta * 100.0)
     val lamC = r9(lambda * 100.0)
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(valueCol).cast("double"))
-      .as[(Long, Long, Long, Double)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Double, Double, Long),
-        (Long, Long, Long, Long, Double, Double, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: GroupState[(Long, Long, Double, Double, Long)]) =>
-          var (n, sumC, m, minM, alarmAt) =
-            state.getOption.getOrElse((0L, 0L, 0.0, 0.0, 0L))
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, ts, tie, v) =>
-              val xc = cents(v)
-              n += 1L; sumC += xc
-              val mean = sumC.toDouble / n.toDouble
-              m += xc.toDouble - mean - dC
-              minM = math.min(minM, m)
-              val ph = m - minM
-              if (alarmAt == 0L && ph > lamC) alarmAt = n
-              (key, tie, ts, n, mean / 100.0, ph / 100.0, alarmAt)
-          }
-          state.update((n, sumC, m, minM, alarmAt))
-          out.iterator
-      }
-      .toDF("actor", "tie", "ts_micros", "n", "mean", "ph", "alarm_at")
+    new Recurrence[Double, (Long, Long, Double, Double, Long),
+      (Long, Long, Long, Long, Double, Double, Long)](
+      (0L, 0L, 0.0, 0.0, 0L),
+      (key, ts, tie, v, s, emit) => {
+        var (n, sumC, m, minM, alarmAt) = s
+        val xc = cents(v)
+        n += 1L; sumC += xc
+        val mean = sumC.toDouble / n.toDouble
+        m += xc.toDouble - mean - dC
+        minM = math.min(minM, m)
+        val ph = m - minM
+        if (alarmAt == 0L && ph > lamC) alarmAt = n
+        emit((key, tie, ts, n, mean / 100.0, ph / 100.0, alarmAt))
+        (n, sumC, m, minM, alarmAt)
+      })
   }
 
   /** Collapse a [[pageHinkleyStream]] update log to the batch
    *  [[graft.ops.TimeSeries.pageHinkley]] shape: the max-n row per
    *  actor carries the final state (the alarm index is latched, so
-   *  `max` equals the final value; 0 folds to null = never). */
+   *  the final value is also the max; 0 folds to null = never). */
   def foldPageHinkleyUpdates(updates: DataFrame): DataFrame =
-    updates.groupBy(col("actor"))
-      .agg(max(col("n")).as("n"),
-        max_by(col("mean"), col("n")).as("mean"),
-        max_by(col("ph"), col("n")).as("ph"),
-        max(col("alarm_at")).as("__al"))
-      .withColumn("alarm_at", when(col("__al") > 0L, col("__al")))
-      .select(col("actor"), col("n"), col("mean"), col("ph"),
-        col("alarm_at"))
+    finalRows(updates, "actor", "n", "mean", "ph", "alarm_at")
+      .withColumn("alarm_at", when(col("alarm_at") > 0L, col("alarm_at")))
 
   /**
    * Streaming MACD ([[graft.ops.TimeSeries.macd]]'s incremental
@@ -1017,10 +989,8 @@ object Streaming {
    * fold with `α = 2/(span+1)` computed from the spans at runtime
    * (correctly-rounded division — identical to the batch Column
    * arithmetic). Seeds: ef = es = x₀ (so macd₀ = +0 exactly) and
-   * sg = macd₀. Batch ≡ stream on any feed chunking that preserves
-   * per-key (ts, tie) order across micro-batches (the
-   * [[cusumStream]] order contract; rows inside one batch are
-   * sorted here).
+   * sg = macd₀. Batch ≡ stream under the [[sortedRecurrence]] order
+   * contract.
    *
    * Emits one row per processed event (Update mode) carrying the
    * registers AFTER that event; the log folds exactly per key
@@ -1034,51 +1004,36 @@ object Streaming {
                  slowSpan: Int = 26, signalSpan: Int = 9): DataFrame = {
     require(fastSpan > 0 && slowSpan > fastSpan && signalSpan > 0,
       "need 0 < fastSpan < slowSpan and signalSpan > 0")
-    val spark = df.sparkSession
-    import spark.implicits._
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(valueCol).cast("double"),
+      Seq(valueCol), macd(fastSpan, slowSpan, signalSpan),
+      "actor", "tie", "ts_micros", "value", "n", "macd", "signal", "histogram")
+  }
+
+  private[streaming] def macd(fastSpan: Int, slowSpan: Int, signalSpan: Int) = {
     val af = 2.0 / (fastSpan.toDouble + 1.0)
     val as = 2.0 / (slowSpan.toDouble + 1.0)
     val ag = 2.0 / (signalSpan.toDouble + 1.0)
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(valueCol).cast("double"))
-      .as[(Long, Long, Long, Double)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double, Double, Double),
-        (Long, Long, Long, Double, Long, Double, Double, Double)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: GroupState[(Long, Double, Double, Double)]) =>
-          var (n, ef, es, sg) =
-            state.getOption.getOrElse((0L, 0.0, 0.0, 0.0))
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, ts, tie, v) =>
-              if (n == 0L) { ef = v; es = v; sg = v - v }
-              else {
-                ef += af * (v - ef)
-                es += as * (v - es)
-                sg += ag * (ef - es - sg)
-              }
-              n += 1L
-              (key, tie, ts, v, n, ef - es, sg, ef - es - sg)
-          }
-          state.update((n, ef, es, sg))
-          out.iterator
-      }
-      .toDF("actor", "tie", "ts_micros", "value", "n", "macd",
-        "signal", "histogram")
+    new Recurrence[Double, (Long, Double, Double, Double),
+      (Long, Long, Long, Double, Long, Double, Double, Double)](
+      (0L, 0.0, 0.0, 0.0),
+      (key, ts, tie, v, s, emit) => {
+        var (n, ef, es, sg) = s
+        if (n == 0L) { ef = v; es = v; sg = v - v }
+        else {
+          ef += af * (v - ef)
+          es += as * (v - es)
+          sg += ag * (ef - es - sg)
+        }
+        n += 1L
+        emit((key, tie, ts, v, n, ef - es, sg, ef - es - sg))
+        (n, ef, es, sg)
+      })
   }
 
   /** Collapse a [[macdStream]] update log to one final-state row per
    *  actor: the max-n row carries the final registers. */
   def foldMacdUpdates(updates: DataFrame): DataFrame =
-    updates.groupBy(col("actor"))
-      .agg(max(col("n")).as("n"),
-        max_by(col("macd"), col("n")).as("macd"),
-        max_by(col("signal"), col("n")).as("signal"),
-        max_by(col("histogram"), col("n")).as("histogram"))
+    finalRows(updates, "actor", "n", "macd", "signal", "histogram")
 
   /**
    * Streaming Holt linear-trend smoothing
@@ -1088,10 +1043,8 @@ object Streaming {
    * as the batch fold (`l' = α·x + (1−α)(l+b)`,
    * `b' = β(l'−l) + (1−β)b`, seeds l = x₀, b = 0, complements
    * computed in-expression and α/β snapped to the 9-decimal grid —
-   * the q327 discipline). Batch ≡ stream on any feed chunking that
-   * preserves per-key (ts, tie) order across micro-batches (the
-   * [[cusumStream]] order contract; rows inside one batch are
-   * sorted here).
+   * the q327 discipline). Batch ≡ stream under the
+   * [[sortedRecurrence]] order contract.
    *
    * Emits one row per processed event (Update mode) carrying the
    * state AFTER that event plus the `horizon`-step forecast
@@ -1107,53 +1060,36 @@ object Streaming {
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
     require(beta > 0 && beta <= 1, s"beta in (0,1], got $beta")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
-    val spark = df.sparkSession
-    import spark.implicits._
-    def r9(x: Double): Double =
-      BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP)
-        .bigDecimal.doubleValue
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(valueCol).cast("double"),
+      Seq(valueCol), holt(alpha, beta, horizon),
+      "actor", "tie", "ts_micros", "value", "n", "level", "trend", "forecast")
+  }
+
+  private[streaming] def holt(alpha: Double, beta: Double, horizon: Int) = {
     val a = r9(alpha); val bb = r9(beta)
     val h = horizon.toDouble
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(valueCol).cast("double"))
-      .as[(Long, Long, Long, Double)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Double, Double),
-        (Long, Long, Long, Double, Long, Double, Double, Double)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: GroupState[(Long, Double, Double)]) =>
-          var (n, l, tr) = state.getOption.getOrElse((0L, 0.0, 0.0))
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, ts, tie, v) =>
-              if (n == 0L) { l = v; tr = 0.0 }
-              else {
-                val l2 = a * v + (1.0 - a) * (l + tr)
-                tr = bb * (l2 - l) + (1.0 - bb) * tr
-                l = l2
-              }
-              n += 1L
-              (key, tie, ts, v, n, l, tr, l + h * tr)
-          }
-          state.update((n, l, tr))
-          out.iterator
-      }
-      .toDF("actor", "tie", "ts_micros", "value", "n", "level",
-        "trend", "forecast")
+    new Recurrence[Double, (Long, Double, Double),
+      (Long, Long, Long, Double, Long, Double, Double, Double)](
+      (0L, 0.0, 0.0),
+      (key, ts, tie, v, s, emit) => {
+        var (n, l, tr) = s
+        if (n == 0L) { l = v; tr = 0.0 }
+        else {
+          val l2 = a * v + (1.0 - a) * (l + tr)
+          tr = bb * (l2 - l) + (1.0 - bb) * tr
+          l = l2
+        }
+        n += 1L
+        emit((key, tie, ts, v, n, l, tr, l + h * tr))
+        (n, l, tr)
+      })
   }
 
   /** Collapse a [[holtStream]] update log to the batch
    *  [[graft.ops.TimeSeries.holtLinear]] shape: the max-n row per
    *  actor carries the final state. */
   def foldHoltUpdates(updates: DataFrame): DataFrame =
-    updates.groupBy(col("actor"))
-      .agg(max(col("n")).as("n"),
-        max_by(col("level"), col("n")).as("level"),
-        max_by(col("trend"), col("n")).as("trend"),
-        max_by(col("forecast"), col("n")).as("forecast"))
+    finalRows(updates, "actor", "n", "level", "trend", "forecast")
 
   /**
    * Streaming forecast tracking signal
@@ -1165,8 +1101,9 @@ object Streaming {
    * `TS = Σe/(Σ|e|/n)` with the batch operator's pinned chains, so
    * the max-n row per key equals the batch result bit-for-bit on
    * any feed chunking (the sums are order-free — the strongest
-   * parity in the family). The live form of the ±4 control-limit
-   * re-fit trigger for per-key forecast fleets.
+   * parity in the family; the [[sortedRecurrence]] order contract
+   * only orders the per-event rows). The live form of the ±4
+   * control-limit re-fit trigger for per-key forecast fleets.
    *
    * Emits one row per processed event (Update mode); the log folds
    * per key via [[foldTrackingUpdates]]. Rows with a null actor,
@@ -1179,53 +1116,36 @@ object Streaming {
   def trackingSignalStream(df: DataFrame, actorCol: String,
                            tsCol: String, tieCol: String,
                            actualCol: String, forecastCol: String,
-                           valueScale: Int = 2): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+                           valueScale: Int = 2): DataFrame =
+    sortedRecurrence(df, actorCol, tsCol, tieCol,
+      struct(unscaled(col(actualCol), valueScale).as("_1"),
+        unscaled(col(forecastCol), valueScale).as("_2")),
+      Seq(actualCol, forecastCol), trackingSignal(valueScale),
+      "actor", "tie", "ts_micros", "n", "cum_error", "mad", "tracking_signal")
+
+  private[streaming] def trackingSignal(valueScale: Int) = {
     val scaleF = math.pow(10, valueScale)
-    def cents(c: Column) = (c.cast(s"decimal(18,$valueScale)") *
-      lit(scaleF.toLong).cast("decimal(18,0)")).cast("long")
-    val ds = df
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(actualCol).isNotNull &&
-        col(forecastCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"),
-        cents(col(actualCol)), cents(col(forecastCol)))
-      .as[(Long, Long, Long, Long, Long)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long),
-        (Long, Long, Long, Long, Double, Double, Option[Double])](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Long, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          var (n, se, sae) = state.getOption.getOrElse((0L, 0L, 0L))
-          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-            case (_, ts, tie, ac, fc) =>
-              val e = ac - fc
-              n += 1L; se += e; sae += math.abs(e)
-              val ts0 =
-                if (sae > 0L) Some(se.toDouble / (sae.toDouble / n.toDouble))
-                else None
-              (key, tie, ts, n, se.toDouble / scaleF,
-                sae.toDouble / n.toDouble / scaleF, ts0)
-          }
-          state.update((n, se, sae))
-          out.iterator
-      }
-      .toDF("actor", "tie", "ts_micros", "n", "cum_error", "mad",
-        "tracking_signal")
+    new Recurrence[(Long, Long), (Long, Long, Long),
+      (Long, Long, Long, Long, Double, Double, Option[Double])](
+      (0L, 0L, 0L),
+      (key, ts, tie, v, s, emit) => {
+        var (n, se, sae) = s
+        val e = v._1 - v._2
+        n += 1L; se += e; sae += math.abs(e)
+        val ts0 =
+          if (sae > 0L) Some(se.toDouble / (sae.toDouble / n.toDouble))
+          else None
+        emit((key, tie, ts, n, se.toDouble / scaleF,
+          sae.toDouble / n.toDouble / scaleF, ts0))
+        (n, se, sae)
+      })
   }
 
   /** Collapse a [[trackingSignalStream]] update log to the batch
    *  [[graft.ops.TimeSeries.trackingSignal]] shape: the max-n row
    *  per actor carries the final state. */
   def foldTrackingUpdates(updates: DataFrame): DataFrame =
-    updates.groupBy(col("actor"))
-      .agg(max(col("n")).as("n"),
-        max_by(col("cum_error"), col("n")).as("cum_error"),
-        max_by(col("mad"), col("n")).as("mad"),
-        max_by(col("tracking_signal"), col("n")).as("tracking_signal"))
+    finalRows(updates, "actor", "n", "cum_error", "mad", "tracking_signal")
 
   /**
    * Streaming bottom-k coordinated sample
@@ -1281,9 +1201,7 @@ object Streaming {
   /** Collapse a [[bottomKStream]] update log to the final sample per
    *  actor: the max-n_seen row carries the final state. */
   def foldBottomKUpdates(updates: DataFrame): DataFrame =
-    updates.groupBy(col("actor"))
-      .agg(max(col("n_seen")).as("n_seen"),
-        max_by(col("ids"), col("n_seen")).as("ids"))
+    finalRows(updates, "actor", "n_seen", "ids")
 
   /**
    * Streaming TWAP ([[graft.ops.TimeSeries.twap]]'s incremental form):
@@ -1314,11 +1232,10 @@ object Streaming {
    * naming the offending hold; split long holds upstream or use a
    * coarser unit.
    *
-   * Same order contract as [[cusumStream]]: chunking must preserve
-   * per-key (ts, tie) order across micro-batches (rows inside one
-   * batch are sorted here). Values snap to cents via the ONE snap
-   * convention (`BigDecimal.valueOf(v).setScale(2, HALF_UP)` ≡ the
-   * batch double→decimal cast).
+   * Order contract: [[sortedRecurrence]]. Values snap to cents via
+   * the ONE snap convention ([[graft.core.Snap.cents]] ≡ the batch
+   * double→decimal cast). A null tie is dropped like a null ts, as
+   * the batch arms do: it has no place in the (ts, tie) order.
    *
    * Emits (actor, bucket_us, n_ticks, twap).
    */
@@ -1329,79 +1246,62 @@ object Streaming {
     require(unitMicros > 0, s"unitMicros must be > 0, got $unitMicros")
     require(maxBucketsPerHold >= 1,
       s"maxBucketsPerHold must be >= 1, got $maxBucketsPerHold")
-    val spark = df.sparkSession
-    import spark.implicits._
-    def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
-    val ds = df
-      // tieCol non-null too: the batch arms' filter verbatim (a null
-      // tie has no defined position in the (ts, tie) total order)
-      .filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-        col(tieCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
-        col(tieCol).cast("long"), col(valueCol).cast("double"))
-      .as[(Long, Long, Long, Double)]
-    ds.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long, Long, Long, Long),
-        (Long, Long, Long, Double)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: GroupState[(Long, Long, Long, Long, Long, Long)]) =>
-          // (bucket, lastT, lastVc, accVw, accW, n); bucket -1 = empty
-          var (b, lastT, lastVc, vw, w, n) =
-            state.getOption.getOrElse((-1L, 0L, 0L, 0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, Double)]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach {
-            case (_, t, _, v) =>
-              val vc = cents(v)
-              val b2 = t - java.lang.Math.floorMod(t, unitMicros)
-              if (b < 0) { b = b2; lastT = t; lastVc = vc; vw = 0L
-                w = 0L; n = 1L }
-              else if (b2 == b) {
-                vw += lastVc * (t - lastT); w += t - lastT
-                lastT = t; lastVc = vc; n += 1L
-              } else {
-                // close bucket b to its edge and emit the FINAL row
-                val edge = b + unitMicros
-                vw += lastVc * (edge - lastT); w += edge - lastT
-                out += ((key, b, n, vw.toDouble / w.toDouble / 100.0))
-                if (carryIn) {
-                  // prevailing-quote carry: every bucket the hold
-                  // fully spans emits the held price (n_ticks = 0,
-                  // the batch twapCarry closing division verbatim),
-                  // and the tick's bucket opens with the carried
-                  // segment from its own start. Same cap as the
-                  // batch arm: a hold spanning more buckets than
-                  // maxBucketsPerHold fails fast instead of emitting
-                  // hundreds of thousands of carried rows per tick.
-                  val spans = (b2 - edge) / unitMicros + 1L
-                  if (spans > maxBucketsPerHold)
-                    throw new IllegalStateException(
-                      s"twapStream(carryIn): key $key hold from " +
-                        s"t=$lastT us spans $spans buckets > " +
-                        s"maxBucketsPerHold=$maxBucketsPerHold; split " +
-                        "long holds upstream or use a coarser unit")
-                  var ib = edge
-                  while (ib + unitMicros <= b2) {
-                    val fvw = lastVc * unitMicros
-                    out += ((key, ib, 0L,
-                      fvw.toDouble / unitMicros.toDouble / 100.0))
-                    ib += unitMicros
-                  }
-                  b = b2; vw = lastVc * (t - b2); w = t - b2
-                  lastT = t; lastVc = vc; n = 1L
-                } else {
-                  b = b2; lastT = t; lastVc = vc; vw = 0L; w = 0L; n = 1L
-                }
-              }
-          }
-          state.update((b, lastT, lastVc, vw, w, n))
-          out.iterator
-      }
-      .toDF("actor", "bucket_us", "n_ticks", "twap")
+    sortedRecurrence(df, actorCol, tsCol, tieCol, col(valueCol).cast("double"),
+      Seq(valueCol), twap(unitMicros, carryIn, maxBucketsPerHold),
+      "actor", "bucket_us", "n_ticks", "twap")
   }
+
+  private[streaming] def twap(unitMicros: Long, carryIn: Boolean,
+                              maxBucketsPerHold: Int) =
+    // (bucket, lastT, lastVc, accVw, accW, n); bucket -1 = empty
+    new Recurrence[Double, (Long, Long, Long, Long, Long, Long),
+      (Long, Long, Long, Double)](
+      (-1L, 0L, 0L, 0L, 0L, 0L),
+      (key, t, _, v, s, emit) => {
+        var (b, lastT, lastVc, vw, w, n) = s
+        val vc = cents(v)
+        val b2 = t - java.lang.Math.floorMod(t, unitMicros)
+        if (b < 0) { b = b2; lastT = t; lastVc = vc; vw = 0L
+          w = 0L; n = 1L }
+        else if (b2 == b) {
+          vw += lastVc * (t - lastT); w += t - lastT
+          lastT = t; lastVc = vc; n += 1L
+        } else {
+          // close bucket b to its edge and emit the FINAL row
+          val edge = b + unitMicros
+          vw += lastVc * (edge - lastT); w += edge - lastT
+          emit((key, b, n, vw.toDouble / w.toDouble / 100.0))
+          if (carryIn) {
+            // prevailing-quote carry: every bucket the hold
+            // fully spans emits the held price (n_ticks = 0,
+            // the batch twapCarry closing division verbatim),
+            // and the tick's bucket opens with the carried
+            // segment from its own start. Same cap as the
+            // batch arm: a hold spanning more buckets than
+            // maxBucketsPerHold fails fast instead of emitting
+            // hundreds of thousands of carried rows per tick.
+            val spans = (b2 - edge) / unitMicros + 1L
+            if (spans > maxBucketsPerHold)
+              throw new IllegalStateException(
+                s"twapStream(carryIn): key $key hold from " +
+                  s"t=$lastT us spans $spans buckets > " +
+                  s"maxBucketsPerHold=$maxBucketsPerHold; split " +
+                  "long holds upstream or use a coarser unit")
+            var ib = edge
+            while (ib + unitMicros <= b2) {
+              val fvw = lastVc * unitMicros
+              emit((key, ib, 0L,
+                fvw.toDouble / unitMicros.toDouble / 100.0))
+              ib += unitMicros
+            }
+            b = b2; vw = lastVc * (t - b2); w = t - b2
+            lastT = t; lastVc = vc; n = 1L
+          } else {
+            b = b2; lastT = t; lastVc = vc; vw = 0L; w = 0L; n = 1L
+          }
+        }
+        (b, lastT, lastVc, vw, w, n)
+      })
 
   /** Collapse a [[twapStream]] update log: emitted rows are final
    *  (one per closed bucket), so `max` per (actor, bucket) is a pure

@@ -171,16 +171,6 @@ class HttpSpec extends AnyFunSuite {
     assert(sleeps.toSeq == Seq(100L, 100L))
   }
 
-  test("parallelPages fans fetches out as a distributed job") {
-    val fetcher = new Http.Fetcher {
-      def fetch(url: String, headers: Map[String, String]): Http.Response =
-        Http.Response(200, s"""{"page":"${url.takeRight(1)}"}""")
-    }
-    val df = Http.parallelPages(spark,
-      (1 to 4).map(i => s"http://api/p$i"), fetcher = fetcher)
-    assert(df.count() == 4)
-  }
-
   test("javaNetFetcher end-to-end against a live loopback server, reusing connections") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
