@@ -87,21 +87,30 @@ def main(sf_dir, out_dir, name_re=None):
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
+# The gate harness: the gate registry, the gate files under gates/
+# and the two runners. Their defs are not operators, and their calls
+# are what wires an operator into a gate.
+HARNESS = ("SparkEntry.scala", "Verify.scala", "Bench.scala", "gates/*.scala")
+
+def harness_files(repo="."):
+    return {os.path.normpath(p) for pat in HARNESS
+            for p in glob.glob(f"{repo}/src/main/scala/graft/{pat}")}
+
 def collect_defs(repo="."):
     """name -> file:line of every member-level public operator def
     (2-space indent: deeper indents are local helpers, `override`
     implements a Spark interface, private/protected are internal by
     construction; first declaration wins for shared names)."""
     import re
-    harness = {"SparkEntry.scala", "Verify.scala", "Bench.scala"}
+    harness = harness_files(repo)
     # names that are structural, not operators
     ignore = {"main", "apply", "unapply", "toString", "equals",
               "hashCode"}
     defs = {}
     for path in sorted(glob.glob(f"{repo}/src/main/scala/graft/**/*.scala",
                                  recursive=True)):
-        base = os.path.basename(path)
-        if base in harness or "/tmp/" in path.replace("\\", "/"):
+        if os.path.normpath(path) in harness \
+                or "/tmp/" in path.replace("\\", "/"):
             continue
         for i, line in enumerate(open(path), 1):
             m = re.match(r"  def\s+([a-zA-Z]\w*)", line)
@@ -248,7 +257,7 @@ def strip_scala_noise(src):
 
 def operator_scan(repo="."):
     """Fail on any PUBLIC operator in src/main that is neither wired
-    into SparkEntry (gate) nor referenced by any test source.
+    into a gate (the harness files) nor referenced by any test source.
 
     This is the structural fix for the closing-wave slip (rounds 9, 12,
     13 all shipped an operator with no gate/spec in the final commit):
@@ -257,20 +266,17 @@ def operator_scan(repo="."):
     """
     import re
     defs = collect_defs(repo)
-    harness = {"SparkEntry.scala", "Verify.scala", "Bench.scala"}
     refs = ""
     for path in glob.glob(f"{repo}/src/test/scala/**/*.scala",
                           recursive=True):
         refs += open(path).read()
-    for base in harness:
-        p = f"{repo}/src/main/scala/graft/{base}"
-        if os.path.exists(p):
-            refs += open(p).read()
+    for p in sorted(harness_files(repo)):
+        refs += open(p).read()
     # Strip comments and string literals BEFORE matching (round-15
     # advice): the dotted-reference alternative would otherwise accept
     # a scaladoc cross-link ('…what Spatial.gridClusters feeds in') as
-    # a reference. Note SparkEntry's oracle SQL is strings — but every
-    # gated operator is ALSO called from `queries`, which survives.
+    # a reference. Note the gates' oracle SQL is strings — but every
+    # gated operator is ALSO called from a gate's build, which survives.
     refs = strip_scala_noise(refs)
     # CALL-SHAPED references only (round-14 advice): `name(`,
     # `name[T](` or `Object.name(` — a bare \b-word match false-passes
@@ -289,7 +295,7 @@ def operator_scan(repo="."):
                    refs)
                and not re.search(rf"\b{re.escape(n)}\b", imports)}
     for n, w in missing.items():
-        print(f"UNGATED OPERATOR {n} ({w}): no SparkEntry wiring and "
+        print(f"UNGATED OPERATOR {n} ({w}): no gate wiring and "
               f"no test reference — gate it or cut it")
     if not missing:
         print(f"operator scan: {len(defs)} public defs, all referenced "

@@ -1253,15 +1253,17 @@ object Streaming {
 
   private[streaming] def twap(unitMicros: Long, carryIn: Boolean,
                               maxBucketsPerHold: Int) =
-    // (bucket, lastT, lastVc, accVw, accW, n); bucket -1 = empty
+    // (bucket, lastT, lastVc, accVw, accW, n); bucket Long.MinValue =
+    // empty, since a pre-1970 bucket is negative (a stored state is
+    // never empty, so checkpoints from the old -1 sentinel restart as is)
     new Recurrence[Double, (Long, Long, Long, Long, Long, Long),
       (Long, Long, Long, Double)](
-      (-1L, 0L, 0L, 0L, 0L, 0L),
+      (Long.MinValue, 0L, 0L, 0L, 0L, 0L),
       (key, t, _, v, s, emit) => {
         var (b, lastT, lastVc, vw, w, n) = s
         val vc = cents(v)
         val b2 = t - java.lang.Math.floorMod(t, unitMicros)
-        if (b < 0) { b = b2; lastT = t; lastVc = vc; vw = 0L
+        if (b == Long.MinValue) { b = b2; lastT = t; lastVc = vc; vw = 0L
           w = 0L; n = 1L }
         else if (b2 == b) {
           vw += lastVc * (t - lastT); w += t - lastT

@@ -16,13 +16,13 @@ class RecurrenceChunkingSpec extends AnyFunSuite {
   private val key = 7L
   private val splitsPerFeed = 20
 
-  /** `n` events of one key with timestamps in [0, maxTs] — drawn from
-   *  a small range so timestamps tie — and ties a permutation of
+  /** `n` events of one key with timestamps in [minTs, maxTs] — drawn
+   *  from a small range so timestamps tie — and ties a permutation of
    *  1..n, so (ts, tie) is unique; returned in (ts, tie) order. */
-  private def feed[V](rnd: Random, n: Int, maxTs: Long,
+  private def feed[V](rnd: Random, n: Int, minTs: Long, maxTs: Long,
                       value: Random => V): Vector[(Long, Long, Long, V)] =
     rnd.shuffle((1L to n.toLong).toVector)
-      .map(tie => (key, rnd.nextLong(maxTs + 1), tie, value(rnd)))
+      .map(tie => (key, minTs + rnd.nextLong(maxTs - minTs + 1), tie, value(rnd)))
       .sortBy(r => (r._2, r._3))
 
   /** A random in-order split into non-empty chunks, each shuffled. */
@@ -45,11 +45,12 @@ class RecurrenceChunkingSpec extends AnyFunSuite {
    *  the others emit per event, so the batches' rows concatenate to
    *  the whole-feed rows. */
   private def checkChunking[V, S, O](rec: Recurrence[V, S, O], maxTs: Long,
-                                     cumulative: Boolean = false)(
+                                     cumulative: Boolean = false,
+                                     minTs: Long = 0L)(
       value: Random => V): Unit =
     for (seed <- 1 to 40) {
       val rnd = new Random(seed)
-      val events = feed(rnd, 1 + rnd.nextInt(40), maxTs, value)
+      val events = feed(rnd, 1 + rnd.nextInt(40), minTs, maxTs, value)
       val (whole, wholeOut) = fold(rec, rnd.shuffle(events), rec.init)
       for (_ <- 1 to splitsPerFeed) {
         val chunks = split(rnd, events)
@@ -110,9 +111,11 @@ class RecurrenceChunkingSpec extends AnyFunSuite {
 
   test("twapStream's recurrence is chunking-invariant across " +
     "multi-bucket gaps, with and without carryIn") {
-    // 10 µs buckets over 400 µs: holds span up to dozens of buckets
-    checkChunking(Streaming.twap(10L, carryIn = false, 100000), maxTs = 400)(price)
-    checkChunking(Streaming.twap(10L, carryIn = true, 100000), maxTs = 400)(price)
+    // 10 µs buckets over 400 µs on both sides of the epoch: holds span
+    // up to dozens of buckets, pre-1970 buckets are negative
+    for (carryIn <- Seq(false, true))
+      checkChunking(Streaming.twap(10L, carryIn, 100000),
+        minTs = -200, maxTs = 200)(price)
   }
 
   test("twapStream's maxBucketsPerHold still throws, inside one batch " +

@@ -700,6 +700,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(batchOut == Seq((2L, 18.9)))
   }
 
+  test("twapStream keeps buckets before 1970: pre-epoch ticks == batch " +
+    "twap") {
+    // 1969-12-31 23:20 and 23:50 (UTC), then 1970-01-01 00:30 closes
+    // the 23:00 bucket: 30 min at 10, 10 min at 40 -> twap 17.5
+    def at(minutes: Long) = new Timestamp(minutes * 60000L)
+    val ticks = Seq((1L, at(-40), 10.0, 1L), (1L, at(-10), 40.0, 2L),
+      (1L, at(30), 7.0, 3L)).toDF("user_id", "ts", "value", "event_id")
+    val h23 = -3600L * 1000000L
+    val out = Streaming.twapStream(ticks, "user_id", "ts", "event_id",
+      "value", unitMicros = 3600000000L)
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    val batchOut = graft.ops.TimeSeries.twap(ticks, Seq("user_id"), "ts",
+      "event_id", "value", unit = "hour")
+      .filter(unix_micros(col("bucket")) === h23)
+      .collect().map(r => (h23, r.getAs[Long]("n_ticks"),
+        r.getAs[Double]("twap"))).toSeq
+    assert(batchOut == Seq((h23, 2L, 17.5)))
+    assert(out == batchOut)
+  }
+
   test("RocksDB state store is a config flip, not code: twapStream " +
     "batch parity holds and the provider actually engages") {
     import java.sql.Timestamp
