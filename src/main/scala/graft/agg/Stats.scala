@@ -1143,16 +1143,12 @@ object Stats {
   def kruskalWallis(df: DataFrame, keys: Seq[String], groupCol: String,
                     valueCol: String): DataFrame = {
     require(keys.nonEmpty, "kruskalWallis needs key columns")
-    import org.apache.spark.sql.expressions.Window
     val v = col(valueCol).cast("double")
-    val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col("__v"))
-    val wTie = Window.partitionBy(keys.map(col) :+ col("__v"): _*)
     val ranked = df
       .filter(v.isNotNull && col(groupCol).isNotNull &&
         keys.map(col(_).isNotNull).reduce(_ && _))
       .withColumn("__v", v)
-      .withColumn("__r2",
-        lit(2L) * rank().over(wOrd) + count(lit(1)).over(wTie) - 1L)
+      .withColumn("__r2", doubledMidrank(keys.map(col), col("__v")))
     val cells = ranked.groupBy(keys.map(col) :+ col(groupCol): _*)
       .agg(count(lit(1)).as("__ng"), sum(col("__r2")).as("__R2"),
         sum((col("__r2") * col("__r2")).cast("decimal(38,0)"))
@@ -2545,14 +2541,12 @@ object Stats {
    * strongly related", comparable across tables). [[mutualInfo]]'s
    * frequentist sibling.
    *
-   * The contingency table collapses map-side to exact integer cell
-   * counts; margins and totals are exact-count aggregates over that
-   * tiny relation; and the χ² closing — the only IEEE arithmetic —
-   * folds the per-cell terms `(o − e)²/e` in SORTED (a, b) cell order
-   * (the [[graft.quality.Quality.benfordDrift]] fold discipline), so
-   * the double sum is order-pinned and engine-identical. Cells are
-   * bounded by r·c distinct pairs: the collected fold list is
-   * cardinality-bounded, never data-bounded.
+   * The table is the [[contingencyFold]] grid (exact integer cells
+   * over the full level grid; rows with a null key drop), and the χ²
+   * closing — the only IEEE arithmetic — folds the per-cell terms
+   * `(o − e)²/e` in SORTED (a, b) cell order (the
+   * [[graft.quality.Quality.benfordDrift]] fold discipline), so the
+   * double sum is order-pinned and engine-identical.
    *
    * Output: (keys…, n, r, c, chisq, v); degenerate groups (a single
    * row/column level) emit null v — no association is measurable.
@@ -2563,45 +2557,17 @@ object Stats {
    */
   def cramersV(df: DataFrame, keys: Seq[String], aCol: String,
                bCol: String): DataFrame = {
-    val cells = df
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(keys.map(col) :+ col(aCol).cast("string").as("__a") :+
-        col(bCol).cast("string").as("__b"): _*)
-      .groupBy(keys.map(col) :+ col("__a") :+ col("__b"): _*)
-      .agg(count(lit(1)).as("__o"))
-    val rowm = cells.groupBy(keys.map(col) :+ col("__a"): _*)
-      .agg(sum(col("__o")).as("__ra"))
-    val colm = cells.groupBy(keys.map(col) :+ col("__b"): _*)
-      .agg(sum(col("__o")).as("__rb"))
-    val tot = cells.groupBy(keys.map(col): _*)
-      .agg(sum(col("__o")).as("__n"),
-        countDistinct(col("__a")).as("__r"),
-        countDistinct(col("__b")).as("__c"))
-    val e = d(col("__ra")) * d(col("__rb")) / d(col("__n"))
-    val diff = d(col("__o")) - e
-    // the FULL r×c level grid — structural-zero cells carry χ² mass
-    // ((0−e)²/e) that observed-cells-only formulations silently drop
-    val grid =
-      (if (keys.nonEmpty) rowm.join(colm, keys)
-       else rowm.crossJoin(colm))
-        .join(cells, keys ++ Seq("__a", "__b"), "left")
-        .withColumn("__o", coalesce(col("__o"), lit(0L)))
-    val terms =
-      (if (keys.nonEmpty) grid.join(tot, keys)
-       else grid.crossJoin(tot))
-        .select(keys.map(col) ++ Seq(col("__n"), col("__r"), col("__c"),
-          col("__a"), col("__b"), (diff * diff / e).as("__t")): _*)
-    val folded = terms.groupBy(keys.map(col): _*)
-      .agg(max(col("__n")).as("n"), max(col("__r")).as("r"),
-        max(col("__c")).as("c"),
-        aggregate(sort_array(collect_list(struct(col("__a").as("a"),
-          col("__b").as("b"), col("__t").as("t")))),
-          lit(0.0), (acc, x) => acc + x.getField("t")).as("chisq"))
+    // structural-zero cells carry χ² mass ((0−e)²/e) that
+    // observed-cells-only formulations silently drop
+    val folded = contingencyFold(df, keys, aCol, bCol, (o, e) => {
+      val diff = d(o) - e
+      diff * diff / e
+    })
     val k = least(col("r"), col("c")) - lit(1L)
     folded.select(keys.map(col) ++ Seq(col("n"), col("r"), col("c"),
-      col("chisq"),
+      col("__s").as("chisq"),
       when(col("n") > 0 && k > 0,
-        sqrt(col("chisq") / (d(col("n")) * d(k)))).as("v")): _*)
+        sqrt(col("__s") / (d(col("n")) * d(k)))).as("v")): _*)
   }
 
   /**
@@ -3265,59 +3231,37 @@ object Stats {
    * level differences cancel instead of inflating the scatter the
    * way they would in a between-subjects test.
    *
-   * Pinned semantics: a block's value under a treatment is the exact
-   * grid SUM of its rows; k is the key-wide treatment count
-   * (dense-rank over treatments) and only COMPLETE blocks — those
-   * observed under all k treatments — rank. Average ranks ride the
-   * half-integer grid, so the engine carries DOUBLED ranks
-   * `2·rank_min + t − 1` as exact longs; per-treatment rank sums,
-   * `Σ R_j²` and the rank scatter `Σ r²` are exact integer sums
-   * (order-free — no fold needed), and the statistic closes in one
-   * pinned chain in the tie-robust Conover form, doubled throughout:
+   * Pinned semantics: the [[completeBlocks]] grid — a block's value
+   * under a treatment is the exact grid SUM of its rows, and only
+   * complete blocks rank. Average ranks ride the half-integer grid,
+   * so the engine carries DOUBLED ranks ([[doubledMidrank]]) as
+   * exact longs; per-treatment rank sums, `Σ R_j²` and the rank
+   * scatter `Σ r²` are exact integer sums (order-free — no fold
+   * needed), and the statistic closes in one pinned chain in the
+   * tie-robust Conover form, doubled throughout:
    * `χ² = (k−1)·(ΣR2_j² − n²k(k+1)²) / (Σr2² − nk(k+1)²)` (the
    * denominator IS the tie-adjusted scatter; with no ties it
    * reduces to the classic `12ΣR²/(nk(k+1)) − 3n(k+1)`). Keys with
    * < 2 treatments or an all-tied sample (zero denominator) emit a
-   * row with null chi2_f; keys with NO complete blocks have no
-   * surviving cells at all and VANISH from the output (no row —
-   * left-join the key universe back if explicit nulls are wanted).
+   * row with null chi2_f.
    *
    * Output: (keys…, n_blocks, k_treatments, chi2_f) — χ² ≈ χ²(k−1)
    * under the no-treatment-effect null.
    *
-   * Scale posture: one (keys, block, treatment) map-side collapse,
-   * then ONE key exchange carries the treatment-count windows, the
-   * per-block rank windows (same-key subsumption — no second
-   * shuffle), the (keys, treatment) collapse, and the key closing.
-   * Per-block state is the block's k-row cell set; nothing key-sized
-   * materializes. Exactness envelope: Σr2² ≤ 4nk³ and ΣR2_j² ≤
-   * 4n²k³ must cast to double from exact integers (< 2⁵³ up to
-   * ~10¹⁵ blocks·treatments³ — any realistic design).
+   * Scale posture: the [[completeBlocks]] exchange also carries the
+   * per-block rank windows, the (keys, treatment) collapse, and the
+   * key closing. Per-block state is the block's k-row cell set;
+   * nothing key-sized materializes. Exactness envelope: Σr2² ≤
+   * 4nk³ and ΣR2_j² ≤ 4n²k³ must cast to double from exact integers
+   * (< 2⁵³ up to ~10¹⁵ blocks·treatments³ — any realistic design).
    */
   def friedman(df: DataFrame, keys: Seq[String], blockCol: String,
                treatCol: String, valueCol: String,
                valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "friedman needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val cell = df
-      .filter(col(valueCol).isNotNull && col(blockCol).isNotNull &&
-        col(treatCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+ col(blockCol) :+ col(treatCol): _*)
-      .agg(sum(unscaled(col(valueCol), valueScale)).as("__vc"))
-    val wTr = Window.partitionBy(keys.map(col): _*).orderBy(col(treatCol))
-    val wKey = Window.partitionBy(keys.map(col): _*)
-    val blkCols = keys.map(col) :+ col(blockCol)
-    val wBlk = Window.partitionBy(blkCols: _*)
-    val wOrd = Window.partitionBy(blkCols: _*).orderBy(col("__vc"))
-    val wTie = Window.partitionBy(blkCols :+ col("__vc"): _*)
-    val ranked = cell
-      .withColumn("__dr", dense_rank().over(wTr))
-      .withColumn("__kk", max(col("__dr")).over(wKey))
-      .withColumn("__bc", count(lit(1)).over(wBlk))
-      .filter(col("__bc") === col("__kk"))
+    val ranked = completeBlocks("friedman", df, keys, blockCol, treatCol,
+      col(valueCol), sum(unscaled(col(valueCol), valueScale)))
       .withColumn("__r2",
-        lit(2L) * rank().over(wOrd) + count(lit(1)).over(wTie) - 1L)
+        doubledMidrank(keys.map(col) :+ col(blockCol), col("__vc")))
     val cells = ranked.groupBy(keys.map(col) :+ col(treatCol): _*)
       .agg(count(lit(1)).as("__n"), sum(col("__r2")).as("__R2"),
         sum((col("__r2") * col("__r2")).cast("decimal(38,0)"))
@@ -3346,61 +3290,45 @@ object Stats {
    * whether the k success rates differ, using only within-subject
    * information.
    *
-   * Pinned semantics: a subject's outcome under a treatment is the
-   * MAX over its rows (any success counts, [[mcnemar]]'s rule); k is
-   * the key-wide treatment count and only subjects observed under
-   * ALL k treatments score. With column totals G_j (successes per
+   * Pinned semantics: the [[completeBlocks]] grid with subjects as
+   * blocks — a subject's outcome under a treatment is the MAX over
+   * its rows (any success counts, [[mcnemar]]'s rule), and only
+   * complete subjects score. With column totals G_j (successes per
    * treatment), row totals L_i (successes per subject), N = ΣG =
    * ΣL: `Q = (k−1)·(k·ΣG_j² − N²) / (k·N − ΣL_i²)` — every moment
    * an exact integer (the denominator is `ΣL_i(k−L_i)`, zero iff
    * every subject is all-success or all-failure), one pinned
    * closing. k = 2 reduces to [[mcnemar]]'s uncorrected
    * `(b−c)²/(b+c)` exactly. Keys with < 2 treatments or a zero
-   * denominator emit a row with null q; keys with NO complete
-   * subjects (none observed under all k treatments) VANISH from
-   * the output entirely (no row).
+   * denominator emit a row with null q.
    *
    * Output: (keys…, n_subjects, k_treatments, n_success, q) —
    * Q ≈ χ²(k−1) under the equal-rates null.
    *
-   * Scale posture: one (keys, subject, treatment) map-side
-   * collapse, then ONE key exchange carries the treatment-count,
-   * per-subject, and per-treatment windows (same-key subsumption)
+   * Scale posture: the [[completeBlocks]] exchange also carries the
+   * per-subject and per-treatment windows (same-key subsumption)
    * and the key closing; ΣG² and ΣL² accumulate at row-number-1
    * marker rows, so nothing is double-counted and nothing key-sized
    * materializes.
    */
   def cochranQ(df: DataFrame, keys: Seq[String], subjectCol: String,
                treatCol: String, outcomeCol: String): DataFrame = {
-    require(keys.nonEmpty, "cochranQ needs key columns")
     import org.apache.spark.sql.expressions.Window
     val y = col(outcomeCol).cast("boolean")
-    val cell = df
-      .filter(y.isNotNull && col(subjectCol).isNotNull &&
-        col(treatCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+ col(subjectCol) :+ col(treatCol): _*)
-      .agg(max(when(y, 1L).otherwise(0L)).as("__yi"))
-    val wTr = Window.partitionBy(keys.map(col): _*).orderBy(col(treatCol))
-    val wKey = Window.partitionBy(keys.map(col): _*)
     val subCols = keys.map(col) :+ col(subjectCol)
     val trtCols = keys.map(col) :+ col(treatCol)
-    val marked = cell
-      .withColumn("__dr", dense_rank().over(wTr))
-      .withColumn("__kk", max(col("__dr")).over(wKey))
-      .withColumn("__sc",
-        count(lit(1)).over(Window.partitionBy(subCols: _*)))
-      .filter(col("__sc") === col("__kk"))
+    val marked = completeBlocks("cochranQ", df, keys, subjectCol,
+        treatCol, y, max(when(y, 1L).otherwise(0L)))
       .withColumn("__L",
-        sum(col("__yi")).over(Window.partitionBy(subCols: _*)))
+        sum(col("__vc")).over(Window.partitionBy(subCols: _*)))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(subCols: _*).orderBy(col(treatCol))))
       .withColumn("__G",
-        sum(col("__yi")).over(Window.partitionBy(trtCols: _*)))
+        sum(col("__vc")).over(Window.partitionBy(trtCols: _*)))
       .withColumn("__rm", row_number().over(
         Window.partitionBy(trtCols: _*).orderBy(col(subjectCol))))
     val agg = marked.groupBy(keys.map(col): _*)
-      .agg(sum(col("__yi")).as("n_success"),
+      .agg(sum(col("__vc")).as("n_success"),
         sum(when(col("__rn") === 1, 1L).otherwise(0L))
           .as("n_subjects"),
         max(col("__kk")).cast("long").as("k_treatments"),
@@ -3673,53 +3601,40 @@ object Stats {
    * variance across subjects and σ²_T the variance of subject
    * TOTALS. α ≥ 0.7 is the conventional "reliable scale" bar.
    *
-   * Pinned semantics: a subject's score on an item is the exact
-   * grid SUM of its rows; k is the key-wide item count (dense-rank)
-   * and only COMPLETE subjects (all k items) score. Per-item and
-   * per-subject moments ride the same key exchange as exact integer
-   * window sums with row-number-1 markers; Σσ²ᵢ folds SEQUENTIALLY
-   * in item order (≡ list_reduce — a double sum over items must
-   * not be association-order-free-for-all), and σ²_T closes from
-   * exact ΣT, ΣT². Keys with k < 2, n < 2 complete subjects, or
-   * σ²_T ≤ 0 emit a row with null alpha; keys with NO complete
-   * subjects VANISH from the output entirely (no row).
+   * Pinned semantics: the [[completeBlocks]] grid with subjects as
+   * blocks and items as treatments — a subject's score on an item is
+   * the exact grid SUM of its rows, and only complete subjects (all
+   * k items) score. Per-item and per-subject moments ride the same
+   * key exchange as exact integer window sums with row-number-1
+   * markers; Σσ²ᵢ folds SEQUENTIALLY in item order (≡ list_reduce
+   * — a double sum over items must not be
+   * association-order-free-for-all), and σ²_T closes from exact ΣT,
+   * ΣT². Keys with k < 2, n < 2 complete subjects, or
+   * σ²_T ≤ 0 emit a row with null alpha.
    *
    * Output: (keys…, n_subjects, k_items, item_var_sum, total_var,
    * alpha).
    *
-   * Scale posture: one (keys, subject, item) map-side collapse,
-   * then ONE key exchange (same-key window subsumption) and the key
-   * closing; the fold runs on the k-row item grid.
+   * Scale posture: the [[completeBlocks]] exchange (same-key window
+   * subsumption) and the key closing; the fold runs on the k-row
+   * item grid.
    */
   def cronbachAlpha(df: DataFrame, keys: Seq[String], subjectCol: String,
                     itemCol: String, scoreCol: String,
                     valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "cronbachAlpha needs key columns")
     import org.apache.spark.sql.expressions.Window
-    val cell = df
-      .filter(col(scoreCol).isNotNull && col(subjectCol).isNotNull &&
-        col(itemCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+ col(subjectCol) :+ col(itemCol): _*)
-      .agg(sum(unscaled(col(scoreCol), valueScale)).as("__c"))
-    val wIt = Window.partitionBy(keys.map(col): _*).orderBy(col(itemCol))
-    val wKey = Window.partitionBy(keys.map(col): _*)
     val subCols = keys.map(col) :+ col(subjectCol)
     val itCols = keys.map(col) :+ col(itemCol)
-    val marked = cell
-      .withColumn("__dr", dense_rank().over(wIt))
-      .withColumn("__kk", max(col("__dr")).over(wKey))
-      .withColumn("__sc",
-        count(lit(1)).over(Window.partitionBy(subCols: _*)))
-      .filter(col("__sc") === col("__kk"))
+    val marked = completeBlocks("cronbachAlpha", df, keys, subjectCol,
+        itemCol, col(scoreCol), sum(unscaled(col(scoreCol), valueScale)))
       .withColumn("__T",
-        sum(col("__c")).over(Window.partitionBy(subCols: _*)))
+        sum(col("__vc")).over(Window.partitionBy(subCols: _*)))
       .withColumn("__rn", row_number().over(
         Window.partitionBy(subCols: _*).orderBy(col(itemCol))))
       .withColumn("__S",
-        sum(col("__c")).over(Window.partitionBy(itCols: _*)))
-      .withColumn("__SS", sum((col("__c").cast("decimal(19,0)") *
-        col("__c").cast("decimal(19,0)")))
+        sum(col("__vc")).over(Window.partitionBy(itCols: _*)))
+      .withColumn("__SS", sum((col("__vc").cast("decimal(19,0)") *
+        col("__vc").cast("decimal(19,0)")))
         .over(Window.partitionBy(itCols: _*)))
       .withColumn("__nit",
         count(lit(1)).over(Window.partitionBy(itCols: _*)))
@@ -3980,7 +3895,6 @@ object Stats {
                          valueCol: String,
                          valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "wilcoxonSignedRank needs key columns")
-    import org.apache.spark.sql.expressions.Window
     val c = unscaled(col(valueCol), valueScale)
     val pairs = df
       .filter(col(valueCol).isNotNull && col(subjectCol).isNotNull &&
@@ -3993,22 +3907,14 @@ object Stats {
       .withColumn("__d", (col("__a") - col("__b")).cast("long"))
       .filter(col("__d") =!= 0L)
       .withColumn("__ad", abs(col("__d")))
-    val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col("__ad"))
-    val wTie = Window.partitionBy(keys.map(col) :+ col("__ad"): _*)
-    val wTieOrd = Window.partitionBy(keys.map(col) :+ col("__ad"): _*)
-      .orderBy(col(subjectCol))
     val ranked = pairs
-      .withColumn("__r2",
-        lit(2L) * rank().over(wOrd) + count(lit(1)).over(wTie) - 1L)
-      .withColumn("__t", count(lit(1)).over(wTie))
-      .withColumn("__rn", row_number().over(wTieOrd))
+      .withColumn("__r2", doubledMidrank(keys.map(col), col("__ad")))
+      .transform(withTieCubes(keys.map(col), col("__ad"), col(subjectCol)))
     val agg = ranked.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("__d") > 0L, col("__r2")).otherwise(0L))
           .as("__w2"),
-        sum(when(col("__rn") === 1,
-          col("__t") * col("__t") * col("__t") - col("__t"))
-          .otherwise(0L)).as("__tt"))
+        sum(col("__tc")).as("__tt"))
     val nD = col("n_pairs").cast("double")
     val e2 = nD * (nD + lit(1.0)) / lit(2.0)
     val v2 = nD * (nD + lit(1.0)) * (lit(2.0) * nD + lit(1.0)) /
@@ -4440,13 +4346,12 @@ object Stats {
    * this slightly conservative — documented; [[friedman]] is the
    * tie-robust any-difference fallback).
    *
-   * Pinned semantics: [[friedman]]'s grid exactly — exact cell
-   * sums, dense-rank treatment count, complete blocks only, DOUBLED
-   * within-block ranks — so `L₂ = Σ j·R₂ⱼ = 2L` is an exact long
-   * and the z closing is one pinned chain on the doubled moments
-   * `E₂ = nk(k+1)²/2`, `Var₂ = nk²(k+1)²(k−1)/36`. Keys with k < 2
-   * emit a row with null z; keys with NO complete blocks VANISH
-   * from the output entirely (no row).
+   * Pinned semantics: [[friedman]]'s grid exactly — the
+   * [[completeBlocks]] cells, treatment order j = the dense rank,
+   * DOUBLED within-block ranks — so `L₂ = Σ j·R₂ⱼ = 2L` is an exact
+   * long and the z closing is one pinned chain on the doubled
+   * moments `E₂ = nk(k+1)²/2`, `Var₂ = nk²(k+1)²(k−1)/36`. Keys with
+   * k < 2 emit a row with null z.
    *
    * Output: (keys…, n_blocks, k_treatments, l_stat, z) — l_stat on
    * the ½ grid; z > 0 = ranks rise with treatment order.
@@ -4457,27 +4362,10 @@ object Stats {
   def pageTrend(df: DataFrame, keys: Seq[String], blockCol: String,
                 treatCol: String, valueCol: String,
                 valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "pageTrend needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val cell = df
-      .filter(col(valueCol).isNotNull && col(blockCol).isNotNull &&
-        col(treatCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+ col(blockCol) :+ col(treatCol): _*)
-      .agg(sum(unscaled(col(valueCol), valueScale)).as("__vc"))
-    val wTr = Window.partitionBy(keys.map(col): _*).orderBy(col(treatCol))
-    val wKey = Window.partitionBy(keys.map(col): _*)
-    val blkCols = keys.map(col) :+ col(blockCol)
-    val wBlk = Window.partitionBy(blkCols: _*)
-    val wOrd = Window.partitionBy(blkCols: _*).orderBy(col("__vc"))
-    val wTie = Window.partitionBy(blkCols :+ col("__vc"): _*)
-    val ranked = cell
-      .withColumn("__dr", dense_rank().over(wTr))
-      .withColumn("__kk", max(col("__dr")).over(wKey))
-      .withColumn("__bc", count(lit(1)).over(wBlk))
-      .filter(col("__bc") === col("__kk"))
+    val ranked = completeBlocks("pageTrend", df, keys, blockCol, treatCol,
+      col(valueCol), sum(unscaled(col(valueCol), valueScale)))
       .withColumn("__r2",
-        lit(2L) * rank().over(wOrd) + count(lit(1)).over(wTie) - 1L)
+        doubledMidrank(keys.map(col) :+ col(blockCol), col("__vc")))
     val treatCells = ranked.groupBy(keys.map(col) :+ col(treatCol): _*)
       .agg(max(col("__dr")).cast("long").as("__j"),
         count(lit(1)).as("__n"), sum(col("__r2")).as("__R2"))
@@ -4799,59 +4687,37 @@ object Stats {
    * p-value (`χ²_F = n(k−1)·W`), the standard inter-annotator
    * concordance score for eval panels ranking model outputs.
    *
-   * Pinned semantics: [[friedman]]'s grid verbatim — a rater's score
-   * for an item is the exact grid SUM of its rows, k is the key-wide
-   * item count (dense-rank), only COMPLETE raters (all k items)
-   * score, within-rater average ranks ride as DOUBLED exact longs
-   * `2·rank_min + t − 1`. The tie-corrected closing uses
-   * `12ΣR² = 3ΣR₂²` (doubling cancels exactly):
+   * Pinned semantics: [[friedman]]'s grid verbatim — the
+   * [[completeBlocks]] cells with raters as blocks and items as
+   * treatments (a rater's score for an item is the exact grid SUM of
+   * its rows; only complete raters score), within-rater average
+   * ranks as DOUBLED exact longs ([[doubledMidrank]]). The
+   * tie-corrected closing uses `12ΣR² = 3ΣR₂²` (doubling cancels
+   * exactly):
    * `W = 3·(ΣR₂ⱼ² − n²k(k+1)²) / (n²k(k²−1) − n·ΣT)` with the
-   * per-rater tie term `T = Σ(t³−t)` — every moment an exact
-   * integer, ONE pinned division. Keys with k < 2 or a zero
-   * denominator (every rater all-tied) emit a row with null w; keys
-   * with NO complete raters VANISH from the output (no row — the
-   * [[friedman]] contract).
+   * per-rater tie term `T = Σ(t³−t)` ([[withTieCubes]]) — every
+   * moment an exact integer, ONE pinned division. Keys with k < 2 or
+   * a zero denominator (every rater all-tied) emit a row with null
+   * w.
    *
    * Output: (keys…, n_raters, k_items, tie_sum, w).
    *
-   * Scale posture: one (keys, rater, item) map-side collapse, one
-   * key exchange carrying the item-count / rater-completeness /
-   * rank windows (same-key subsumption), then two grid collapses —
-   * shuffled bytes scale with raters×items per key, not rows.
+   * Scale posture: the [[completeBlocks]] exchange also carries the
+   * within-rater rank windows (same-key subsumption), then two grid
+   * collapses — shuffled bytes scale with raters×items per key, not
+   * rows.
    */
   def kendallsW(df: DataFrame, keys: Seq[String], raterCol: String,
                 itemCol: String, valueCol: String,
                 valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "kendallsW needs key columns")
-    import org.apache.spark.sql.expressions.Window
-    val cell = df
-      .filter(col(valueCol).isNotNull && col(raterCol).isNotNull &&
-        col(itemCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+ col(raterCol) :+ col(itemCol): _*)
-      .agg(sum(unscaled(col(valueCol), valueScale)).as("__vc"))
-    val wIt = Window.partitionBy(keys.map(col): _*).orderBy(col(itemCol))
-    val wKey = Window.partitionBy(keys.map(col): _*)
     val rCols = keys.map(col) :+ col(raterCol)
-    val wR = Window.partitionBy(rCols: _*)
-    val wROrd = Window.partitionBy(rCols: _*).orderBy(col("__vc"))
-    val wRTie = Window.partitionBy(rCols :+ col("__vc"): _*)
-    val wRTieOrd = Window.partitionBy(rCols :+ col("__vc"): _*)
-      .orderBy(col(itemCol))
-    val ranked = cell
-      .withColumn("__dr", dense_rank().over(wIt))
-      .withColumn("__kk", max(col("__dr")).over(wKey))
-      .withColumn("__rc", count(lit(1)).over(wR))
-      .filter(col("__rc") === col("__kk"))
-      .withColumn("__r2",
-        lit(2L) * rank().over(wROrd) + count(lit(1)).over(wRTie) - 1L)
-      .withColumn("__t", count(lit(1)).over(wRTie))
-      .withColumn("__rn", row_number().over(wRTieOrd))
+    val ranked = completeBlocks("kendallsW", df, keys, raterCol, itemCol,
+      col(valueCol), sum(unscaled(col(valueCol), valueScale)))
+      .withColumn("__r2", doubledMidrank(rCols, col("__vc")))
+      .transform(withTieCubes(rCols, col("__vc"), col(itemCol)))
     val perItem = ranked.groupBy(keys.map(col) :+ col(itemCol): _*)
       .agg(count(lit(1)).as("__n"), sum(col("__r2")).as("__R2"),
-        sum(when(col("__rn") === 1,
-          col("__t") * col("__t") * col("__t") - col("__t"))
-          .otherwise(0L)).as("__tt"))
+        sum(col("__tc")).as("__tt"))
     val agg = perItem.groupBy(keys.map(col): _*)
       .agg(max(col("__n")).as("n_raters"),
         count(lit(1)).as("k_items"),
@@ -5578,8 +5444,8 @@ object Stats {
    * proportionally more say (a rater who actually discriminates
    * counts more than one who scored everything 3/5), making Quade
    * distinctly more powerful than Friedman at small k. Same
-   * contract: one value per (block, treatment) cell (rows sum),
-   * only COMPLETE blocks score.
+   * contract: the [[completeBlocks]] grid (rows sum into one value
+   * per (block, treatment) cell; only complete blocks score).
    *
    * Pinned semantics: within-block treatment ranks AND across-block
    * range ranks both ride as DOUBLED exact longs (`2·rank_min+t−1`
@@ -5590,8 +5456,7 @@ object Stats {
    * cancel in F). Closing: `F = (n−1)·B/(A−B) ≈ F(k−1, (n−1)(k−1))`
    * — one pinned chain; A = B (perfectly consistent rankings) emits
    * null (the textbook "treat as F = ∞" case — decide upstream).
-   * Keys with k < 2 emit null f; keys with NO complete blocks
-   * VANISH (the [[friedman]] contract).
+   * Keys with k < 2 emit null f.
    *
    * Output: (keys…, n_blocks, k_treatments, f).
    *
@@ -5602,48 +5467,27 @@ object Stats {
   def quade(df: DataFrame, keys: Seq[String], blockCol: String,
             treatCol: String, valueCol: String,
             valueScale: Int = 2): DataFrame = {
-    require(keys.nonEmpty, "quade needs key columns")
     import org.apache.spark.sql.expressions.Window
-    val cell = df
-      .filter(col(valueCol).isNotNull && col(blockCol).isNotNull &&
-        col(treatCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col) :+ col(blockCol) :+ col(treatCol): _*)
-      .agg(sum(unscaled(col(valueCol), valueScale)).as("__vc"))
-    val wTr = Window.partitionBy(keys.map(col): _*).orderBy(col(treatCol))
-    val wKey = Window.partitionBy(keys.map(col): _*)
     val blkCols = keys.map(col) :+ col(blockCol)
     val wBlk = Window.partitionBy(blkCols: _*)
-    val complete = cell
-      .withColumn("__dr", dense_rank().over(wTr))
-      .withColumn("__kk", max(col("__dr")).over(wKey))
-      .withColumn("__bc", count(lit(1)).over(wBlk))
-      .filter(col("__bc") === col("__kk"))
+    val complete = completeBlocks("quade", df, keys, blockCol, treatCol,
+        col(valueCol), sum(unscaled(col(valueCol), valueScale)))
       .withColumn("__rng",
         max(col("__vc")).over(wBlk) - min(col("__vc")).over(wBlk))
     // doubled block ranks by range (midranks) — each block ranked
     // ONCE via its collapsed (key, block) range row
-    val wBTie = Window.partitionBy(keys.map(col) :+ col("__rng"): _*)
-    val blocks = complete
+    val q2 = complete
       .groupBy(keys.map(col) :+ col(blockCol): _*)
       .agg(max(col("__rng")).as("__rng"))
-    val q2 = blocks
-      .withColumn("__q2r",
-        lit(2L) * rank().over(Window.partitionBy(keys.map(col): _*)
-          .orderBy(col("__rng"))) +
-          count(lit(1)).over(wBTie) - 1L)
+      .withColumn("__q2r", doubledMidrank(keys.map(col), col("__rng")))
       .select(keys.map(col) :+ col(blockCol) :+ col("__q2r"): _*)
-    val wROrd = Window.partitionBy(blkCols: _*).orderBy(col("__vc"))
-    val wRTie = Window.partitionBy(blkCols :+ col("__vc"): _*)
     val ranked = complete
-      .withColumn("__r2",
-        lit(2L) * rank().over(wROrd) + count(lit(1)).over(wRTie) - 1L)
+      .withColumn("__r2", doubledMidrank(blkCols, col("__vc")))
       .join(q2, keys :+ blockCol)
       .withColumn("__s4",
         col("__q2r") * (col("__r2") - (col("__kk") + lit(1L))))
     val perTreat = ranked.groupBy(keys.map(col) :+ col(treatCol): _*)
-      .agg(count(lit(1)).as("__n"), max(col("__kk")).as("__k"),
-        sum(col("__s4")).as("__w4"),
+      .agg(count(lit(1)).as("__n"), sum(col("__s4")).as("__w4"),
         sum((col("__s4").cast("decimal(19,0)") *
           col("__s4").cast("decimal(19,0)")).cast("decimal(38,0)"))
           .as("__sq"))
@@ -5734,11 +5578,8 @@ object Stats {
               col("__nb").cast("decimal(19,0)") *
               col("__v").cast("decimal(19,0)") -
               col("__na").cast("decimal(19,0)") * col("__sb"))))
-    val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col("__dev"))
-    val wTie = Window.partitionBy(keys.map(col) :+ col("__dev"): _*)
     val ranked = sums
-      .withColumn("__r2",
-        lit(2L) * rank().over(wOrd) + count(lit(1)).over(wTie) - 1L)
+      .withColumn("__r2", doubledMidrank(keys.map(col), col("__dev")))
       .withColumn("__s", (col("__r2").cast("decimal(19,0)") *
         col("__r2").cast("decimal(19,0)")).cast("decimal(38,0)"))
     val agg = ranked.groupBy(keys.map(col): _*)
@@ -6078,13 +5919,13 @@ object Stats {
    * dependence screens on rare categories, and model-vs-baseline
    * count comparisons; G ≈ χ²((r−1)(c−1)) under independence.
    *
-   * Engine-exact: [[cramersV]]'s machinery verbatim — exact integer
-   * cells over the FULL level grid (structural zeros contribute
-   * exact 0 here, their natural G weight), expected counts one
-   * pinned chain — with each term's `ln(o/e)` the libm-consistent
-   * log snapped to the 10⁻⁹ grid, and the terms folded in SORTED
-   * (a, b) cell order (the [[cramersV]] fold discipline). Keys with
-   * a degenerate table (single row/column level) emit null g2.
+   * Engine-exact: [[cramersV]]'s grid, [[contingencyFold]] — exact
+   * integer cells over the FULL level grid (structural zeros
+   * contribute exact 0 here, their natural G weight), expected
+   * counts one pinned chain — with each term's `ln(o/e)` the
+   * libm-consistent log snapped to the 10⁻⁹ grid, and the terms
+   * folded in SORTED (a, b) cell order. Keys with a degenerate table
+   * (single row/column level) emit null g2.
    *
    * Output: (keys…, n, r, c, g2).
    *
@@ -6093,6 +5934,95 @@ object Stats {
    */
   def gTest(df: DataFrame, keys: Seq[String], aCol: String,
             bCol: String): DataFrame = {
+    val folded = contingencyFold(df, keys, aCol, bCol, (o, e) =>
+      when(o > 0L, lit(2.0) * d(o) *
+        round(graft.functions.MathFunctions.libmLog(d(o) / e), 9))
+        .otherwise(lit(0.0)))
+    folded.select(keys.map(col) ++ Seq(col("n"), col("r"), col("c"),
+      when(col("r") > 1L && col("c") > 1L, col("__s")).as("g2")): _*)
+  }
+
+  // ---- the shared rank and contingency kernels ----
+
+  /**
+   * The complete-block grid behind the repeated-measures tests
+   * ([[friedman]], [[cochranQ]], [[cronbachAlpha]], [[pageTrend]],
+   * [[kendallsW]], [[quade]]). Rows with a null `value`, block,
+   * treatment or key drop; the rest collapse map-side to one cell per
+   * (keys, block, treatment), `__vc` = `cell` over its rows. `__dr` is
+   * the treatment's dense rank within its key, `__kk` the key-wide
+   * treatment count k, and `__bc` the block's cell count. Only
+   * COMPLETE blocks — those observed under all k treatments — survive
+   * to rank or score, so a key with no complete block has no cells
+   * left and VANISHES from the output (no row — left-join the key
+   * universe back if explicit nulls are wanted). Keys are required.
+   *
+   * Scale posture: one (keys, block, treatment) map-side collapse,
+   * then ONE key exchange carries the treatment-count and per-block
+   * windows; the operators' own (keys, block) and (keys, treatment)
+   * windows ride it too (same-key subsumption).
+   */
+  private def completeBlocks(op: String, df: DataFrame, keys: Seq[String],
+                             blockCol: String, treatCol: String,
+                             value: Column, cell: Column): DataFrame = {
+    require(keys.nonEmpty, s"$op needs key columns")
+    import org.apache.spark.sql.expressions.Window
+    val kc = keys.map(col)
+    df.filter(value.isNotNull && col(blockCol).isNotNull &&
+        col(treatCol).isNotNull && kc.map(_.isNotNull).reduce(_ && _))
+      .groupBy(kc :+ col(blockCol) :+ col(treatCol): _*)
+      .agg(cell.as("__vc"))
+      .withColumn("__dr",
+        dense_rank().over(Window.partitionBy(kc: _*).orderBy(col(treatCol))))
+      .withColumn("__kk", max(col("__dr")).over(Window.partitionBy(kc: _*)))
+      .withColumn("__bc",
+        count(lit(1)).over(Window.partitionBy(kc :+ col(blockCol): _*)))
+      .filter(col("__bc") === col("__kk"))
+  }
+
+  /** The DOUBLED midrank `2·rank_min + t − 1` of `order` within
+   *  `part`, t the size of the row's tie group: average ranks ride
+   *  the half-integer grid, so doubling keeps them exact longs. */
+  private def doubledMidrank(part: Seq[Column], order: Column): Column = {
+    import org.apache.spark.sql.expressions.Window
+    lit(2L) * rank().over(Window.partitionBy(part: _*).orderBy(order)) +
+      count(lit(1)).over(Window.partitionBy(part :+ order: _*)) - 1L
+  }
+
+  /** Adds `__tc`, the tie term `t³ − t` of each (`part`, `order`) tie
+   *  group of size t, carried once per group (on its first row by
+   *  `within`) and 0 elsewhere — so `sum(__tc)` is the exact Σ(t³−t)
+   *  of the rank tie corrections. */
+  private def withTieCubes(part: Seq[Column], order: Column,
+                           within: Column)(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wTie = Window.partitionBy(part :+ order: _*)
+    df.withColumn("__t", count(lit(1)).over(wTie))
+      .withColumn("__rn", row_number().over(wTie.orderBy(within)))
+      .withColumn("__tc", when(col("__rn") === 1,
+        col("__t") * col("__t") * col("__t") - col("__t")).otherwise(0L))
+  }
+
+  /**
+   * The r×c contingency grid behind [[cramersV]] and [[gTest]]. Rows
+   * with a null a, b or key drop; the rest collapse map-side to exact
+   * integer cell counts o per (keys, a, b), levels compared as
+   * strings. Row and column margins and the totals (n, and r and c by
+   * `countDistinct`) are exact-count aggregates over that cell
+   * relation. The FULL r×c level grid is the margins' key-equi join
+   * left-joined to the cells, so structural-zero cells (o = 0) get a
+   * term too. `term(o, e)` (e = row·col/n, one pinned chain) then
+   * folds in SORTED (a, b) cell order, so the double sum is
+   * order-pinned and engine-identical. Cells are bounded by r·c
+   * distinct pairs: the collected fold list is cardinality-bounded,
+   * never data-bounded. `keys = Nil` is one global table.
+   *
+   * Output: (keys…, n, r, c, __s), `__s` the folded term sum.
+   */
+  private def contingencyFold(df: DataFrame, keys: Seq[String],
+                              aCol: String, bCol: String,
+                              term: (Column, Column) => Column)
+  : DataFrame = {
     val cells = df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull &&
         (if (keys.isEmpty) lit(true)
@@ -6110,10 +6040,6 @@ object Stats {
         countDistinct(col("__a")).as("__r"),
         countDistinct(col("__b")).as("__c"))
     val e = d(col("__ra")) * d(col("__rb")) / d(col("__n"))
-    val term = when(col("__o") > 0L,
-      lit(2.0) * d(col("__o")) *
-        round(graft.functions.MathFunctions.libmLog(d(col("__o")) / e),
-          9)).otherwise(lit(0.0))
     val grid =
       (if (keys.nonEmpty) rowm.join(colm, keys)
        else rowm.crossJoin(colm))
@@ -6123,15 +6049,13 @@ object Stats {
       (if (keys.nonEmpty) grid.join(tot, keys)
        else grid.crossJoin(tot))
         .select(keys.map(col) ++ Seq(col("__n"), col("__r"), col("__c"),
-          col("__a"), col("__b"), term.as("__t")): _*)
-    val folded = terms.groupBy(keys.map(col): _*)
+          col("__a"), col("__b"), term(col("__o"), e).as("__t")): _*)
+    terms.groupBy(keys.map(col): _*)
       .agg(max(col("__n")).as("n"), max(col("__r")).as("r"),
         max(col("__c")).as("c"),
         aggregate(sort_array(collect_list(struct(col("__a").as("a"),
           col("__b").as("b"), col("__t").as("t")))),
-          lit(0.0), (acc, x) => acc + x.getField("t")).as("__g"))
-    folded.select(keys.map(col) ++ Seq(col("n"), col("r"), col("c"),
-      when(col("r") > 1L && col("c") > 1L, col("__g")).as("g2")): _*)
+          lit(0.0), (acc, x) => acc + x.getField("t")).as("__s"))
   }
 
   // ---- the two-sample grid kernel and its closings ----

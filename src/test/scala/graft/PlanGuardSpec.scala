@@ -1986,4 +1986,21 @@ class PlanGuardSpec extends AnyFunSuite {
       fin.take(1500))
     assert("Scan parquet".r.findAllIn(fin).size <= 1, fin.take(2000))
   }
+
+  test("q396 conover: deviation ranks on ONE key exchange — join-free") {
+    val fin = finalPlan("q396_conover_squared_ranks")
+      .split("== Initial Plan ==")(0)
+    assert(!fin.contains("Join"), fin.take(1200))
+    assert("Exchange hashpartitioning".r.findAllIn(fin).size <= 1,
+      fin.take(1500))
+  }
+
+  test("q272 cramers v: the r×c grid plans no more joins or key " +
+    "exchanges than its three margin/grid joins need") {
+    val fin = finalPlan("q272_cramers_v").split("== Initial Plan ==")(0)
+    // margins ⋈ margins, ⋈ cells (left), ⋈ totals
+    assert("Join".r.findAllIn(fin).size <= 3, fin.take(2000))
+    assert("Exchange hashpartitioning".r.findAllIn(fin).size <= 9,
+      fin.take(2000))
+  }
 }

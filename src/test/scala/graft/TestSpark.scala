@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for the whole test run. */
@@ -12,4 +15,25 @@ object TestSpark {
 
   def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** A new directory `<java.io.tmpdir>/<prefix><random>`, deleted with
+   *  everything under it when the test JVM exits (tests run forked, so
+   *  that is the end of the run). */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    sys.addShutdownHook(deleteRecursively(dir))
+    dir.toString
+  }
+
+  // best effort: a file that vanishes or appears mid-walk (a Spark
+  // shutdown hook still closing a stream) must not fail JVM exit
+  private def deleteRecursively(dir: Path): Unit =
+    try {
+      val paths = Files.walk(dir)
+      try paths.sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException =>
+    }
 }

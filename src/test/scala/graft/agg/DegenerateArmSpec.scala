@@ -179,6 +179,8 @@ class DegenerateArmSpec extends AnyFunSuite {
         "cond", "v")),
       ("kendallsW", d => Stats.kendallsW(d, Seq("key"), "subj",
         "cond", "v")),
+      ("cronbachAlpha", d => Stats.cronbachAlpha(d, Seq("key"), "subj",
+        "cond", "v")),
       ("cochranQ", d => Stats.cochranQ(
         d.withColumn("y", c("v") >= 2.0),
         Seq("key"), "subj", "cond", "y")))

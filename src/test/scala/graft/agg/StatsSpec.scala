@@ -2426,4 +2426,76 @@ class StatsSpec extends AnyFunSuite {
     assert(out("t").getAs[Double]("delta") == 0.0)
     assert(out("e").isNullAt(out("e").fieldIndex("delta")))
   }
+
+  test("complete-block operators share one grid: null rows drop, " +
+    "duplicate rows sum to one cell, incomplete blocks and keys " +
+    "without a complete block vanish") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    def r(k: String, b: Long, t: String, v: Double)
+    : (Option[String], Option[Long], Option[String], Option[Double]) =
+      (Some(k), Some(b), Some(t), Some(v))
+    val rows = Seq(
+      // key k, treatments a b c: block 1's two a rows are one cell
+      r("k", 1L, "a", 2.0), r("k", 1L, "a", 2.0), r("k", 1L, "b", 1.0),
+      r("k", 1L, "c", 3.0),
+      r("k", 2L, "a", 1.0), r("k", 2L, "b", 2.0), r("k", 2L, "c", 3.0),
+      // block 3 is incomplete once its null-value c row drops
+      r("k", 3L, "a", 1.0), r("k", 3L, "b", 2.0),
+      (Some("k"), Some(3L), Some("c"), None),
+      // a null block and a null treatment add no block and no k
+      (Some("k"), None, Some("a"), Some(5.0)),
+      (Some("k"), Some(2L), None, Some(5.0)),
+      // key j, treatments x y: three complete blocks
+      r("j", 1L, "x", 1.0), r("j", 1L, "y", 2.0), r("j", 2L, "x", 2.0),
+      r("j", 2L, "y", 1.0), r("j", 3L, "x", 1.0), r("j", 3L, "y", 1.0),
+      // a complete block under a null key
+      (None, Some(1L), Some("a"), Some(1.0)),
+      (None, Some(1L), Some("b"), Some(2.0)),
+      (None, Some(1L), Some("c"), Some(3.0)),
+      // key n has two treatments but no block saw both
+      r("n", 1L, "a", 1.0), r("n", 2L, "b", 2.0))
+    val df = rows.toDF("key", "blk", "trt", "v")
+    val ops: Seq[(String, DataFrame => DataFrame, String, String)] = Seq(
+      ("friedman", Stats.friedman(_, Seq("key"), "blk", "trt", "v"),
+        "n_blocks", "k_treatments"),
+      ("pageTrend", Stats.pageTrend(_, Seq("key"), "blk", "trt", "v"),
+        "n_blocks", "k_treatments"),
+      ("quade", Stats.quade(_, Seq("key"), "blk", "trt", "v"),
+        "n_blocks", "k_treatments"),
+      ("kendallsW", Stats.kendallsW(_, Seq("key"), "blk", "trt", "v"),
+        "n_raters", "k_items"),
+      ("cronbachAlpha",
+        Stats.cronbachAlpha(_, Seq("key"), "blk", "trt", "v"),
+        "n_subjects", "k_items"),
+      ("cochranQ", d => Stats.cochranQ(
+        d.withColumn("y", col("v") >= 2.0), Seq("key"), "blk", "trt",
+        "y"), "n_subjects", "k_treatments"))
+    val want = Map("k" -> (2L, 3L), "j" -> (3L, 2L))
+    for ((op, f, nCol, kCol) <- ops) {
+      val got = f(df).collect().map(row => row.getAs[String]("key") ->
+        (row.getAs[Long](nCol), row.getAs[Long](kCol))).toMap
+      assert(got == want, op)
+    }
+  }
+
+  test("cramersV and gTest share one r×c grid: same n, r, c per key, " +
+    "null keys dropped, and one global table for keys = Nil") {
+    val df = Seq[(Option[String], Option[String], Option[String])](
+      (Some("k"), Some("A"), Some("X")), (Some("k"), Some("A"), Some("Y")),
+      (Some("k"), Some("B"), Some("X")), (Some("k"), Some("B"), Some("X")),
+      (Some("m"), Some("A"), Some("X")),
+      (None, Some("C"), Some("Z")), (None, Some("A"), Some("X")),
+      (Some("k"), None, Some("X")), (Some("k"), Some("A"), None))
+      .toDF("key", "a", "b")
+    def nrc(out: org.apache.spark.sql.DataFrame, keys: Seq[String]) =
+      out.selectExpr(keys ++ Seq("n", "r", "c"): _*).collect()
+        .map(_.toSeq).toSet
+    for ((keys, want) <- Seq(
+      Seq("key") -> Set[Seq[Any]](Seq("k", 4L, 2L, 2L), Seq("m", 1L, 1L, 1L)),
+      Nil -> Set[Seq[Any]](Seq(7L, 3L, 3L)))) {
+      assert(nrc(Stats.cramersV(df, keys, "a", "b"), keys) == want, keys)
+      assert(nrc(Stats.gTest(df, keys, "a", "b"), keys) == want, keys)
+    }
+  }
 }

@@ -58,7 +58,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("re-running a stateful micro-batch query compiles no new classes " +
     "and gives the same result") {
-    val dir = Files.createTempDirectory("graft_engine_warm").toString
+    val dir = TestSpark.tempDir("graft_engine_warm")
     writeFeed(dir)
     val first = runningCounts(dir, "run1")
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -81,7 +81,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("local file operations, a RocksDB stateful stream among them, " +
     "start no process through Hadoop's Shell") {
-    val dir = Files.createTempDirectory("graft_engine_nofork").toString
+    val dir = TestSpark.tempDir("graft_engine_nofork")
     writeFeed(dir)
     val hconf = spark.sessionState.newHadoopConf()
     val rec = new Recording()
@@ -137,7 +137,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("NioRawLocalFileSystem gives the stock modes after create, mkdirs " +
     "and setPermission (sticky and setgid included)") {
-    val dir = Files.createTempDirectory("graft_engine_modes").toString
+    val dir = TestSpark.tempDir("graft_engine_modes")
     for (umask <- Seq("022", "027")) {
       val modes = bothFileSystems(umask).map { case (name, fs, fc) =>
         val base = s"$dir/$umask/$name"
@@ -171,7 +171,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("NioRawLocalFileSystem.getFileLinkStatus equals the stock answer " +
     "for a file, a directory, a symlink and a missing path") {
-    val dir = Files.createTempDirectory("graft_engine_links").toString
+    val dir = TestSpark.tempDir("graft_engine_links")
     Files.write(Paths.get(s"$dir/file"), Array.fill[Byte](7)(1))
     Files.createDirectory(Paths.get(s"$dir/dir"))
     Files.createSymbolicLink(Paths.get(s"$dir/link"), Paths.get(s"$dir/file"))

@@ -54,8 +54,7 @@ class ParSpec extends AnyFunSuite {
   }
 
   test("small file scan IS spread; streaming frame passes through") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_parspec")
-      .toString
+    val tmp = TestSpark.tempDir("graft_parspec")
     (1 to 1000).toDF("x").coalesce(1).write.parquet(s"$tmp/t")
     val scan = spark.read.parquet(s"$tmp/t")
     val out = Par.spread(scan)
@@ -66,8 +65,7 @@ class ParSpec extends AnyFunSuite {
 
   test("well-partitioned checkpoint joined with a tiny single-split scan " +
     "IS spread (mixed leaves take the file-scan byte test)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_parspec_mixed")
-      .toString
+    val tmp = TestSpark.tempDir("graft_parspec_mixed")
     (1 to 1000).map(x => (x, x % 7)).toDF("x", "g").coalesce(1)
       .write.parquet(s"$tmp/t")
     val ck = (1 to 1000).toDF("x").repartition(target).localCheckpoint(false)

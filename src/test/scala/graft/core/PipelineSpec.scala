@@ -24,7 +24,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("execute writes all sinks and reports output count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val dir = TestSpark.tempDir("graft_pipe")
     val n = Pipeline.from(Seq((1, "a"), (2, "b")).toDF("id", "v"))
       .filter(col("id") > 0)
       .to(df => graft.sinks.Sinks.parquet(df, s"$dir/p"))
@@ -36,7 +36,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("error strategies map to source parse modes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_err").toString
+    val dir = TestSpark.tempDir("graft_err")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "bad.json"),
       "{\"id\": 1}\nnot json at all\n{\"id\": 3}\n")

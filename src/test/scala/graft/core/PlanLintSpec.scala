@@ -86,8 +86,7 @@ class PlanLintSpec extends AnyFunSuite {
 
   test("partition-filter-missing fires on an unpruned partitioned " +
     "scan and clears once the partition column is filtered") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lint_part").toString
+    val dir = graft.TestSpark.tempDir("graft_lint_part")
     Seq((1, "a"), (2, "b"), (3, "a")).toDF("v", "p")
       .write.partitionBy("p").mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
@@ -99,8 +98,7 @@ class PlanLintSpec extends AnyFunSuite {
 
   test("filter-not-pushed fires when no predicate reaches the " +
     "reader; a plain comparison pushes and clears it") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lint_push").toString
+    val dir = graft.TestSpark.tempDir("graft_lint_push")
     Seq(("abc", 1), ("de", 2)).toDF("s", "v")
       .write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
@@ -113,8 +111,7 @@ class PlanLintSpec extends AnyFunSuite {
 
   test("filter-not-pushed counts PushedFilters bracket-aware: an In " +
     "value containing ', ' no longer masks an unpushed predicate") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lint_in").toString
+    val dir = graft.TestSpark.tempDir("graft_lint_in")
     Seq(("a, b", 1), ("c", 2)).toDF("s", "v")
       .write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
@@ -168,8 +165,7 @@ class PlanLintSpec extends AnyFunSuite {
 
   test("filter-not-pushed treats an UNBALANCED PushedFilters " +
     "rendering as unknown instead of warning off a shifted count") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lint_brkt").toString
+    val dir = graft.TestSpark.tempDir("graft_lint_brkt")
     Seq(("(", 1), (")", 2)).toDF("s", "v")
       .write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
@@ -187,12 +183,11 @@ class PlanLintSpec extends AnyFunSuite {
 
   test("full-width-scan fires when a wide source is read at full " +
     "width and clears once a projection prunes it") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lint_wide").toString
+    val dir = graft.TestSpark.tempDir("graft_lint_wide")
     spark.range(10).select((0 until 8).map(i =>
       ($"id" + i).as(s"c$i")): _*)
-      .write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir)
+      .write.mode("overwrite").parquet(s"$dir/wide")
+    val scan = spark.read.parquet(s"$dir/wide")
     // filter keeps every column in the output: full-width read
     assert(report(scan.filter($"c0" > 0L))("full-width-scan") ==
       (("warn", 1L)))
@@ -200,8 +195,8 @@ class PlanLintSpec extends AnyFunSuite {
     assert(report(scan.select("c0", "c1"))("full-width-scan")._1 == "ok")
     // narrower sources never fire at the default threshold
     val narrow = scan.select("c0", "c1", "c2")
-      .write.mode("overwrite").parquet(dir + "_n")
-    assert(report(spark.read.parquet(dir + "_n"))(
+      .write.mode("overwrite").parquet(s"$dir/narrow")
+    assert(report(spark.read.parquet(s"$dir/narrow"))(
       "full-width-scan")._1 == "ok")
   }
 
@@ -225,8 +220,7 @@ class PlanLintSpec extends AnyFunSuite {
   test("lintFinal: broadcastable-join warns on the initial plan and " +
     "clears in the AQE-final plan after the runtime broadcast " +
     "conversion") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_lint_final").toString
+    val base = graft.TestSpark.tempDir("graft_lint_final")
     // dim: plan-time estimate is the FILE size (CBO off, so the
     // selective filter does not shrink the estimate) — keep it above
     // the lowered broadcast threshold so the initial plan is a

@@ -85,7 +85,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("typed filter forms push down to parquet scans") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pd").toString
+    val dir = TestSpark.tempDir("graft_pd")
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.mode("overwrite").parquet(dir)
     val plan = spark.read.parquet(dir).filter(Filters.gt("k", 1L))
       .queryExecution.executedPlan.toString

@@ -10,7 +10,7 @@ class SourcesSinksSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp() = java.nio.file.Files.createTempDirectory("graft_io").toString
+  private def tmp() = TestSpark.tempDir("graft_io")
 
   test("csv sink + source roundtrip with delimiter/header/null options") {
     val df = Seq((1L, Option("a|b"), Option(1.5)), (2L, None, None))
@@ -253,7 +253,7 @@ class SourcesSinksSpec extends AnyFunSuite {
   test("parquet maxRecordsPerFile splits shards; sortWithin orders rows in-file") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard").toString
+    val dir = TestSpark.tempDir("graft_shard")
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(1)
     Sinks.parquet(df, s"$dir/out", maxRecordsPerFile = Some(25L),
       sortWithin = Seq("id"))
@@ -270,7 +270,7 @@ class SourcesSinksSpec extends AnyFunSuite {
   test("orc and text roundtrips preserve rows; binaryFiles reads file bytes") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val dir = TestSpark.tempDir("graft_fmt")
     val df = Seq((1L, "alpha"), (2L, "beta")).toDF("id", "s")
     Sinks.orc(df, s"$dir/orc")
     assert(graft.TestSpark.rows(Sources.orc(spark, s"$dir/orc")) ==
@@ -303,8 +303,8 @@ class SourcesSinksSpec extends AnyFunSuite {
     import spark.implicits._
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val zDir = "/tmp/graft_zorder_spec"
-    val rDir = "/tmp/graft_zorder_spec_rand"
+    val zDir = TestSpark.tempDir("graft_zorder_spec")
+    val rDir = TestSpark.tempDir("graft_zorder_spec_rand")
     Sinks.parquetZOrdered(orders, zDir,
       Seq("o_custkey", "o_totalprice"), files = 8)
     orders.repartition(8).write.mode("overwrite").parquet(rDir)
@@ -329,7 +329,7 @@ class SourcesSinksSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, Some(2.0), 7L), (2L, None, 7L), (3L, Some(9.0), 7L))
       .toDF("id", "v", "c")
-    val dir = "/tmp/graft_zorder_nulls"
+    val dir = TestSpark.tempDir("graft_zorder_nulls")
     Sinks.parquetZOrdered(df, dir, Seq("v", "c"), files = 2)
     assert(spark.read.parquet(dir).collect().toSet == df.collect().toSet)
     intercept[IllegalArgumentException](
@@ -338,7 +338,7 @@ class SourcesSinksSpec extends AnyFunSuite {
 
   test("fixedWidth: positional slices, trims, blank numerics null") {
     import graft.sources.Sources
-    val dir = java.nio.file.Files.createTempDirectory("graft_fw").toString
+    val dir = TestSpark.tempDir("graft_fw")
     java.nio.file.Files.writeString(
       java.nio.file.Path.of(s"$dir/data.txt"),
       "  1ALGERIA                   0  \n" +

@@ -30,7 +30,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("version-gated merge: latest wins, tombstones hold, replay is a no-op") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf").toString
+    val tmp = TestSpark.tempDir("graft_cf")
     val t0 = System.currentTimeMillis() - 3600000L
     // batch 1: initial inserts
     appendFile(s"$tmp/feed", t0, Seq(
@@ -54,7 +54,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("single-batch feed and out-of-order versions within one batch") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf1").toString
+    val tmp = TestSpark.tempDir("graft_cf1")
     // one file = one batch: the within-batch latest-per-key window must
     // pick v3 for k1 no matter the row order in the file
     appendFile(s"$tmp/feed", System.currentTimeMillis(), Seq(
@@ -69,7 +69,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("re-entry on the same workDir applies only the delta onto the recovered snapshot") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_re").toString
+    val tmp = TestSpark.tempDir("graft_cf_re")
     val t0 = System.currentTimeMillis() - 3600000L
     appendFile(s"$tmp/feed", t0, Seq((1L, "a", "I", 1L), (2L, "x", "I", 1L)))
     val schema = spark.read.parquet(s"$tmp/feed").schema
@@ -111,7 +111,7 @@ class ChangeFeedSpec extends AnyFunSuite {
         val last = cs.maxBy(_._4)
         if (last._3 == "D") None else Some(k -> last._2)
       }
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_cf_p$trial").toString
+      val tmp = TestSpark.tempDir(s"graft_cf_p$trial")
       val shuffled = rnd.shuffle(changes.toList)
       val nFiles = 1 + rnd.nextInt(3)
       val t0 = System.currentTimeMillis() - 3600000L
@@ -129,7 +129,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("torn FIRST write (unmarked gen, no history) recovers via replay instead of wedging") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_tear").toString
+    val tmp = TestSpark.tempDir("graft_cf_tear")
     appendFile(s"$tmp/feed", System.currentTimeMillis(),
       Seq((1L, "a", "I", 1L)))
     val schema = spark.read.parquet(s"$tmp/feed").schema
@@ -150,7 +150,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("torn empty _cf_meta on a stateless workDir is recovered, not a permanent wedge") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_meta").toString
+    val tmp = TestSpark.tempDir("graft_cf_meta")
     // simulate a crash between fs.create(_cf_meta) and the write: an
     // empty meta file, nothing else in the workDir
     new java.io.File(s"$tmp/work").mkdirs()
@@ -178,7 +178,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("torn _cf_meta with materialized state refuses to guess numBuckets") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_meta2").toString
+    val tmp = TestSpark.tempDir("graft_cf_meta2")
     appendFile(s"$tmp/feed", System.currentTimeMillis(), Seq((1L, "a", "I", 1L)))
     val schema = spark.read.parquet(s"$tmp/feed").schema
     def run() = ChangeFeed.materialize(spark, s"$tmp/feed", schema,
@@ -197,7 +197,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("deleted snapshot under a live checkpoint fails loudly instead of dropping history") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_gone").toString
+    val tmp = TestSpark.tempDir("graft_cf_gone")
     appendFile(s"$tmp/feed", System.currentTimeMillis() - 3600000L,
       Seq((1L, "a", "I", 1L)))
     val schema = spark.read.parquet(s"$tmp/feed").schema
@@ -215,7 +215,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("foreign names in workDir and bucket dirs are skipped, not crashed on") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_foreign").toString
+    val tmp = TestSpark.tempDir("graft_cf_foreign")
     appendFile(s"$tmp/feed", System.currentTimeMillis(),
       Seq((1L, "a", "I", 1L)))
     val schema = spark.read.parquet(s"$tmp/feed").schema
@@ -252,7 +252,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("a single-key delta touches exactly one bucket; untouched buckets are carried forward byte-identical") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_bucket").toString
+    val tmp = TestSpark.tempDir("graft_cf_bucket")
     val t0 = System.currentTimeMillis() - 3600000L
     // enough keys that every bucket is populated
     appendFile(s"$tmp/feed", t0, (1L to 64L).map(k => (k, s"v$k", "I", 1L)))
@@ -280,7 +280,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("numBuckets is pinned by the first call on a workDir") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf_pin").toString
+    val tmp = TestSpark.tempDir("graft_cf_pin")
     val t0 = System.currentTimeMillis() - 3600000L
     appendFile(s"$tmp/feed", t0, (1L to 16L).map(k => (k, s"v$k", "I", 1L)))
     val schema = spark.read.parquet(s"$tmp/feed").schema
@@ -300,7 +300,7 @@ class ChangeFeedSpec extends AnyFunSuite {
   }
 
   test("empty feed directory materializes an empty payload-schema frame") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cf0").toString
+    val tmp = TestSpark.tempDir("graft_cf0")
     // establish schema via an empty write (file source needs the dir)
     Seq.empty[(Long, String, String, Long)].toDF("k", "v", "op", "version")
       .write.parquet(s"$tmp/feed")

@@ -37,7 +37,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("runBatchAsStream: file-source micro-batch agg equals the batch result") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_files").toString
+    val dir = TestSpark.tempDir("graft_stream_files")
     val data = Seq((ts(0), "a", 1.0), (ts(1), "a", 2.0), (ts(10), "b", 5.0),
       (ts(70), "a", 7.0)).toDF("ts", "k", "v")
     data.write.mode("overwrite").parquet(dir)
@@ -51,7 +51,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("runBatchAsStreamFiles: append agg lands in parquet, no driver collect") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_fsink").toString
+    val dir = TestSpark.tempDir("graft_stream_fsink")
     // ts(0)/ts(1) fall in a closed window once ts(200) drives the
     // watermark (max − 65 min) past that window's end; ts(200)'s own
     // window never closes and must NOT be emitted (append contract)
@@ -71,7 +71,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("runUpdateStreamFiles: update emissions append to the file log; max-per-key folds to the batch count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_upd").toString
+    val dir = TestSpark.tempDir("graft_stream_upd")
     // two files = two micro-batches (maxFilesPerTrigger=1): key "a"
     // emits an update in EACH batch (2 then 3), so the log holds both
     // rows and max-per-key is the final running count
@@ -92,7 +92,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("runUpdateStreamFiles: a crash-replayed batch overwrites itself — no double-count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_replay").toString
+    val dir = TestSpark.tempDir("graft_stream_replay")
     val out = s"$dir/out"
     val b0 = Seq(("a", 1L), ("b", 1L)).toDF("key", "count")
     val b1 = Seq(("a", 2L)).toDF("key", "count")
@@ -110,7 +110,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("runUpdateStreamFiles: zero batches yields a typed empty frame") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_upd0").toString
+    val dir = TestSpark.tempDir("graft_stream_upd0")
     Seq.empty[(String, Long)].toDF("k", "v").write.parquet(s"$dir/in")
     val schema = spark.read.parquet(s"$dir/in").schema
     val res = Streaming.runUpdateStreamFiles(spark, s"$dir/in", schema,
@@ -121,7 +121,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("runBatchAsStreamFiles: zero emitted rows still yields a typed empty frame") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_fsink0").toString
+    val dir = TestSpark.tempDir("graft_stream_fsink0")
     val data = Seq((ts(0), "a", 1.0)).toDF("ts", "k", "v")
     data.write.mode("overwrite").parquet(s"$dir/in")
     // single event: watermark stays below every window end → nothing
@@ -242,7 +242,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("runUpdateStreamFiles under RocksDB restarts from its checkpoint: " +
     "a second run on the same dir continues the recovered counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_restart").toString
+    val dir = TestSpark.tempDir("graft_stream_restart")
     Seq(("a", 1L), ("b", 2L), ("a", 3L)).toDF("k", "v")
       .coalesce(1).write.mode("append").parquet(s"$dir/in")
     val schema = spark.read.parquet(s"$dir/in").schema
@@ -319,7 +319,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("file stream → parquet sink with checkpoint (AvailableNow)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = TestSpark.tempDir("graft_stream")
     val src = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
     src.write.json(s"$dir/in")
     val stream = Streaming.readStream(spark, "json", s"$dir/in", src.schema)
@@ -331,7 +331,7 @@ class StreamingSpec extends AnyFunSuite {
   test("funnelStream: keyed-state funnel across ordered micro-batches == batch funnel") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_funnel").toString
+    val dir = TestSpark.tempDir("graft_stream_funnel")
     val batch1 = Seq(
       (1L, ts("2024-01-01 10:00:00"), "view"),
       (2L, ts("2024-01-01 10:10:00"), "click"),   // before any view: never qualifies
@@ -378,7 +378,7 @@ class StreamingSpec extends AnyFunSuite {
   test("transitionsStream: cross-batch adjacency == batch transition matrix") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_trans").toString
+    val dir = TestSpark.tempDir("graft_stream_trans")
     val batch1 = Seq(
       (1L, ts("2024-01-01 10:00:00"), "A", 1L),
       (1L, ts("2024-01-01 10:05:00"), "B", 2L),
@@ -416,7 +416,7 @@ class StreamingSpec extends AnyFunSuite {
   test("ewmaStream: keyed-state recurrence across batches == batch ewma") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ewma").toString
+    val dir = TestSpark.tempDir("graft_stream_ewma")
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 1L),
       (1L, ts("2024-01-01 10:05:00"), 20.0, 2L))
     val batch2 = Seq((1L, ts("2024-01-01 11:00:00"), 20.0, 3L),
@@ -445,7 +445,7 @@ class StreamingSpec extends AnyFunSuite {
   test("compactStream: change points across batch boundaries == batch compaction") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_compact").toString
+    val dir = TestSpark.tempDir("graft_stream_compact")
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), "A", 1L),
       (1L, ts("2024-01-01 10:05:00"), "A", 2L),   // dup: dropped
       (1L, ts("2024-01-01 10:10:00"), "B", 3L))
@@ -473,7 +473,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("distinctCountStream: HLL state accumulates across batches within RSE") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_hll").toString
+    val dir = TestSpark.tempDir("graft_stream_hll")
     val batch1 = (0 until 400).map(i => ("k", i.toLong))
     val batch2 = (200 until 700).map(i => ("k", i.toLong)) // 200 overlap
     batch1.toDF("key", "v").coalesce(1).write.mode("append").parquet(s"$dir/in")
@@ -493,8 +493,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("quantileStream: KLL state accumulates across batches; " +
       "small streams are exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_kll")
-      .toString
+    val dir = TestSpark.tempDir("graft_stream_kll")
     // values 1..100 split across two batches: a k=200 sketch holds
     // them all, so the running quantiles are EXACT order statistics
     val batch1 = (1 to 60).map(i => ("k", i.toDouble))
@@ -521,8 +520,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("heavyHitterStream: MG recall guarantee holds across batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_mg")
-      .toString
+    val dir = TestSpark.tempDir("graft_stream_mg")
     // "hot" is 40% of the stream; 60 distinct cold items pass through
     val batch1 = (0 until 100).map(i =>
       ("k", if (i % 5 < 2) "hot" else s"cold${i % 30}"))
@@ -548,8 +546,7 @@ class StreamingSpec extends AnyFunSuite {
   }
   test("driftStream: exact bin counts accumulate across batches; " +
     "PSI zero on the reference, positive off it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_drift")
-      .toString
+    val dir = TestSpark.tempDir("graft_stream_drift")
     // bins at edges [10]: two bins. batch1 50/50 (the reference);
     // batch2 pushes everything high
     val batch1 = (0 until 50).map(i => ("k", 5.0)) ++
@@ -587,7 +584,7 @@ class StreamingSpec extends AnyFunSuite {
   test("cusumStream: exact integer-cent state across batches == batch cusum") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_cusum").toString
+    val dir = TestSpark.tempDir("graft_stream_cusum")
     // target 10, slack 0: drifts +5, -8, +10, then across the boundary +15
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 15.0, 1L),
       (1L, ts("2024-01-01 10:05:00"), 2.0, 2L),
@@ -623,8 +620,7 @@ class StreamingSpec extends AnyFunSuite {
     "batch pageHinkley, bit-for-bit; alarm index latches") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_ph").toString
+    val dir = TestSpark.tempDir("graft_stream_ph")
     // key 1: flat 10s then a level shift to 100 ACROSS the batch
     // boundary (the alarm must latch on post-boundary state)
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 1L),
@@ -665,8 +661,7 @@ class StreamingSpec extends AnyFunSuite {
     "batch twap; the open bucket never emits") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_twap")
-      .toString
+    val dir = TestSpark.tempDir("graft_stream_twap")
     // hour 10: 54 min at 10, 6 min at 99 -> twap 18.9 (closed by the
     // hour-11 tick in batch 2); hour 11 stays open -> no emission
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 1L),
@@ -724,8 +719,7 @@ class StreamingSpec extends AnyFunSuite {
     "batch parity holds and the provider actually engages") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rocksdb_twap").toString
+    val dir = TestSpark.tempDir("graft_rocksdb_twap")
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 1L),
       (1L, ts("2024-01-01 10:54:00"), 99.0, 2L))
     val batch2 = Seq((1L, ts("2024-01-01 11:30:00"), 40.0, 3L),
@@ -775,8 +769,7 @@ class StreamingSpec extends AnyFunSuite {
     "twapCarry on closed buckets") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_twap_carry").toString
+    val dir = TestSpark.tempDir("graft_stream_twap_carry")
     // batch 1 ends holding 10.0; batch 2's ticks close hour 0, carry
     // through hour 1, blend hour 2, and leave hour 3 open
     val batch1 = Seq((1L, ts("2024-01-01 00:30:00"), 10.0, 1L))
@@ -813,8 +806,7 @@ class StreamingSpec extends AnyFunSuite {
     "macd final row, bit-for-bit") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_macd").toString
+    val dir = TestSpark.tempDir("graft_stream_macd")
     // the seed and two recurrence steps cross the batch boundary
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 1L),
       (1L, ts("2024-01-01 10:05:00"), 20.0, 2L))
@@ -853,8 +845,7 @@ class StreamingSpec extends AnyFunSuite {
     "holtLinear, bit-for-bit") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_holt").toString
+    val dir = TestSpark.tempDir("graft_stream_holt")
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 1L),
       (1L, ts("2024-01-01 10:05:00"), 20.0, 2L))
     val batch2 = Seq((1L, ts("2024-01-01 10:10:00"), 15.0, 3L),
@@ -891,8 +882,7 @@ class StreamingSpec extends AnyFunSuite {
     "== batch trackingSignal, bit-for-bit") {
     import java.sql.Timestamp
     def ts(t: String) = Timestamp.valueOf(t)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_tsig").toString
+    val dir = TestSpark.tempDir("graft_stream_tsig")
     val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 10.0, 1L),
       (1L, ts("2024-01-01 10:05:00"), 12.0, 10.0, 2L))
     val batch2 = Seq((1L, ts("2024-01-01 10:10:00"), 14.0, 10.0, 3L),
@@ -928,8 +918,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("bottomKStream: mergeable bottom-k state across batches == " +
     "batch bottomKByHash, including duplicate-id dedup") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_stream_bk").toString
+    val dir = TestSpark.tempDir("graft_stream_bk")
     val batch1 = Seq((1L, 101L), (1L, 102L), (1L, 103L), (2L, 900L))
     val batch2 = Seq((1L, 104L), (1L, 105L), (1L, 103L)) // 103 repeats
     batch1.toDF("user_id", "event_id")
