@@ -205,7 +205,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Warm up codegen/parquet-scan/noop-sink paths so the first timed
     // query doesn't absorb session bootstrap (~2-3 s of JIT + init).
-    spark.read.parquet(s"$sfDir/nation.parquet")
+    graft.core.Parquet.read(spark, s"$sfDir/nation.parquet")
       .write.format("noop").mode("overwrite").save()
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
     // The round-5/6 artifacts inflated this family 3-5× over isolated

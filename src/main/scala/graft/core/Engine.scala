@@ -155,7 +155,11 @@ object Engine {
   }
 }
 
-/** Loader for the test star schema (TESTDATA.md). */
+/** Loader for the test star schema (TESTDATA.md). Every read goes
+ *  through [[Parquet.read]], so loading a table starts no Spark job:
+ *  the schema comes from one footer read on the driver, not from
+ *  Spark's one-task inference job (about 53 ms a read on a 4-core VM;
+ *  see [[Parquet]] for the rule and the `mergeSchema` exception). */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
@@ -163,19 +167,23 @@ object Tables {
 
   /** Register every table of a scale-factor directory as a temp view,
    *  enabling `spark.sql("SELECT ... FROM lineitem")` over the test
-   *  star schema. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
+   *  star schema. `dir` may be any Hadoop path or URI (`file:///…`,
+   *  `hdfs://…`): a table exists when the path's own filesystem has it. */
+  def registerAll(spark: SparkSession, dir: String): Unit = {
+    val conf = org.apache.spark.sql.GraftShims.hadoopConf(spark)
     names.foreach { n =>
-      if (new java.io.File(s"$dir/$n.parquet").exists())
+      val path = new org.apache.hadoop.fs.Path(s"$dir/$n.parquet")
+      if (path.getFileSystem(conf).exists(path))
         apply(spark, dir, n).createOrReplaceTempView(n)
     }
+  }
 
   /** Read one table from a scale-factor directory, with the events
    *  `ts` column normalized to session-zone TimestampType (see
    *  [[normalizeTs]] for the physical representations handled). */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Parquet.read(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }
 
@@ -206,6 +214,6 @@ object Tables {
    *  not in query code. */
   def rawSchema(spark: SparkSession, dir: String, name: String): org.apache.spark.sql.types.StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet").schema
+    Parquet.read(spark, s"$dir/$name.parquet").schema
   }
 }

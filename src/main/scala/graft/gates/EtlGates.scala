@@ -8,6 +8,7 @@ import graft.agg.GroupBy
 import graft.join.Joins
 import graft.cdc.CDC
 import graft.scd.SCD
+import graft.core.Parquet
 
 import GateSupport._
 import Oracle.Sql
@@ -404,7 +405,7 @@ private[graft] object EtlGates {
       val tmp = gateTempDir(s, "graft_q83")
       Sinks.parquetZOrdered(o, tmp, Seq("o_custkey", "o_totalprice"),
         files = 8)
-      s.read.parquet(tmp)
+      Parquet.read(s, tmp)
     }, Sql(
       "SELECT o_orderkey, o_custkey, o_totalprice FROM orders")),
 
@@ -416,7 +417,7 @@ private[graft] object EtlGates {
       import graft.sinks.Sinks
       val tmp = gateTempDir(s, "graft_q103")
       Sinks.parquet(t(s, dir, "supplier"), tmp, compression = "zstd")
-      s.read.parquet(tmp)
+      Parquet.read(s, tmp)
     }, Sql("SELECT * FROM supplier")),
 
     // ---- §2.1+ SCHEMA EVOLUTION: an old batch written without a
@@ -452,7 +453,7 @@ private[graft] object EtlGates {
       import graft.sinks.Sinks
       val tmp = gateTempDir(s, "graft_q91")
       Sinks.parquet(t(s, dir, "documents"), tmp, partitionBy = Seq("lang"))
-      s.read.parquet(tmp)
+      Parquet.read(s, tmp)
         .filter(col("lang").isin("en", "de"))
         .select("doc_id", "lang", "source", "n_chars")
     }, Sql(
@@ -470,7 +471,7 @@ private[graft] object EtlGates {
       val tmp = gateTempDir(s, "graft_q92")
       Sinks.parquet(t(s, dir, "orders"), tmp,
         partitionBy = Seq("o_orderpriority"))
-      val fact = s.read.parquet(tmp)
+      val fact = Parquet.read(s, tmp)
         .select("o_orderpriority", "o_totalprice")
       val dim = t(s, dir, "orders")
         .select(col("o_orderpriority"), col("o_orderstatus")).distinct()
@@ -972,7 +973,7 @@ private[graft] object EtlGates {
           struct(col("event_type"), col("user_id"),
             struct(col("value"), col("props")).as("deep")).as("meta"))
         .write.mode("overwrite").parquet(tmp)
-      s.read.parquet(tmp)
+      Parquet.read(s, tmp)
         .select(col("event_id"), col("meta.deep.value").as("value"))
     }, Sql("SELECT event_id, value FROM events")),
 
@@ -1123,7 +1124,7 @@ private[graft] object EtlGates {
           .load()
           .write.parquet(s"$tmp/out")
       } finally server.stop(0)
-      s.read.parquet(s"$tmp/out")
+      Parquet.read(s, s"$tmp/out")
     }, Sql("SELECT * FROM nation")),
 
     // ---- feature eng: decile-label order prices by their own exact

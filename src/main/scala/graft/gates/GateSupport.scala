@@ -4,7 +4,7 @@ package gates
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Parquet, Tables}
 
 /** What the gate files share: the table reader, the exact-sum and
  *  state-partition conventions, the scratch-dir, ordered-feed and
@@ -98,7 +98,7 @@ private[graft] object GateSupport {
     val t0 = System.currentTimeMillis() - 3600000L
     files.zipWithIndex.foreach { case (f, i) =>
       f.setLastModified(t0 + i * 10000L) }
-    val schema = s.read.parquet(s"$tmp/in").schema
+    val schema = Parquet.read(s, s"$tmp/in").schema
     val run =
       if (append) graft.streaming.Streaming.runBatchAsStreamFiles _
       else graft.streaming.Streaming.runUpdateStreamFiles _

@@ -3,7 +3,7 @@ package gates
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Parquet, Tables}
 
 import GateSupport._
 import Oracle.Sql
@@ -133,7 +133,7 @@ private[graft] object StreamingGates {
       val tmp = gateTempDir(s, "graft_q111")
       ins.unionByName(upd).unionByName(del)
         .repartition(4).write.parquet(s"$tmp/feed")
-      val schema = s.read.parquet(s"$tmp/feed").schema
+      val schema = Parquet.read(s, s"$tmp/feed").schema
       graft.streaming.ChangeFeed.materialize(s, s"$tmp/feed", schema,
         keys = Seq("o_orderkey"), opCol = "op", versionCol = "version",
         workDir = s"$tmp/work", statePartitions = gateStateParts,
@@ -172,7 +172,7 @@ private[graft] object StreamingGates {
         .withColumn("op", lit("D")).withColumn("version", lit(3L))
       val tmp = gateTempDir(s, "graft_q113")
       ins.repartition(2).write.mode("append").parquet(s"$tmp/feed")
-      val schema = s.read.parquet(s"$tmp/feed").schema
+      val schema = Parquet.read(s, s"$tmp/feed").schema
       def run() = graft.streaming.ChangeFeed.materialize(s, s"$tmp/feed",
         schema, keys = Seq("o_orderkey"), opCol = "op",
         versionCol = "version", workDir = s"$tmp/work",
@@ -342,7 +342,7 @@ private[graft] object StreamingGates {
         stream.select(col("event_id"), col("event_type")), ckpt,
         (df, _) => graft.sinks.Sinks.parquet(df, out, mode = "append"))
       q.awaitTermination()
-      s.read.parquet(out).groupBy("event_type").agg(count(lit(1)).as("n"))
+      Parquet.read(s, out).groupBy("event_type").agg(count(lit(1)).as("n"))
     }, Sql(
       "SELECT event_type, count(*) AS n FROM events GROUP BY 1")),
 

@@ -117,6 +117,36 @@ object GraftShims {
     }
   }
 
+  /** The session's typed SQL conf. */
+  def sqlConf(spark: SparkSession): internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** The Hadoop conf a file read of the session uses: the context's
+   *  conf with the session's SQL conf entries on top. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** The files a schema-less `spark.read.parquet` of `path` hands to
+   *  schema inference, under the session's Hadoop conf `conf`
+   *  ([[hadoopConf]]): the path globbed and checked as `DataSource` does
+   *  it (a missing path throws Spark's own `PATH_NOT_FOUND`), then listed
+   *  by an `InMemoryFileIndex` with its hidden-file filter (`_` and `.`
+   *  names out, `_metadata` and `_common_metadata` kept). None for a
+   *  streaming file sink's output directory, whose files Spark takes
+   *  from the sink's commit log instead. */
+  def leafFiles(spark: SparkSession, path: String, conf: org.apache.hadoop.conf.Configuration)
+      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
+    import org.apache.spark.sql.execution.datasources.{DataSource, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+    if (FileStreamSink.hasMetadata(Seq(path), conf, sqlConf(spark))) None
+    else {
+      val roots = DataSource.checkAndGlobPathIfNecessary(Seq(path), conf,
+        checkEmptyGlobPath = true, checkFilesExist = true, enableGlobbing = true)
+      Some(new InMemoryFileIndex(spark.asInstanceOf[classic.SparkSession], roots, Map.empty, None)
+        .allFiles())
+    }
+  }
+
   /** Apply a [[SparkSessionExtensions]]' injected functions to an
    *  ALREADY-BUILT session — lets tests exercise the extensions path
    *  without tearing down the shared session (extensions normally

@@ -123,6 +123,14 @@ class FunctionsSpec extends AnyFunSuite {
     assert(n > 0)
   }
 
+  test("Tables.registerAll finds tables under a file:/// URI directory") {
+    spark.catalog.dropTempView("nation")
+    val uri = "file://" + new java.io.File("perfbench/data").getAbsolutePath
+    assert(uri.startsWith("file:///"))
+    graft.core.Tables.registerAll(spark, uri)
+    assert(spark.sql("SELECT count(*) FROM nation").collect()(0).getLong(0) == 25L)
+  }
+
   test("CentroidRanks matches the composed array_min/array_sort struct form") {
     import org.apache.spark.sql.functions._
     val cents = (0 until 8).map(j =>

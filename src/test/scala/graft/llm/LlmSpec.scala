@@ -251,25 +251,9 @@ class LlmSpec extends AnyFunSuite {
     // test's identical plan would be reused and hide a leak here
     val pairs = (1 until 35)
       .map(i => (i + 9000L, i + 9001L)).toDF("id1", "id2")
-    val sc = spark.sparkContext
     // (jobs run, RDDs still persisted afterwards)
-    def jobs(run: => DataFrame): (Int, Set[Int]) = {
-      val tag = s"graft-components-${System.nanoTime}"
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-              .exists(_.split(",").contains(tag))) n.incrementAndGet()
-      }
-      val before = sc.getPersistentRDDs.keySet
-      sc.addSparkListener(listener)
-      sc.addJobTag(tag)
-      try { run; org.apache.spark.graft.BenchInternals.drainListenerBus(sc) }
-      finally { sc.removeJobTag(tag); sc.removeSparkListener(listener) }
-      (n.get, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
-    val (driver, driverLeft) = jobs(Dedup.components(pairs, maxIter = 64))
-    val (loop, loopLeft) = jobs(Dedup.components(pairs, "id1", "id2", 64, 0L))
+    val (driver, driverLeft) = TestSpark.jobsDuring(Dedup.components(pairs, maxIter = 64))
+    val (loop, loopLeft) = TestSpark.jobsDuring(Dedup.components(pairs, "id1", "id2", 64, 0L))
     assert(driver >= 1 && driver <= 3, s"driver finish ran $driver jobs")
     assert(loop > 3, s"loop ran $loop jobs")
     // lifecycle: the edge list is released on both paths; only the
