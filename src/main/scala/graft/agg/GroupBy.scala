@@ -3,6 +3,8 @@ package graft.agg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Snap.unscaled
+
 /**
  * Aggregation builder — the reference's GroupBy surface
  * (goetl `aggregate/groupby.go:48-83`) on Spark's `HashAggregateExec`,
@@ -612,9 +614,7 @@ object GroupBy {
                      weightScale: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val v = col(valueCol).cast(s"decimal(18,$valueScale)")
-    val w = (col(weightCol).cast(s"decimal(18,$weightScale)") *
-      lit(math.pow(10, weightScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
+    val w = unscaled(col(weightCol), weightScale)
     val grid = df
       .filter(col(valueCol).isNotNull && col(weightCol).isNotNull)
       .select(keys.map(col) :+ v.as("__v") :+ w.as("__w"): _*)

@@ -3,7 +3,7 @@ package graft.agg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Snap.unscaled
+import graft.core.Snap.{truncated, unscaled}
 
 /**
  * Second-moment statistics (correlation, least squares) computed the
@@ -55,14 +55,11 @@ object Stats {
         }
     val m = base.agg(moments.head, moments.tail: _*)
     val pairs = cols.combinations(2).toSeq.map { case Seq((x, _), (y, _)) =>
-      val n = d(col("__n"))
-      val sx = d(col(s"__s_$x")); val sy = d(col(s"__s_$y"))
-      val vx = n * d(col(s"__ss_$x")) - sx * sx
-      val vy = n * d(col(s"__ss_$y")) - sy * sy
-      val cov = n * d(col(s"__sxy_${x}_$y")) - sx * sy
+      val r = Moments.Closing(col("__n"), col(s"__s_$x"), col(s"__s_$y"),
+        col(s"__sxy_${x}_$y"), col(s"__ss_$x"), col(s"__ss_$y"), d)
       struct(lit(x).as("col_x"), lit(y).as("col_y"),
         col("__n").as("n"),
-        when(vx > 0 && vy > 0, cov / (sqrt(vx) * sqrt(vy))).as("corr"))
+        when(r.vx > 0 && r.vy > 0, r.corr).as("corr"))
     }
     m.select(explode(array(pairs: _*)).as("__p")).select(col("__p.*"))
   }
@@ -88,23 +85,14 @@ object Stats {
     // 18 every product is ≤ (37, 2s): inside the cap, exact.
     val x = col(xCol).cast(s"decimal(18,$xScale)")
     val y = col(yCol).cast(s"decimal(18,$yScale)")
-    val m = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(x).as("__sx"), sum(y).as("__sy"),
-        sum(x * y).as("__sxy"), sum(x * x).as("__sxx"),
-        sum(y * y).as("__syy"))
-    val n = d(col("n"))
-    val sx = d(col("__sx")); val sy = d(col("__sy"))
-    val vx = n * d(col("__sxx")) - sx * sx
-    val vy = n * d(col("__syy")) - sy * sy
-    val cov = n * d(col("__sxy")) - sx * sy
-    val slope = cov / vx
-    m.select(groupCols.map(col) ++ Seq(
-      col("n"),
-      when(vx > 0, slope).as("slope"),
-      when(vx > 0, (sy - slope * sx) / n).as("intercept"),
-      when(vx > 0 && vy > 0, cov / (sqrt(vx) * sqrt(vy))).as("corr")): _*)
+    val m = Moments.closing()
+    Moments.collapse(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+      .groupBy(groupCols.map(col): _*), x, y)
+      .select(groupCols.map(col) ++ Seq(
+        col("__n").as("n"),
+        when(m.vx > 0, m.slope).as("slope"),
+        when(m.vx > 0, m.intercept).as("intercept"),
+        when(m.vx > 0 && m.vy > 0, m.corr).as("corr")): _*)
   }
 
   /**
@@ -257,23 +245,13 @@ object Stats {
       .select(keys.map(col) :+ x.as("__x") :+ y.as("__y"): _*)
       .withColumn("__rx", r2(col("__x")))
       .withColumn("__ry", r2(col("__y")))
-    val rx = col("__rx").cast("decimal(19,0)")
-    val ry = col("__ry").cast("decimal(19,0)")
-    val m = ranked.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(col("__rx").cast("decimal(38,0)")).as("__sx"),
-        sum(col("__ry").cast("decimal(38,0)")).as("__sy"),
-        sum((rx * ry).cast("decimal(38,0)")).as("__sxy"),
-        sum((rx * rx).cast("decimal(38,0)")).as("__sxx"),
-        sum((ry * ry).cast("decimal(38,0)")).as("__syy"))
-    val n = d(col("n"))
-    val sx = d(col("__sx")); val sy = d(col("__sy"))
-    val vx = n * d(col("__sxx")) - sx * sx
-    val vy = n * d(col("__syy")) - sy * sy
-    val cov = n * d(col("__sxy")) - sx * sy
-    m.select(keys.map(col) ++ Seq(
-      col("n"),
-      when(vx > 0 && vy > 0, cov / (sqrt(vx) * sqrt(vy))).as("rho")): _*)
+    val m = Moments.closing()
+    Moments.collapse(ranked.groupBy(keys.map(col): _*),
+        col("__rx").cast("decimal(19,0)"), col("__ry").cast("decimal(19,0)"),
+        _.cast("decimal(38,0)"))
+      .select(keys.map(col) ++ Seq(
+        col("__n").as("n"),
+        when(m.vx > 0 && m.vy > 0, m.corr).as("rho")): _*)
   }
 
   /**
@@ -1010,9 +988,7 @@ object Stats {
                       valueCol: String, valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "moodsMedianTest needs key columns")
     import org.apache.spark.sql.expressions.Window
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(math.pow(10, valueScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col("__vc"))
     val wAll = Window.partitionBy(keys.map(col): _*)
     val cells = df
@@ -1079,9 +1055,7 @@ object Stats {
   def anovaF(df: DataFrame, keys: Seq[String], groupCol: String,
              valueCol: String, valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "anovaF needs key columns")
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(math.pow(10, valueScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val cells = df
       .filter(col(valueCol).isNotNull && col(groupCol).isNotNull &&
         keys.map(col(_).isNotNull).reduce(_ && _))
@@ -1210,9 +1184,7 @@ object Stats {
                valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "runsTest needs key columns")
     import org.apache.spark.sql.expressions.Window
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(math.pow(10, valueScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val wOrd = Window.partitionBy(keys.map(col): _*).orderBy(col("__vc"))
     val wAll = Window.partitionBy(keys.map(col): _*)
     val wT = Window.partitionBy(keys.map(col): _*)
@@ -1332,9 +1304,7 @@ object Stats {
                     valueCol: String, valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "brownForsythe needs key columns")
     import org.apache.spark.sql.expressions.Window
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(math.pow(10, valueScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val grp = keys.map(col) :+ col(groupCol)
     val wOrd = Window.partitionBy(grp: _*).orderBy(col("__vc"))
     val wAll = Window.partitionBy(grp: _*)
@@ -1495,7 +1465,7 @@ object Stats {
    *
    * Same 10⁻⁹ probability grid; each residual square is an EXACT
    * decimal, the sum is snapped to the 10⁻⁶ grid before its single
-   * double cast (the zipf/t6 discipline — a scale-18 decimal sum can
+   * double cast (`Snap.truncated`, as in zipfSlope — a scale-18 sum can
    * exceed 2⁵³ units, where engines' decimal→double casts are not
    * bit-identical), and the closing division is pinned.
    *
@@ -1513,8 +1483,7 @@ object Stats {
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"),
         sum((resid * resid).cast("decimal(38,18)")).as("__ss"))
-    val snapped = (col("__ss") - (col("__ss") % lit(BigDecimal("0.000001"))))
-      .cast("decimal(38,6)").cast("double")
+    val snapped = truncated(col("__ss"), 6)
     m.select(keys.map(col) ++ Seq(col("n"),
       when(col("n") > 0, snapped / col("n").cast("double"))
         .as("brier")): _*)
@@ -1552,32 +1521,21 @@ object Stats {
       s"momentSnapScale must be in [0, 6], got $momentSnapScale")
     val y = col(numCol).cast(s"decimal(18,$numScale)")
     val x = col(denCol).cast(s"decimal(18,$denScale)")
-    val m = df.filter(col(numCol).isNotNull && col(denCol).isNotNull)
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(y).as("__sy"), sum(x).as("__sx"),
-        sum((x * y).cast("decimal(38,6)")).as("__sxy"),
-        sum((x * x).cast("decimal(38,6)")).as("__sxx"),
-        sum((y * y).cast("decimal(38,6)")).as("__syy"))
-    // truncate explicitly — a bare rescaling cast ROUNDS half-up in
-    // Spark but TRUNCATES in DuckDB (verified on this data); the
-    // subtract-remainder form is exact decimal arithmetic either way
-    val snapMod = BigDecimal(1).bigDecimal.movePointLeft(momentSnapScale)
-    def snap(c: Column): Column =
-      (c - (c % lit(snapMod)))
-        .cast(s"decimal(38,$momentSnapScale)").cast("double")
-    val n = d(col("n"))
+    val m = Moments.collapse(
+      df.filter(col(numCol).isNotNull && col(denCol).isNotNull)
+        .groupBy(keys.map(col): _*), x, y, _.cast("decimal(38,6)"))
+    val n = d(col("__n"))
     val sx = d(col("__sx")); val sy = d(col("__sy"))
-    val sxy = snap(col("__sxy")); val sxx = snap(col("__sxx"))
-    val syy = snap(col("__syy"))
+    def snap(c: String): Column = truncated(col(c), momentSnapScale)
+    val sxy = snap("__sxy"); val sxx = snap("__sxx"); val syy = snap("__syy")
     val r = sy / sx
     // clamp at 0: the snapped moments are truncated INDEPENDENTLY, so
     // for exactly proportional data (y = r·x) the identity can close
     // epsilon-negative and sqrt would emit NaN instead of ~0
     val rss = greatest(syy - lit(2.0) * r * sxy + r * r * sxx, lit(0.0))
     val se = sqrt(n / (n - lit(1.0)) * rss) / sx
-    val ok = col("n") >= 2 && sx > 0.0
-    m.select(keys.map(col) ++ Seq(col("n"),
+    val ok = col("__n") >= 2 && sx > 0.0
+    m.select(keys.map(col) ++ Seq(col("__n").as("n"),
       sy.as("sum_num"), sx.as("sum_den"),
       when(sx > 0.0, r).as("ratio"),
       when(ok, se).as("se"),
@@ -2715,14 +2673,12 @@ object Stats {
         mom(x1, x2).as("__s12"), mom(x1, y).as("__s1y"),
         mom(x2, y).as("__s2y"))
     // integer snap before the one double cast (q267 discipline)
-    def snap(c: Column): Column =
-      (c - (c % lit(BigDecimal(1).bigDecimal)))
-        .cast("decimal(38,0)").cast("double")
+    def snap(c: String): Column = truncated(col(c), 0)
     val n = d(col("n"))
     val s1 = d(col("__s1")); val s2 = d(col("__s2")); val sy = d(col("__sy"))
-    val s11 = snap(col("__s11")); val s22 = snap(col("__s22"))
-    val s12 = snap(col("__s12"))
-    val s1y = snap(col("__s1y")); val s2y = snap(col("__s2y"))
+    val s11 = snap("__s11"); val s22 = snap("__s22")
+    val s12 = snap("__s12")
+    val s1y = snap("__s1y"); val s2y = snap("__s2y")
     val c11 = n * s11 - s1 * s1
     val c22 = n * s22 - s2 * s2
     val c12 = n * s12 - s1 * s2
@@ -2774,13 +2730,11 @@ object Stats {
         sum(x1).as("__s1"), sum(x2).as("__s2"),
         mom(x1, x1).as("__s11"), mom(x2, x2).as("__s22"),
         mom(x1, x2).as("__s12"))
-    def snap(c: Column): Column =
-      (c - (c % lit(BigDecimal(1).bigDecimal)))
-        .cast("decimal(38,0)").cast("double")
+    def snap(c: String): Column = truncated(col(c), 0)
     val n = d(col("n"))
     val s1 = d(col("__s1")); val s2 = d(col("__s2"))
-    val s11 = snap(col("__s11")); val s22 = snap(col("__s22"))
-    val s12 = snap(col("__s12"))
+    val s11 = snap("__s11"); val s22 = snap("__s22")
+    val s12 = snap("__s12")
     val c11 = n * s11 - s1 * s1
     val c22 = n * s22 - s2 * s2
     val c12 = n * s12 - s1 * s2
@@ -2888,9 +2842,7 @@ object Stats {
                    valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "durbinWatson needs key columns")
     import org.apache.spark.sql.expressions.Window
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(math.pow(10, valueScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val d = col("__vc") - lag(col("__vc"), 1).over(w)
@@ -2923,11 +2875,12 @@ object Stats {
    * the lag), from exact decimal moments with the [[linearFit]]
    * pinned closing chain.
    *
-   * ALL lag columns materialize in one window pass — same key
-   * partitioning, same (tsCol, tieCol) total order — then a stack
-   * generator melts them so every lag's moment collapse shares one
-   * (keys, lag) exchange. Lags with under 3 pairs or zero variance
-   * on either side emit null.
+   * acf and [[ccf]] share one lag grid: acf at lag ℓ is `ccf(x, x)`
+   * at lag ℓ. Its pairs `(xₜ, xₜ₊ℓ)` are acf's `(xₜ₋ℓ, xₜ)` with the
+   * two sides swapped, which the symmetric closing does not see
+   * (IEEE products commute), so the two share the window pass, the
+   * stack melt and the (keys, lag) collapse. Lags with under 3 pairs
+   * or zero variance on either side emit null.
    *
    * Output: (keys…, lag, n, corr).
    *
@@ -2940,41 +2893,9 @@ object Stats {
   : DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
     require(keys.nonEmpty, "acf needs key columns")
-    val v = col(valueCol).cast(s"decimal(18,$valueScale)")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(tsCol), col(tieCol))
-    val lagged = (1 to maxLag).foldLeft(
-      df.filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
-        .withColumn("__x", v)) { (acc, l) =>
-      acc.withColumn(s"__l$l", lag(col("__x"), l).over(w))
-    }
-    val pairs = lagged.select(keys.map(col) :+
-      expr(s"stack($maxLag, " + (1 to maxLag)
-        .map(l => s"$l, __l$l").mkString(", ") + ") AS (lag, __y)") :+
-      col("__x"): _*)
-      .filter(col("__y").isNotNull)
-    val m = pairs.groupBy(keys.map(col) :+ col("lag"): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
-        sum((col("__x") * col("__y")).cast("decimal(38,6)")).as("__sxy"),
-        sum((col("__x") * col("__x")).cast("decimal(38,6)")).as("__sxx"),
-        sum((col("__y") * col("__y")).cast("decimal(38,6)")).as("__syy"))
-    // exact decimal sums close with ONE correctly-rounded double cast
-    // each (BigDecimal.doubleValue); an ANSI oracle replays them as
-    // exact integer 10⁻⁴-grid units / 1e4 — bit-identical while the
-    // per-(key, lag) unit sums stay under 2⁵³ (oracle-side envelope
-    // only; the engine cast is correctly rounded at any magnitude)
-    val n = d(col("n"))
-    val sx = d(col("__sx")); val sy = d(col("__sy"))
-    val sxy = d(col("__sxy")); val sxx = d(col("__sxx"))
-    val syy = d(col("__syy"))
-    val vx = n * sxx - sx * sx
-    val vy = n * syy - sy * sy
-    val corr = (n * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
-    m.select(keys.map(col) ++ Seq(col("lag"), col("n"),
-      when(col("n") >= 3 && vx > 0.0 && vy > 0.0, corr)
-        .as("corr")): _*)
+    val base = df.filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
+      .withColumn("__x", col(valueCol).cast(s"decimal(18,$valueScale)"))
+    lagGrid(base, keys, tsCol, tieCol, col("__x"), 1 to maxLag)
   }
 
   /**
@@ -2982,16 +2903,15 @@ object Stats {
    * `(xₜ, yₜ₊ℓ)` for lags ℓ in −maxLag..maxLag — "does x LEAD y"
    * (positive lags: today's x vs future y) vs "does x LAG y"
    * (negative lags), the two-series sibling of [[acf]]. Lag 0 is the
-   * plain x-y correlation.
+   * plain x-y correlation. Pairs where either side is null are
+   * dropped; lags with under 3 pairs or zero variance emit null.
    *
-   * Same machinery as [[acf]]: all shifted-y columns (lead for
-   * positive lags, lag for negative) materialize in ONE window pass
-   * on the (tsCol, tieCol) total order, a stack generator melts them,
-   * and every lag's exact-decimal moments collapse in one
+   * ccf and [[acf]] share one lag grid: all shifted-y columns (lead
+   * for positive lags, lag for negative) materialize in ONE window
+   * pass on the (tsCol, tieCol) total order, a stack generator melts
+   * them, and every lag's exact-decimal moments collapse in one
    * map-side-combined (keys, lag) aggregation, closing with one
-   * correctly-rounded double cast each. Pairs where either side is
-   * null are dropped; lags with under 3 pairs or zero variance emit
-   * null.
+   * correctly-rounded double cast each.
    *
    * Output: (keys…, lag, n, corr), lag ∈ [−maxLag, maxLag].
    *
@@ -3006,20 +2926,31 @@ object Stats {
   : DataFrame = {
     require(maxLag >= 0, s"maxLag must be >= 0, got $maxLag")
     require(keys.nonEmpty, "ccf needs key columns")
-    val x = col(xCol).cast(s"decimal(18,$valueScale)")
-    val y = col(yCol).cast(s"decimal(18,$valueScale)")
+    val base = df.filter(col(tsCol).isNotNull && col(xCol).isNotNull &&
+        col(yCol).isNotNull)
+      .withColumn("__x", col(xCol).cast(s"decimal(18,$valueScale)"))
+      .withColumn("__y0", col(yCol).cast(s"decimal(18,$valueScale)"))
+    lagGrid(base, keys, tsCol, tieCol, col("__y0"), -maxLag to maxLag)
+  }
+
+  /** [[acf]]'s and [[ccf]]'s lag grid: `y` shifted to `yₜ₊ℓ` for every
+   *  ℓ in `lags` in one window pass, melted to (keys, lag, `__x`,
+   *  `__y`) rows, and each (keys, lag)'s pairs closed as a Pearson r
+   *  over `decimal(38,6)` products. The exact sums close with ONE
+   *  correctly-rounded double cast each (BigDecimal.doubleValue); an
+   *  ANSI oracle replays them as exact integer 10⁻⁴-grid units / 1e4 —
+   *  bit-identical while the per-(key, lag) unit sums stay under 2⁵³
+   *  (oracle-side envelope only). */
+  private def lagGrid(base: DataFrame, keys: Seq[String], tsCol: String,
+                      tieCol: String, y: Column, lags: Seq[Int]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
-    val lags = (-maxLag to maxLag)
     def shifted(l: Int): Column =
-      if (l > 0) lead(col("__y0"), l).over(w)
-      else if (l < 0) lag(col("__y0"), -l).over(w)
-      else col("__y0")
+      if (l > 0) lead(y, l).over(w)
+      else if (l < 0) lag(y, -l).over(w)
+      else y
     def cn(l: Int) = if (l < 0) s"__m${-l}" else s"__p$l"
-    val base = df.filter(col(tsCol).isNotNull && col(xCol).isNotNull &&
-        col(yCol).isNotNull)
-      .withColumn("__x", x).withColumn("__y0", y)
     val wide = lags.foldLeft(base)((acc, l) =>
       acc.withColumn(cn(l), shifted(l)))
     val pairs = wide.select(keys.map(col) :+
@@ -3027,22 +2958,12 @@ object Stats {
         lags.map(l => s"$l, ${cn(l)}").mkString(", ") +
         ") AS (lag, __y)") :+ col("__x"): _*)
       .filter(col("__y").isNotNull)
-    val m = pairs.groupBy(keys.map(col) :+ col("lag"): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
-        sum((col("__x") * col("__y")).cast("decimal(38,6)")).as("__sxy"),
-        sum((col("__x") * col("__x")).cast("decimal(38,6)")).as("__sxx"),
-        sum((col("__y") * col("__y")).cast("decimal(38,6)")).as("__syy"))
-    val n = d(col("n"))
-    val sx = d(col("__sx")); val sy = d(col("__sy"))
-    val sxy = d(col("__sxy")); val sxx = d(col("__sxx"))
-    val syy = d(col("__syy"))
-    val vx = n * sxx - sx * sx
-    val vy = n * syy - sy * sy
-    val corr = (n * sxy - sx * sy) / (sqrt(vx) * sqrt(vy))
-    m.select(keys.map(col) ++ Seq(col("lag"), col("n"),
-      when(col("n") >= 3 && vx > 0.0 && vy > 0.0, corr)
-        .as("corr")): _*)
+    val m = Moments.closing()
+    Moments.collapse(pairs.groupBy(keys.map(col) :+ col("lag"): _*),
+        col("__x"), col("__y"), _.cast("decimal(38,6)"))
+      .select(keys.map(col) ++ Seq(col("lag"), col("__n").as("n"),
+        when(col("__n") >= 3 && m.vx > 0.0 && m.vy > 0.0, m.corr)
+          .as("corr")): _*)
   }
 
   /**

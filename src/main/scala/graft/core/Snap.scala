@@ -20,6 +20,16 @@ private[graft] object Snap {
     (c.cast(s"decimal(18,$scale)") *
       lit(math.pow(10, scale).toLong).cast("decimal(18,0)")).cast("long")
 
+  /** A wide decimal `c` truncated toward zero onto the 10⁻ˢᶜᵃˡᵉ grid,
+   *  then cast once to double. Truncate explicitly: a bare rescaling
+   *  cast rounds HALF_UP in Spark but truncates in DuckDB, while
+   *  subtracting the remainder is exact decimal arithmetic in both.
+   *  Keep the grid units under 2⁵³, where every engine's
+   *  decimal→double cast is single-rounded. */
+  private[graft] def truncated(c: Column, scale: Int): Column =
+    (c - (c % lit(java.math.BigDecimal.ONE.movePointLeft(scale))))
+      .cast(s"decimal(38,$scale)").cast("double")
+
   /** `unscaled(v, 2)` for one Scala double: `BigDecimal.valueOf` takes
    *  the shortest decimal string, as the cast does. */
   private[graft] def cents(v: Double): Long = java.math.BigDecimal.valueOf(v)

@@ -347,7 +347,7 @@ private[graft] object StatsGates {
     // ---- model eval: Brier score — calibration's scalar companion,
     //      exact decimal residual squares ----
     // exact decimal residual squares; the sum snapped to the 1e-6
-    // grid before its ONE double cast (the t6 discipline)
+    // grid before its ONE double cast (`Snap.truncated`)
     Gate("q254_brier", (s, dir) =>
       graft.agg.Stats.brierScore(
         t(s, dir, "events").filter(col("value").isNotNull)

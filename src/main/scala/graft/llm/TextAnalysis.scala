@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.agg.Moments
+import graft.core.Snap.truncated
+
 /**
  * Text-analysis operators for large-scale training-data pipelines:
  * token statistics, quality scoring, language identification, and
@@ -1366,27 +1369,14 @@ object TextAnalysis {
         row_number().over(wr).cast("double")), 9).cast("decimal(18,9)"))
       .withColumn("__y", round(graft.functions.MathFunctions.libmLog(
         col("__cnt").cast("double")), 9).cast("decimal(18,9)"))
-    val m = xy.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
-        sum(col("__x") * col("__y")).as("__sxy"),
-        sum(col("__x") * col("__x")).as("__sxx"),
-        sum(col("__y") * col("__y")).as("__syy"))
     // 10⁻⁶-grid snap (see scaladoc): truncate, exact-rescale, cast once
-    def t6(c: Column): Column =
-      (c - (c % lit(BigDecimal("0.000001"))))
-        .cast("decimal(38,6)").cast("double")
-    val n = col("n").cast("double")
-    val sx = t6(col("__sx")); val sy = t6(col("__sy"))
-    val vx = n * t6(col("__sxx")) - sx * sx
-    val vy = n * t6(col("__syy")) - sy * sy
-    val cov = n * t6(col("__sxy")) - sx * sy
-    val slope = cov / vx
-    m.select(keys.map(col) ++ Seq(
-      col("n"),
-      when(vx > 0, slope).as("slope"),
-      when(vx > 0, (sy - slope * sx) / n).as("intercept"),
-      when(vx > 0 && vy > 0, cov / (sqrt(vx) * sqrt(vy))).as("corr")): _*)
+    val m = Moments.closing(truncated(_, 6))
+    Moments.collapse(xy.groupBy(keys.map(col): _*), col("__x"), col("__y"))
+      .select(keys.map(col) ++ Seq(
+        col("__n").as("n"),
+        when(m.vx > 0, m.slope).as("slope"),
+        when(m.vx > 0, m.intercept).as("intercept"),
+        when(m.vx > 0 && m.vy > 0, m.corr).as("corr")): _*)
   }
 
   /** ln 2 as a pinned double literal (the [[graft.quality.Quality
@@ -1616,29 +1606,16 @@ object TextAnalysis {
         col("__cumn").cast("double")), 9).cast("decimal(18,9)"))
       .withColumn("__y", round(graft.functions.MathFunctions.libmLog(
         col("__cumv").cast("double")), 9).cast("decimal(18,9)"))
-    val m = xy.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_points"),
-        sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
-        sum(col("__x") * col("__y")).as("__sxy"),
-        sum(col("__x") * col("__x")).as("__sxx"),
-        sum(col("__y") * col("__y")).as("__syy"))
-    def t6(c: Column): Column =
-      (c - (c % lit(BigDecimal("0.000001"))))
-        .cast("decimal(38,6)").cast("double")
-    val n = col("n_points").cast("double")
-    val sx = t6(col("__sx")); val sy = t6(col("__sy"))
-    val vx = n * t6(col("__sxx")) - sx * sx
-    val vy = n * t6(col("__syy")) - sy * sy
-    val cov = n * t6(col("__sxy")) - sx * sy
-    val slope = cov / vx
+    val m = Moments.closing(truncated(_, 6))
     // n >= 2, not just vx > 0: the 10⁻⁶ snap leaves a single point
-    // with a small positive vx artifact (1·t6(x²) ≠ t6(x)²)
-    val fit = col("n_points") >= 2 && vx > 0
-    m.select(keys.map(col) ++ Seq(
-      col("n_points"),
-      when(fit, slope).as("beta"),
-      when(fit, (sy - slope * sx) / n).as("ln_k"),
-      when(fit && vy > 0, cov / (sqrt(vx) * sqrt(vy))).as("corr")): _*)
+    // with a small positive vx artifact (1·snap(x²) ≠ snap(x)²)
+    val fit = col("__n") >= 2 && m.vx > 0
+    Moments.collapse(xy.groupBy(keys.map(col): _*), col("__x"), col("__y"))
+      .select(keys.map(col) ++ Seq(
+        col("__n").as("n_points"),
+        when(fit, m.slope).as("beta"),
+        when(fit, m.intercept).as("ln_k"),
+        when(fit && m.vy > 0, m.corr).as("corr")): _*)
   }
   /**
    * Feature hashing (the "hashing trick"): token counts folded into a

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.agg.Moments
 import graft.core.Snap.{r9, unscaled}
 
 /**
@@ -1225,20 +1226,11 @@ object TimeSeries {
     val right = base
       .select(keys.map(col) :+ col("__t").as("__tt") :+ col("__y"): _*)
     val j = left.join(right, keys :+ "__tt")
-    val m = j.groupBy(keys.map(col) :+ col("lag"): _*)
-      .agg(count(lit(1)).as("n"),
-        sum(col("__x")).as("__sx"), sum(col("__y")).as("__sy"),
-        sum(col("__x") * col("__y")).as("__sxy"),
-        sum(col("__x") * col("__x")).as("__sxx"),
-        sum(col("__y") * col("__y")).as("__syy"))
-    val n = col("n").cast("double")
-    val sx = col("__sx").cast("double"); val sy = col("__sy").cast("double")
-    val vx = n * col("__sxx").cast("double") - sx * sx
-    val vy = n * col("__syy").cast("double") - sy * sy
-    val cov = n * col("__sxy").cast("double") - sx * sy
-    m.select(keys.map(col) ++ Seq(col("lag"), col("n"),
-      when(col("n") >= 2 && vx > 0 && vy > 0,
-        cov / (sqrt(vx) * sqrt(vy))).as("corr")): _*)
+    val m = Moments.closing()
+    Moments.collapse(j.groupBy(keys.map(col) :+ col("lag"): _*),
+        col("__x"), col("__y"))
+      .select(keys.map(col) ++ Seq(col("lag"), col("__n").as("n"),
+        when(col("__n") >= 2 && m.vx > 0 && m.vy > 0, m.corr).as("corr")): _*)
   }
 
   /**
@@ -1276,24 +1268,16 @@ object TimeSeries {
         col(yCol).isNotNull)
       .select(keys.map(col) :+ col(tCol) :+ col(tieCol) :+
         x.as("__x") :+ y.as("__y"): _*)
-    val withM = base
-      .withColumn("__n", count(lit(1)).over(w))
-      .withColumn("__sx", sum(col("__x")).over(w))
-      .withColumn("__sy", sum(col("__y")).over(w))
-      .withColumn("__sxy", sum(col("__x") * col("__y")).over(w))
-      .withColumn("__sxx", sum(col("__x") * col("__x")).over(w))
-      .withColumn("__syy", sum(col("__y") * col("__y")).over(w))
-    val n = col("__n").cast("double")
-    val sx = col("__sx").cast("double"); val sy = col("__sy").cast("double")
-    val vx = n * col("__sxx").cast("double") - sx * sx
-    val vy = n * col("__syy").cast("double") - sy * sy
-    val cov = n * col("__sxy").cast("double") - sx * sy
+    val withM = Moments.sums(col("__x"), col("__y")).foldLeft(base) {
+      case (acc, (name, c)) => acc.withColumn(name, c.over(w))
+    }
+    val m = Moments.closing()
     val timeCols =
       if (tieCol == tCol) Seq(col(tCol)) else Seq(col(tCol), col(tieCol))
     withM.select(keys.map(col) ++ timeCols ++ Seq(
       col("__x").as("x"), col("__y").as("y"),
-      when(col("__n") === window && vx > 0 && vy > 0,
-        cov / (sqrt(vx) * sqrt(vy))).as("corr")): _*)
+      when(col("__n") === window && m.vx > 0 && m.vy > 0, m.corr)
+        .as("corr")): _*)
   }
 
   /**
@@ -2219,9 +2203,7 @@ object TimeSeries {
                            valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "stochasticOscillator needs key columns")
     require(n >= 1 && dPeriod >= 1, "need n >= 1 and dPeriod >= 1")
-    val vc = (col(valueCol).cast(s"decimal(18,$valueScale)") *
-      lit(math.pow(10, valueScale).toLong).cast("decimal(18,0)"))
-      .cast("long")
+    val vc = unscaled(col(valueCol), valueScale)
     val ord = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val frame = ord.rowsBetween(-(n - 1).toLong, Window.currentRow)

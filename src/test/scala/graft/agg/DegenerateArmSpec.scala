@@ -15,7 +15,9 @@ import graft.TestSpark
  *
  *  This sweep runs every two-sample and every k-group Stats operator
  *  over the five degenerate fixtures (empty arm each way, singleton
- *  arms, all-tied, a single-row key) and asserts each COLLECTS — the
+ *  arms, all-tied, a single-row key), and every exact-moment operator
+ *  over constant-x, single-row and constant-y keys, and asserts each
+ *  COLLECTS — the
  *  contract that an engine-wide drift report cannot be killed by one
  *  degenerate key.
  *  (Found via rankPanel: brunnerMunzel's placement-variance divisor
@@ -97,6 +99,52 @@ class DegenerateArmSpec extends AnyFunSuite {
     "all-tied groups" -> Seq(("k", "a", 5.0), ("k", "a", 5.0),
       ("k", "b", 5.0), ("k", "b", 5.0)))
 
+  // the moment family: one key, (ts, x, y) rows; a constant column is
+  // 0 so ratioOfSums' Σx ≤ 0 guard is the degenerate branch as well
+  private val momentFixtures: Seq[(String, Seq[(String, Long, Double, Double)])] =
+    Seq(
+      "constant-x key" -> Seq(1.0, 3.0, 2.0, 5.0, 4.0).zipWithIndex
+        .map { case (y, i) => ("k", i + 1L, 0.0, y) },
+      "single-row key" -> Seq(("k", 1L, 1.0, 2.0)),
+      "constant-y key" -> Seq(1.0, 3.0, 2.0, 5.0, 4.0).zipWithIndex
+        .map { case (x, i) => ("k", i + 1L, x, 0.0) })
+
+  private val healthyKey: Seq[(String, Long, Double, Double)] =
+    Seq((1.0, 2.0), (4.0, 3.0), (2.0, 1.0), (6.0, 6.0), (3.0, 4.0),
+      (5.0, 5.0), (8.0, 7.0), (7.0, 9.0)).zipWithIndex
+      .map { case ((x, y), i) => ("k", i + 1L, x, y) }
+
+  // (operator, call, statistic column, the fixtures it is null on):
+  // the one-column operators read x, so a constant y leaves them whole
+  private val moments: Seq[(String, DataFrame => DataFrame, String,
+    Set[String])] = {
+    val all = momentFixtures.map(_._1).toSet
+    val onX = all - "constant-y key"
+    Seq(
+      ("pearsonMatrix",
+        d => Stats.pearsonMatrix(d, Seq("x" -> 2, "y" -> 2)), "corr", all),
+      ("linearFit", d => Stats.linearFit(d, Seq("key"), "x", "y", 2, 2),
+        "corr", all),
+      ("spearman", d => Stats.spearman(d, Seq("key"), "x", "y"), "rho", all),
+      ("acf", d => Stats.acf(d, Seq("key"), "ts", "ts", "x", 2), "corr",
+        onX),
+      ("ccf", d => Stats.ccf(d, Seq("key"), "ts", "ts", "x", "y", 2),
+        "corr", all),
+      ("pacf", d => Stats.pacf(d, Seq("key"), "ts", "ts", "x", 2), "pacf",
+        onX),
+      ("laggedCrossCorr", d => graft.ops.TimeSeries.laggedCrossCorr(d,
+        Seq("key"), "ts", "x", "y", 2), "corr", all),
+      ("rollingCorr", d => graft.ops.TimeSeries.rollingCorr(d, Seq("key"),
+        "ts", "ts", "x", "y", 3), "corr", all),
+      ("partialCorr", d => Stats.partialCorr(d, Seq("key"), "x", "y",
+        "ts"), "r_partial", all),
+      ("linCcc", d => Stats.linCcc(d, Seq("key"), "x", "y"), "r", all),
+      ("durbinWatson", d => Stats.durbinWatson(d, Seq("key"), "ts", "ts",
+        "x"), "dw", onX),
+      ("ratioOfSums", d => Stats.ratioOfSums(d, Seq("key"), "y", "x"),
+        "se", onX))
+  }
+
   test("every two-sample operator survives every degenerate-arm " +
     "fixture (nulls per contract, never DIVIDE_BY_ZERO)") {
     val failures = for {
@@ -131,6 +179,26 @@ class DegenerateArmSpec extends AnyFunSuite {
       assert(e.getMessage.contains(op) &&
         e.getMessage.contains("distinct arm labels"), s"$op: ${e.getMessage}")
     }
+  }
+
+  test("every moment operator collects on constant-x, single-row and " +
+    "constant-y keys and nulls its statistic there") {
+    def mdf(rows: Seq[(String, Long, Double, Double)]): DataFrame =
+      rows.toDF("key", "ts", "x", "y")
+    val failures = for {
+      (op, f, stat, nullOn) <- moments
+      (fname, rows) <- momentFixtures :+ ("healthy key" -> healthyKey)
+      err <- (try {
+        val got = f(mdf(rows)).collect().map(r => r.get(r.fieldIndex(stat)))
+        if (nullOn(fname) && got.exists(_ != null))
+          Some(s"$op on $fname: non-null $stat ${got.mkString(",")}")
+        else if (fname == "healthy key" && got.forall(_ == null))
+          Some(s"$op on $fname: no non-null $stat")
+        else None
+      } catch { case e: Throwable =>
+        Some(s"$op on $fname: ${e.getMessage.take(100)}") })
+    } yield err
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("every k-group operator survives single/singleton/tied " +

@@ -376,4 +376,31 @@ class PropertySpec extends AnyFunSuite {
       assert(rebuilt == toks, s"doc=$doc chunks=${out.toSeq}")
     }
   }
+
+  test("Snap.truncated equals BigDecimal.setScale(s, DOWN) at scales 0 " +
+    "and 6, both signs") {
+    // decimal(38,18) sums like brierScore's, magnitudes below 10⁹ so
+    // the 10⁻⁶ grid units stay under 2⁵³; truncation is toward zero
+    val decGen = for {
+      whole <- Gen.oneOf(Gen.choose(-999999999L, 999999999L),
+        Gen.choose(-2L, 2L))
+      frac <- Gen.oneOf(Gen.choose(0L, 999999999999999999L),
+        Gen.choose(0L, 999999L).map(_ * 1000000000000L), Gen.const(0L))
+      neg <- Gen.oneOf(true, false)
+    } yield {
+      val v = java.math.BigDecimal.valueOf(whole)
+        .add(java.math.BigDecimal.valueOf(frac, 18))
+      if (neg) v.negate() else v
+    }
+    val values = samples(decGen, 200)
+    val df = values.toDF("c")
+    for (scale <- Seq(0, 6)) {
+      val got = df.select(graft.core.Snap.truncated(col("c"), scale))
+        .collect().map(_.getDouble(0))
+      for ((v, g) <- values.zip(got)) {
+        val want = v.setScale(scale, java.math.RoundingMode.DOWN).doubleValue
+        assert(g == want, s"scale=$scale v=$v got=$g want=$want")
+      }
+    }
+  }
 }
