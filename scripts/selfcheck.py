@@ -96,59 +96,78 @@ def harness_files(repo="."):
     return {os.path.normpath(p) for pat in HARNESS
             for p in glob.glob(f"{repo}/src/main/scala/graft/{pat}")}
 
-def collect_defs(repo="."):
-    """name -> file:line of every member-level public operator def
-    (2-space indent: deeper indents are local helpers, `override`
-    implements a Spark interface, private/protected are internal by
-    construction; first declaration wins for shared names)."""
+DEF_IGNORE = {"main", "apply", "unapply", "toString", "equals", "hashCode"}
+
+def collect_module_defs(repo="."):
+    """(module, name) -> file:line of every member-level public
+    operator def (2-space indent: deeper indents are local helpers,
+    `override` implements a Spark interface, private/protected are
+    internal by construction). `module` is the enclosing top-level
+    object or class, qualified by the file's package clauses
+    (`graft.core.Parquet`), so two objects' `read` stay apart."""
     import re
     harness = harness_files(repo)
-    # names that are structural, not operators
-    ignore = {"main", "apply", "unapply", "toString", "equals",
-              "hashCode"}
     defs = {}
     for path in sorted(glob.glob(f"{repo}/src/main/scala/graft/**/*.scala",
                                  recursive=True)):
         if os.path.normpath(path) in harness \
                 or "/tmp/" in path.replace("\\", "/"):
             continue
+        pkg, owner = [], None
         for i, line in enumerate(open(path), 1):
+            m = re.match(r"package\s+([\w.]+)", line)
+            if m:
+                pkg.append(m.group(1))
+                continue
+            m = re.match(r"(?:[\w\[\]]+\s+)*(?:object|class|trait)\s+(\w+)",
+                         line)
+            if m:
+                owner = ".".join(pkg + [m.group(1)])
+                continue
             m = re.match(r"  def\s+([a-zA-Z]\w*)", line)
-            if not m:
-                continue
-            name = m.group(1)
-            if name in ignore or name in defs:
-                continue
-            defs[name] = f"{path}:{i}"
+            if m and m.group(1) not in DEF_IGNORE:
+                defs.setdefault((owner, m.group(1)), f"{path}:{i}")
+    return defs
+
+def collect_defs(repo="."):
+    """name -> file:line of every public operator def by bare name
+    (first declaration wins for shared names) — what the operator scan
+    matches call sites against."""
+    defs = {}
+    for (_, name), where in collect_module_defs(repo).items():
+        defs.setdefault(name, where)
     return defs
 
 def api_index_check(repo="."):
     """README's 'API index' section must name every public operator
-    exactly once (backticked), and name nothing that no longer exists
-    — the front-door index cannot go stale without failing the round."""
+    exactly once in its own module's row (backticked), and name
+    nothing that no longer exists — the front-door index cannot go
+    stale without failing the round. Keyed by object-qualified name,
+    so the same name in two objects is two entries, one per row."""
     import re
-    defs = collect_defs(repo)
+    defs = collect_module_defs(repo)
     readme = open(f"{repo}/README.md").read()
     m = re.search(r"## API index.*?(?=\n## )", readme, re.S)
     if not m:
         print("API INDEX: no '## API index' section in README.md")
         return 1
-    # backticked single-identifier tokens only (module rows contain
-    # dots and never match)
+    # one row per module: | `graft.pkg.Object` | `op` `op` … |
     toks = {}
-    for t in re.findall(r"`([A-Za-z]\w*)`", m.group(0)):
-        toks[t] = toks.get(t, 0) + 1
+    for mod, ops in re.findall(r"^\|\s*`([\w.]+)`\s*\|(.*)\|\s*$",
+                               m.group(0), re.M):
+        for t in re.findall(r"`([A-Za-z]\w*)`", ops):
+            toks[(mod, t)] = toks.get((mod, t), 0) + 1
     bad = 0
-    for n, w in sorted(defs.items()):
-        c = toks.get(n, 0)
+    for (mod, n), w in sorted(defs.items()):
+        c = toks.get((mod, n), 0)
         if c != 1:
             print(f"API INDEX {'MISSING' if c == 0 else 'DUPLICATED'} "
-                  f"{n} ({w}): appears {c}x in README index")
+                  f"{mod}.{n} ({w}): appears {c}x in README index")
             bad += 1
-    for t in sorted(toks):
-        if t not in defs:
-            print(f"API INDEX STALE {t}: in README index but no such "
-                  f"public operator")
+    for mod, t in sorted(toks):
+        if (mod, t) not in defs:
+            print(f"API INDEX STALE {mod}.{t}: in README index but no "
+                  f"such public operator")
             bad += 1
     if not bad:
         print(f"api index: {len(defs)} operators, README index exact")

@@ -16,6 +16,28 @@ private[graft] object GateSupport {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
+  /** The survival subjects of q218, q299, q374 and q393: per user,
+   *  the first and last event day; `duration` is the days between
+   *  them, `observed` (a churn) holds when the last day is at least 7
+   *  days before the corpus edge (later users are censored), and
+   *  `cohort` is the signup month. The per-user relation is
+   *  checkpointed: the corpus-edge max reads it too, and without the
+   *  checkpoint the events scan and user aggregate run twice. */
+  def survivalSubjects(s: SparkSession, dir: String): DataFrame = {
+    val per = t(s, dir, "events")
+      .filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .groupBy(col("user_id"))
+      .agg(min(to_date(col("ts"))).as("first_d"),
+        max(to_date(col("ts"))).as("last_d"))
+      .localCheckpoint(false)
+    val mx = per.agg(max(col("last_d")).as("__mx"))
+    per.crossJoin(broadcast(mx))
+      .withColumn("duration",
+        datediff(col("last_d"), col("first_d")).cast("long"))
+      .withColumn("observed", datediff(col("__mx"), col("last_d")) >= 7)
+      .withColumn("cohort", date_trunc("month", col("first_d")).cast("date"))
+  }
+
   /** Exact sum of a 2-decimal double column, as double. */
   def dsum(c: String): org.apache.spark.sql.Column =
     sum(col(c).cast("decimal(18,2)")).cast("double")

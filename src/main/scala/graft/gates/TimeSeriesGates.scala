@@ -386,24 +386,9 @@ private[graft] object TimeSeriesGates {
     // subjects: per-user first/last day, censored within 7 days of
     // the corpus edge; KM with the deaths-before-censorings at-risk
     // rule; log-survival = exact decimal sum of round-9 libm logs
-    Gate("q218_kaplan_meier", (s, dir) => {
-      // checkpoint the per-user relation: the corpus-edge max reads it
-      // too — without this the events scan and user aggregate run twice
-      val per = t(s, dir, "events")
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("first_d"),
-          max(to_date(col("ts"))).as("last_d"))
-        .localCheckpoint(false)
-      val mx = per.agg(max(col("last_d")).as("__mx"))
-      val subj = per.crossJoin(broadcast(mx))
-        .withColumn("duration",
-          datediff(col("last_d"), col("first_d")).cast("long"))
-        .withColumn("observed", datediff(col("__mx"), col("last_d")) >= 7)
-        .withColumn("cohort", date_trunc("month", col("first_d")).cast("date"))
-      graft.ops.Survival.kaplanMeier(subj, Seq("cohort"),
-        "duration", "observed")
-    }, Sql(
+    Gate("q218_kaplan_meier", (s, dir) =>
+      graft.ops.Survival.kaplanMeier(survivalSubjects(s, dir),
+        Seq("cohort"), "duration", "observed"), Sql(
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |per AS (SELECT user_id, min(d) AS first_d, max(d) AS last_d
@@ -1157,22 +1142,9 @@ private[graft] object TimeSeriesGates {
     // the 1e-9 grid carried as exact integer NANO-units through the
     // running window (DuckDB's windowed DECIMAL sum routes through
     // double — the q281 lesson), one closing /1e9
-    Gate("q299_nelson_aalen", (s, dir) => {
-      val per = t(s, dir, "events")
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("first_d"),
-          max(to_date(col("ts"))).as("last_d"))
-        .localCheckpoint(false)
-      val mx = per.agg(max(col("last_d")).as("__mx"))
-      val subj = per.crossJoin(broadcast(mx))
-        .withColumn("duration",
-          datediff(col("last_d"), col("first_d")).cast("long"))
-        .withColumn("observed", datediff(col("__mx"), col("last_d")) >= 7)
-        .withColumn("cohort", date_trunc("month", col("first_d")).cast("date"))
-      graft.ops.Survival.nelsonAalen(subj, Seq("cohort"),
-        "duration", "observed")
-    }, Sql(
+    Gate("q299_nelson_aalen", (s, dir) =>
+      graft.ops.Survival.nelsonAalen(survivalSubjects(s, dir),
+        Seq("cohort"), "duration", "observed"), Sql(
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |per AS (SELECT user_id, min(d) AS first_d, max(d) AS last_d
@@ -1330,23 +1302,9 @@ private[graft] object TimeSeriesGates {
     //      subject fixture; unreached thresholds stay null) ----
     // q218's KM replay + snapped survival and conditional-min
     // quantile read-offs
-    Gate("q393_survival_quantiles", (s, dir) => {
-      val per = t(s, dir, "events")
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("first_d"),
-          max(to_date(col("ts"))).as("last_d"))
-        .localCheckpoint(false)
-      val mx = per.agg(max(col("last_d")).as("__mx"))
-      val subj = per.crossJoin(broadcast(mx))
-        .withColumn("duration",
-          datediff(col("last_d"), col("first_d")).cast("long"))
-        .withColumn("observed", datediff(col("__mx"), col("last_d")) >= 7)
-        .withColumn("cohort",
-          date_trunc("month", col("first_d")).cast("date"))
-      graft.ops.Survival.survivalQuantiles(subj, Seq("cohort"),
-        "duration", "observed")
-    }, Sql(
+    Gate("q393_survival_quantiles", (s, dir) =>
+      graft.ops.Survival.survivalQuantiles(survivalSubjects(s, dir),
+        Seq("cohort"), "duration", "observed"), Sql(
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |per AS (SELECT user_id, min(d) AS first_d, max(d) AS last_d
@@ -1393,24 +1351,9 @@ private[graft] object TimeSeriesGates {
     // grid (round(exp(log_surv), 9) — the transcendental-rounding
     // discipline), then the time-order segment fold clamped at the
     // 30-day horizon with the pinned open-tail closing
-    Gate("q374_rmst", (s, dir) => {
-      val per = t(s, dir, "events")
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(min(to_date(col("ts"))).as("first_d"),
-          max(to_date(col("ts"))).as("last_d"))
-        .localCheckpoint(false)
-      val mx = per.agg(max(col("last_d")).as("__mx"))
-      val subj = per.crossJoin(broadcast(mx))
-        .withColumn("duration",
-          datediff(col("last_d"), col("first_d")).cast("long"))
-        .withColumn("observed",
-          datediff(col("__mx"), col("last_d")) >= 7)
-        .withColumn("cohort",
-          date_trunc("month", col("first_d")).cast("date"))
-      graft.ops.Survival.rmst(subj, Seq("cohort"), "duration",
-        "observed", tau = 30L)
-    }, Sql(
+    Gate("q374_rmst", (s, dir) =>
+      graft.ops.Survival.rmst(survivalSubjects(s, dir), Seq("cohort"),
+        "duration", "observed", tau = 30L), Sql(
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS dd FROM events
         |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
         |per AS (SELECT user_id, min(dd) AS first_d, max(dd) AS last_d

@@ -73,69 +73,64 @@ object Graph {
    * nothing quadratic in the vertex count.
    */
   def triangleCounts(edges: DataFrame, srcCol: String = "u",
-                     dstCol: String = "v"): DataFrame =
-    triangleCountsImpl(edges, srcCol, dstCol,
-      checkpointUnd = true, checkpointOriented = false)
+                     dstCol: String = "v"): DataFrame = {
+    val und = undirected(edges, srcCol, dstCol)
+    triangles(und, degrees(und))
+  }
 
   /** [[triangleCounts]] for internal callers whose edge relation is
    *  ALREADY canonical — distinct (u, v) pairs with u < v, no nulls,
    *  no self-loops (e.g. [[coOccurrenceEdges]] output, distinct u < v
    *  by construction). Skips the re-normalize filter + least/greatest
    *  + `distinct` — a full |E| exchange + hash-aggregate that is a
-   *  provable no-op on such input (r20, guide §2.4 "a distinct on data
-   *  that is already unique"). Still checkpoints the projected edge
-   *  set once: it feeds the degree count and both orientation joins,
-   *  and its lineage includes the caller's whole edge derivation. */
+   *  provable no-op on such input. Still checkpoints the projected
+   *  edge set once: it feeds the degree count and both orientation
+   *  joins, and its lineage includes the caller's whole edge
+   *  derivation. */
   private[graft] def triangleCountsPreNormalized(edges: DataFrame,
-      srcCol: String = "u", dstCol: String = "v"): DataFrame =
-    triangleCountsImpl(edges, srcCol, dstCol,
-      checkpointUnd = true, checkpointOriented = false,
-      preNormalized = true)
+      srcCol: String = "u", dstCol: String = "v"): DataFrame = {
+    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+      .localCheckpoint(false)
+    triangles(und, degrees(und))
+  }
 
-  /** [[triangleCounts]] with the two materialization points exposed
-   *  for measurement (PLANS.md round 10, all four combinations at
-   *  sf0.01 and sf0.1): materializing `und` pays — it feeds the degree
-   *  count AND both sides of the orientation joins, and its lineage
-   *  includes the caller's whole edge derivation. Materializing
-   *  `oriented` LOSES ~1 s at both SFs: its three consumers (the wedge
-   *  self-join's two sides + the closing join) are served by AQE
-   *  exchange reuse from one plan, and the checkpoint's RDD barrier
-   *  breaks that plan into extra jobs and blocks whole-stage codegen
-   *  across the boundary. */
-  private[graft] def triangleCountsImpl(edges: DataFrame, srcCol: String,
-      dstCol: String, checkpointUnd: Boolean,
-      checkpointOriented: Boolean,
-      preNormalized: Boolean = false,
-      degIn: Option[DataFrame] = None): DataFrame = {
-    // `preNormalized` / `degIn` (r19 optimization): a caller that has
-    // ALREADY normalized the edge set (and computed degrees over it)
-    // passes both in so this plan is built over the caller's exact
-    // relations — the redundant re-normalize `distinct` cost a full
-    // exchange + hash-aggregate over |E|, and a re-derived degree
-    // subtree was canonically DIFFERENT from the caller's (filter +
-    // least/greatest on top), so AQE stage reuse could never dedupe
-    // the two degree aggregations (q234's initial plan carried 66
-    // exchanges with the degree subtree duplicated 3×). `degIn` must
-    // be (n, d) over exactly the normalized edge set.
-    val und0 =
-      if (preNormalized)
-        edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      else edges
-        .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-          col(srcCol) =!= col(dstCol))
-        .select(least(col(srcCol), col(dstCol)).as("u"),
-          greatest(col(srcCol), col(dstCol)).as("v"))
-        .distinct()
-    val und = if (checkpointUnd) und0.localCheckpoint(false) else und0
-    val deg = degIn.getOrElse(
-      und.select(col("u").as("n")).union(und.select(col("v").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d")))
+  /** The normalized undirected edge set: null endpoints and
+   *  self-loops dropped, each pair once as (u, v) with u < v.
+   *  Checkpointed: every caller reads it more than once (degrees plus
+   *  the joins), and its lineage holds the caller's whole edge
+   *  derivation. */
+  private def undirected(edges: DataFrame, src: String,
+                         dst: String): DataFrame =
+    edges
+      .filter(col(src).isNotNull && col(dst).isNotNull &&
+        col(src) =!= col(dst))
+      .select(least(col(src), col(dst)).as("u"),
+        greatest(col(src), col(dst)).as("v"))
+      .distinct()
+      .localCheckpoint(false)
+
+  /** (n, d): each vertex of an [[undirected]] edge set and its degree. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("u").as("n")).union(und.select(col("v").as("n")))
+      .groupBy("n").agg(count(lit(1)).as("d"))
+
+  /** Per-vertex triangle counts over a normalized edge set `und` (u,
+   *  v) and its `deg` (n, d) — the caller's own relations, so a
+   *  caller that needs the degrees too shares one degree subtree with
+   *  this plan (two canonically different copies could never be
+   *  deduplicated by AQE stage reuse). `oriented` is deliberately NOT
+   *  materialized: measured at sf0.01 and sf0.1, a checkpoint there
+   *  LOSES ~1 s — its three consumers (the wedge self-join's two
+   *  sides + the closing join) are served by AQE exchange reuse from
+   *  one plan, and the RDD barrier breaks that plan into extra jobs
+   *  and blocks whole-stage codegen across the boundary. */
+  private def triangles(und: DataFrame, deg: DataFrame): DataFrame = {
     // orient (u, v) from the lower (degree, id) endpoint to the
     // higher; carry the head's (degree, id) RANK so wedge pairs can
     // be ordered the same way — the closing edge then matches with
     // ONE equi-join (an either-orientation OR-join would plan as a
     // nested loop)
-    val oriented0 = und
+    val oriented = und
       .join(deg.select(col("n").as("u"), col("d").as("__du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("d").as("__dv")), Seq("v"))
       .select(
@@ -147,8 +142,6 @@ object Graph {
           .as("__e"))
       .select(col("__e.a").as("a"), col("__e.b").as("b"),
         col("__e.rb").as("__rb"))
-    val oriented = if (checkpointOriented) oriented0.localCheckpoint(false)
-      else oriented0
     // wedges at hub a: out-neighbor pairs ordered by the heads' ranks,
     // so the closing edge (if it exists) is oriented exactly w1 → w2
     val wedges = oriented.as("e1").join(oriented.as("e2"),
@@ -184,22 +177,9 @@ object Graph {
    */
   def clusteringCoefficient(edges: DataFrame, srcCol: String = "u",
                             dstCol: String = "v"): DataFrame = {
-    val und = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false)
-    val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    // und is already normalized+distinct and deg is already computed over
-    // it — hand both to the triangle machinery so nothing is re-derived
-    // (r19: drops one |E|-sized exchange+aggregate and makes the two
-    // degree subtrees canonically identical, so AQE reuses the stage)
-    val tri = triangleCountsImpl(und, "u", "v",
-      checkpointUnd = false, checkpointOriented = false,
-      preNormalized = true, degIn = Some(deg))
+    val und = undirected(edges, srcCol, dstCol)
+    val deg = degrees(und)
+    val tri = triangles(und, deg)
     val t = col("n_triangles").cast("double")
     val dd = col("d").cast("double")
     deg.join(tri.withColumnRenamed("vertex", "n"), Seq("n"), "left")
@@ -242,15 +222,8 @@ object Graph {
                        dstCol: String = "v",
                        maxDegree: Int = 64): DataFrame = {
     require(maxDegree >= 2, s"maxDegree must be >= 2, got $maxDegree")
-    val und = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false) // consumers: degrees, adjacency, anti-join
-    val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+    val und = undirected(edges, srcCol, dstCol)
+    val deg = degrees(und)
     val adj = und.select(col("u").as("__z"), col("v").as("__x"))
       .unionByName(und.select(col("v").as("__z"), col("u").as("__x")))
       .join(deg.filter(col("d") <= maxDegree).select(col("n").as("__z"),
@@ -293,27 +266,17 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, srcCol: String = "u",
             dstCol: String = "v", maxIterations: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var und = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("u").as("vertex"))
-        .unionByName(e.select(col("v").as("vertex")))
-        .groupBy("vertex").agg(count(lit(1)).as("degree"))
+    var und = undirected(edges, srcCol, dstCol)
     var i = 0
     var converged = false
     while (!converged && i < maxIterations) {
-      val bad = degrees(und).filter(col("degree") < k)
-        .select(col("vertex")).localCheckpoint(false)
+      val bad = degrees(und).filter(col("d") < k)
+        .select(col("n")).localCheckpoint(false)
       if (bad.isEmpty) converged = true
       else {
         und = und
-          .join(bad.select(col("vertex").as("u")), Seq("u"), "left_anti")
-          .join(bad.select(col("vertex").as("v")), Seq("v"), "left_anti")
+          .join(bad.select(col("n").as("u")), Seq("u"), "left_anti")
+          .join(bad.select(col("n").as("v")), Seq("v"), "left_anti")
           .localCheckpoint(false)
         i += 1
       }
@@ -321,7 +284,7 @@ object Graph {
     if (!converged)
       throw new IllegalStateException(
         s"kCore did not converge in $maxIterations rounds")
-    degrees(und)
+    degrees(und).select(col("n").as("vertex"), col("d").as("degree"))
   }
 
   /**
@@ -380,6 +343,50 @@ object Graph {
   }
 
   /**
+   * Degree assortativity of an undirected graph (Newman's r): the
+   * Pearson correlation of the degrees at the two ends of an edge,
+   * over BOTH orientations — positive means hubs link to hubs
+   * (social-network shape), negative means hubs link to leaves
+   * (hub-and-spoke / star shape, typical for co-purchase and
+   * dependency graphs). The one-number complement to [[modularity]]'s
+   * per-community view.
+   *
+   * Exact: with both orientations Σx = Σy and Σx² = Σy², so
+   * `r = (nΣxy − Sx²)/(nΣxx − Sx²)` where every moment is an EXACT
+   * integer (degree products in long, summed as decimal(38,0);
+   * n = 2m) and the closing is ONE division of two correctly-rounded
+   * double casts. A degree-regular graph has zero variance → null.
+   *
+   * Output: one row — (n_nodes, n_edges, assortativity).
+   *
+   * Scale posture: edge normalization one distinct (checkpointed —
+   * it feeds degrees AND the endpoint join); degrees one vertex-keyed
+   * count; two vertex-keyed joins onto the edges; ONE global moment
+   * collapse (map-side); the node count attaches broadcast.
+   */
+  def assortativity(edges: DataFrame, srcCol: String = "u",
+                    dstCol: String = "v"): DataFrame = {
+    val und = undirected(edges, srcCol, dstCol)
+    val deg = degrees(und)
+    val j = und
+      .join(deg.select(col("n").as("u"), col("d").as("__du")), Seq("u"))
+      .join(deg.select(col("n").as("v"), col("d").as("__dv")), Seq("v"))
+    val mom = j.agg(count(lit(1)).as("n_edges"),
+      sum((col("__du") + col("__dv")).cast("decimal(38,0)")).as("__sx"),
+      sum((col("__du") * col("__dv")).cast("decimal(38,0)")).as("__sp"),
+      sum((col("__du") * col("__du") + col("__dv") * col("__dv"))
+        .cast("decimal(38,0)")).as("__sxx"))
+    val nn = deg.agg(count(lit(1)).as("n_nodes"))
+    val n2 = (col("n_edges") * 2L).cast("decimal(38,0)")
+    val num = n2 * (col("__sp") * 2L) - col("__sx") * col("__sx")
+    val den = n2 * col("__sxx") - col("__sx") * col("__sx")
+    mom.crossJoin(broadcast(nn))
+      .select(col("n_nodes"), col("n_edges"),
+        when(den =!= 0L, num.cast("double") / den.cast("double"))
+          .as("assortativity"))
+  }
+
+  /**
    * Newman modularity of a node partition, per community:
    * `Q_c = m_c/m − (D_c/2m)²` where `m` is the undirected edge count,
    * `m_c` the edges with both endpoints in `c`, and `D_c` the sum of
@@ -412,83 +419,22 @@ object Graph {
    * attaches as a broadcast one-row scalar. Nothing quadratic,
    * nothing driver-side.
    */
-  /**
-   * Degree assortativity of an undirected graph (Newman's r): the
-   * Pearson correlation of the degrees at the two ends of an edge,
-   * over BOTH orientations — positive means hubs link to hubs
-   * (social-network shape), negative means hubs link to leaves
-   * (hub-and-spoke / star shape, typical for co-purchase and
-   * dependency graphs). The one-number complement to [[modularity]]'s
-   * per-community view.
-   *
-   * Exact: with both orientations Σx = Σy and Σx² = Σy², so
-   * `r = (nΣxy − Sx²)/(nΣxx − Sx²)` where every moment is an EXACT
-   * integer (degree products in long, summed as decimal(38,0);
-   * n = 2m) and the closing is ONE division of two correctly-rounded
-   * double casts. A degree-regular graph has zero variance → null.
-   *
-   * Output: one row — (n_nodes, n_edges, assortativity).
-   *
-   * Scale posture: edge normalization one distinct (checkpointed —
-   * it feeds degrees AND the endpoint join); degrees one vertex-keyed
-   * count; two vertex-keyed joins onto the edges; ONE global moment
-   * collapse (map-side); the node count attaches broadcast.
-   */
-  def assortativity(edges: DataFrame, srcCol: String = "u",
-                    dstCol: String = "v"): DataFrame = {
-    val und = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false)
-    val deg = und.select(col("u").as("__n"))
-      .unionByName(und.select(col("v").as("__n")))
-      .groupBy("__n").agg(count(lit(1)).as("__d"))
-    val j = und
-      .join(deg.select(col("__n").as("u"), col("__d").as("__du")), Seq("u"))
-      .join(deg.select(col("__n").as("v"), col("__d").as("__dv")), Seq("v"))
-    val mom = j.agg(count(lit(1)).as("n_edges"),
-      sum((col("__du") + col("__dv")).cast("decimal(38,0)")).as("__sx"),
-      sum((col("__du") * col("__dv")).cast("decimal(38,0)")).as("__sp"),
-      sum((col("__du") * col("__du") + col("__dv") * col("__dv"))
-        .cast("decimal(38,0)")).as("__sxx"))
-    val nn = deg.agg(count(lit(1)).as("n_nodes"))
-    val n2 = (col("n_edges") * 2L).cast("decimal(38,0)")
-    val num = n2 * (col("__sp") * 2L) - col("__sx") * col("__sx")
-    val den = n2 * col("__sxx") - col("__sx") * col("__sx")
-    mom.crossJoin(broadcast(nn))
-      .select(col("n_nodes"), col("n_edges"),
-        when(den =!= 0L, num.cast("double") / den.cast("double"))
-          .as("assortativity"))
-  }
-
   def modularity(edges: DataFrame, assignment: DataFrame,
                  srcCol: String = "u", dstCol: String = "v",
                  nodeCol: String = "node",
                  communityCol: String = "community"): DataFrame = {
-    val und = edges
-      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
-        col(srcCol) =!= col(dstCol))
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .distinct()
-      .localCheckpoint(false)
+    val und = undirected(edges, srcCol, dstCol)
     val asg = assignment
       .filter(col(nodeCol).isNotNull && col(communityCol).isNotNull)
-      .select(col(nodeCol).as("__n"), col(communityCol).as("community"))
+      .select(col(nodeCol).as("n"), col(communityCol).as("community"))
       .distinct()
-    val deg = und.select(col("u").as("__n"))
-      .unionByName(und.select(col("v").as("__n")))
-      .groupBy("__n").agg(count(lit(1)).as("__d"))
-    val comm = deg.join(asg, Seq("__n"))
+    val comm = degrees(und).join(asg, Seq("n"))
       .groupBy(col("community"))
-      .agg(count(lit(1)).as("n_nodes"), sum(col("__d")).as("degree_sum"))
+      .agg(count(lit(1)).as("n_nodes"), sum(col("d")).as("degree_sum"))
     val internal = und
-      .join(asg.select(col("__n").as("u"), col("community").as("__cu")),
+      .join(asg.select(col("n").as("u"), col("community").as("__cu")),
         Seq("u"))
-      .join(asg.select(col("__n").as("v"), col("community").as("__cv")),
+      .join(asg.select(col("n").as("v"), col("community").as("__cv")),
         Seq("v"))
       .filter(col("__cu") === col("__cv"))
       .groupBy(col("__cu").as("community"))

@@ -27,6 +27,78 @@ import graft.core.Snap.{r9, unscaled}
 object TimeSeries {
 
   /**
+   * The fold-family null contract: a row with a null key, ts, tie or
+   * value has no place in the per-key (ts, tie) order, so it is
+   * dropped. Ordering it instead would make the result
+   * engine-dependent (Spark sorts a null tie FIRST in an ascending
+   * window, ANSI engines sort it LAST), and a folded value of nothing
+   * is not 0. The keys, ts and tie are always required; `notNull`
+   * names the value columns an operator folds by. The sorted streaming
+   * recurrences ([[graft.streaming.Streaming]]) apply this same
+   * filter, so batch ≡ stream holds on null-bearing feeds too.
+   */
+  private[graft] def positioned(df: DataFrame, keys: Seq[String],
+                                tsCol: String, tieCol: String,
+                                notNull: Seq[String]): DataFrame =
+    df.filter((keys ++ Seq(tsCol, tieCol) ++ notNull)
+      .map(col(_).isNotNull).reduce(_ && _))
+
+  /**
+   * Each key's series as one list for the array folds: the
+   * [[positioned]] rows grouped by `keys`, with `__n` (the key's row count) and `__l`,
+   * the (t, i)-sorted array of `struct(tsCol AS t, tieCol AS i,
+   * fields…)`. The folds walk `__l` with `aggregate`, which is how a
+   * recursive smoother runs without a UDF. The array is bounded by
+   * the KEY's event count, so this serves per-entity series (a
+   * user's events, a device's readings), not one global
+   * million-point series: for unbounded streams keyed state carries
+   * the same recurrence in O(1) ([[graft.streaming.Streaming]]).
+   */
+  private[graft] def sortedSeries(df: DataFrame, keys: Seq[String],
+                                  tsCol: String, tieCol: String,
+                                  notNull: Seq[String],
+                                  fields: Column*): DataFrame =
+    positioned(df, keys, tsCol, tieCol, notNull)
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"), sort_array(collect_list(struct(
+        (col(tsCol).as("t") +: col(tieCol).as("i") +: fields): _*)))
+        .as("__l"))
+
+  /** The EMA recurrence over an array of doubles, one smoothed value
+   *  per element: `e₀ = x₀`, `eᵢ = eᵢ₋₁ + α·(xᵢ − eᵢ₋₁)`, in that
+   *  association order (the one an ANSI engine's recursive walk
+   *  replays bit for bit). */
+  private def emaFold(src: Column, alpha: Column): Column =
+    aggregate(src, array().cast("array<double>"),
+      (acc, x) => when(size(acc) === 0, array(x))
+        .otherwise(concat(acc, array(
+          element_at(acc, -1) + alpha * (x - element_at(acc, -1))))))
+
+  /** A [[sortedSeries]] list and the per-element `arrays` folded from
+   *  it, exploded back to one row per event: keys…, `tieCol`,
+   *  `tsCol`, `valueCol` (the list's `v`), then `outs`, which read
+   *  the arrays as `col.<name>`. */
+  private def perEvent(folded: DataFrame, keys: Seq[String], tsCol: String,
+                       tieCol: String, valueCol: String,
+                       arrays: Seq[String], outs: Column*): DataFrame =
+    folded
+      .select(keys.map(col) :+
+        posexplode(arrays_zip((col("__l") +: arrays.map(col)): _*)): _*)
+      .select(keys.map(col) ++ Seq(
+        col("col.__l.i").as(tieCol), col("col.__l.t").as(tsCol),
+        col("col.__l.v").as(valueCol)) ++ outs: _*)
+
+  /** Fixed-width `date_trunc` units in seconds (months and years vary
+   *  in length and have no entry). */
+  private val unitSeconds =
+    Map("minute" -> 60L, "hour" -> 3600L, "day" -> 86400L, "week" -> 604800L)
+
+  private def fixedUnitMicros(op: String, unit: String): Long =
+    unitSeconds.getOrElse(unit.toLowerCase, throw new IllegalArgumentException(
+      s"$op needs a fixed-width unit (minute/hour/day/week), got " +
+        unit.toLowerCase)) * 1000000L
+
+  /**
    * Resample an irregular per-key series onto a dense `date_trunc`
    * grid and forward-fill missing buckets from the last observed
    * value.
@@ -319,12 +391,8 @@ object TimeSeries {
       .reduce(_ || _)
     // window expressions can't sit in a WHERE clause — stage the flag
     val keep = graft.core.Engine.freshColumn(df, "__graft_cc_keep")
-    // fold-family null contract (batch ≡ stream parity with
-    // [[graft.streaming.Streaming.compactStream]]): null key / time /
-    // tie rows have no defined sequence position — drop them. Null
-    // VALUES stay (the null-safe <=> comparison is the semantics).
-    df.filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    // null VALUES stay: the null-safe <=> comparison is the semantics
+    positioned(df, keys, tsCol, tieCol, Nil)
       .withColumn(keep,
         lag(col(tieCol), 1).over(w).isNull || changed)
       .filter(col(keep)).drop(keep)
@@ -403,14 +471,7 @@ object TimeSeries {
     require(keys.nonEmpty, "transitionMatrix needs key columns")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
-    val pairs = df
-      // fold-family null contract (batch ≡ stream parity with
-      // [[graft.streaming.Streaming.transitionsStream]]): null key /
-      // time / tie rows have no defined sequence position — drop them
-      // rather than order them nulls-first.
-      .filter(col(tsCol).isNotNull && col(stateCol).isNotNull &&
-        col(tieCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val pairs = positioned(df, keys, tsCol, tieCol, Seq(stateCol))
       .withColumn("__next", lead(col(stateCol), 1).over(w))
       .filter(col("__next").isNotNull)
       .groupBy(col(stateCol).as("from_state"), col("__next").as("to_state"))
@@ -428,45 +489,25 @@ object TimeSeries {
    * standard monitoring smoother (`e₀ = x₀`,
    * `eᵢ = eᵢ₋₁ + α·(xᵢ − eᵢ₋₁)`, that exact association order both
    * engines replay). Events order by (`tsCol`, `tieCol`) within the
-   * key; rows with a null time or value are dropped (a smoothed
-   * value of nothing is not 0).
+   * key ([[positioned]] rows only).
    *
    * Output: (keys…, `tieCol`, `tsCol`, `valueCol`, `out`).
    *
    * Mechanics: EWMA is inherently recursive — no window frame
-   * expresses it — so each key's series folds through an in-group
-   * array build (`aggregate` appending one smoothed value per step)
-   * and explodes back to rows. ONE shuffle on the keys; the array is
-   * bounded by the KEY's event count, so this is the right tool for
-   * per-entity series (a user's events, a device's readings), not
-   * for one global million-point series — for unbounded streams use
-   * keyed state ([[graft.streaming.Streaming]]'s mapGroupsWithState
-   * shape), which carries the same recurrence in O(1) state.
+   * expresses it — so each key's [[sortedSeries]] list folds through
+   * an in-group array build (`aggregate` appending one smoothed value
+   * per step) and explodes back to rows. ONE shuffle on the keys.
    */
   def ewma(df: DataFrame, keys: Seq[String], tsCol: String, tieCol: String,
            valueCol: String, alpha: Double, out: String = "ewma"): DataFrame = {
     require(keys.nonEmpty, "ewma needs key columns")
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
-    val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
-      col(tieCol).as("i"), col(valueCol).cast("double").as("v"))))
-    val folded = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(lst.as("__l"))
-      .withColumn("__e", aggregate(col("__l"),
-        array().cast("array<double>"),
-        (acc, x) => when(size(acc) === 0, array(x.getField("v")))
-          .otherwise(concat(acc, array(
-            element_at(acc, -1) +
-              lit(alpha) * (x.getField("v") - element_at(acc, -1)))))))
-    folded
-      .select(keys.map(col) :+
-        posexplode(arrays_zip(col("__l"), col("__e"))): _*)
-      .select(keys.map(col) ++ Seq(
-        col("col.__l.i").as(tieCol), col("col.__l.t").as(tsCol),
-        col("col.__l.v").as(valueCol), col("col.__e").as(out)): _*)
+    val folded = sortedSeries(df, keys, tsCol, tieCol, Seq(valueCol),
+        col(valueCol).cast("double").as("v"))
+      .withColumn("__e",
+        emaFold(transform(col("__l"), _.getField("v")), lit(alpha)))
+    perEvent(folded, keys, tsCol, tieCol, valueCol, Seq("__e"),
+      col("col.__e").as(out))
   }
 
   /**
@@ -502,13 +543,7 @@ object TimeSeries {
       .orderBy(col(tsCol), col(tieCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wk = Window.partitionBy(keys.map(col): _*)
-    val walked = df
-      // tieCol non-null: a null tie orders NULLS FIRST in Spark ASC
-      // windows but NULLS LAST in ANSI engines — excluding it keeps
-      // the total order engine-independent (round-15 advisory)
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val walked = positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("__vc", vc)
       .withColumn("__peak", max(col("__vc")).over(w))
       .withColumn("__dd", when(col("__peak") > 0L,
@@ -550,18 +585,8 @@ object TimeSeries {
    *
    * Output: (keys…, n, level, trend, forecast).
    *
-   * Null contract (shared by the whole fold family and its
-   * streaming arms): rows with a null ts, tie, OR value are DROPPED
-   * — a null tie has no defined position in the (ts, tie) total
-   * order, so keeping it would make the fold order (and therefore
-   * every downstream state) engine-dependent. This is the exact
-   * filter [[graft.streaming.Streaming.holtStream]] applies, so
-   * batch ≡ stream bit-parity holds on null-bearing feeds too.
-   *
    * Scale posture: ONE key exchange; the in-group array build is
-   * bounded by the KEY's event count (the [[ewma]] contract — per-
-   * entity series, not one global million-point series; for
-   * unbounded streams carry the same recurrence in keyed state).
+   * bounded by the KEY's event count ([[sortedSeries]]).
    */
   def holtLinear(df: DataFrame, keys: Seq[String], tsCol: String,
                  tieCol: String, valueCol: String, alpha: Double,
@@ -571,14 +596,8 @@ object TimeSeries {
     require(beta > 0 && beta <= 1, s"beta in (0,1], got $beta")
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
     val a = lit(r9(alpha)); val b = lit(r9(beta))
-    val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
-      col(tieCol).as("i"), col(valueCol).cast("double").as("v"))))
-    val folded = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"), lst.as("__l"))
+    val folded = sortedSeries(df, keys, tsCol, tieCol, Seq(valueCol),
+        col(valueCol).cast("double").as("v"))
       .withColumn("__s", aggregate(col("__l"),
         array().cast("array<double>"),
         (acc, x) => {
@@ -588,7 +607,7 @@ object TimeSeries {
           when(size(acc) === 0, array(x.getField("v"), lit(0.0)))
             .otherwise(array(l2, b2))
         }))
-    folded.select(keys.map(col) ++ Seq(col("n"),
+    folded.select(keys.map(col) ++ Seq(col("__n").as("n"),
       element_at(col("__s"), 1).as("level"),
       element_at(col("__s"), 2).as("trend"),
       (element_at(col("__s"), 1) +
@@ -635,11 +654,9 @@ object TimeSeries {
     require(gamma > 0 && gamma <= 1, s"gamma in (0,1], got $gamma")
     require(period >= 2, s"period must be >= 2, got $period")
     val a = lit(r9(alpha)); val bt = lit(r9(beta)); val g = lit(r9(gamma))
-    val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
-      col(tieCol).as("i"), col(valueCol).cast("double").as("v"))))
     val init = concat(array(lit(0.0), lit(0.0), lit(0.0)),
       transform(sequence(lit(1), lit(period)), _ => lit(0.0)))
-    val fold = aggregate(lst, init, (acc, p) => {
+    val fold = aggregate(col("__l"), init, (acc, p) => {
       val l = element_at(acc, 1); val b = element_at(acc, 2)
       val cnt = element_at(acc, 3)
       val j = (pmod(cnt.cast("long"), lit(period.toLong)) + 1L)
@@ -654,11 +671,9 @@ object TimeSeries {
           when(jj === j, sj2)
             .otherwise(element_at(acc, (jj + 3).cast("int")))))
     })
-    df.filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"), fold.as("__m"))
+    sortedSeries(df, keys, tsCol, tieCol, Seq(valueCol),
+        col(valueCol).cast("double").as("v"))
+      .select(keys.map(col) ++ Seq(col("__n").as("n"), fold.as("__m")): _*)
       .select(keys.map(col) ++ Seq(col("n"),
         posexplode(slice(col("__m"), 4, period))
           .as(Seq("__p", "seasonal")),
@@ -704,10 +719,8 @@ object TimeSeries {
     val a = lit(r9(alpha))
     val scaleF = math.pow(10, valueScale)
     val vc = unscaled(col(demandCol), valueScale)
-    val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
-      col(tieCol).as("i"), vc.cast("double").as("x"))))
     // state [z, p, q, seen, nDemands]
-    val fold = aggregate(lst,
+    val fold = aggregate(col("__l"),
       array(lit(0.0), lit(0.0), lit(0.0), lit(0.0), lit(0.0)),
       (acc, row) => {
         val x = row.getField("x")
@@ -723,12 +736,10 @@ object TimeSeries {
           .otherwise(array(z, p, q1, seen, nd))
       })
     val m = (i: Int) => element_at(col("__m"), i)
-    df.filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(demandCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_periods"), fold.as("__m"))
-      .select(keys.map(col) ++ Seq(col("n_periods"),
+    sortedSeries(df, keys, tsCol, tieCol, Seq(demandCol),
+        vc.cast("double").as("x"))
+      .withColumn("__m", fold)
+      .select(keys.map(col) ++ Seq(col("__n").as("n_periods"),
         m(5).cast("long").as("n_demands"),
         when(m(4) === 1.0, m(1) / lit(scaleF)).as("size_est"),
         when(m(4) === 1.0, m(2)).as("interval_est"),
@@ -774,19 +785,13 @@ object TimeSeries {
       .orderBy(col(tsCol), col(tieCol))
     val nD = lit(period.toDouble)
     val nM1 = lit((period - 1).toDouble)
-    val deltas = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val deltas = positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("__vc", vc)
       .withColumn("__d", (col("__vc") - lag(col("__vc"), 1).over(w))
         .cast("double"))
-      .filter(col("__d").isNotNull)
-    val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
-      col(tieCol).as("i"), col("__d").as("d"))))
     // state [i, aG, aL]: during the seed phase aG/aL hold running
     // SUMS; the i = period step divides once; after that, Wilder
-    val fold = aggregate(lst, array(lit(0.0), lit(0.0), lit(0.0)),
+    val fold = aggregate(col("__l"), array(lit(0.0), lit(0.0), lit(0.0)),
       (acc, x) => {
         val i = element_at(acc, 1); val aG = element_at(acc, 2)
         val aL = element_at(acc, 3)
@@ -799,8 +804,10 @@ object TimeSeries {
             (aL * nM1 + l) / nD))
       })
     val m = (i: Int) => element_at(col("__m"), i)
-    deltas.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_deltas"), fold.as("__m"))
+    // the head row has no delta: `__d` in notNull drops it
+    sortedSeries(deltas, keys, tsCol, tieCol, Seq("__d"), col("__d").as("d"))
+      .withColumn("__m", fold)
+      .withColumnRenamed("__n", "n_deltas")
       .withColumn("avg_gain",
         when(m(1) >= nD, m(2) / lit(scaleF)))
       .withColumn("avg_loss",
@@ -880,8 +887,7 @@ object TimeSeries {
    * engine reproduces every bit.
    * Phases whose rows all lack a trend (short series) emit null
    * seasonal; series shorter than the trend window emit all-null
-   * trend AND seasonal. Null key/time/tie/value rows are dropped
-   * (the fold-family contract).
+   * trend AND seasonal. Rows run through [[positioned]].
    *
    * Output: (keys…, `tieCol`, `tsCol`, `valueCol` (snapped units),
    * phase, trend, seasonal, remainder) — one row per input event.
@@ -912,10 +918,7 @@ object TimeSeries {
     val wOrd = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val wWin = wOrd.rowsBetween(-h, h)
-    val base = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val base = positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("__vc", vc)
       .withColumn("__phase",
         ((row_number().over(wOrd) - 1) % period).cast("long"))
@@ -971,10 +974,11 @@ object TimeSeries {
    * rank the `topK` most frequent paths — the "what do users actually
    * do" product-analytics staple.
    *
-   * Pinned: within a session, events order by (`tsCol`, `tieCol`);
-   * sessions longer than `maxLen` events are DROPPED (not truncated —
-   * a truncated path is a different path, and unbounded sessions are
-   * bot traffic); rank over (n desc, path asc).
+   * Pinned: within a session, events order by (`tsCol`, `tieCol`)
+   * ([[positioned]] rows, so a null tie is dropped before sessions
+   * form); sessions longer than `maxLen` events are DROPPED (not
+   * truncated — a truncated path is a different path, and unbounded
+   * sessions are bot traffic); rank over (n desc, path asc).
    *
    * Scale posture: one actor-keyed shuffle carries the session window
    * AND the per-session path aggregate; path counts are map-side
@@ -985,17 +989,13 @@ object TimeSeries {
                     maxLen: Int = 20, topK: Int = 50): DataFrame = {
     require(maxLen >= 1 && topK >= 1, "maxLen and topK must be positive")
     val sess = graft.agg.GroupBy.sessionize(
-      df.filter(col(tsCol).isNotNull && col(stateCol).isNotNull &&
-        col(actorCol).isNotNull),
+      positioned(df, Seq(actorCol), tsCol, tieCol, Seq(stateCol)),
       Seq(actorCol), tsCol, gapMicros, out = "__sess")
-    val paths = sess
-      .groupBy(col(actorCol), col("__sess"))
-      .agg(array_join(transform(sort_array(collect_list(struct(
-          unix_micros(col(tsCol)).as("t"), col(tieCol).as("i"),
-          col(stateCol).cast("string").as("s")))),
-          x => x.getField("s")), ">").as("path"),
-        count(lit(1)).as("__len"))
-      .filter(col("__len") <= maxLen)
+    val paths = sortedSeries(sess, Seq(actorCol, "__sess"), tsCol, tieCol,
+        Nil, col(stateCol).cast("string").as("s"))
+      .filter(col("__n") <= maxLen)
+      .select(array_join(transform(col("__l"), x => x.getField("s")), ">")
+        .as("path"))
     paths.groupBy(col("path"))
       .agg(count(lit(1)).as("n_sessions"))
       .withColumn("rank", row_number().over(
@@ -1092,31 +1092,27 @@ object TimeSeries {
    * throttle would swallow the whole chain.
    *
    * Anchoring is inherently recursive (which events are kept depends
-   * on which were kept), so each key folds its (ts, tie)-sorted
-   * series through an in-group array build — the [[ewma]] mechanics
-   * and envelope (per-key series, not one global million-point
-   * stream; keyed state is the unbounded form). Output: the kept
-   * rows as (keys…, `tieCol`, `tsCol`).
+   * on which were kept), so each key folds its [[sortedSeries]] list
+   * through an in-group array build — the [[ewma]] mechanics and
+   * envelope. Rows with a null key, ts or tie are dropped
+   * ([[positioned]]). Output: the kept rows as (keys…, `tieCol`,
+   * `tsCol`).
    */
   def anchoredThrottle(df: DataFrame, keys: Seq[String], tsCol: String,
                        tieCol: String, minGapMicros: Long): DataFrame = {
     require(keys.nonEmpty, "anchoredThrottle needs key columns")
     require(minGapMicros >= 0, s"minGapMicros must be >= 0: $minGapMicros")
-    val lst = sort_array(collect_list(struct(
-      unix_micros(col(tsCol)).as("t"), col(tieCol).as("i"),
-      col(tsCol).as("orig"))))
-    df.filter(col(tsCol).isNotNull)
-      .groupBy(keys.map(col): _*)
-      .agg(lst.as("__l"))
-      // fold: acc = array of kept (t, i, orig); keep iff first or
-      // t >= last_kept.t + gap
+    sortedSeries(df, keys, tsCol, tieCol, Nil,
+        unix_micros(col(tsCol)).as("u"))
+      // fold: acc = array of kept (micros t, i, orig); keep iff first
+      // or u >= last_kept.t + gap
       .withColumn("__k", aggregate(col("__l"),
         array().cast("array<struct<t:bigint,i:bigint,orig:timestamp>>"),
         (acc, x) => when(size(acc) === 0 ||
-          x.getField("t") >= element_at(acc, -1).getField("t") + minGapMicros,
-          concat(acc, array(struct(x.getField("t").as("t"),
+          x.getField("u") >= element_at(acc, -1).getField("t") + minGapMicros,
+          concat(acc, array(struct(x.getField("u").as("t"),
             x.getField("i").cast("long").as("i"),
-            x.getField("orig").as("orig"))))).otherwise(acc)))
+            x.getField("t").as("orig"))))).otherwise(acc)))
       .select(keys.map(col) :+ explode(col("__k")).as("__e"): _*)
       .select(keys.map(col) :+ col("__e.i").as(tieCol) :+
         col("__e.orig").as(tsCol): _*)
@@ -1175,14 +1171,8 @@ object TimeSeries {
         ((year(to) - year(from)) * 12L + (month(to) - month(from))).cast("long")
       case "year" => (year(to) - year(from)).cast("long")
       case u =>
-        val secs = u match {
-          case "week" => 604800L
-          case "day" => 86400L
-          case "hour" => 3600L
-          case "minute" => 60L
-          case other => throw new IllegalArgumentException(
-            s"unsupported retention unit: $other")
-        }
+        val secs = unitSeconds.getOrElse(u, throw new IllegalArgumentException(
+          s"unsupported retention unit: $u"))
         ((unix_timestamp(to) - unix_timestamp(from)) / secs).cast("long")
     }
 
@@ -1742,48 +1732,6 @@ object TimeSeries {
   }
 
   /**
-   * One-sided (upper) CUSUM change-point statistic per key: the
-   * classic SPC recurrence `S₀ = 0; Sᵢ = max(0, Sᵢ₋₁ + (xᵢ − μ₀ − k))`
-   * with an alarm when `Sᵢ > h` — detects a sustained upward shift of
-   * the mean away from target `μ₀` (slack `k` absorbs noise,
-   * threshold `h` sets the ARL trade-off). `cusumLower` mirrors it
-   * for downward shifts.
-   *
-   * The recurrence LOOKS inherently sequential, but collapses to two
-   * LINEAR window passes via the prefix-sum identity
-   * `Sᵢ = Pᵢ − min(P₀..Pᵢ)` where `Pᵢ = Σⱼ≤ᵢ (xⱼ − μ₀ − k)` and
-   * `P₀ = 0` (the running min must see the empty prefix: seed it as
-   * `min(min(P) over ≤i, 0)`) — so the whole statistic is a running
-   * sum plus a running min on ONE key exchange, never an iterative
-   * loop or a UDF fold.
-   *
-   * Engine-exact: x, μ₀ and k snap to the 10⁻² decimal grid, so every
-   * prefix sum is EXACT decimal arithmetic — the max/min comparisons
-   * and the `> h` alarm test have no float ambiguity anywhere; the
-   * one double cast happens at output. Row order inside a key is
-   * (tsCol, idCol) — a total order when idCol is unique (the q207
-   * discipline). Null ts/value rows are dropped.
-   *
-   * Snap convention (ONE convention across batch, stream, and oracle):
-   * Spark's double→decimal cast — HALF_UP on the double's SHORTEST
-   * decimal representation (2.675 → 2.68). [[graft.streaming.Streaming
-   * .cusumStream]] reproduces it bit-exactly via
-   * `BigDecimal.valueOf(v).setScale(2, HALF_UP)` (same shortest-string
-   * semantics). A DuckDB/ANSI oracle's `CAST(v AS DECIMAL(18,2))`
-   * rounds the BINARY value instead (2.675 → 2.67), so engine ≡ oracle
-   * is guaranteed only for inputs on (or representably near) the 10⁻²
-   * grid — which the gate data is; off-grid corpora should pre-snap.
-   *
-   * Output: (keys…, tsCol, idCol, value double, `cusum` double,
-   * `alarm` boolean).
-   *
-   * Scale posture: ONE key exchange carries both running windows;
-   * per-key cost O(n log n) sort + O(n) frames. A year-long minutely
-   * key is 525k rows in one partition — the same envelope as every
-   * other per-key window op here; split keys upstream if one key
-   * exceeds a task.
-   */
-  /**
    * Time-weighted average value (TWAP) per key per `unit` bucket: each
    * tick's value holds until the NEXT tick (or the bucket's end), and
    * the bucket's average weighs values by holding time — the fair
@@ -1801,7 +1749,8 @@ object TimeSeries {
    * integer cents; holding times are exact integer MICROS; the
    * weighted sum Σ cents·micros accumulates in decimal(38,0) and the
    * closing twap is two pinned divisions. Fixed-width units only
-   * (minute/hour/day/week).
+   * (minute/hour/day/week). Rows run through [[positioned]], the
+   * filter [[graft.streaming.Streaming.twapStream]] applies.
    *
    * Output: (keys…, bucket timestamp, n_ticks, twap double).
    *
@@ -1815,21 +1764,10 @@ object TimeSeries {
            valueCol: String, unit: String = "hour",
            valueScale: Int = 2): DataFrame = {
     require(keys.nonEmpty, "twap needs key columns")
-    val unitMicros = unit.toLowerCase match {
-      case "minute" => 60L * 1000000L
-      case "hour" => 3600L * 1000000L
-      case "day" => 86400L * 1000000L
-      case "week" => 604800L * 1000000L
-      case other => throw new IllegalArgumentException(
-        s"twap needs a fixed-width unit (minute/hour/day/week), got $other")
-    }
+    val unitMicros = fixedUnitMicros("twap", unit)
     val scaleF = math.pow(10, valueScale)
     val vc = unscaled(col(valueCol), valueScale)
-    // tieCol non-null: a null tie orders NULLS FIRST in Spark ASC
-    // windows but NULLS LAST in ANSI engines — excluding it keeps
-    // the total order engine-independent (round-15 advisory)
-    val base = df.filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull)
+    val base = positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("bucket", date_trunc(unit, col(tsCol)))
       .withColumn("__t", unix_micros(col(tsCol)))
       .withColumn("__vc", vc)
@@ -1898,21 +1836,12 @@ object TimeSeries {
     require(keys.nonEmpty, "twapCarry needs key columns")
     require(maxBucketsPerHold >= 1,
       s"maxBucketsPerHold must be >= 1, got $maxBucketsPerHold")
-    val unitMicros = unit.toLowerCase match {
-      case "minute" => 60L * 1000000L
-      case "hour" => 3600L * 1000000L
-      case "day" => 86400L * 1000000L
-      case "week" => 604800L * 1000000L
-      case other => throw new IllegalArgumentException(
-        s"twapCarry needs a fixed-width unit (minute/hour/day/week), got $other")
-    }
+    val unitMicros = fixedUnitMicros("twapCarry", unit)
     val scaleF = math.pow(10, valueScale)
     val vc = unscaled(col(valueCol), valueScale)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__t"), col(tieCol))
-    val holds = df.filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val holds = positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("__t", unix_micros(col(tsCol)))
       .withColumn("__vc", vc)
       .withColumn("__b0", col("__t") - pmod(col("__t"), lit(unitMicros)))
@@ -1964,7 +1893,7 @@ object TimeSeries {
    * exact decimals on ONE key exchange; each split's B_i closes in a
    * pinned IEEE chain and the argmax takes the EARLIEST position on
    * ties (total order). Splits leave ≥1 row on each side. Gain is
-   * reported in value² units.
+   * reported in value² units. Rows run through [[positioned]].
    *
    * Output: (keys…, n, split_index, split_ts, gain) — split AFTER
    * `split_index` (1-based); keys with n < 2 emit nothing.
@@ -1980,7 +1909,7 @@ object TimeSeries {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val wk = Window.partitionBy(keys.map(col): _*)
-    val base = df.filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
+    val base = positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("__i", row_number().over(w).cast("long"))
       .withColumn("__s", sum(v).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -2038,10 +1967,8 @@ object TimeSeries {
     // δ and λ in GRID units, pinned on the 1e-9 grid after scaling
     val d = lit(r9(delta * scaleF)); val lam = lit(r9(lambda * scaleF))
     val vc = unscaled(col(valueCol), valueScale)
-    val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
-      col(tieCol).as("i"), vc.cast("double").as("x"))))
     // state [n, sum, m, minM, alarmAt]
-    val fold = aggregate(lst,
+    val fold = aggregate(col("__l"),
       array(lit(0.0), lit(0.0), lit(0.0), lit(0.0), lit(0.0)),
       (acc, p) => {
         val n2 = element_at(acc, 1) + lit(1.0)
@@ -2054,17 +1981,57 @@ object TimeSeries {
         array(n2, s2, m2, mn2, al)
       })
     val m = (i: Int) => element_at(col("__m"), i)
-    df.filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n"), fold.as("__m"))
-      .select(keys.map(col) ++ Seq(col("n"),
+    sortedSeries(df, keys, tsCol, tieCol, Seq(valueCol),
+        vc.cast("double").as("x"))
+      .withColumn("__m", fold)
+      .select(keys.map(col) ++ Seq(col("__n").as("n"),
         (m(2) / m(1) / lit(scaleF)).as("mean"),
         ((m(3) - m(4)) / lit(scaleF)).as("ph"),
         when(m(5) > 0.0, m(5).cast("long")).as("alarm_at")): _*)
   }
 
+  /**
+   * One-sided (upper) CUSUM change-point statistic per key: the
+   * classic SPC recurrence `S₀ = 0; Sᵢ = max(0, Sᵢ₋₁ + (xᵢ − μ₀ − k))`
+   * with an alarm when `Sᵢ > h` — detects a sustained upward shift of
+   * the mean away from target `μ₀` (slack `k` absorbs noise,
+   * threshold `h` sets the ARL trade-off). `cusumLower` mirrors it
+   * for downward shifts.
+   *
+   * The recurrence LOOKS inherently sequential, but collapses to two
+   * LINEAR window passes via the prefix-sum identity
+   * `Sᵢ = Pᵢ − min(P₀..Pᵢ)` where `Pᵢ = Σⱼ≤ᵢ (xⱼ − μ₀ − k)` and
+   * `P₀ = 0` (the running min must see the empty prefix: seed it as
+   * `min(min(P) over ≤i, 0)`) — so the whole statistic is a running
+   * sum plus a running min on ONE key exchange, never an iterative
+   * loop or a UDF fold.
+   *
+   * Engine-exact: x, μ₀ and k snap to the 10⁻² decimal grid, so every
+   * prefix sum is EXACT decimal arithmetic — the max/min comparisons
+   * and the `> h` alarm test have no float ambiguity anywhere; the
+   * one double cast happens at output. Row order inside a key is
+   * (tsCol, idCol) — a total order when idCol is unique (the q207
+   * discipline); rows run through [[positioned]].
+   *
+   * Snap convention (ONE convention across batch, stream, and oracle):
+   * Spark's double→decimal cast — HALF_UP on the double's SHORTEST
+   * decimal representation (2.675 → 2.68). [[graft.streaming.Streaming
+   * .cusumStream]] reproduces it bit-exactly via
+   * `BigDecimal.valueOf(v).setScale(2, HALF_UP)` (same shortest-string
+   * semantics). A DuckDB/ANSI oracle's `CAST(v AS DECIMAL(18,2))`
+   * rounds the BINARY value instead (2.675 → 2.67), so engine ≡ oracle
+   * is guaranteed only for inputs on (or representably near) the 10⁻²
+   * grid — which the gate data is; off-grid corpora should pre-snap.
+   *
+   * Output: (keys…, tsCol, idCol, value double, `cusum` double,
+   * `alarm` boolean).
+   *
+   * Scale posture: ONE key exchange carries both running windows;
+   * per-key cost O(n log n) sort + O(n) frames. A year-long minutely
+   * key is 525k rows in one partition — the same envelope as every
+   * other per-key window op here; split keys upstream if one key
+   * exceeds a task.
+   */
   def cusum(df: DataFrame, keys: Seq[String], tsCol: String, idCol: String,
             valueCol: String, target: Double, slack: Double,
             threshold: Double): DataFrame =
@@ -2099,12 +2066,7 @@ object TimeSeries {
       .orderBy(col(tsCol), col(idCol))
     val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val h = lit(BigDecimal(threshold).setScale(2))
-    // fold-family null contract (batch ≡ stream parity with
-    // [[graft.streaming.Streaming.cusumStream]]): a null key, time,
-    // tie, or value has no position in the recurrence — drop it.
-    df.filter(col(tsCol).isNotNull && col(valueCol).isNotNull &&
-        col(idCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    positioned(df, keys, tsCol, idCol, Seq(valueCol))
       .withColumn("__p", sum(drift).over(run).cast("decimal(38,2)"))
       .withColumn("__m",
         least(min(col("__p")).over(run), lit(BigDecimal(0).setScale(2))))
@@ -2146,33 +2108,17 @@ object TimeSeries {
     val af = lit(2.0) / (lit(fastSpan.toDouble) + lit(1.0))
     val as = lit(2.0) / (lit(slowSpan.toDouble) + lit(1.0))
     val ag = lit(2.0) / (lit(signalSpan.toDouble) + lit(1.0))
-    def emaFold(src: Column, alpha: Column) = aggregate(src,
-      array().cast("array<double>"),
-      (acc, x) => when(size(acc) === 0, array(x))
-        .otherwise(concat(acc, array(
-          element_at(acc, -1) + alpha * (x - element_at(acc, -1))))))
-    val lst = sort_array(collect_list(struct(col(tsCol).as("t"),
-      col(tieCol).as("i"), col(valueCol).cast("double").as("v"))))
-    val folded = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*)
-      .agg(lst.as("__l"))
+    val folded = sortedSeries(df, keys, tsCol, tieCol, Seq(valueCol),
+        col(valueCol).cast("double").as("v"))
       .withColumn("__vs", transform(col("__l"), _.getField("v")))
       .withColumn("__ef", emaFold(col("__vs"), af))
       .withColumn("__es", emaFold(col("__vs"), as))
       .withColumn("__md",
         zip_with(col("__ef"), col("__es"), (a, b) => a - b))
       .withColumn("__sg", emaFold(col("__md"), ag))
-    folded
-      .select(keys.map(col) :+ posexplode(arrays_zip(col("__l"),
-        col("__md"), col("__sg"))): _*)
-      .select(keys.map(col) ++ Seq(
-        col("col.__l.i").as(tieCol), col("col.__l.t").as(tsCol),
-        col("col.__l.v").as(valueCol), col("col.__md").as("macd"),
-        col("col.__sg").as("signal"),
-        (col("col.__md") - col("col.__sg")).as("histogram")): _*)
+    perEvent(folded, keys, tsCol, tieCol, valueCol, Seq("__md", "__sg"),
+      col("col.__md").as("macd"), col("col.__sg").as("signal"),
+      (col("col.__md") - col("col.__sg")).as("histogram"))
   }
 
   /**
@@ -2207,10 +2153,7 @@ object TimeSeries {
     val ord = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
     val frame = ord.rowsBetween(-(n - 1).toLong, Window.currentRow)
-    val rows = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(valueCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val rows = positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("__vc", vc)
       .withColumn("__ll", min(col("__vc")).over(frame))
       .withColumn("__hh", max(col("__vc")).over(frame))
@@ -2261,10 +2204,8 @@ object TimeSeries {
     val scaleF = math.pow(10, valueScale)
     val ord = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
-    val rows = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(actualCol).isNotNull && col(forecastCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val rows =
+      positioned(df, keys, tsCol, tieCol, Seq(actualCol, forecastCol))
       .withColumn("__ac", unscaled(col(actualCol), valueScale))
       .withColumn("__fc", unscaled(col(forecastCol), valueScale))
       .withColumn("__ae", abs(col("__ac") - col("__fc")))
@@ -2335,10 +2276,8 @@ object TimeSeries {
     require(keys.nonEmpty, "theilU needs key columns")
     val ord = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
-    val rows = df
-      .filter(col(tsCol).isNotNull && col(tieCol).isNotNull &&
-        col(actualCol).isNotNull && col(forecastCol).isNotNull &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
+    val rows =
+      positioned(df, keys, tsCol, tieCol, Seq(actualCol, forecastCol))
       .withColumn("__ac", unscaled(col(actualCol), valueScale))
       .withColumn("__fc", unscaled(col(forecastCol), valueScale))
       .withColumn("__e", col("__fc") - col("__ac"))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.StructType
 import scala.reflect.runtime.universe.TypeTag
 
 import graft.core.Snap.{cents, r9, unscaled}
+import graft.ops.TimeSeries
 
 /**
  * Streaming parity — the reference's only unbounded source is the
@@ -510,7 +511,8 @@ object Streaming {
    * ([[transitionsStream]], [[ewmaStream]], [[compactStream]],
    * [[cusumStream]], [[pageHinkleyStream]], [[macdStream]],
    * [[holtStream]], [[trackingSignalStream]], [[twapStream]]): drop
-   * rows with a null actor, ts or tie or a null in `notNull`, key by
+   * rows with a null actor, ts or tie or a null in `notNull` (the
+   * batch twins' filter, [[graft.ops.TimeSeries.positioned]]), key by
    * the actor as a long, and fold each key's rows of a micro-batch
    * through `rec` ([[foldBatch]]) under `flatMapGroupsWithState`
    * (Update mode, no timeout). The state round-trips through the store
@@ -538,8 +540,7 @@ object Streaming {
       df: DataFrame, actorCol: String, tsCol: String, tieCol: String,
       value: Column, notNull: Seq[String], rec: Recurrence[V, S, O],
       names: String*): DataFrame =
-    df.filter((Seq(actorCol, tsCol, tieCol) ++ notNull)
-        .map(col(_).isNotNull).reduce(_ && _))
+    TimeSeries.positioned(df, Seq(actorCol), tsCol, tieCol, notNull)
       .select(col(actorCol).cast("long"), unix_micros(col(tsCol)),
         col(tieCol).cast("long"), value)
       .as(Encoders.product[(Long, Long, Long, V)])

@@ -277,11 +277,13 @@ class TimeSeriesSpec extends AnyFunSuite {
 
   test("frequentPaths: sessions split on gap, paths ordered, overlong dropped") {
     val df = Seq(
-      (1L, ts("2024-01-01 10:00:00"), "view", 1L),
-      (1L, ts("2024-01-01 10:05:00"), "click", 2L),
-      (1L, ts("2024-01-01 12:00:00"), "view", 3L),   // new session
-      (2L, ts("2024-01-01 10:00:00"), "view", 4L),
-      (2L, ts("2024-01-01 10:01:00"), "click", 5L)
+      (1L, ts("2024-01-01 10:00:00"), "view", Some(1L)),
+      (1L, ts("2024-01-01 10:05:00"), "click", Some(2L)),
+      // null tie: no place in the (ts, tie) order, so not in any path
+      (1L, ts("2024-01-01 10:10:00"), "click", None),
+      (1L, ts("2024-01-01 12:00:00"), "view", Some(3L)),   // new session
+      (2L, ts("2024-01-01 10:00:00"), "view", Some(4L)),
+      (2L, ts("2024-01-01 10:01:00"), "click", Some(5L))
     ).toDF("user_id", "ts", "event_type", "event_id")
     val out = TimeSeries.frequentPaths(df, "user_id", "ts", "event_id",
       "event_type", gapMicros = 1800000000L, maxLen = 20, topK = 10)
@@ -627,25 +629,53 @@ class TimeSeriesSpec extends AnyFunSuite {
 
   test("holtLinear/ewma: null-tie rows are DROPPED (the fold-family " +
     "null contract, matching the streaming arms' filter)") {
-    // a null tie has no position in the (ts, tie) order; keeping it
-    // would make the fold order engine-dependent — holtStream/
-    // ewmaStream filter it, so the batch arms must too for parity
+    // a null key, tie or value has no position in the (ts, tie) order
+    // (TimeSeries.positioned) — holtStream/ewmaStream filter it, so
+    // every array fold on sortedSeries must answer on the
+    // null-bearing feed exactly as on its clean twin
     val rows = Seq(
-      ("k", ts("2024-01-01 00:00:00"), Some(1L), 10.0),
-      ("k", ts("2024-01-01 00:01:00"), None: Option[Long], 99.0),
-      ("k", ts("2024-01-01 00:02:00"), Some(3L), 30.0))
+      ("k", ts("2024-01-01 00:00:00"), Option(1L), Option(10.0)),
+      ("k", ts("2024-01-01 00:01:00"), None, Option(99.0)),
+      ("k", ts("2024-01-01 00:02:00"), Option(3L), Option(30.0)),
+      (null, ts("2024-01-01 00:03:00"), Option(4L), Option(40.0)),
+      ("k", ts("2024-01-01 00:04:00"), Option(5L), None),
+      ("k", ts("2024-01-01 00:05:00"), Option(6L), Option(20.0)))
     val df = rows.toDF("k", "ts", "id", "v")
-    val clean = rows.filter(_._3.isDefined).toDF("k", "ts", "id", "v")
+    // anchoredThrottle reads no value: a null value is a clean row there
+    def cleanOf(valued: Boolean) = rows
+      .filter(r => r._1 != null && r._3.isDefined && (!valued || r._4.isDefined))
+      .toDF("k", "ts", "id", "v")
+    val clean = cleanOf(valued = true)
     val a = TimeSeries.holtLinear(df, Seq("k"), "ts", "id", "v",
       alpha = 0.5, beta = 0.5).collect().head
     val b = TimeSeries.holtLinear(clean, Seq("k"), "ts", "id", "v",
       alpha = 0.5, beta = 0.5).collect().head
-    assert(a.getLong(1) == 2L && a == b)
+    assert(a.getLong(1) == 3L && a == b)
     val e1 = TimeSeries.ewma(df, Seq("k"), "ts", "id", "v", 0.5)
       .collect().map(r => (r.getLong(1), r.getDouble(4))).sorted
     val e2 = TimeSeries.ewma(clean, Seq("k"), "ts", "id", "v", 0.5)
       .collect().map(r => (r.getLong(1), r.getDouble(4))).sorted
-    assert(e1.length == 2 && e1.sameElements(e2))
+    assert(e1.length == 3 && e1.sameElements(e2))
+    def rowsOf(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    val folds: Seq[(String, Boolean, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("holtWinters", true, TimeSeries.holtWinters(_, Seq("k"), "ts", "id",
+        "v", alpha = 0.5, beta = 0.5, gamma = 0.5, period = 2)),
+      ("croston", true, TimeSeries.croston(_, Seq("k"), "ts", "id", "v",
+        alpha = 0.5)),
+      ("rsi", true, TimeSeries.rsi(_, Seq("k"), "ts", "id", "v",
+        period = 2)),
+      ("pageHinkley", true, TimeSeries.pageHinkley(_, Seq("k"), "ts", "id",
+        "v", delta = 0.0, lambda = 5.0)),
+      ("macd", true, TimeSeries.macd(_, Seq("k"), "ts", "id", "v",
+        fastSpan = 2, slowSpan = 3, signalSpan = 2)),
+      ("anchoredThrottle", false, TimeSeries.anchoredThrottle(_, Seq("k"),
+        "ts", "id", minGapMicros = 60000000L)))
+    folds.foreach { case (name, valued, f) =>
+      val got = rowsOf(f(df))
+      assert(got.nonEmpty && got == rowsOf(f(cleanOf(valued))), name)
+    }
   }
 
   test("stlDecompose: even period recovers the exact line trend " +
@@ -1031,11 +1061,17 @@ class TimeSeriesSpec extends AnyFunSuite {
     // 4 low then 3 high: the split belongs after index 4
     val xs = Seq(1.0, 1.0, 1.0, 1.0, 9.0, 9.0, 9.0)
     val df = (xs.zipWithIndex.map { case (x, i) =>
-      ("a", ts(f"2024-01-01 00:0$i:00"), i.toLong, x)
-    } :+ (("solo", ts("2024-01-01 00:00:00"), 99L, 5.0)))
+      ("a", ts(f"2024-01-01 00:0$i:00"), Option(i.toLong), x)
+    } ++ Seq(("solo", ts("2024-01-01 00:00:00"), Option(99L), 5.0),
+      // no place in the (ts, tie) order, so dropped: a null tie, and a
+      // null key (two rows — one alone would have no split to emit)
+      ("a", ts("2024-01-01 00:07:00"), None, 1.0),
+      (null, ts("2024-01-01 00:00:00"), Option(100L), 1.0),
+      (null, ts("2024-01-01 00:01:00"), Option(101L), 9.0)))
       .toDF("k", "ts", "id", "v")
     val out = TimeSeries.bestMeanSplit(df, Seq("k"), "ts", "id", "v")
       .collect().map(r => r.getString(0) -> r).toMap
+    assert(out.keySet == Set("a"))
     val a = out("a")
     assert(a.getAs[Long]("n") == 7L &&
       a.getAs[Long]("split_index") == 4L)

@@ -664,10 +664,12 @@ class StreamingSpec extends AnyFunSuite {
     val dir = TestSpark.tempDir("graft_stream_twap")
     // hour 10: 54 min at 10, 6 min at 99 -> twap 18.9 (closed by the
     // hour-11 tick in batch 2); hour 11 stays open -> no emission
-    val batch1 = Seq((1L, ts("2024-01-01 10:00:00"), 10.0, 1L),
-      (1L, ts("2024-01-01 10:54:00"), 99.0, 2L))
-    val batch2 = Seq((1L, ts("2024-01-01 11:30:00"), 40.0, 3L),
-      (2L, ts("2024-01-01 11:00:00"), 7.0, 4L))
+    val batch1 = Seq((Option(1L), ts("2024-01-01 10:00:00"), 10.0, 1L),
+      (Option(1L), ts("2024-01-01 10:54:00"), 99.0, 2L))
+    // the null-actor row has no key to fold into: both arms drop it
+    val batch2 = Seq((Option(1L), ts("2024-01-01 11:30:00"), 40.0, 3L),
+      (Option(2L), ts("2024-01-01 11:00:00"), 7.0, 4L),
+      (None, ts("2024-01-01 10:30:00"), 50.0, 5L))
     batch1.toDF("user_id", "ts", "value", "event_id")
       .coalesce(1).write.mode("append").parquet(s"$dir/in")
     batch2.toDF("user_id", "ts", "value", "event_id")
@@ -693,6 +695,11 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("n_ticks"),
         r.getAs[Double]("twap"))).toSeq
     assert(batchOut == Seq((2L, 18.9)))
+    assert(graft.ops.TimeSeries.twap(
+      (batch1 ++ batch2).toDF("user_id", "ts", "value", "event_id"),
+      Seq("user_id"), "ts", "event_id", "value", unit = "hour")
+      .filter(org.apache.spark.sql.functions.col("user_id").isNull)
+      .isEmpty)
   }
 
   test("twapStream keeps buckets before 1970: pre-epoch ticks == batch " +
