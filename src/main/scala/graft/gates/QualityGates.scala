@@ -196,16 +196,17 @@ private[graft] object QualityGates {
 
     // ---- data quality: Benford first-digit drift over order totals ----
     // expected shares are the SAME compile-time double literals the
-    // Spark side carries (runtime is literal+integer IEEE arithmetic,
-    // no transcendentals); digit read from the exact DECIMAL string
+    // Spark side carries (Quality.BenfordP; runtime is literal+integer
+    // IEEE arithmetic, no transcendentals); digit read from the exact
+    // DECIMAL string
     Gate("q157_benford", (s, dir) =>
       Quality.benfordDrift(t(s, dir, "orders"), "o_totalprice"), Sql {
       // literals ship as QUOTED strings: DuckDB parses a bare decimal
       // literal as DECIMAL and converts (can land 1 ulp off), while a
       // string cast goes through strtod — correctly rounded, so the
       // shortest-repr round-trip reproduces Spark's double exactly
-      val dim = (1 to 9)
-        .map(d => s"($d, CAST('${math.log10(1.0 + 1.0 / d)}' AS DOUBLE))")
+      val dim = Quality.BenfordP.zipWithIndex
+        .map { case (p, i) => s"(${i + 1}, CAST('$p' AS DOUBLE))" }
         .mkString(", ")
       s"""WITH dim AS (SELECT * FROM (VALUES $dim) t(digit, p)),
         |obs AS (SELECT CAST(substr(regexp_replace(

@@ -322,6 +322,10 @@ object TimeSeries {
    * nulls skipped), so per-key state in the aggregate is bounded by
    * `maxLen`, not by the key's event count — the property that keeps
    * a hot key from materializing its whole history in one task.
+   *
+   * Rows with a null key, ts or tie are dropped ([[positioned]]): they
+   * have no place in the (ts, tie) order. Null values stay — counted
+   * in `n_events`, skipped by the join.
    */
   def eventSequences(df: DataFrame, keys: Seq[String], tsCol: String,
                      valueCol: String, tieCol: String,
@@ -330,7 +334,7 @@ object TimeSeries {
     require(maxLen > 0, s"maxLen must be positive, got $maxLen")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
-    df.filter(col(tsCol).isNotNull)
+    positioned(df, keys, tsCol, tieCol, Nil)
       .withColumn("__rn", row_number().over(w))
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_events"),
@@ -353,7 +357,8 @@ object TimeSeries {
    * `tieCol` breaking timestamp ties deterministically (tied events
    * are one burst: the `> gap` compare never splits a tie). Rows pass
    * through unchanged; no aggregation, so AQE skew handling applies
-   * to hot keys like any windowed operator.
+   * to hot keys like any windowed operator. Rows with a null key, ts
+   * or tie are dropped ([[positioned]]).
    */
   def throttle(df: DataFrame, keys: Seq[String], tsCol: String,
                tieCol: String, gapMicros: Long): DataFrame = {
@@ -363,7 +368,7 @@ object TimeSeries {
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(t, col(tieCol))
     val keep = graft.core.Engine.freshColumn(df, "__graft_thr_prev")
-    df.filter(col(tsCol).isNotNull)
+    positioned(df, keys, tsCol, tieCol, Nil)
       .withColumn(keep, lag(t, 1).over(w))
       .filter(col(keep).isNull || t - col(keep) > gapMicros)
       .drop(keep)
@@ -1068,7 +1073,9 @@ object TimeSeries {
    * `lags` values of `valueCol` as `<value>_lag<n>` columns — the
    * autoregressive feature block (one window, N `lag()` expressions,
    * no self-joins). Rows order by (`tsCol`, `tieCol`); heads with
-   * fewer than n predecessors carry nulls.
+   * fewer than n predecessors carry nulls. Rows with a null key, ts
+   * or tie are dropped ([[positioned]]); a null value stays and lags
+   * as null.
    */
   def lagFeatures(df: DataFrame, keys: Seq[String], tsCol: String,
                   tieCol: String, valueCol: String,
@@ -1077,7 +1084,7 @@ object TimeSeries {
     require(lags.nonEmpty && lags.forall(_ >= 1), s"lags must be >= 1: $lags")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(tsCol), col(tieCol))
-    lags.foldLeft(df.filter(col(tsCol).isNotNull)) { (acc, n) =>
+    lags.foldLeft(positioned(df, keys, tsCol, tieCol, Nil)) { (acc, n) =>
       acc.withColumn(s"${valueCol}_lag$n", lag(col(valueCol), n).over(w))
     }
   }
@@ -1133,6 +1140,9 @@ object TimeSeries {
    * reproduces it bit-exactly (two separate sum/w divisions would put
    * two roundings in the way).
    *
+   * Rows with a null key, ts, tie or value are dropped
+   * ([[positioned]]).
+   *
    * Output: (keys…, `tieCol`, `tsCol`, `valueCol`, `shift`).
    *
    * Scale posture: ONE key-partitioned exchange carries the sort and
@@ -1150,7 +1160,7 @@ object TimeSeries {
     val dec = col(valueCol).cast("decimal(18,2)")
     val before = wp.rowsBetween(-w, -1)
     val after = wp.rowsBetween(1, w)
-    df.filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
+    positioned(df, keys, tsCol, tieCol, Seq(valueCol))
       .withColumn("__sb", sum(dec).over(before))
       .withColumn("__nb", count(lit(1)).over(before))
       .withColumn("__sa", sum(dec).over(after))
@@ -1585,7 +1595,8 @@ object TimeSeries {
    * of inactivity ([[graft.agg.GroupBy.sessionize]]); each session's
    * path is its first `maxLen` events' types in (ts, tie) order
    * joined by `" > "`; paths rank by session count with the path
-   * string as tie-break (total order).
+   * string as tie-break (total order). Rows with a null actor, ts,
+   * tie or type are dropped ([[positioned]]).
    *
    * Output: (path, n_sessions, rank), rank 1..k.
    *
@@ -1600,8 +1611,7 @@ object TimeSeries {
                tieCol: String, typeCol: String, gapSeconds: Long,
                maxLen: Int, k: Int): DataFrame = {
     require(maxLen > 0 && k > 0, "topPaths needs maxLen > 0 and k > 0")
-    val base = df.filter(col(actorCol).isNotNull && col(tsCol).isNotNull &&
-      col(typeCol).isNotNull)
+    val base = positioned(df, Seq(actorCol), tsCol, tieCol, Seq(typeCol))
     val sess = graft.agg.GroupBy.sessionize(base, Seq(actorCol), tsCol,
       gap = gapSeconds * 1000000L, out = "__sess")
     val wIn = Window.partitionBy(col(actorCol), col("__sess"))
@@ -2320,6 +2330,12 @@ object TimeSeries {
    * sums of cents; `cum_error`/`mad` close with pinned unit
    * divisions and `TS = Σe / (Σ|e|/n)` is one fixed chain. Keys
    * with zero MAD (perfect forecast) emit null ts.
+   *
+   * Null contract: rows with a null key, actual or forecast are
+   * dropped; there is no ts or tie column, so a row is counted
+   * whatever its time. [[graft.streaming.Streaming.trackingSignalStream]]
+   * orders its events and so also drops a row with a null ts or tie
+   * (in `sortedRecurrence`): on such a feed the two forms disagree.
    *
    * Output: (keys…, n, cum_error, mad, tracking_signal) —
    * cum_error/mad in input units.

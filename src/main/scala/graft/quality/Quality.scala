@@ -276,7 +276,16 @@ object Quality {
       .select(col(valueCol).as("__v"),
         (col(flagCol) === a).cast("long").as("__ia"),
         (col(flagCol) === b).cast("long").as("__ib"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("__v"))
+    ksGap(base, "__v")
+  }
+
+  /** The KS closing shared by [[ksDrift]] and [[ksDriftBinned]]: over
+   *  rows of (`order`, `__ia`, `__ib`), both empirical CDFs as running
+   *  sums in `order` (default RANGE frame: peers included), the two
+   *  totals, and `max |ca/na − cb/nb|` — one row (n_a, n_b, ks_stat),
+   *  or none when either side is empty. */
+  private def ksGap(base: DataFrame, order: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col(order))
     val all = org.apache.spark.sql.expressions.Window
       .partitionBy(lit(1)) // global totals without a second aggregate pass
     base
@@ -321,19 +330,7 @@ object Quality {
             floor((col("__v") - col("__lo")) * bins / (col("__hi") - col("__lo"))))))
       .groupBy("__bin")
       .agg(sum(col("__ia")).as("__ia"), sum(col("__ib")).as("__ib"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("__bin"))
-    val all = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
-    binned
-      .withColumn("__ca", sum(col("__ia")).over(w))
-      .withColumn("__cb", sum(col("__ib")).over(w))
-      .withColumn("__na", sum(col("__ia")).over(all))
-      .withColumn("__nb", sum(col("__ib")).over(all))
-      .filter(col("__na") > 0 && col("__nb") > 0)
-      .groupBy(col("__na"), col("__nb"))
-      .agg(max(abs(col("__ca").cast("double") / col("__na").cast("double") -
-        col("__cb").cast("double") / col("__nb").cast("double")))
-        .as("ks_stat"))
-      .select(col("__na").as("n_a"), col("__nb").as("n_b"), col("ks_stat"))
+    ksGap(binned, "__bin")
   }
 
   /**
@@ -504,8 +501,8 @@ object Quality {
    * differently across engines' float formatting). Values that carry
    * no significant digit (zero, null) are excluded.
    *
-   * The expected shares are compile-time double literals (not runtime
-   * transcendentals), so every output cell is fixed-order
+   * The expected shares are the pinned [[BenfordP]] literals (not
+   * runtime transcendentals), so every output cell is fixed-order
    * integer/IEEE arithmetic: `expected = N · p_d`, `term =
    * (o − e)²/e`, and `chisq` folds the 9 terms in digit order.
    *
@@ -519,8 +516,8 @@ object Quality {
                    scale: Int = 2): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val digitP = (1 to 9).map(d => d -> math.log10(1.0 + 1.0 / d))
-    val dim = digitP.toDF("digit", "__p")
+    val dim = BenfordP.zipWithIndex.map { case (p, i) => (i + 1, p) }
+      .toDF("digit", "__p")
     val digit = substring(
       regexp_replace(col(valueCol).cast(s"decimal(18,$scale)").cast("string"),
         "[^1-9]", ""), 1, 1)
@@ -954,6 +951,25 @@ object Quality {
   private val aggKinds =
     Set("row_count_between", "distinct_count_between", "mean_between")
 
+  private def validateSuite(suite: Seq[Expectation]): Unit = {
+    require(suite.nonEmpty, "expectations needs a non-empty suite")
+    suite.foreach { e =>
+      require(e.kind == "exists" || rowKinds(e.kind) || aggKinds(e.kind),
+        s"unknown expectation kind '${e.kind}' (${e.name})")
+      require(e.kind == "row_count_between" || e.column.nonEmpty,
+        s"expectation ${e.name} (${e.kind}) needs a column")
+      require(e.kind != "matches" || e.values.nonEmpty,
+        s"expectation ${e.name}: matches needs the regex in values")
+      require(e.kind != "in_set" || e.values.nonEmpty,
+        s"expectation ${e.name}: in_set needs allowed values")
+      require(!(e.kind.endsWith("_between") || e.kind == "between") ||
+        e.lo.nonEmpty || e.hi.nonEmpty,
+        s"expectation ${e.name}: needs lo and/or hi")
+      require(e.maxViolationRate >= 0.0 && e.maxViolationRate <= 1.0,
+        s"expectation ${e.name}: maxViolationRate in [0,1]")
+    }
+  }
+
   /**
    * Declarative check-suite runner — [[validate]]'s rule table as
    * DATA and its report as a DATAFRAME: evaluate every
@@ -980,123 +996,20 @@ object Quality {
    * Expand of input×distinct-exprs — right for a handful of
    * `unique`/`distinct_count_between` expectations; prefer
    * [[profile]]'s approx mode for wide all-column uniqueness scans).
-   * The report itself is suite-sized (driver-built, one partition).
+   * The report is [[expectationsByKey]]'s over no keys — the same
+   * aggregate and Column closing; `groupBy()` is a global aggregate,
+   * so even an empty frame yields its one row per expectation. It is
+   * collected at call time and returned as suite-sized driver data
+   * (a one-partition local relation): reading it never rescans the
+   * corpus, so [[expectationsOrThrow]] scans it once.
    */
-  private def validateSuite(suite: Seq[Expectation]): Unit = {
-    require(suite.nonEmpty, "expectations needs a non-empty suite")
-    suite.foreach { e =>
-      require(e.kind == "exists" || rowKinds(e.kind) || aggKinds(e.kind),
-        s"unknown expectation kind '${e.kind}' (${e.name})")
-      require(e.kind == "row_count_between" || e.column.nonEmpty,
-        s"expectation ${e.name} (${e.kind}) needs a column")
-      require(e.kind != "matches" || e.values.nonEmpty,
-        s"expectation ${e.name}: matches needs the regex in values")
-      require(e.kind != "in_set" || e.values.nonEmpty,
-        s"expectation ${e.name}: in_set needs allowed values")
-      require(!(e.kind.endsWith("_between") || e.kind == "between") ||
-        e.lo.nonEmpty || e.hi.nonEmpty,
-        s"expectation ${e.name}: needs lo and/or hi")
-      require(e.maxViolationRate >= 0.0 && e.maxViolationRate <= 1.0,
-        s"expectation ${e.name}: maxViolationRate in [0,1]")
-    }
-  }
-
   def expectations(df: DataFrame, suite: Seq[Expectation]): DataFrame = {
     validateSuite(suite)
-    val cols = df.columns.toSet
-    def c(e: Expectation) = col(e.column)
-    // one agg column per expectation (indexed names — the same
-    // column may appear under several expectations)
-    val aggs = suite.zipWithIndex.flatMap { case (e, i) =>
-      def n(s: String) = s"__e${i}_$s"
-      if (e.kind != "exists" && !cols.contains(e.column) &&
-        e.kind != "row_count_between") Seq.empty
-      else e.kind match {
-        case "not_null" => Seq(countIf(c(e).isNull).as(n("v")))
-        case "between" =>
-          // try_cast, not cast: under ANSI a garbage value would
-          // ABORT the whole suite; non-ANSI cast would return NULL
-          // and silently skip it. A non-null value that fails the
-          // numeric cast (e.g. "abc") counts as a violation.
-          val d = c(e).try_cast("double")
-          val bad = (e.lo.map(d < _) ++ e.hi.map(d > _))
-            .reduce(_ || _)
-          Seq(countIf(c(e).isNotNull && (d.isNull || bad)).as(n("v")))
-        case "in_set" =>
-          Seq(countIf(c(e).isNotNull &&
-            !c(e).cast("string").isin(e.values: _*)).as(n("v")))
-        case "matches" =>
-          Seq(countIf(c(e).isNotNull &&
-            !c(e).cast("string").rlike(e.values.head)).as(n("v")))
-        case "unique" =>
-          Seq(count(c(e)).as(n("nn")),
-            count_distinct(c(e)).as(n("d")))
-        case "distinct_count_between" =>
-          Seq(count_distinct(c(e)).as(n("d")))
-        case "mean_between" =>
-          Seq(sum(c(e).cast("decimal(32,6)")).as(n("s")),
-            count(c(e)).as(n("c")))
-        case _ => Seq.empty // exists / row_count_between: n_rows only
-      }
-    }
-    val row = df.agg(count(lit(1)).as("n_rows"), aggs: _*).collect()(0)
-    val nRows = row.getAs[Long]("n_rows")
-    def long(name: String): Long = row.getAs[Long](name)
-    val report = suite.zipWithIndex.map { case (e, i) =>
-      def n(s: String) = s"__e${i}_$s"
-      val missing = e.kind != "exists" && e.kind != "row_count_between" &&
-        !cols.contains(e.column)
-      def inBounds(x: Double): Boolean =
-        e.lo.forall(x >= _) && e.hi.forall(x <= _)
-      val (viol, obs, passed, detail) =
-        if (missing)
-          (None, None, false, s"column ${e.column} absent from schema")
-        else e.kind match {
-          case "exists" =>
-            (None, None, cols.contains(e.column),
-              s"column ${e.column} present in schema")
-          case "row_count_between" =>
-            (None, Some(nRows.toDouble), inBounds(nRows.toDouble),
-              boundsDetail("row count", e))
-          case "distinct_count_between" =>
-            val d = long(n("d")).toDouble
-            (None, Some(d), inBounds(d),
-              boundsDetail(s"distinct ${e.column}", e))
-          case "mean_between" =>
-            val cnt = long(n("c"))
-            val obs = if (cnt == 0L) None
-              else Some(row.getDecimal(row.fieldIndex(n("s")))
-                .doubleValue / cnt.toDouble)
-            (None, obs, obs.exists(inBounds),
-              boundsDetail(s"mean ${e.column} (1e-6 grid)", e))
-          case "unique" =>
-            val v = long(n("nn")) - long(n("d"))
-            (Some(v), None, rateOk(v, nRows, e),
-              s"duplicated non-null ${e.column} values")
-          case kind =>
-            val v = long(n("v"))
-            val what = kind match {
-              case "not_null" => s"null ${e.column}"
-              case "between" => boundsDetail(e.column, e)
-              case "in_set" => s"${e.column} outside the allowed set"
-              case _ => s"${e.column} not matching ${e.values.head}"
-            }
-            (Some(v), None, rateOk(v, nRows, e), what)
-        }
-      (e.name, e.kind, e.column, nRows, viol,
-        viol.map(v => if (nRows == 0L) 0.0 else v.toDouble / nRows),
-        obs, passed, detail)
-    }
-    val spark = df.sparkSession
-    import spark.implicits._
-    report.toDF("name", "kind", "column", "n_rows", "violations",
-      "violation_rate", "observed", "passed", "detail")
+    val report = expectationReport(df, Nil, suite)
+    df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(report.collect(): _*), report.schema)
       .coalesce(1)
   }
-
-  private def rateOk(v: Long, n: Long, e: Expectation): Boolean =
-    if (n == 0L) true
-    else v.toDouble / n <= e.maxViolationRate
 
   private def boundsDetail(what: String, e: Expectation): String =
     (e.lo, e.hi) match {
@@ -1173,9 +1086,8 @@ object Quality {
    *
    * Scale posture: ONE map-side-combined key aggregation carries
    * every conditional count / exact decimal sum (multi-distinct via
-   * Expand, same as the global form); the per-expectation rows
-   * explode from an in-row struct array — suite-sized per key, no
-   * second pass, no union re-scan.
+   * Expand); the per-expectation rows explode from an in-row struct
+   * array — suite-sized per key, no second pass, no union re-scan.
    */
   def expectationsByKey(df: DataFrame, keys: Seq[String],
                         suite: Seq[Expectation]): DataFrame = {
@@ -1185,33 +1097,53 @@ object Quality {
       e.kind == "exists",
       s"expectation ${e.name}: checking a grouping key (${e.column}) " +
         "within its own groups is degenerate — check it globally"))
+    expectationReport(df, keys, suite)
+  }
+
+  /**
+   * The expectation report over `keys` (none = the global report):
+   * ONE aggregation carries every conditional count / exact decimal
+   * sum (multi-distinct via Expand); each expectation closes as
+   * Columns into one struct, and the structs explode in-row — one
+   * report row per (key, expectation), in suite order within a key.
+   */
+  private def expectationReport(df: DataFrame, keys: Seq[String],
+                                suite: Seq[Expectation]): DataFrame = {
     val cols = df.columns.toSet
     def c(e: Expectation) = col(e.column)
+    def n(i: Int, s: String) = s"__e${i}_$s"
+    def missing(e: Expectation) = e.kind != "exists" &&
+      e.kind != "row_count_between" && !cols.contains(e.column)
+    // one agg column per expectation (indexed names — the same
+    // column may appear under several expectations). count_if, not
+    // countIf: over no keys an empty frame is still one group, and
+    // its violation count is 0, not a null sum.
     val aggs = suite.zipWithIndex.flatMap { case (e, i) =>
-      def n(s: String) = s"__e${i}_$s"
-      if (e.kind != "exists" && e.kind != "row_count_between" &&
-        !cols.contains(e.column)) Seq.empty
+      if (missing(e)) Seq.empty
       else e.kind match {
-        case "not_null" => Seq(countIf(c(e).isNull).as(n("v")))
+        case "not_null" => Seq(count_if(c(e).isNull).as(n(i, "v")))
         case "between" =>
-          // try_cast + cast-failures-as-violations (see expectations)
+          // try_cast, not cast: under ANSI a garbage value would
+          // ABORT the whole suite; non-ANSI cast would return NULL
+          // and silently skip it. A non-null value that fails the
+          // numeric cast (e.g. "abc") counts as a violation.
           val d = c(e).try_cast("double")
           val bad = (e.lo.map(d < _) ++ e.hi.map(d > _)).reduce(_ || _)
-          Seq(countIf(c(e).isNotNull && (d.isNull || bad)).as(n("v")))
+          Seq(count_if(c(e).isNotNull && (d.isNull || bad)).as(n(i, "v")))
         case "in_set" =>
-          Seq(countIf(c(e).isNotNull &&
-            !c(e).cast("string").isin(e.values: _*)).as(n("v")))
+          Seq(count_if(c(e).isNotNull &&
+            !c(e).cast("string").isin(e.values: _*)).as(n(i, "v")))
         case "matches" =>
-          Seq(countIf(c(e).isNotNull &&
-            !c(e).cast("string").rlike(e.values.head)).as(n("v")))
+          Seq(count_if(c(e).isNotNull &&
+            !c(e).cast("string").rlike(e.values.head)).as(n(i, "v")))
         case "unique" =>
-          Seq(count(c(e)).as(n("nn")), count_distinct(c(e)).as(n("d")))
+          Seq(count(c(e)).as(n(i, "nn")), count_distinct(c(e)).as(n(i, "d")))
         case "distinct_count_between" =>
-          Seq(count_distinct(c(e)).as(n("d")))
+          Seq(count_distinct(c(e)).as(n(i, "d")))
         case "mean_between" =>
-          Seq(sum(c(e).cast("decimal(32,6)")).as(n("s")),
-            count(c(e)).as(n("c")))
-        case _ => Seq.empty
+          Seq(sum(c(e).cast("decimal(32,6)")).as(n(i, "s")),
+            count(c(e)).as(n(i, "c")))
+        case _ => Seq.empty // exists / row_count_between: n_rows only
       }
     }
     val g = df.groupBy(keys.map(col): _*)
@@ -1222,18 +1154,14 @@ object Quality {
     def nullD = lit(null).cast("double")
     def rate(v: Column) =
       when(nRows === 0L, lit(0.0)).otherwise(v.cast("double") / nD)
-    def rateOkC(v: Column, e: Expectation) =
+    def rateOk(v: Column, e: Expectation) =
       nRows === 0L || v.cast("double") / nD <= lit(e.maxViolationRate)
     def inB(x: Column, e: Expectation): Column =
       (e.lo.map(x >= _) ++ e.hi.map(x <= _))
         .reduceOption(_ && _).getOrElse(lit(true))
-    // one struct per expectation, exploded — suite-sized per key
     val entries = suite.zipWithIndex.map { case (e, i) =>
-      def n(s: String) = s"__e${i}_$s"
-      val missing = e.kind != "exists" && e.kind != "row_count_between" &&
-        !cols.contains(e.column)
       val (viol, obs, passed, detail): (Column, Column, Column, String) =
-        if (missing)
+        if (missing(e))
           (nullL, nullD, lit(false),
             s"column ${e.column} absent from schema")
         else e.kind match {
@@ -1243,26 +1171,26 @@ object Quality {
           case "row_count_between" =>
             (nullL, nD, inB(nD, e), boundsDetail("row count", e))
           case "distinct_count_between" =>
-            val d = col(n("d")).cast("double")
+            val d = col(n(i, "d")).cast("double")
             (nullL, d, inB(d, e), boundsDetail(s"distinct ${e.column}", e))
           case "mean_between" =>
-            val m = when(col(n("c")) > 0L,
-              col(n("s")).cast("double") / col(n("c")).cast("double"))
+            val m = when(col(n(i, "c")) > 0L,
+              col(n(i, "s")).cast("double") / col(n(i, "c")).cast("double"))
             (nullL, m, m.isNotNull && inB(m, e),
               boundsDetail(s"mean ${e.column} (1e-6 grid)", e))
           case "unique" =>
-            val v = col(n("nn")) - col(n("d"))
-            (v, nullD, rateOkC(v, e),
+            val v = col(n(i, "nn")) - col(n(i, "d"))
+            (v, nullD, rateOk(v, e),
               s"duplicated non-null ${e.column} values")
           case kind =>
-            val v = col(n("v"))
+            val v = col(n(i, "v"))
             val what = kind match {
               case "not_null" => s"null ${e.column}"
               case "between" => boundsDetail(e.column, e)
               case "in_set" => s"${e.column} outside the allowed set"
               case _ => s"${e.column} not matching ${e.values.head}"
             }
-            (v, nullD, rateOkC(v, e), what)
+            (v, nullD, rateOk(v, e), what)
         }
       struct(lit(e.name).as("name"), lit(e.kind).as("kind"),
         lit(e.column).as("column"),

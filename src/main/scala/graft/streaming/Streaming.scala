@@ -1109,7 +1109,9 @@ object Streaming {
    * Emits one row per processed event (Update mode); the log folds
    * per key via [[foldTrackingUpdates]]. Rows with a null actor,
    * ts, tie, actual, or forecast are dropped (the fold-family null
-   * contract).
+   * contract). The batch operator takes no ts or tie and is
+   * order-free, so it COUNTS a row whose ts or tie is null: batch ≡
+   * stream holds only on feeds without such rows.
    *
    * Scale posture: O(1) state per key (24 bytes + key), the
    * measured flat-per-key class of the streaming family.

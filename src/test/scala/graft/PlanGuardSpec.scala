@@ -1900,10 +1900,15 @@ class PlanGuardSpec extends AnyFunSuite {
   test("q407 expectations: the whole suite is ONE corpus aggregation " +
     "(multi-distinct via Expand), join-free; the report is " +
     "suite-sized") {
+    // the report is suite-sized driver data: the one corpus
+    // aggregation runs inside expectations at call time, and the
+    // returned plan is a LocalTableScan, not a lazy plan that would
+    // rescan the corpus every time the report is read
     val fin = finalPlan("q407_expectations")
       .split("== Initial Plan ==")(0)
-    assert(!fin.contains("Join"), fin.take(1500))
-    assert("Scan parquet".r.findAllIn(fin).size <= 1, fin.take(2000))
+    assert(fin.contains("LocalTableScan"), fin.take(1200))
+    assert(!fin.contains("Scan parquet"), fin.take(1200))
+    assert(!fin.contains("Exchange"), fin.take(1200))
   }
 
   test("q408 expectations-by-key: ONE key aggregation (multi-" +

@@ -678,6 +678,41 @@ class TimeSeriesSpec extends AnyFunSuite {
     }
   }
 
+  test("window operators drop null-tie rows: lagFeatures, levelShift, " +
+    "throttle, eventSequences and topPaths answer as on the clean feed") {
+    // Spark sorts a null tie FIRST in (ts, tie), ANSI engines LAST, so
+    // the row has no engine-free place in the order
+    // (TimeSeries.positioned) — it must not feed its neighbours
+    val rows = Seq(
+      ("k", ts("2024-01-01 00:00:00"), Option(1L), 1.0, "a"),
+      ("k", ts("2024-01-01 00:00:00"), None, 5.0, "b"),
+      ("k", ts("2024-01-01 00:01:00"), Option(2L), 3.0, "c"))
+    val df = rows.toDF("k", "ts", "id", "v", "t")
+    val clean = rows.filter(_._3.isDefined).toDF("k", "ts", "id", "v", "t")
+    // id 1 heads the series: no lag, not the null-tie row's 5.0
+    val lags = TimeSeries.lagFeatures(df, Seq("k"), "ts", "id", "v", Seq(1))
+      .collect().map(r =>
+        r.getAs[Long]("id") -> Option(r.getAs[Any]("v_lag1"))).toMap
+    assert(lags == Map(1L -> None, 2L -> Some(1.0)))
+    // w = 1: neither row has both neighbours once the null tie is gone
+    val shifts = TimeSeries.levelShift(df, Seq("k"), "ts", "id", "v", w = 1)
+      .collect()
+    assert(shifts.length == 2 && shifts.forall(_.isNullAt(4)))
+    def rowsOf(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("throttle", TimeSeries.throttle(_, Seq("k"), "ts", "id",
+        gapMicros = 0L)),
+      ("eventSequences", TimeSeries.eventSequences(_, Seq("k"), "ts", "t",
+        "id", maxLen = 5)),
+      ("topPaths", TimeSeries.topPaths(_, "k", "ts", "id", "t",
+        gapSeconds = 60L, maxLen = 5, k = 3)))
+    ops.foreach { case (name, f) =>
+      assert(rowsOf(f(df)) == rowsOf(f(clean)), name)
+    }
+  }
+
   test("stlDecompose: even period recovers the exact line trend " +
     "and the ±1 seasonal; remainder is 0 on the clean series") {
     // v = line (1..6) + alternating (+1, −1): [2,1,4,3,6,5], p = 2.

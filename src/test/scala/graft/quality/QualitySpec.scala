@@ -441,15 +441,45 @@ class QualitySpec extends AnyFunSuite {
     assert(e.violations.size == 2)
     Quality.expectationsOrThrow(exDf, Seq(
       Expectation("some rows", "row_count_between", lo = Some(1.0))))
-    // empty frame: rate checks pass (0 violations / 0 rows), bounds
-    // on the row count still bite
+    // empty frame: one report row per expectation of every kind.
+    // Rate checks pass (0 violations / 0 rows), bounds on the row
+    // count still bite, a mean of nothing is null and fails, and
+    // distinct counts are 0
     val empty = exDf.filter($"id" < 0L)
-    val rep = Quality.expectations(empty, Seq(
+    val suite = Seq(
       Expectation("tag never null", "not_null", "tag"),
-      Expectation("rows", "row_count_between", lo = Some(1.0))))
-      .collect().map(r => r.getAs[String]("name") ->
-        r.getAs[Boolean]("passed")).toMap
-    assert(rep("tag never null") && !rep("rows"))
+      Expectation("score range", "between", "score",
+        lo = Some(0.0), hi = Some(100.0)),
+      Expectation("tags in vocab", "in_set", "tag", values = Seq("a")),
+      Expectation("tag shape", "matches", "tag", values = Seq("^a$")),
+      Expectation("ids unique", "unique", "id"),
+      Expectation("rows", "row_count_between", lo = Some(1.0)),
+      Expectation("no ids", "distinct_count_between", "id",
+        hi = Some(0.0)),
+      Expectation("mean score", "mean_between", "score", lo = Some(0.0)),
+      Expectation("score exists", "exists", "score"),
+      Expectation("ghost column", "not_null", "nope"))
+    val rows = Quality.expectations(empty, suite).collect()
+    assert(rows.map(_.getAs[String]("name")).toSeq == suite.map(_.name))
+    val rep = rows.map(r => r.getAs[String]("name") -> r).toMap
+    // getAs[Long] reads a null as 0: read the cells as Options
+    def cell(name: String, c: String) = Option(rep(name).getAs[Any](c))
+    assert(rows.forall(_.getAs[Long]("n_rows") == 0L))
+    for (name <- Seq("tag never null", "score range", "tags in vocab",
+        "tag shape", "ids unique")) {
+      assert(cell(name, "violations") == Some(0L), name)
+      assert(cell(name, "violation_rate") == Some(0.0), name)
+      assert(rep(name).getAs[Boolean]("passed"), name)
+    }
+    assert(!rep("rows").getAs[Boolean]("passed"))
+    assert(cell("rows", "observed") == Some(0.0))
+    assert(cell("no ids", "observed") == Some(0.0))
+    assert(rep("no ids").getAs[Boolean]("passed"))
+    assert(cell("mean score", "observed").isEmpty)
+    assert(!rep("mean score").getAs[Boolean]("passed"))
+    assert(rep("score exists").getAs[Boolean]("passed"))
+    assert(!rep("ghost column").getAs[Boolean]("passed"))
+    assert(rep("ghost column").getAs[String]("detail").contains("absent"))
   }
 
   test("suggestExpectations: exists/not_null/between/in_set/unique/" +
