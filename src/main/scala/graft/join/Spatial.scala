@@ -1,7 +1,10 @@
 package graft.join
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.core.DriverFinish
 
 /**
  * Spatial radius join on planar integer coordinates — "every right
@@ -83,18 +86,31 @@ object Spatial {
    * cluster nullable string "cx:cy" of the component's min cell).
    *
    * Scale posture: ONE corpus pass buckets and checkpoints; density
-   * collapse is map-side; adjacency + components run on the DENSE
-   * CELL grid (bounded by area/cellSize², not by points) — a cell
-   * graph whose edge list fits the broadcast threshold finishes on the
-   * driver in one fetch, whatever its corridor length, and only larger
-   * grids pay the distributed rounds; the label join back is
-   * (cell_x, cell_y)-keyed. Isolated dense cells label themselves.
+   * collapse is map-side, and everything after it runs on the DENSE
+   * CELL list (bounded by area/cellSize², not by points). A dense-cell
+   * list within the broadcast threshold is one fetch plus a driver
+   * union-find over its 8-adjacency ([[graft.core.DriverFinish]], the
+   * kernel behind [[graft.llm.Dedup.components]]'s driver finish),
+   * whatever its corridor length; only larger grids pay the
+   * distributed rounds (a cell-keyed self-join for the edges, then
+   * [[graft.llm.Dedup.components]]). Either way the label join back is
+   * (cell_x, cell_y)-keyed, and isolated dense cells label themselves.
    * Choose cellSize ≈ the neighborhood radius: this clusters at grid
    * resolution, merging anything 8-adjacent.
    */
   def gridClusters(df: DataFrame, idCol: String, xCol: String,
                    yCol: String, cellSize: Long, minPts: Long)
-  : DataFrame = {
+  : DataFrame =
+    // per-cell size: the two cell coordinates plus the row overhead
+    gridClusters(df, idCol, xCol, yCol, cellSize, minPts,
+      DriverFinish.cap(df.sparkSession, 8L + 2L * 8L))
+
+  /** [[gridClusters]] with an explicit driver-finish dense-cell cap;
+   *  `cap` ≤ 0 always runs the distributed rounds, components' loop
+   *  included. */
+  private[graft] def gridClusters(df: DataFrame, idCol: String, xCol: String,
+                                  yCol: String, cellSize: Long, minPts: Long,
+                                  cap: Long): DataFrame = {
     require(cellSize > 0, s"cellSize must be > 0, got $cellSize")
     require(minPts >= 1, s"minPts must be >= 1, got $minPts")
     val base = df.filter(col(idCol).isNotNull && col(xCol).isNotNull &&
@@ -106,16 +122,53 @@ object Spatial {
     val dense = base.groupBy(col("__cx"), col("__cy"))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") >= minPts)
-      .withColumn("__cell",
-        concat(col("__cx"), lit(":"), col("__cy")))
+      .select(col("__cx"), col("__cy"))
+    val labeled = DriverFinish.fetch(dense, cap) match {
+      case Some(cells) => driverLabels(df.sparkSession, cells)
+      case None => loopLabels(dense, cap)
+    }
+    base.join(labeled, Seq("__cx", "__cy"), "left")
+      .select(col(idCol), col("__cx").as("cell_x"),
+        col("__cy").as("cell_y"), col("cluster"))
+  }
+
+  private val neighbors = for {
+    dx <- -1L to 1L; dy <- -1L to 1L if dx != 0 || dy != 0
+  } yield (dx, dy)
+
+  /** (__cx, __cy, cluster) for the fetched dense cells: union-find over
+   *  the "cx:cy" labels of 8-adjacent cells, so each cluster is its
+   *  component's minimum label in Spark's string order, as the loop's. */
+  private def driverLabels(spark: SparkSession, cells: Array[Row]): DataFrame = {
+    // a null coordinate (x or y cast to null) joins back to no point
+    val label = cells.iterator.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .map { case c @ (cx, cy) => c -> s"$cx:$cy" }.toMap
+    // a self-edge per cell keeps isolated dense cells
+    val edges = label.iterator.flatMap { case ((cx, cy), l) =>
+      Iterator((l, l)) ++ neighbors.iterator
+        .flatMap { case (dx, dy) => label.get((cx + dx, cy + dy)) }
+        .map(n => (l, n))
+    }
+    val root = DriverFinish.unionFind(StringType, edges).toMap
+    val rows = label.iterator.map { case ((cx, cy), l) => Row(cx, cy, root(l)) }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.toSeq.asJava, StructType(Seq(
+      StructField("__cx", LongType, nullable = false),
+      StructField("__cy", LongType, nullable = false),
+      StructField("cluster", StringType, nullable = false))))
+  }
+
+  /** The distributed finish: a cell-keyed self-join builds the
+   *  8-adjacency edges and [[graft.llm.Dedup.components]] labels them. */
+  private def loopLabels(denseCells: DataFrame, cap: Long): DataFrame = {
+    val dense = denseCells
+      .withColumn("__cell", concat(col("__cx"), lit(":"), col("__cy")))
       .localCheckpoint(false)
-    val offsets = for {
-      dx <- -1 to 1; dy <- -1 to 1 if dx != 0 || dy != 0
-    } yield (dx, dy)
     val probes = dense
       .select(col("__cell").as("__c1"), col("__cx"), col("__cy"))
-      .withColumn("__o", explode(array(offsets.map { case (dx, dy) =>
-        struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))
+      .withColumn("__o", explode(array(neighbors.map { case (dx, dy) =>
+        struct(lit(dx).as("dx"), lit(dy).as("dy"))
       }: _*)))
       .select(col("__c1"),
         (col("__cx") + col("__o.dx")).as("__nx"),
@@ -129,14 +182,13 @@ object Spatial {
     // grid adjacency can snake: if the graph is too big for the
     // driver finish, the label-propagation diameter is the longest
     // dense-cell corridor, far past the dedup-cluster default
-    val comp = graft.llm.Dedup.components(edges, maxIter = 100)
-    val labeled = dense.select(col("__cell"), col("__cx"), col("__cy"))
+    val comp =
+      if (cap > 0) graft.llm.Dedup.components(edges, maxIter = 100)
+      else graft.llm.Dedup.components(edges, "id1", "id2", 100, 0L)
+    dense.select(col("__cell"), col("__cx"), col("__cy"))
       .join(comp.select(col("node").as("__cell"), col("component")),
         Seq("__cell"), "left")
       .select(col("__cx"), col("__cy"),
         coalesce(col("component"), col("__cell")).as("cluster"))
-    base.join(labeled, Seq("__cx", "__cy"), "left")
-      .select(col(idCol), col("__cx").as("cell_x"),
-        col("__cy").as("cell_y"), col("cluster"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -530,7 +530,9 @@ object Dedup {
    * Algorithm: a hybrid — distributed rounds only while the graph is
    * too big for one machine (Kiveris et al., SoCC 2014). The
    * symmetric, de-duplicated edge list is built once; then one limited
-   * collect fetches at most cap + 1 of its rows, where cap is
+   * collect ([[graft.core.DriverFinish]], shared with
+   * [[graft.join.Spatial.gridClusters]]) fetches at most cap + 1 of its
+   * rows, where cap is
    * `spark.sql.autoBroadcastJoinThreshold` (the session's own "small
    * enough to ship whole" line) over a per-edge size estimate from the
    * id type's `defaultSize`.
@@ -567,12 +569,10 @@ object Dedup {
    */
   def components(pairs: DataFrame, id1: String = "id1", id2: String = "id2",
                  maxIter: Int = 20): DataFrame = {
-    val threshold = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val idType = symmetricEdges(pairs, id1, id2).schema("a").dataType
-    // per-edge size: two ids plus the row overhead Spark's own
-    // size estimate charges (EstimationUtils.getSizePerRow)
-    val cap = if (threshold <= 0) 0L else threshold / (8L + 2L * idType.defaultSize)
-    components(pairs, id1, id2, maxIter, cap)
+    // per-edge size: two ids plus the row overhead
+    components(pairs, id1, id2, maxIter,
+      graft.core.DriverFinish.cap(pairs.sparkSession, 8L + 2L * idType.defaultSize))
   }
 
   /** [[components]] with an explicit driver-finish edge cap; `cap` ≤ 0
@@ -587,17 +587,20 @@ object Dedup {
     // the result schema on both paths.
     val init = edges.groupBy(col("a").as("node"))
       .agg(least(col("a"), min(col("b"))).as("component"))
+    val idType = init.schema("node").dataType
     val small =
-      if (cap <= 0 || !driverKeyed(init.schema("node").dataType)) None
-      else {
-        val rows = edges.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-        // a null id stays on the loop, whose null handling is the contract
-        if (rows.length <= cap && !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-          Some(rows)
-        else None
-      }
+      if (!graft.core.DriverFinish.hashable(idType)) None
+      // a null id stays on the loop, whose null handling is the contract
+      else graft.core.DriverFinish.fetch(edges, cap)
+        .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
     val out = small match {
-      case Some(rows) => unionFind(pairs.sparkSession, rows, init.schema)
+      case Some(rows) =>
+        // every node appears as `a` in the symmetric edge list
+        val labels = graft.core.DriverFinish.unionFind(idType,
+          rows.iterator.map(r => (r.get(0), r.get(1))))
+        import scala.jdk.CollectionConverters._
+        pairs.sparkSession.createDataFrame(
+          labels.map { case (n, c) => Row(n, c) }.asJava, init.schema)
       case None => propagate(edges, init, maxIter)
     }
     edges.unpersist()
@@ -608,50 +611,6 @@ object Dedup {
     pairs.select(col(id1).as("a"), col(id2).as("b"))
       .unionByName(pairs.select(col(id2).as("a"), col(id1).as("b")))
       .distinct()
-
-  /** Id types whose collected values are equal exactly when Spark's
-   *  grouping keys are — the driver finish hashes them. Floats (NaN
-   *  and -0.0 normalization), binary (array identity), collated
-   *  strings and the rest stay on the loop. */
-  private def driverKeyed(t: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    t match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case s: StringType => s.collationId == StringType.collationId
-      case _ => false
-    }
-  }
-
-  /** Driver-side finish over the complete symmetric edge list: every
-   *  node appears as `a`. A merge keeps the smaller root in Spark's
-   *  ordering for the id type (catalyst values: UTF8String byte order
-   *  for strings, not String.compareTo's UTF-16 order). */
-  private def unionFind(spark: SparkSession, edges: Array[Row],
-                        schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val idType = schema("node").dataType
-    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(idType)
-    val toKey = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(idType)
-    val slots = collection.mutable.HashMap.empty[Any, Int]
-    val ids = collection.mutable.ArrayBuffer.empty[Any]
-    val keys = collection.mutable.ArrayBuffer.empty[Any]
-    val parent = collection.mutable.ArrayBuffer.empty[Int]
-    def slot(v: Any): Int = slots.getOrElseUpdate(v, {
-      ids += v; keys += toKey(v); parent += parent.length; parent.length - 1
-    })
-    def find(i: Int): Int = { // path halving
-      var x = i
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    edges.foreach { r =>
-      val (x, y) = (find(slot(r.get(0))), find(slot(r.get(1))))
-      if (x != y) { if (ord.lt(keys(x), keys(y))) parent(y) = x else parent(x) = y }
-    }
-    val rows = ids.indices.map(i => Row(ids(i), ids(find(i))))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-  }
 
   /** The distributed finish: min-label propagation + pointer jumping
    *  from `init`, at most `maxIter` rounds (see [[components]]). */

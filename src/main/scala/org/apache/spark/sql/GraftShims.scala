@@ -83,10 +83,12 @@ object GraftShims {
    *  LogicalRDD at the root, optionally under projections/aliases. A
    *  LogicalRDD found DEEPER in the tree belongs to some upstream
    *  checkpointed input shared by other live frames (first seen:
-   *  Spatial.gridClusters, where round-1 labels embed the dense-cell
-   *  checkpoint — a collectFirst here dropped ITS blocks and every
-   *  later round died with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, local
-   *  checkpoints being unrecoverable by design).
+   *  Spatial.gridClusters, which feeds components an edge list built
+   *  on its dense-cell checkpoint when its grid is too big for the
+   *  driver finish; round-1 labels embed that checkpoint — a
+   *  collectFirst here dropped ITS blocks and every later round died
+   *  with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, local checkpoints being
+   *  unrecoverable by design).
    *
    *  ==CALLER CONTRACT (destructive — read before adding a call)==
    *  This irreversibly destroys the checkpoint's blocks; local

@@ -268,7 +268,8 @@ class LlmSpec extends AnyFunSuite {
     // Before round 15's fix, the loop's checkpoint-block release
     // matched the FIRST LogicalRDD anywhere in the label plan — for
     // an edge list built on a checkpointed input (exactly what
-    // Spatial.gridClusters feeds in) that was the INPUT's checkpoint,
+    // Spatial.gridClusters feeds in on its loop path, when the dense
+    // cells overflow its driver finish) that was the INPUT's checkpoint,
     // and dropping its blocks killed every later round with
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. The path needs >2 rounds so
     // the upstream frame is re-read after the first drop, and the
