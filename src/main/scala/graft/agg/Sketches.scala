@@ -3,6 +3,8 @@ package graft.agg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable
+
 /**
  * Mergeable distinct-count sketches (Apache DataSketches HLL, the
  * `hll_sketch_agg` family Spark ships natively) — the pre-aggregation
@@ -198,22 +200,22 @@ object Sketches {
       .setScale(0, BigDecimal.RoundingMode.CEILING).toLong
     import items.sparkSession.implicits._
     val candidates = items.as[String].mapPartitions { it =>
-      val counters = scala.collection.mutable.HashMap.empty[String, Long]
-      it.foreach { item =>
-        if (counters.contains(item)) counters(item) += 1L
-        else if (counters.size < k) counters(item) = 1L
-        else {
-          // decrement-all step; drop zeroed counters
-          val dead = scala.collection.mutable.ArrayBuffer.empty[String]
-          counters.mapValuesInPlace((_, v) => v - 1L)
-          counters.foreach { case (key, v) => if (v <= 0L) dead += key }
-          dead.foreach(counters.remove)
-        }
-      }
+      val counters = mutable.HashMap.empty[String, Long]
+      it.foreach(misraGries(counters, k, _))
       counters.keysIterator
     }.toDF("item").distinct()
     items.join(broadcast(candidates), Seq("item"), "leftsemi")
       .groupBy("item").agg(count(lit(1)).as("n_item"))
       .filter(col("n_item") >= thr)
   }
+
+  /** One Misra-Gries step over at most `k` counters: count `item` if
+   *  it is tracked, track it if a counter is free, else decrement every
+   *  counter and drop the ones that reach zero. */
+  private[graft] def misraGries(counters: mutable.Map[String, Long], k: Int,
+                                item: String): Unit =
+    if (counters.contains(item)) counters(item) += 1L
+    else if (counters.size < k) counters(item) = 1L
+    else counters.filterInPlace((_, v) => v > 1L)
+      .mapValuesInPlace((_, v) => v - 1L)
 }

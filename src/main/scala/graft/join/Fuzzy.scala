@@ -1,7 +1,10 @@
 package graft.join
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftShims.{column => gcol, expression => gexpr}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{DamerauLevenshteinExpr, JaroWinklerExpr}
 
 /**
  * Edit-distance similarity self-join (fuzzy entity matching /
@@ -51,38 +54,21 @@ object Fuzzy {
 
   /**
    * All unordered pairs of `df` rows whose `strCol` values are within
-   * Levenshtein distance `maxDist`. Output: (id1, id2, dist). Null
-   * strings never match; identical ids never pair with themselves.
+   * Levenshtein distance `maxDist`. Output: (id1, id2, dist). Rows with
+   * a null id or a null string never pair; identical ids never pair
+   * with themselves.
    */
   def selfJoin(df: DataFrame, idCol: String, strCol: String,
                maxDist: Int): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val strs = df.filter(col(strCol).isNotNull)
-      .select(col(idCol).as("__mid"), col(strCol).as("__ms"))
-      .localCheckpoint(false)
+    val strs = strings(df, idCol, strCol, minLen = 0)
     // collapse exact duplicates: segments/probes/verification run over
-    // DISTINCT strings (min-id representative); pairs re-expand below
+    // DISTINCT strings (min-id representative); pairs re-expand after
     val distinctPairs =
       distinctSelfJoin(strs.groupBy(col("__ms"))
         .agg(min(col("__mid")).as("__id"))
         .select(col("__id"), col("__ms").as("__s")), maxDist)
-    // re-expand: every (id in group(s1)) × (id in group(s2)) pair
-    // carries the distinct-pair's distance; orientation re-derived
-    // from the member ids
-    val cross = distinctPairs
-      .join(strs.select(col("__ms").as("__s1"), col("__mid").as("__ia")),
-        Seq("__s1"))
-      .join(strs.select(col("__ms").as("__s2"), col("__mid").as("__ib")),
-        Seq("__s2"))
-      .select(least(col("__ia"), col("__ib")).as("id1"),
-        greatest(col("__ia"), col("__ib")).as("id2"), col("dist"))
-    // identical strings are dist-0 pairs (the distinct-string pass
-    // can never see them): in-group cross products, id-ordered
-    val dup = strs.as("a").join(strs.as("b"),
-        col("a.__ms") === col("b.__ms") && col("a.__mid") < col("b.__mid"))
-      .select(col("a.__mid").as("id1"), col("b.__mid").as("id2"),
-        lit(0).as("dist"))
-    cross.unionByName(dup)
+    expand(strs, distinctPairs, "dist", lit(0))
   }
 
   /**
@@ -106,9 +92,9 @@ object Fuzzy {
    * The similarity kernel is the DuckDB-pinned
    * [[graft.functions.StringSimilarity.jaroWinkler]] (native codegen'd
    * expression). Empty/null strings never pair (JW of an empty string
-   * is 0 by that convention). Exact duplicates are collapsed before
-   * the block join and re-expanded (the [[selfJoin]] recipe): identical
-   * strings pair at sim 1.0.
+   * is 0 by that convention), nor do rows with a null id. Exact
+   * duplicates are collapsed before the block join and re-expanded
+   * (the [[selfJoin]] recipe): identical strings pair at sim 1.0.
    *
    * Output: (id1, id2, sim) with id1 < id2.
    *
@@ -125,42 +111,9 @@ object Fuzzy {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold in (0,1], got $threshold")
     require(lengthBand >= 0, s"lengthBand >= 0, got $lengthBand")
-    import org.apache.spark.sql.GraftShims.{column => gcol, expression => gexpr}
-    def blockChar(c: Column): Column = {
-      val first = substring(c, 1, 1)
-      if (caseFold) lower(first) else first
-    }
-    val strs = df.filter(col(strCol).isNotNull && length(col(strCol)) >= 1)
-      .select(col(idCol).as("__mid"), col(strCol).as("__ms"))
-      .localCheckpoint(false)
-    val d = strs.groupBy(col("__ms")).agg(min(col("__mid")).as("__id"))
-    val idx = d.select(col("__id").as("__ida"), col("__ms").as("__sa"),
-      blockChar(col("__ms")).as("__c"),
-      length(col("__ms")).as("__la"))
-    val probe = d.select(col("__id").as("__idb"), col("__ms").as("__sb"),
-        blockChar(col("__ms")).as("__c"),
-        length(col("__ms")).as("__lb"))
-      .withColumn("__la", explode(sequence(
-        greatest(lit(1), col("__lb") - lengthBand),
-        col("__lb") + lengthBand)))
-    val distinctPairs = idx.join(probe, Seq("__c", "__la"))
-      .filter(col("__ida") < col("__idb"))
-      .withColumn("sim", gcol(graft.functions.JaroWinklerExpr(
-        gexpr(col("__sa")), gexpr(col("__sb")))))
-      .filter(col("sim") >= threshold)
-      .select(col("__sa").as("__s1"), col("__sb").as("__s2"), col("sim"))
-    val cross = distinctPairs
-      .join(strs.select(col("__ms").as("__s1"), col("__mid").as("__ia")),
-        Seq("__s1"))
-      .join(strs.select(col("__ms").as("__s2"), col("__mid").as("__ib")),
-        Seq("__s2"))
-      .select(least(col("__ia"), col("__ib")).as("id1"),
-        greatest(col("__ia"), col("__ib")).as("id2"), col("sim"))
-    val dup = strs.as("a").join(strs.as("b"),
-        col("a.__ms") === col("b.__ms") && col("a.__mid") < col("b.__mid"))
-      .select(col("a.__mid").as("id1"), col("b.__mid").as("id2"),
-        lit(1.0).as("sim"))
-    cross.unionByName(dup)
+    blockedSelfJoin(df, idCol, strCol, lengthBand, caseFold,
+      gcol(JaroWinklerExpr(gexpr(col("__sa")), gexpr(col("__sb")))),
+      col("sim") >= threshold, "sim", lit(1.0))
   }
 
   /**
@@ -172,9 +125,9 @@ object Fuzzy {
    * DESIGN — note a first-character edit moves a pair out of the
    * block). The kernel is the DuckDB-pinned byte-level
    * [[graft.functions.StringSimilarity.damerauLevenshtein]] (native
-   * codegen'd expression). Exact duplicates pair at distance 0
-   * without paying the kernel (the [[selfJoin]] distinct-collapse
-   * recipe).
+   * codegen'd expression). Empty/null strings and null ids never
+   * pair. Exact duplicates pair at distance 0 without paying the
+   * kernel (the [[selfJoin]] distinct-collapse recipe).
    *
    * `lengthBand` defaults to `maxDist` — any pair within distance d
    * differs in length by at most d, so the default band loses nothing
@@ -189,43 +142,10 @@ object Fuzzy {
                       maxDist: Long, lengthBand: Int = -1,
                       caseFold: Boolean = false): DataFrame = {
     require(maxDist >= 0, s"maxDist >= 0, got $maxDist")
-    val band = if (lengthBand < 0) maxDist.toInt else lengthBand
-    import org.apache.spark.sql.GraftShims.{column => gcol, expression => gexpr}
-    def blockChar(c: Column): Column = {
-      val first = substring(c, 1, 1)
-      if (caseFold) lower(first) else first
-    }
-    val strs = df.filter(col(strCol).isNotNull && length(col(strCol)) >= 1)
-      .select(col(idCol).as("__mid"), col(strCol).as("__ms"))
-      .localCheckpoint(false)
-    val d = strs.groupBy(col("__ms")).agg(min(col("__mid")).as("__id"))
-    val idx = d.select(col("__id").as("__ida"), col("__ms").as("__sa"),
-      blockChar(col("__ms")).as("__c"),
-      length(col("__ms")).as("__la"))
-    val probe = d.select(col("__id").as("__idb"), col("__ms").as("__sb"),
-        blockChar(col("__ms")).as("__c"),
-        length(col("__ms")).as("__lb"))
-      .withColumn("__la", explode(sequence(
-        greatest(lit(1), col("__lb") - band),
-        col("__lb") + band)))
-    val distinctPairs = idx.join(probe, Seq("__c", "__la"))
-      .filter(col("__ida") < col("__idb"))
-      .withColumn("dist", gcol(graft.functions.DamerauLevenshteinExpr(
-        gexpr(col("__sa")), gexpr(col("__sb")))))
-      .filter(col("dist") <= maxDist)
-      .select(col("__sa").as("__s1"), col("__sb").as("__s2"), col("dist"))
-    val cross = distinctPairs
-      .join(strs.select(col("__ms").as("__s1"), col("__mid").as("__ia")),
-        Seq("__s1"))
-      .join(strs.select(col("__ms").as("__s2"), col("__mid").as("__ib")),
-        Seq("__s2"))
-      .select(least(col("__ia"), col("__ib")).as("id1"),
-        greatest(col("__ia"), col("__ib")).as("id2"), col("dist"))
-    val dup = strs.as("a").join(strs.as("b"),
-        col("a.__ms") === col("b.__ms") && col("a.__mid") < col("b.__mid"))
-      .select(col("a.__mid").as("id1"), col("b.__mid").as("id2"),
-        lit(0L).as("dist"))
-    cross.unionByName(dup)
+    blockedSelfJoin(df, idCol, strCol,
+      if (lengthBand < 0) maxDist.toInt else lengthBand, caseFold,
+      gcol(DamerauLevenshteinExpr(gexpr(col("__sa")), gexpr(col("__sb")))),
+      col("dist") <= maxDist, "dist", lit(0L))
   }
 
   /**
@@ -236,13 +156,15 @@ object Fuzzy {
    * length within `lengthBand`; out-of-block pairs are out of the
    * result BY DESIGN). Same DuckDB-pinned codegen'd kernel, same
    * distinct-string collapse on both sides (duplicate strings pay the
-   * kernel once and re-expand to ids).
+   * kernel once and re-expand to ids). Rows with a null id, a null
+   * string or an empty string on either side never pair: a linkage
+   * pair without an id cannot be acted on.
    *
    * Output: (left_id, right_id, sim) — no ordering constraint between
    * the id spaces (they are different relations).
    *
-   * Scale posture: both distinct-string relations are checkpointed;
-   * the block join keys on (char, left-length) with the right side
+   * Scale posture: both (id, string) relations are checkpointed; the
+   * block join keys on (char, left-length) with the right side
    * exploding its `2·band+1` candidate lengths — per-block
    * verification, never all-pairs; the id re-expansion is two
    * string-keyed equi joins.
@@ -255,37 +177,85 @@ object Fuzzy {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold in (0,1], got $threshold")
     require(lengthBand >= 0, s"lengthBand >= 0, got $lengthBand")
-    import org.apache.spark.sql.GraftShims.{column => gcol, expression => gexpr}
-    def blockChar(c: Column): Column = {
-      val first = substring(c, 1, 1)
-      if (caseFold) lower(first) else first
-    }
-    def side(df: DataFrame, idCol: String, strCol: String,
-             id: String, s: String): DataFrame =
-      df.filter(col(strCol).isNotNull && length(col(strCol)) >= 1)
-        .select(col(idCol).as(id), col(strCol).as(s))
-        .localCheckpoint(false)
-    val l = side(left, leftIdCol, leftStrCol, "__lid", "__ls")
-    val r = side(right, rightIdCol, rightStrCol, "__rid", "__rs")
-    val idx = l.select(col("__ls")).distinct()
-      .select(col("__ls"), blockChar(col("__ls")).as("__c"),
-        length(col("__ls")).as("__la"))
-    val probe = r.select(col("__rs")).distinct()
-      .select(col("__rs"), blockChar(col("__rs")).as("__c"),
-        length(col("__rs")).as("__lb"))
-      .withColumn("__la", explode(sequence(
-        greatest(lit(1), col("__lb") - lengthBand),
-        col("__lb") + lengthBand)))
-    val distinctPairs = idx.join(probe, Seq("__c", "__la"))
-      .withColumn("sim", gcol(graft.functions.JaroWinklerExpr(
-        gexpr(col("__ls")), gexpr(col("__rs")))))
+    val l = strings(left, leftIdCol, leftStrCol, minLen = 1)
+      .select(col("__mid").as("__lid"), col("__ms").as("__ls"))
+    val r = strings(right, rightIdCol, rightStrCol, minLen = 1)
+      .select(col("__mid").as("__rid"), col("__ms").as("__rs"))
+    blocked(l.select(col("__ls")).distinct(), "__ls",
+        r.select(col("__rs")).distinct(), "__rs", lengthBand, caseFold)
+      .withColumn("sim",
+        gcol(JaroWinklerExpr(gexpr(col("__ls")), gexpr(col("__rs")))))
       .filter(col("sim") >= threshold)
       .select(col("__ls"), col("__rs"), col("sim"))
-    distinctPairs
       .join(l, Seq("__ls"))
       .join(r, Seq("__rs"))
       .select(col("__lid").as("left_id"), col("__rid").as("right_id"),
         col("sim"))
+  }
+
+  /** The rows with a non-null id and a non-null string of at least
+   *  `minLen` characters, as (`__mid`, `__ms`) behind one lazy local
+   *  checkpoint: the collapse and the re-expansion read it, not `df`. */
+  private def strings(df: DataFrame, idCol: String, strCol: String,
+                      minLen: Int): DataFrame =
+    df.filter(col(idCol).isNotNull && col(strCol).isNotNull &&
+        length(col(strCol)) >= minLen)
+      .select(col(idCol).as("__mid"), col(strCol).as("__ms"))
+      .localCheckpoint(false)
+
+  /** The pinned block join: same first character (lower-cased iff
+   *  `caseFold`) on (`__c`, `__la`), the `right` side exploding its
+   *  candidate lengths `[max(1, l − band), l + band]`. */
+  private def blocked(left: DataFrame, ls: String, right: DataFrame,
+                      rs: String, band: Int, caseFold: Boolean): DataFrame = {
+    def first(s: String): Column = {
+      val c = substring(col(s), 1, 1)
+      if (caseFold) lower(c) else c
+    }
+    left.withColumn("__c", first(ls)).withColumn("__la", length(col(ls)))
+      .join(right.withColumn("__c", first(rs))
+        .withColumn("__la", explode(sequence(
+          greatest(lit(1), length(col(rs)) - band), length(col(rs)) + band))),
+        Seq("__c", "__la"))
+  }
+
+  /** The blocked self-join over each distinct string's min-id
+   *  representative: `kernel` over (`__sa`, `__sb`) scores the in-block
+   *  pairs with `__ida < __idb` as `name`, `cut` keeps the matches. */
+  private def blockedSelfJoin(df: DataFrame, idCol: String, strCol: String,
+                              band: Int, caseFold: Boolean, kernel: Column,
+                              cut: Column, name: String,
+                              same: Column): DataFrame = {
+    val strs = strings(df, idCol, strCol, minLen = 1)
+    val d = strs.groupBy(col("__ms")).agg(min(col("__mid")).as("__id"))
+    val distinctPairs = blocked(
+        d.select(col("__id").as("__ida"), col("__ms").as("__sa")), "__sa",
+        d.select(col("__id").as("__idb"), col("__ms").as("__sb")), "__sb",
+        band, caseFold)
+      .filter(col("__ida") < col("__idb"))
+      .withColumn(name, kernel)
+      .filter(cut)
+      .select(col("__sa").as("__s1"), col("__sb").as("__s2"), col(name))
+    expand(strs, distinctPairs, name, same)
+  }
+
+  /** Distinct-string pairs (`__s1`, `__s2`, `score`) back to id pairs
+   *  (id1 < id2): every id of `__s1` × every id of `__s2` at the pair's
+   *  score, plus the pairs of rows sharing one string at `same`. */
+  private def expand(strs: DataFrame, pairs: DataFrame, score: String,
+                     same: Column): DataFrame = {
+    val cross = pairs
+      .join(strs.select(col("__ms").as("__s1"), col("__mid").as("__ia")),
+        Seq("__s1"))
+      .join(strs.select(col("__ms").as("__s2"), col("__mid").as("__ib")),
+        Seq("__s2"))
+      .select(least(col("__ia"), col("__ib")).as("id1"),
+        greatest(col("__ia"), col("__ib")).as("id2"), col(score))
+    val dup = strs.as("a").join(strs.as("b"),
+        col("a.__ms") === col("b.__ms") && col("a.__mid") < col("b.__mid"))
+      .select(col("a.__mid").as("id1"), col("b.__mid").as("id2"),
+        same.as(score))
+    cross.unionByName(dup)
   }
 
   /** The PassJoin kernel over a relation of DISTINCT strings

@@ -356,71 +356,9 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         blockCols: Seq[String], shingleN: Int = 3,
                         threshold: Double = 0.5): DataFrame = {
-    // Postings (doc, shingle-hash), one digest per shingle. The
-    // explicit not-null filter on (id, blockCols) matches the
-    // null-filters the downstream joins would push into each branch,
-    // keeping the branches canonically equal for exchange reuse.
-    // (Null ids / block values never joined anyway.)
-    val notNull = (idCol +: blockCols).map(col(_).isNotNull).reduce(_ && _)
-    // xxhash64, not md5i: the verified output (id1, id2, jaccard) is
-    // HASH-AGNOSTIC — prefix-filter soundness holds under any global
-    // total order, and Jaccard over injectively-hashed sets equals
-    // Jaccard over the string sets (64-bit collisions: ~(n²/2⁶⁵) ≈
-    // never) — so the cheapest injective hash wins. Measured 1.3 s/pass
-    // cheaper than md5 at sf0.1, and this pass runs twice (frequency
-    // aggregation + postings join). md5i stays in the minhash/
-    // decontamination paths, whose oracles must replay hash VALUES.
-    // NULL-GUARD: unlike md5i, xxhash64 maps null to its SEED (42) —
-    // unguarded, every empty document would hash to {42} and pair with
-    // every other empty document at jaccard 1.0.
-    val postings = spread(df.where(notNull) // project-then-spread (§2.3)
-        .select((blockCols :+ idCol :+ textCol).distinct.map(col): _*))
-      .select((blockCols.map(col) :+ col(idCol).as("__id") :+
-        explode_outer(shingles(col(textCol), shingleN)).as("__s")): _*)
-      .select((col("__id") +: blockCols.map(col)) :+
-        when(col("__s").isNotNull, xxhash64(col("__s"))).as("__h"): _*)
-    // Global document frequency per shingle — defines the rare-first
-    // order. Map-side partial count keeps the aggregation linear; the
-    // postings⋈freq join shuffles by shingle hash, where AQE skew
-    // splitting handles the hot keys.
-    val freq = postings.groupBy("__h").agg(count(lit(1)).as("__f"))
-    // Per-doc shingle sets sorted by (freq asc, hash asc). Inner join
-    // drops empty docs (null __h) — they cannot pair anyway (J = 0).
-    // Materialization point: the FLAT (id, block, hash, freq) relation
-    // rides a lazy localCheckpoint, not the nested-array `sh` above it.
-    // Four consumers read `sh` (both prefix sides + both verification
-    // joins) and exchange reuse does not reliably fire across them, so
-    // something must materialize once — but a CacheManager persist()
-    // leaks until an explicit unpersist this lazy operator has no place
-    // to issue, and checkpointing `sh` itself pays a row-serialized
-    // encode of the nested long arrays (measured ~1.3× the whole query
-    // at sf0.1). Flat longs encode cheap; everything expensive to
-    // RECOMPUTE (corpus scan, shingle explode, hashing, the frequency
-    // shuffle join) sits below this line, while the groupBy above it
-    // re-runs per consumer reading checkpoint blocks — and its exchange
-    // is canonically identical across all four consumers, so AQE stage
-    // reuse shuffles it once. Checkpoint blocks are ContextCleaner-
-    // managed: they free themselves when the returned frame is garbage-
-    // collected, so a long-lived session running many dedup passes
-    // accumulates nothing. Lazy (eager=false) keeps the operator
-    // composable — nothing executes until the caller's action.
-    // DISK_ONLY, not MEMORY_AND_DISK: the flat-long blocks re-read
-    // cheaply, and keeping them OUT of unified memory stops them
-    // competing with the four consumers' execution memory — measured
-    // best-of-3 7.8 → 5.5 s (GC 233 → 104 ms, leftover storage
-    // 37 → 10 MB) on the same harness at HIGHER machine load.
-    val flat = postings.join(freq, Seq("__h"))
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val sh = flat
-      .groupBy((col("__id") +: blockCols.map(col)): _*)
-      .agg(transform(array_sort(collect_set(struct(col("__f"), col("__h")))),
-        s => s.getField("__h")).as("__sh"))
-      .withColumn("__n", size(col("__sh")))
-    // τ-prefix explode: t = ⌈τ·n⌉ computed with a 1e-9 slack so float
-    // rounding can only LENGTHEN the prefix (longer prefix stays sound).
-    val t = ceil(lit(threshold) * col("__n") - lit(1e-9)).cast("int")
+    val sh = rareFirstSets(df, idCol, textCol, blockCols, shingleN)
     val pre = sh.select((blockCols.map(col) :+ col("__id") :+ col("__n") :+
-      explode(slice(col("__sh"), lit(1), greatest(col("__n") - t + 1, lit(0)))).as("__p")): _*)
+      explode(slice(col("__sh"), lit(1), prefixLen(threshold))).as("__p")): _*)
     val a = pre.select(blockCols.map(col) :+ col("__id").as("id1") :+
       col("__n").as("__n1") :+ col("__p"): _*)
     val b = pre.select(blockCols.map(col) :+ col("__id").as("id2") :+
@@ -474,29 +412,9 @@ object Dedup {
   : DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold in (0,1], got $threshold")
-    // spread (r19): shingle explode + hashing are scan-stage work —
-    // single-task over a one-split input (guide §2.5; no-op when split)
-    val postings = spread(df.where(col(idCol).isNotNull) // project-then-spread (§2.3)
-        .select(col(idCol), col(textCol)))
-      .select(col(idCol).as("__id"),
-        explode_outer(shingles(col(textCol), shingleN)).as("__s"))
-      .select(col("__id"),
-        when(col("__s").isNotNull, xxhash64(col("__s"))).as("__h"))
-    val freq = postings.groupBy("__h").agg(count(lit(1)).as("__f"))
-    // the ngramJaccardPairs materialization rationale applies
-    // verbatim: flat longs checkpoint cheap, consumers re-read
-    val flat = postings.join(freq, Seq("__h"))
-      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val sh = flat
-      .groupBy(col("__id"))
-      .agg(transform(array_sort(collect_set(struct(col("__f"), col("__h")))),
-        s => s.getField("__h")).as("__sh"))
-      .withColumn("__n", size(col("__sh")))
-    // 1e-9 slack: float rounding can only LENGTHEN the prefix (sound)
-    val t = ceil(lit(threshold) * col("__n") - lit(1e-9)).cast("int")
+    val sh = rareFirstSets(df, idCol, textCol, Nil, shingleN)
     val pre = sh.select(col("__id").as("src_id"), col("__n").as("__na"),
-      explode(slice(col("__sh"), lit(1),
-        greatest(col("__n") - t + 1, lit(0)))).as("__p"))
+      explode(slice(col("__sh"), lit(1), prefixLen(threshold))).as("__p"))
     val full = sh.select(col("__id").as("dst_id"), col("__n").as("__nb"),
       explode(col("__sh")).as("__p"))
     val cands = pre.join(full, Seq("__p"))
@@ -515,6 +433,88 @@ object Dedup {
         col("overlap").cast("double") / col("__na").cast("double"))
       .filter(col("containment") >= threshold)
       .select("src_id", "dst_id", "overlap", "containment")
+  }
+
+  /** The rare-first shingle sets [[ngramJaccardPairs]] and
+   *  [[containmentPairs]] prefix-join: one row per document with a
+   *  non-null id (and non-null `blockCols`) and at least one shingle,
+   *  as (`__id`, blockCols…, `__sh`, `__n`) — `__sh` the document's
+   *  distinct shingle hashes sorted by (global document frequency
+   *  asc, hash asc), `__n` its size. */
+  private def rareFirstSets(df: DataFrame, idCol: String, textCol: String,
+                            blockCols: Seq[String], shingleN: Int): DataFrame = {
+    // Postings (doc, shingle-hash), one digest per shingle. The
+    // explicit not-null filter on (id, blockCols) matches the
+    // null-filters the downstream joins would push into each branch,
+    // keeping the branches canonically equal for exchange reuse.
+    // (Null ids / block values never joined anyway.)
+    val notNull = (idCol +: blockCols).map(col(_).isNotNull).reduce(_ && _)
+    // xxhash64, not md5i: the verified outputs are HASH-AGNOSTIC —
+    // prefix-filter soundness holds under any global total order, and
+    // set overlap over injectively-hashed sets equals overlap over the
+    // string sets (64-bit collisions: ~(n²/2⁶⁵) ≈ never) — so the
+    // cheapest injective hash wins. Measured 1.3 s/pass cheaper than
+    // md5 at sf0.1, and this pass runs twice (frequency aggregation +
+    // postings join). md5i stays in the minhash/decontamination paths,
+    // whose oracles must replay hash VALUES.
+    // NULL-GUARD: unlike md5i, xxhash64 maps null to its SEED (42) —
+    // unguarded, every empty document would hash to {42} and pair with
+    // every other empty document.
+    // spread: shingle explode + hashing are scan-stage work — single-
+    // task over a one-split input (guide §2.5; no-op when split).
+    val postings = spread(df.where(notNull) // project-then-spread (§2.3)
+        .select((blockCols :+ idCol :+ textCol).distinct.map(col): _*))
+      .select((blockCols.map(col) :+ col(idCol).as("__id") :+
+        explode_outer(shingles(col(textCol), shingleN)).as("__s")): _*)
+      .select((col("__id") +: blockCols.map(col)) :+
+        when(col("__s").isNotNull, xxhash64(col("__s"))).as("__h"): _*)
+    // Global document frequency per shingle — defines the rare-first
+    // order. Map-side partial count keeps the aggregation linear; the
+    // postings⋈freq join shuffles by shingle hash, where AQE skew
+    // splitting handles the hot keys.
+    val freq = postings.groupBy("__h").agg(count(lit(1)).as("__f"))
+    // Per-doc shingle sets sorted by (freq asc, hash asc). Inner join
+    // drops empty docs (null __h) — they cannot pair anyway.
+    // Materialization point: the FLAT (id, block, hash, freq) relation
+    // rides a lazy localCheckpoint, not the nested-array sets above it.
+    // Four consumers read the sets (both prefix sides + both
+    // verification joins) and exchange reuse does not reliably fire
+    // across them, so something must materialize once — but a
+    // CacheManager persist() leaks until an explicit unpersist these
+    // lazy operators have no place to issue, and checkpointing the sets
+    // themselves pays a row-serialized encode of the nested long arrays
+    // (measured ~1.3× the whole query at sf0.1). Flat longs encode
+    // cheap; everything expensive to RECOMPUTE (corpus scan, shingle
+    // explode, hashing, the frequency shuffle join) sits below this
+    // line, while the groupBy above it re-runs per consumer reading
+    // checkpoint blocks — and its exchange is canonically identical
+    // across all four consumers, so AQE stage reuse shuffles it once.
+    // Checkpoint blocks are ContextCleaner-managed: they free
+    // themselves when the returned frame is garbage-collected, so a
+    // long-lived session running many dedup passes accumulates
+    // nothing. Lazy (eager=false) keeps the operators composable —
+    // nothing executes until the caller's action.
+    // DISK_ONLY, not MEMORY_AND_DISK: the flat-long blocks re-read
+    // cheaply, and keeping them OUT of unified memory stops them
+    // competing with the four consumers' execution memory — measured
+    // best-of-3 7.8 → 5.5 s (GC 233 → 104 ms, leftover storage
+    // 37 → 10 MB) on the same harness at HIGHER machine load.
+    postings.join(freq, Seq("__h"))
+      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      .groupBy((col("__id") +: blockCols.map(col)): _*)
+      .agg(transform(array_sort(collect_set(struct(col("__f"), col("__h")))),
+        s => s.getField("__h")).as("__sh"))
+      .withColumn("__n", size(col("__sh")))
+  }
+
+  /** The τ-prefix length `n − ⌈τ·n⌉ + 1` (at least 0) of an
+   *  `__n`-element rare-first set: the prefix that must hold a shared
+   *  shingle of any pair reaching `threshold`. ⌈τ·n⌉ carries a 1e-9
+   *  slack so float rounding can only LENGTHEN the prefix (a longer
+   *  prefix stays sound). */
+  private def prefixLen(threshold: Double): Column = {
+    val t = ceil(lit(threshold) * col("__n") - lit(1e-9)).cast("int")
+    greatest(col("__n") - t + 1, lit(0))
   }
 
   /**

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import scala.reflect.runtime.universe.TypeTag
 
+import graft.agg.Sketches
 import graft.core.Snap.{cents, r9, unscaled}
 import graft.ops.TimeSeries
 
@@ -756,15 +757,7 @@ object Streaming {
           val m = scala.collection.mutable.Map[String, Long](m0.toSeq: _*)
           rows.foreach { case (_, item) =>
             n += 1
-            if (m.contains(item)) m(item) += 1
-            else if (m.size < k) m(item) = 1
-            else {
-              // decrement-all; drop zeros (the classic MG step)
-              m.keys.toSeq.foreach { it =>
-                val c = m(it) - 1
-                if (c == 0) m.remove(it) else m(it) = c
-              }
-            }
+            Sketches.misraGries(m, k, item)
           }
           state.update((n, m.toMap))
           (key, n, m.keys.toSeq.sorted)

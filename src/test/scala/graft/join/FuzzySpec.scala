@@ -180,4 +180,76 @@ class FuzzySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(folded.contains(1L -> 11L))
   }
+
+  test("self-joins: a null id never pairs, not even through a shared " +
+    "string") {
+    // the null-id row shares "abc" with id 1: re-expanded, it must not
+    // turn the distinct pair ("abc", "abd") into a (2, 2) self-pair
+    val rows = Seq[(Option[Long], String)](Some(1L) -> "abc",
+      None -> "abc", Some(2L) -> "abd", Some(3L) -> "xyz").toDF("id", "s")
+    def ids(out: org.apache.spark.sql.DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(ids(Fuzzy.selfJoin(rows, "id", "s", 1)) == Set(1L -> 2L))
+    assert(ids(Fuzzy.damerauSelfJoin(rows, "id", "s", 1L)) == Set(1L -> 2L))
+    assert(ids(Fuzzy.jaroWinklerSelfJoin(rows, "id", "s", 0.5)) ==
+      Set(1L -> 2L))
+    // two relations: a pair without an id cannot be acted on
+    val right = Seq(10L -> "abc").toDF("id", "s")
+    assert(ids(Fuzzy.jaroWinklerJoin(rows, "id", "s", right, "id", "s", 0.5)) ==
+      Set(1L -> 10L, 2L -> 10L))
+  }
+
+  test("blocked joins equal an all-pairs oracle replaying the block " +
+    "predicates (lengthBand 0/2, caseFold both ways)") {
+    import graft.functions.StringSimilarity.{damerauLevenshtein, jaroWinkler}
+    // seeded soup: mixed-case first letters, a small alphabet and a
+    // 40-string pool drawn with replacement (repeats), empty and null
+    // strings
+    val rnd = new scala.util.Random(20261022L)
+    val pool = Seq.fill(40) {
+      val len = rnd.nextInt(7)
+      if (len == 0) "" else "aAbB"(rnd.nextInt(4)).toString +
+        Seq.fill(len - 1)("abc"(rnd.nextInt(3))).mkString
+    }
+    val rows = (0L until 120L).map { id =>
+      id -> (if (rnd.nextInt(20) == 0) null else pool(rnd.nextInt(pool.size)))
+    }
+    val df = rows.toDF("id", "s")
+    val (lRows, rRows) = rows.partition(_._1 < 60L)
+    def inBlock(a: String, b: String, band: Int, fold: Boolean): Boolean = {
+      def first(x: String) =
+        if (fold) x.substring(0, 1).toLowerCase else x.substring(0, 1)
+      a != null && b != null && a.nonEmpty && b.nonEmpty &&
+        first(a) == first(b) && (a.length - b.length).abs <= band
+    }
+    def dl(a: String, b: String) =
+      damerauLevenshtein(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+    for (band <- Seq(0, 2); fold <- Seq(false, true)) {
+      val ctx = s"band=$band caseFold=$fold"
+      val pairs = for {
+        (i1, s1) <- rows; (i2, s2) <- rows
+        if i1 < i2 && inBlock(s1, s2, band, fold)
+      } yield (i1, i2, s1, s2)
+      val jwWant = pairs.map(p => (p._1, p._2, jaroWinkler(p._3, p._4)))
+        .filter(_._3 >= 0.8).toSet
+      val jwGot = Fuzzy.jaroWinklerSelfJoin(df, "id", "s", 0.8, band, fold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(jwGot == jwWant, ctx)
+      assert(jwWant.nonEmpty, ctx)
+      val dlWant = pairs.map(p => (p._1, p._2, dl(p._3, p._4)))
+        .filter(_._3 <= 1L).toSet
+      val dlGot = Fuzzy.damerauSelfJoin(df, "id", "s", 1L, band, fold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(dlGot == dlWant, ctx)
+      assert(dlWant.nonEmpty, ctx)
+      val linkWant = (for {
+        (i1, s1) <- lRows; (i2, s2) <- rRows if inBlock(s1, s2, band, fold)
+      } yield (i1, i2, jaroWinkler(s1, s2))).filter(_._3 >= 0.8).toSet
+      val linkGot = Fuzzy.jaroWinklerJoin(lRows.toDF("id", "s"), "id", "s",
+          rRows.toDF("id", "s"), "id", "s", 0.8, band, fold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(linkGot == linkWant, ctx)
+      assert(linkWant.nonEmpty, ctx)
+    }
+  }
 }
